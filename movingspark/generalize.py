@@ -134,8 +134,9 @@ def douglas_peucker(df: DataFrame, tolerance: float, cols: PointCols = TRAJ_COLS
     def mask(x, y, t):
         xy = np.column_stack([x, y])
         dp = kernels.dp_mask(xy, tolerance)
-        kept = {(a, b) for a, b in xy[dp]}
-        return np.array([(a, b) in kept for a, b in xy])
+        # Python-float tuples: iterating numpy rows costs ~2 us per point
+        kept = set(map(tuple, xy[dp].tolist()))
+        return np.array([p in kept for p in map(tuple, xy.tolist())])
 
     return _grouped_filter(df, mask, cols)
 

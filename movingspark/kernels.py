@@ -344,6 +344,13 @@ def convex_hull(xy: np.ndarray) -> np.ndarray:
 
     Backs get_mcp (trajectory.py:1731-1744) and mrr_diagonal.
     Collinear inputs return the two extreme points.
+
+    The chain walks Python floats: the turn test is the 2-D cross
+    product (ax-ox)*(py-oy) - (ay-oy)*(px-ox), the exact operation
+    sequence of np.cross on 2-vectors (two rounded products, one
+    rounded difference, no FMA), so the hull is bit-identical to the
+    np.cross formulation. np.cross on 2-element arrays costs ~30 us of
+    axis handling per call, which dominated stop detection.
     """
     pts = np.unique(np.asarray(xy, dtype=np.float64), axis=0)
     if len(pts) <= 2:
@@ -352,13 +359,20 @@ def convex_hull(xy: np.ndarray) -> np.ndarray:
     def half(points):
         out = []
         for p in points:
-            while len(out) >= 2 and np.cross(out[-1] - out[-2], p - out[-2]) <= 0:
-                out.pop()
+            px, py = p
+            while len(out) >= 2:
+                (ox, oy), (ax, ay) = out[-2], out[-1]
+                # pop on a clockwise or straight turn; NaN never pops
+                if (ax - ox) * (py - oy) - (ay - oy) * (px - ox) <= 0:
+                    out.pop()
+                else:
+                    break
             out.append(p)
         return out
 
-    lower = half(pts)
-    upper = half(pts[::-1])
+    rows = pts.tolist()
+    lower = half(rows)
+    upper = half(rows[::-1])
     hull = np.array(lower[:-1] + upper[:-1])
     if len(hull) < 2:  # all identical
         return pts[:1]
@@ -421,9 +435,18 @@ def dp_mask(xy: np.ndarray, tolerance: float) -> np.ndarray:
     GEOS simplify(preserve_topology=False) semantics
     (trajectory_generalizer.py:189): output vertices are a subset of the
     input, so a keep-mask reproduces the reference row selection.
+
+    The perpendicular distance spells out the 2-D cross product
+    sx*(y-y0) - sy*(x-x0) of the chord (sx, sy), the exact operation
+    sequence of np.cross(seg, mid - p0), so the distances and the mask
+    are bit-identical to that form without its ~30 us per-call axis
+    handling; chord endpoints are read as Python floats, since numpy
+    scalar indexing costs more than the arithmetic.
     """
     xy = np.asarray(xy, dtype=np.float64)
     n = len(xy)
+    x, y = xy[:, 0].copy(), xy[:, 1].copy()
+    xl, yl = x.tolist(), y.tolist()
     keep = np.zeros(n, dtype=bool)
     keep[0] = keep[n - 1] = True
     stack = [(0, n - 1)]
@@ -431,15 +454,15 @@ def dp_mask(xy: np.ndarray, tolerance: float) -> np.ndarray:
         i0, i1 = stack.pop()
         if i1 <= i0 + 1:
             continue
-        p0, p1 = xy[i0], xy[i1]
-        seg = p1 - p0
-        seg_len = np.hypot(*seg)
-        mid = xy[i0 + 1 : i1]
+        x0, y0 = xl[i0], yl[i0]
+        sx, sy = xl[i1] - x0, yl[i1] - y0
+        seg_len = np.hypot(sx, sy)
+        dx, dy = x[i0 + 1 : i1] - x0, y[i0 + 1 : i1] - y0
         if seg_len == 0.0:
-            d = np.hypot(mid[:, 0] - p0[0], mid[:, 1] - p0[1])
+            d = np.hypot(dx, dy)
         else:
-            d = np.abs(np.cross(seg, mid - p0)) / seg_len
-        k = int(np.argmax(d))
+            d = np.abs(sx * dy - sy * dx) / seg_len
+        k = int(d.argmax())
         if d[k] > tolerance:
             j = i0 + 1 + k
             keep[j] = True
@@ -509,7 +532,9 @@ def _ray_cast_ring(px: np.ndarray, py: np.ndarray, poly: np.ndarray):
     for i in range(len(poly)):
         xa, ya, xb, yb = x0[i], y0[i], x1[i], y1[i]
         cond = (ya > py) != (yb > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
+        # a near-horizontal edge can overflow xint to +-inf for rows
+        # outside its y-span; cond masks those rows out
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
             xint = xa + (py - ya) * (xb - xa) / np.where(yb == ya, 1.0, (yb - ya))
         inside ^= cond & (px < xint)
         # on-segment check (shapely intersects counts boundary)

@@ -33,69 +33,17 @@ from movingspark.schema import PointCols, TRAJ_COLS
 SNAP_S = 0.010  # 10 ms tolerance (overlay.py:75-83)
 
 
-def _clip_ranges_linebased_ref(x, y, t, poly):
-    """Scalar reference for `_clip_ranges_linebased` (parity-tested);
-    the vectorized twin below is the production path."""
-    poly = np.asarray(poly, float)
-    if np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    pminx, pminy = poly.min(axis=0)
-    pmaxx, pmaxy = poly.max(axis=0)
-
-    ranges = []
-    n = len(x)
-    for i in range(1, n):
-        x0, y0, x1, y1 = x[i - 1], y[i - 1], x[i], y[i]
-        # bbox candidate filter (reference sindex query)
-        if max(x0, x1) < pminx or min(x0, x1) > pmaxx or max(y0, y1) < pminy or min(y0, y1) > pmaxy:
-            continue
-        if x0 == x1 and y0 == y1:
-            # zero-length segment: inside iff the point is inside
-            if kernels.point_in_polygon(np.array([x0]), np.array([y0]), poly)[0]:
-                ranges.append((t[i - 1], t[i], (x0, y0), (x1, y1)))
-            continue
-        for s0, s1 in kernels.segment_polygon_clip((x0, y0), (x1, y1), poly):
-            t0 = t[i - 1] + (t[i] - t[i - 1]) * s0
-            tn = t[i - 1] + (t[i] - t[i - 1]) * s1
-            # microsecond reconstruction (overlay.py:29-34)
-            t0 = np.floor(t0 * 1e6) / 1e6
-            tn = np.floor(tn * 1e6) / 1e6
-            # snap to observed row times (overlay.py:40-43)
-            if abs(tn - t[i]) < SNAP_S:
-                tn = t[i]
-            if abs(t0 - t[i - 1]) < SNAP_S:
-                t0 = t[i - 1]
-            p0 = (x0 + (x1 - x0) * s0, y0 + (y1 - y0) * s0)
-            pn = (x0 + (x1 - x0) * s1, y0 + (y1 - y0) * s1)
-            ranges.append((t0, tn, p0, pn))
-
-    # dissolve touching ranges (overlay.py:49-72)
-    dissolved = []
-    cur = None
-    for r in ranges:
-        if cur is None:
-            cur = list(r)
-        elif r[0] == cur[1] or (r[0] > cur[1] and abs(r[0] - cur[1]) < SNAP_S):
-            cur[1] = r[1]
-            cur[3] = r[3]
-        else:
-            dissolved.append(tuple(cur))
-            cur = list(r)
-    if cur is not None:
-        dissolved.append(tuple(cur))
-    return dissolved
-
-
 def _clip_ranges_linebased(x, y, t, poly):
     """[(t0, tn, p0, pn)] spatiotemporal ranges of the track inside poly.
 
-    Float-exact vectorized form of `_clip_ranges_linebased_ref` (same IEEE
-    arithmetic, batched over segments x polygon edges): all entry/exit
-    parameters come from one broadcast segment-edge solve, and all
-    sub-interval midpoints are classified by ONE ray-cast call per
-    trajectory instead of one per segment. On the sf0.1 events fixture
-    this is ~40x faster than the scalar loop (which spent its time in
-    ~17k tiny `point_in_polygon` calls)."""
+    Float-exact vectorized form of the scalar per-segment loop kept as
+    a test oracle in tests/oracles.py (same IEEE arithmetic, batched
+    over segments x polygon edges): all entry/exit parameters come from
+    one broadcast segment-edge solve, and all sub-interval midpoints are
+    classified by ONE ray-cast call per trajectory instead of one per
+    segment. On the sf0.1 events fixture this is ~40x faster than the
+    scalar loop (which spent its time in ~17k tiny `point_in_polygon`
+    calls)."""
     poly = np.asarray(poly, float)
     if np.array_equal(poly[0], poly[-1]):
         poly = poly[:-1]

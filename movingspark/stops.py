@@ -1,9 +1,9 @@
 """TrajectoryStopDetector (X1) + stop-point summary (A11).
 
 The detection loop is inherently sequential per trajectory (carried
-buffer state), so it runs as one grouped-map pandas UDF per trajectory
-(groupBy(traj_id).applyInPandas) — Spark parallelizes across
-trajectories; loop semantics ported exactly from the reference
+buffer state), so it runs as one pandas call per trajectory through
+gmap.grouped_apply_sorted — Spark parallelizes across trajectories;
+loop semantics ported exactly from the reference
 (trajectory_stop_detector.py:122-187):
 
 - grow a point buffer; while not stopped, shrink its head so the window

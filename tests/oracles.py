@@ -1,0 +1,165 @@
+"""Reference twins of engine kernels, kept only as test oracles.
+
+Each function here is the plain, slower formulation an engine kernel
+replaced; the tests assert the engine kernel reproduces it bit for bit
+(np.array_equal, or float equality per field).
+
+- convex_hull_np   ~ kernels.convex_hull   (np.cross turn test)
+- dp_mask_np       ~ kernels.dp_mask       (np.cross chord distance)
+- kf_rts_1d        ~ smooth._kf_rts        (per-axis 2x2 matrix form)
+- clip_ranges_scalar ~ overlay._clip_ranges_linebased (one segment at a time)
+"""
+
+from __future__ import annotations
+
+import numpy as np
+
+from movingspark import kernels
+from movingspark.overlay import SNAP_S
+
+
+def convex_hull_np(xy: np.ndarray) -> np.ndarray:
+    """Monotone-chain convex hull with the np.cross turn test."""
+    pts = np.unique(np.asarray(xy, dtype=np.float64), axis=0)
+    if len(pts) <= 2:
+        return pts
+
+    def half(points):
+        out = []
+        for p in points:
+            while len(out) >= 2 and np.cross(out[-1] - out[-2], p - out[-2]) <= 0:
+                out.pop()
+            out.append(p)
+        return out
+
+    lower = half(pts)
+    upper = half(pts[::-1])
+    hull = np.array(lower[:-1] + upper[:-1])
+    if len(hull) < 2:  # all identical
+        return pts[:1]
+    return hull
+
+
+def dp_mask_np(xy: np.ndarray, tolerance: float) -> np.ndarray:
+    """Douglas-Peucker keep-mask with the np.cross chord distance."""
+    xy = np.asarray(xy, dtype=np.float64)
+    n = len(xy)
+    keep = np.zeros(n, dtype=bool)
+    keep[0] = keep[n - 1] = True
+    stack = [(0, n - 1)]
+    while stack:
+        i0, i1 = stack.pop()
+        if i1 <= i0 + 1:
+            continue
+        d = chord_distances_np(xy, i0, i1)
+        k = int(np.argmax(d))
+        if d[k] > tolerance:
+            j = i0 + 1 + k
+            keep[j] = True
+            stack.append((i0, j))
+            stack.append((j, i1))
+    return keep
+
+
+def chord_distances_np(xy: np.ndarray, i0: int, i1: int) -> np.ndarray:
+    """Distances of xy[i0+1:i1] to the chord xy[i0]->xy[i1]."""
+    p0, p1 = xy[i0], xy[i1]
+    seg = p1 - p0
+    seg_len = np.hypot(*seg)
+    mid = xy[i0 + 1 : i1]
+    if seg_len == 0.0:
+        return np.hypot(mid[:, 0] - p0[0], mid[:, 1] - p0[1])
+    return np.abs(np.cross(seg, mid - p0)) / seg_len
+
+
+def kf_rts_1d(z: np.ndarray, dts: np.ndarray, q: float, r: float) -> np.ndarray:
+    """Kalman filter + RTS smoother for one axis in 2x2 matrix form.
+    z: measurements, dts[i]: time delta from i-1 to i (dts[0] unused)."""
+    n = len(z)
+    xs = np.zeros((n, 2))
+    Ps = np.zeros((n, 2, 2))
+    x_preds = np.zeros((n, 2))
+    P_preds = np.zeros((n, 2, 2))
+    H = np.array([[1.0, 0.0]])
+
+    x = np.array([z[0], 0.0])
+    P = np.diag([r, r])
+    xs[0], Ps[0] = x, P
+    x_preds[0], P_preds[0] = x, P
+
+    Fs = np.zeros((n, 2, 2))
+    Fs[0] = np.eye(2)
+    for i in range(1, n):
+        dt = max(dts[i], 1e-9)
+        Fm = np.array([[1.0, dt], [0.0, 1.0]])
+        Q = q * np.array([[dt**3 / 3, dt**2 / 2], [dt**2 / 2, dt]])
+        Fs[i] = Fm
+        x_pred = Fm @ x
+        P_pred = Fm @ P @ Fm.T + Q
+        x_preds[i], P_preds[i] = x_pred, P_pred
+        y = z[i] - (H @ x_pred)[0]
+        S = (H @ P_pred @ H.T)[0, 0] + r
+        K = (P_pred @ H.T)[:, 0] / S
+        x = x_pred + K * y
+        P = P_pred - np.outer(K, H @ P_pred)
+        xs[i], Ps[i] = x, P
+
+    # RTS backward pass (state only; the smoothed covariance is not needed)
+    xs_s = xs.copy()
+    for i in range(n - 2, -1, -1):
+        C = Ps[i] @ Fs[i + 1].T @ np.linalg.inv(P_preds[i + 1])
+        xs_s[i] = xs[i] + C @ (xs_s[i + 1] - x_preds[i + 1])
+    return xs_s[:, 0]
+
+
+def clip_ranges_scalar(x, y, t, poly):
+    """[(t0, tn, p0, pn)] ranges of the track inside poly, one segment
+    at a time through kernels.segment_polygon_clip."""
+    poly = np.asarray(poly, float)
+    if np.array_equal(poly[0], poly[-1]):
+        poly = poly[:-1]
+    pminx, pminy = poly.min(axis=0)
+    pmaxx, pmaxy = poly.max(axis=0)
+
+    ranges = []
+    n = len(x)
+    for i in range(1, n):
+        x0, y0, x1, y1 = x[i - 1], y[i - 1], x[i], y[i]
+        # bbox candidate filter (reference sindex query)
+        if max(x0, x1) < pminx or min(x0, x1) > pmaxx or max(y0, y1) < pminy or min(y0, y1) > pmaxy:
+            continue
+        if x0 == x1 and y0 == y1:
+            # zero-length segment: inside iff the point is inside
+            if kernels.point_in_polygon(np.array([x0]), np.array([y0]), poly)[0]:
+                ranges.append((t[i - 1], t[i], (x0, y0), (x1, y1)))
+            continue
+        for s0, s1 in kernels.segment_polygon_clip((x0, y0), (x1, y1), poly):
+            t0 = t[i - 1] + (t[i] - t[i - 1]) * s0
+            tn = t[i - 1] + (t[i] - t[i - 1]) * s1
+            # microsecond reconstruction (overlay.py:29-34)
+            t0 = np.floor(t0 * 1e6) / 1e6
+            tn = np.floor(tn * 1e6) / 1e6
+            # snap to observed row times (overlay.py:40-43)
+            if abs(tn - t[i]) < SNAP_S:
+                tn = t[i]
+            if abs(t0 - t[i - 1]) < SNAP_S:
+                t0 = t[i - 1]
+            p0 = (x0 + (x1 - x0) * s0, y0 + (y1 - y0) * s0)
+            pn = (x0 + (x1 - x0) * s1, y0 + (y1 - y0) * s1)
+            ranges.append((t0, tn, p0, pn))
+
+    # dissolve touching ranges (overlay.py:49-72)
+    dissolved = []
+    cur = None
+    for r in ranges:
+        if cur is None:
+            cur = list(r)
+        elif r[0] == cur[1] or (r[0] > cur[1] and abs(r[0] - cur[1]) < SNAP_S):
+            cur[1] = r[1]
+            cur[3] = r[3]
+        else:
+            dissolved.append(tuple(cur))
+            cur = list(r)
+    if cur is not None:
+        dissolved.append(tuple(cur))
+    return dissolved

@@ -78,5 +78,5 @@ def test_from_mercator_iterations_suffice_at_extreme_latitude():
     # largest; 4 unrolled steps must already sit below 1e-9 degrees
     x, y = mercator_forward(np.array([12.0]), np.array([84.99]))
     lon, lat = mercator_inverse(x, y, iterations=crs._INVERSE_ITERS)
-    assert abs(float(lat) - 84.99) < 1e-9
-    assert abs(float(lon) - 12.0) < 1e-12
+    assert abs(lat.item() - 84.99) < 1e-9
+    assert abs(lon.item() - 12.0) < 1e-12

@@ -305,11 +305,11 @@ def test_kalman_latlon_filters_in_epsg3395_metric_space(spark):
     filtered in that metric frame, and projected back. The distributed
     latlon path must equal composing the pieces by hand: project the
     raw points with kernels.mercator_forward, run the planar
-    _kf_rts_1d kernel, invert with mercator_inverse."""
+    _kf_rts kernel, invert with mercator_inverse."""
     import numpy as np
 
     from movingspark.kernels import mercator_forward, mercator_inverse
-    from movingspark.smooth import _kf_rts_1d
+    from movingspark.smooth import _kf_rts
 
     rng = np.random.RandomState(11)
     n = 40
@@ -327,8 +327,7 @@ def test_kalman_latlon_filters_in_epsg3395_metric_space(spark):
 
     mx, my = mercator_forward(lons, lats)
     dts = np.diff(np.arange(n, dtype=float), prepend=0.0)
-    sx = _kf_rts_1d(mx, dts, 0.25, 1.0)
-    sy = _kf_rts_1d(my, dts, 0.25, 1.0)
+    sx, sy = _kf_rts(mx, my, dts, 0.25, 1.0)
     elon, elat = mercator_inverse(sx, sy)
     assert np.allclose(got[:, 0], elon, rtol=0, atol=1e-12)
     assert np.allclose(got[:, 1], elat, rtol=0, atol=1e-12)

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from movingspark import cells, joins, overlay
+from tests import oracles
 from tests.conftest import rows_to_points
 
 
@@ -339,7 +340,7 @@ def test_intersection_adds_feature_props(spark, overlay_traj):
 
 def test_clip_ranges_vec_matches_scalar_reference():
     """The vectorized _clip_ranges_linebased must be float-exact against
-    the scalar reference on adversarial synthetic tracks (sawtooth y,
+    the scalar oracle on adversarial synthetic tracks (sawtooth y,
     duplicate points, boundary-grazing segments, concave polygon)."""
     rng = np.random.default_rng(7)
     polys = [
@@ -357,7 +358,7 @@ def test_clip_ranges_vec_matches_scalar_reference():
                 x[2], y[2] = x[1], y[1]
                 x[3], y[3] = poly[0]
             t = np.sort(rng.uniform(0, 1e4, n)) + 1.5e9
-            ref = overlay._clip_ranges_linebased_ref(x, y, t, poly)
+            ref = oracles.clip_ranges_scalar(x, y, t, poly)
             vec = overlay._clip_ranges_linebased(x, y, t, poly)
             assert len(ref) == len(vec)
             for u, v in zip(ref, vec):

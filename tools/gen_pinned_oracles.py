@@ -35,12 +35,14 @@ Usage: python tools/gen_pinned_oracles.py [sf_dir ...] [out_py]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from movingspark import kernels
 from movingspark.aggregate import _sig_points_np, grid_cluster
@@ -70,7 +72,7 @@ from movingspark.pinned_params import (
     STOP_MAX_DIAMETER,
     STOP_MIN_DURATION_S,
 )
-from movingspark.smooth import _kf_rts_1d
+from movingspark.smooth import _kf_rts
 from movingspark.split import angle_change_groups
 from movingspark.stops import _detect_stops_np
 from movingspark.units import get_conversion
@@ -214,8 +216,7 @@ def kalman_values(pts) -> list[tuple]:
             sx, sy = x, y
         else:
             dts = np.diff(ts, prepend=ts[0])
-            sx = _kf_rts_1d(x, dts, q, r)
-            sy = _kf_rts_1d(y, dts, q, r)
+            sx, sy = _kf_rts(x, y, dts, q, r)
         for rn, vx, vy in zip(g["rn"].to_numpy(), sx, sy):
             out.append((tid, int(rn), float(vx), float(vy)))
     return out
@@ -495,7 +496,7 @@ FROM agg
 
 def main():
     args = sys.argv[1:]
-    out_py = "/root/repo/movingspark/pinned_oracles_sf001.py"
+    out_py = os.path.join(REPO, "movingspark", "pinned_oracles_sf001.py")
     if args and args[-1].endswith(".py"):
         out_py = args[-1]
         args = args[:-1]
