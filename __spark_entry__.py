@@ -1458,22 +1458,6 @@ FROM (
 """
 
 
-def q_tile_rollup_salted(spark, sf_dir):
-    pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
-    return joins.tile_rollup(pts, res=CELL_RES, bounds=CELL_BOUNDS, n_salt=8).select(
-        "cell", "n_points", "n_trajs"
-    )
-
-
-def q_tile_rollup_values_salted(spark, sf_dir):
-    """Two-phase SALTED rollup with a value aggregate: per-(cell,salt)
-    partial sums then the final merge — the skew-safe shape for a hot
-    tile, value path included."""
-    pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
-    out = joins.tile_rollup(pts, res=CELL_RES, bounds=CELL_BOUNDS, n_salt=8, value_col="x")
-    return _round2(out.select("cell", "n_points", "n_trajs", "sum_value"), ["sum_value"])
-
-
 def q_point_in_polygon(spark, sf_dir):
     pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
     return joins.point_in_polygon_join(
@@ -3463,7 +3447,9 @@ def q_reproject_3395(spark, sf_dir):
     inverse-projected back, both directions pure-codegen zero-shuffle
     maps (movingspark/crs.py). Meter outputs at 2dp (~2e7 magnitude —
     centimeter grid keeps the tie margin far above JVM-vs-C ln/exp
-    ulps), round-tripped degrees at 2dp-equivalent safety via _round2."""
+    ulps), double-rounded through 6dp like _round2 so a value one ulp
+    either side of a 2dp tie rounds the same on both engines;
+    round-tripped degrees via _round2."""
     from movingspark import crs
 
     pts = _events(spark, sf_dir).select(
@@ -3476,7 +3462,7 @@ def q_reproject_3395(spark, sf_dir):
     out = crs.from_mercator(fwd, "x_merc", "y_merc", "lon_rt", "lat_rt")
     out = out.select("traj_id", "t", "lon", "lat", "x_merc", "y_merc", "lon_rt", "lat_rt")
     for c in ("x_merc", "y_merc"):
-        out = out.withColumn(c, F.round(F.col(c), 2) + F.lit(0.0))
+        out = out.withColumn(c, F.round(F.round(F.col(c), 6), 2) + F.lit(0.0))
     return _round2(out, ["lon_rt", "lat_rt"])
 
 
@@ -3496,8 +3482,8 @@ pts AS (
 ),
 {ctes}
 SELECT traj_id, t, lon, lat,
-       ROUND(x_merc, 2) + 0.0 AS x_merc,
-       ROUND(y_merc, 2) + 0.0 AS y_merc,
+       ROUND(ROUND(x_merc, 6), 2) + 0.0 AS x_merc,
+       ROUND(ROUND(y_merc, 6), 2) + 0.0 AS y_merc,
        ROUND(ROUND({lon_rt}, 9), {R}) + 0.0 AS lon_rt,
        ROUND(ROUND({lat_rt}, 9), {R}) + 0.0 AS lat_rt
 FROM __m{crs._INVERSE_ITERS + 1}
@@ -3535,6 +3521,20 @@ FROM d
 
 
 # ---------------------------------------------------------------------------
+
+
+# Registry entries bench.py times after its own kinematics, stop,
+# rollup and doc-pipeline legs.
+BENCH = (
+    "dedup_minhash", "text_stats", "simhash", "ann_cosine",
+    "winnow_fingerprints", "gap_sessions", "overlay_clip", "gopher_rules",
+    "contamination", "tile_rollup_median", "media_decode", "raster_regions",
+    "resample", "proximity_pairs", "asof_join", "frechet_route",
+    "geofence_events", "quantize_embeddings", "frequent_tokens",
+    "tile_rollup_multires", "geotag_media", "tile_dwell", "od_matrix",
+    "ann_quantized", "route_progress", "speed_quantiles", "corridor_cells",
+    "pipeline_tile_speed",
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -3627,7 +3627,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ^^ the 50-entry driver window ends here (position 50).
         # -- beyond the window: driver-green in r03/r04 -------------------
         "doc_tiling": q_doc_tiling,
-        "tile_rollup_salted": q_tile_rollup_salted,
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_banded": q_dedup_minhash_banded,
         "dedup_components": q_dedup_components,
@@ -3652,7 +3651,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "min_duration_filter": q_min_duration_filter,
         "tile_rollup": q_tile_rollup,
         "tile_rollup_values": q_tile_rollup_values,
-        "tile_rollup_values_salted": q_tile_rollup_values_salted,
         "intersecting_trajs": q_intersecting_trajs,
         "intersecting_trajs_line": q_intersecting_trajs_line,
         "traj_point_distance": q_traj_point_distance,
@@ -3705,8 +3703,6 @@ def oracle_sql() -> dict[str, str]:
         "min_duration_filter": SQL_MIN_DURATION_FILTER,
         "tile_rollup": SQL_TILE_ROLLUP,
         "tile_rollup_values": SQL_TILE_ROLLUP_VALUES,
-        "tile_rollup_values_salted": SQL_TILE_ROLLUP_VALUES,
-        "tile_rollup_salted": SQL_TILE_ROLLUP,  # same result, salted plan
         "tile_rollup_median": SQL_TILE_ROLLUP_MEDIAN,
         "media_decode": SQL_MEDIA_DECODE,
         "dedup_lines": SQL_DEDUP_LINES,

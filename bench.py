@@ -63,8 +63,6 @@ N_BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
 
 
 def bench_queries(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    from pyspark.sql import functions as F
-
     from movingspark import derive, ingest, joins, queries as q, split, stops
 
     timings: dict[str, float] = {}
@@ -151,37 +149,11 @@ def bench_queries(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     run("span_invariant", lambda: force(ingest.span_invariant_violations(docs)))
     docs.unpersist()
 
-    documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
     import __spark_entry__ as E
 
-    run("dedup_minhash", lambda: force(E.q_dedup_minhash(spark, sf_dir)))
-    run("text_stats", lambda: force(E.q_text_stats(spark, sf_dir)))
-    run("simhash", lambda: force(E.q_simhash(spark, sf_dir)))
-    run("ann_cosine", lambda: force(E.q_ann_cosine(spark, sf_dir)))
-    run("winnow_fingerprints", lambda: force(E.q_winnow_fingerprints(spark, sf_dir)))
-    run("gap_sessions", lambda: force(E.q_gap_sessions(spark, sf_dir)))
-    run("overlay_clip", lambda: force(E.q_overlay_clip(spark, sf_dir)))
-    run("gopher_rules", lambda: force(E.q_gopher_rules(spark, sf_dir)))
-    run("contamination", lambda: force(E.q_contamination(spark, sf_dir)))
-    run("tile_rollup_median", lambda: force(E.q_tile_rollup_median(spark, sf_dir)))
-    run("media_decode", lambda: force(E.q_media_decode(spark, sf_dir)))
-    run("raster_regions", lambda: force(E.q_raster_regions(spark, sf_dir)))
-    run("resample", lambda: force(E.q_resample(spark, sf_dir)))
-    run("proximity_pairs", lambda: force(E.q_proximity_pairs(spark, sf_dir)))
-    run("asof_join", lambda: force(E.q_asof_join(spark, sf_dir)))
-    run("frechet_route", lambda: force(E.q_frechet_route(spark, sf_dir)))
-    run("geofence_events", lambda: force(E.q_geofence_events(spark, sf_dir)))
-    run("quantize_embeddings", lambda: force(E.q_quantize_embeddings(spark, sf_dir)))
-    run("frequent_tokens", lambda: force(E.q_frequent_tokens(spark, sf_dir)))
-    run("tile_rollup_multires", lambda: force(E.q_tile_rollup_multires(spark, sf_dir)))
-    run("geotag_media", lambda: force(E.q_geotag_media(spark, sf_dir)))
-    run("tile_dwell", lambda: force(E.q_tile_dwell(spark, sf_dir)))
-    run("od_matrix", lambda: force(E.q_od_matrix(spark, sf_dir)))
-    run("ann_quantized", lambda: force(E.q_ann_quantized(spark, sf_dir)))
-    run("route_progress", lambda: force(E.q_route_progress(spark, sf_dir)))
-    run("speed_quantiles", lambda: force(E.q_speed_quantiles(spark, sf_dir)))
-    run("corridor_cells", lambda: force(E.q_corridor_cells(spark, sf_dir)))
-    run("pipeline_tile_speed", lambda: force(E.q_pipeline_tile_speed(spark, sf_dir)))
+    registry = E.queries()
+    for name in E.BENCH:
+        run(name, lambda q=registry[name]: force(q(spark, sf_dir)))
 
     pts.unpersist()
     timings["_noisy_passes"] = noise["noisy_passes"]

@@ -140,7 +140,7 @@ def extract_significant_points(
 
 def cluster_significant_points(
     sig: DataFrame, max_distance: float, latlon: bool = False,
-    max_points: int = 5_000_000, scale_fallback: bool = True,
+    max_points: int = 5_000_000,
 ) -> DataFrame:
     """X17: insertion-order-dependent grid clustering. The reference
     processes points in collection order; we fix that order to
@@ -153,7 +153,7 @@ def cluster_significant_points(
     check costs one cheap aggregate (~48 bytes/point driver memory when
     under it).
 
-    Above the cap, scale_fallback=True switches to a two-level scheme —
+    Above the cap the clustering switches to a two-level scheme —
     per-partition grid clustering (insertion order preserved WITHIN each
     partition) followed by a weighted driver-side merge of the partial
     centroids. This is a DOCUMENTED DEVIATION from the reference's
@@ -161,7 +161,7 @@ def cluster_significant_points(
     within-cell averaging order, cluster count and memberships stay
     grid-accurate, and the driver only ever sees per-partition centroid
     summaries (bounded by corpus_area/cell^2 per partition), never the
-    points. Pass scale_fallback=False to get the old hard error."""
+    points."""
     n = sig.count()
     if n <= max_points:
         pts = [
@@ -169,14 +169,6 @@ def cluster_significant_points(
             for r in sig.orderBy("traj_id", "seq").select("x", "y").collect()
         ]
         clusters = grid_cluster(pts, max_distance, latlon)
-    elif not scale_fallback:
-        raise ValueError(
-            f"{n} significant points exceed max_points={max_points}; the "
-            "insertion-order grid clustering runs driver-side (reference "
-            "point_clusterer.py semantics). Raise max_points deliberately, "
-            "tighten the significant-point thresholds, or allow "
-            "scale_fallback."
-        )
     else:
         def per_part(batches):
             chunks = [pdf for pdf in batches]
@@ -206,22 +198,28 @@ def cluster_significant_points(
     )
 
 
-def grid_cluster(points, max_distance, latlon=False):
-    """Pure-python port of _Grid (point_clusterer.py:54-121): seed grid at
-    cell_size (latlon: /C_EARTH*360), nearest existing centroid within the
-    3x3 neighborhood else new cluster, centroid recomputed per insert;
-    second pass redistributes all points (radius 20*cell_size).
-    Returns [(cx, cy, n_points)] in creation order."""
+def _grid_cluster(points, weights, max_distance, latlon, cluster):
+    """Two-pass grid clustering of _Grid (point_clusterer.py:54-121).
+    `cluster(px, py, w)` opens a cluster; its `add(px, py, w)` is the
+    centroid-update rule, the only part that differs between callers.
+
+    Cells of cell_size (latlon: /C_EARTH*360) cover the points' bbox,
+    floor(span/cell) + 1 per axis so the max-coordinate point has one.
+    Pass 1: a point joins the nearest centroid within cell_size in its
+    3x3 neighborhood, else opens a cluster in its own cell. Pass 2:
+    every point is recounted to its nearest centroid within
+    20*cell_size. Returns [(cx, cy, n)] in creation order, n = summed
+    weights of the recounted points."""
     if not points:
         return []
     xs = np.array([p[0] for p in points])
     ys = np.array([p[1] for p in points])
-    minx, miny, maxx, maxy = xs.min(), ys.min(), xs.max(), ys.max()
+    minx, miny = xs.min(), ys.min()
     cell_size = max_distance / C_EARTH * 360 if latlon else max_distance
-    n_rows = max(1, math.ceil((maxy - miny) / cell_size))
-    n_cols = max(1, math.ceil((maxx - minx) / cell_size))
+    n_cols = math.floor((xs.max() - minx) / cell_size) + 1
+    n_rows = math.floor((ys.max() - miny) / cell_size) + 1
     cells = [[None] * n_rows for _ in range(n_cols)]
-    clusters = []  # each: dict(points=[...], cx, cy)
+    clusters = []
 
     def grid_pos(px, py):
         return (
@@ -238,33 +236,68 @@ def grid_cluster(points, max_distance, latlon=False):
                 g = cells[k][m]
                 if g is None:
                     continue
-                d = math.hypot(px - g["cx"], py - g["cy"])
+                d = math.hypot(px - g.cx, py - g.cy)
                 if d <= max_dist and d < shortest:
-                    best = (k, m)
+                    best = g
                     shortest = d
         return best
 
-    for px, py in points:
-        c = closest(px, py, cell_size)
-        if c is None:
-            g = {"points": [(px, py)], "cx": px, "cy": py}
+    for (px, py), w in zip(points, weights):
+        g = closest(px, py, cell_size)
+        if g is None:
+            g = cluster(px, py, w)
             clusters.append(g)
             i, j = grid_pos(px, py)
             cells[i][j] = g
         else:
-            g = cells[c[0]][c[1]]
-            g["points"].append((px, py))
-            g["cx"] = math.fsum(p[0] for p in g["points"]) / len(g["points"])
-            g["cy"] = math.fsum(p[1] for p in g["points"]) / len(g["points"])
+            g.add(px, py, w)
 
     for g in clusters:
-        g["points"] = []
-    for px, py in points:
-        c = closest(px, py, cell_size * 20)
-        if c is not None:
-            cells[c[0]][c[1]]["points"].append((px, py))
+        g.n = 0
+    for (px, py), w in zip(points, weights):
+        g = closest(px, py, cell_size * 20)
+        if g is not None:
+            g.n += w
 
-    return [(g["cx"], g["cy"], len(g["points"])) for g in clusters]
+    return [(g.cx, g.cy, g.n) for g in clusters]
+
+
+class _MeanCluster:
+    """Reference update rule: centroid = exact (fsum) mean of members."""
+
+    def __init__(self, px, py, w):
+        self.xs, self.ys = [px], [py]
+        self.cx, self.cy = px, py
+
+    def add(self, px, py, w):
+        self.xs.append(px)
+        self.ys.append(py)
+        self.cx = math.fsum(self.xs) / len(self.xs)
+        self.cy = math.fsum(self.ys) / len(self.ys)
+
+
+class _WeightedCluster:
+    """Partial-centroid merge rule: weighted running-sum mean."""
+
+    def __init__(self, px, py, w):
+        self.sx, self.sy, self.sw = px * w, py * w, w
+        self.cx, self.cy = px, py
+
+    def add(self, px, py, w):
+        self.sx += px * w
+        self.sy += py * w
+        self.sw += w
+        self.cx = self.sx / self.sw
+        self.cy = self.sy / self.sw
+
+
+def grid_cluster(points, max_distance, latlon=False):
+    """Pure-python port of _Grid (point_clusterer.py:54-121): nearest
+    existing centroid within the 3x3 neighborhood else new cluster,
+    centroid recomputed per insert; second pass redistributes all points
+    (radius 20*cell_size). Returns [(cx, cy, n_points)] in creation
+    order."""
+    return _grid_cluster(points, [1] * len(points), max_distance, latlon, _MeanCluster)
 
 
 def grid_cluster_weighted(points, weights, max_distance, latlon=False):
@@ -272,73 +305,17 @@ def grid_cluster_weighted(points, weights, max_distance, latlon=False):
     input point is a pre-aggregated partial centroid carrying `weight`
     original points. Same grid/nearest-neighbor/redistribute structure;
     centroid updates use the weighted mean, counts sum the weights.
-    Kept SEPARATE from grid_cluster so the reference-exact insertion
-    path's float behavior (pinned by the driver oracle) is untouched.
+    Only the update rule differs, so the reference-exact fsum rule of
+    grid_cluster (pinned by the driver oracle) is untouched.
 
     Zero-weight partials (grid_cluster emits n=0 clusters whenever all
     of a cluster's points redistribute away in the second pass) carry no
     mass and are dropped up front — merging one into a cluster whose
     accumulated weight is still 0 would divide by zero."""
     pw = [(p, w) for p, w in zip(points, weights) if w > 0]
-    if not pw:
-        return []
-    points = [p for p, _ in pw]
-    weights = [w for _, w in pw]
-    xs = np.array([p[0] for p in points])
-    ys = np.array([p[1] for p in points])
-    minx, miny, maxx, maxy = xs.min(), ys.min(), xs.max(), ys.max()
-    cell_size = max_distance / C_EARTH * 360 if latlon else max_distance
-    n_rows = max(1, math.ceil((maxy - miny) / cell_size))
-    n_cols = max(1, math.ceil((maxx - minx) / cell_size))
-    cells = [[None] * n_rows for _ in range(n_cols)]
-    clusters = []
-
-    def grid_pos(px, py):
-        # clamped: a max-coordinate point on an exactly-divisible span
-        # would index one past the last cell
-        return (
-            min(int(math.floor((px - minx) / cell_size)), n_cols - 1),
-            min(int(math.floor((py - miny) / cell_size)), n_rows - 1),
-        )
-
-    def closest(px, py, max_dist):
-        i, j = grid_pos(px, py)
-        best = None
-        shortest = cell_size * 100
-        for k in range(max(i - 1, 0), min(i + 2, n_cols)):
-            for m in range(max(j - 1, 0), min(j + 2, n_rows)):
-                g = cells[k][m]
-                if g is None:
-                    continue
-                d = math.hypot(px - g["cx"], py - g["cy"])
-                if d <= max_dist and d < shortest:
-                    best = (k, m)
-                    shortest = d
-        return best
-
-    for (px, py), w in zip(points, weights):
-        c = closest(px, py, cell_size)
-        if c is None:
-            g = {"sx": px * w, "sy": py * w, "sw": w, "cx": px, "cy": py}
-            clusters.append(g)
-            i, j = grid_pos(px, py)
-            cells[i][j] = g
-        else:
-            g = cells[c[0]][c[1]]
-            g["sx"] += px * w
-            g["sy"] += py * w
-            g["sw"] += w
-            g["cx"] = g["sx"] / g["sw"]
-            g["cy"] = g["sy"] / g["sw"]
-
-    for g in clusters:
-        g["n"] = 0
-    for (px, py), w in zip(points, weights):
-        c = closest(px, py, cell_size * 20)
-        if c is not None:
-            cells[c[0]][c[1]]["n"] += w
-
-    return [(g["cx"], g["cy"], g["n"]) for g in clusters]
+    return _grid_cluster(
+        [p for p, _ in pw], [w for _, w in pw], max_distance, latlon, _WeightedCluster
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -55,7 +55,7 @@ def cmd_pipeline(args) -> int:
         "spatial_join",
         lambda: joins.point_in_polygon_join(pts, [("aoi", aoi)], res=args.res),
     )
-    tiles = ck.stage("tiles", lambda: joins.tile_rollup(pts, res=args.res, n_salt=args.salt))
+    tiles = ck.stage("tiles", lambda: joins.tile_rollup(pts, res=args.res))
     bad = ingest.span_invariant_violations(docs)
     n_bad = bad.count()
     summary = {
@@ -161,7 +161,6 @@ def main(argv=None) -> int:
     p.add_argument("--synth-docs", type=int, default=100_000, help="synthesize docs when no --input")
     p.add_argument("--checkpoints", required=True)
     p.add_argument("--res", type=int, default=8)
-    p.add_argument("--salt", type=int, default=0)
     p.add_argument("--aoi", default="-60,-60,60,60")
     p.set_defaults(fn=cmd_pipeline)
 

@@ -8,13 +8,12 @@ Design for 100 TB / 10^12 docs:
   computes its cell (pure SQL expression) and probes the broadcast map.
   Cells fully inside a polygon skip refinement; boundary cells refine
   with a vectorized numpy ray-casting pandas UDF. Hot cells therefore
-  cannot skew a shuffle (there is none); downstream aggregations that
-  group by cell use with_salt() for two-phase skew-safe aggregation.
+  cannot skew a shuffle (there is none); downstream rollups by cell
+  combine map-side (count/sum/count-distinct), so a hot cell reaches the
+  reducer as at most one partial row per map task.
 
 - **kNN** against a small centroid/cluster table is a broadcast
-  nested-loop prune: candidates are limited to the centroid cells in the
-  point's neighborhood ring, falling back to brute-force broadcast
-  cross-join + row_number when the centroid table is tiny.
+  cross-join + per-point top-k (min_by for k=1).
 """
 
 from __future__ import annotations
@@ -33,12 +32,6 @@ from movingspark.schema import PointCols, TRAJ_COLS
 def with_cell(df: DataFrame, res: int, bounds=cells.WORLD, cols: PointCols = TRAJ_COLS, name: str = "cell") -> DataFrame:
     """Stamp the Z-order cell id (pure SQL, codegen'd)."""
     return df.withColumn(name, cells.cell_id_expr(F.col(cols.x), F.col(cols.y), res, bounds))
-
-
-def with_salt(df: DataFrame, n_salt: int, name: str = "salt") -> DataFrame:
-    """Uniform salt column for two-phase aggregation over skewed keys:
-    groupBy(key, salt).agg(partial) -> groupBy(key).agg(final)."""
-    return df.withColumn(name, (F.rand(seed=42) * n_salt).cast("int"))
 
 
 def _norm_poly(verts):
@@ -350,57 +343,6 @@ def knn_join(
     return out.withColumnRenamed("__rk", "knn_rank")
 
 
-def knn_join_pruned(
-    points: DataFrame,
-    centroids: DataFrame,
-    res: int,
-    k: int = 1,
-    latlon: bool = False,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-    centroid_cols=("cluster_id", "cx", "cy"),
-) -> DataFrame:
-    """Scale path for kNN: centroids are replicated into their 3x3 cell
-    neighborhood (still broadcast — centroid count * 9 rows), points
-    probe only their own cell. Exact when the true nearest neighbor lies
-    within one cell ring (cell size >= max point-centroid distance);
-    callers pick `res` accordingly. Falls back to knn_join semantics
-    inside the candidate set."""
-    cid, cx, cy = centroid_cols
-    n = 1 << res
-
-    # replicate centroids to neighbor cells (driver-lite: stays a DataFrame)
-    ix, iy = cells.cell_ixiy_expr(F.col(cx), F.col(cy), res, bounds)
-    cent = centroids.withColumn("__ix", ix).withColumn("__iy", iy)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    cent = cent.withColumn("__off", F.explode(F.array(*[F.struct(F.lit(a).alias("dx"), F.lit(b).alias("dy")) for a, b in offs])))
-    cent = (
-        cent.withColumn("__jx", F.col("__ix") + F.col("__off.dx"))
-        .withColumn("__jy", F.col("__iy") + F.col("__off.dy"))
-        .filter((F.col("__jx") >= 0) & (F.col("__jx") < n) & (F.col("__jy") >= 0) & (F.col("__jy") < n))
-    )
-    interleave = F.lit(0).cast("long")
-    for kk in range(res):
-        interleave = (
-            interleave
-            + F.shiftleft(F.shiftright(F.col("__jx").cast("long"), kk) % 2, 2 * kk + 1)
-            + F.shiftleft(F.shiftright(F.col("__jy").cast("long"), kk) % 2, 2 * kk)
-        )
-    cent = cent.withColumn("__cell", interleave).drop("__ix", "__iy", "__jx", "__jy", "__off")
-
-    pts = with_cell(points, res, bounds, cols, "__cell")
-    cand = pts.join(F.broadcast(cent), on="__cell", how="inner").drop("__cell")
-    d = dist_expr(F.col(cols.x), F.col(cols.y), F.col(cx), F.col(cy), latlon)
-    cand = cand.withColumn("dist", d)
-    if k == 1:
-        return _nn1_agg(cand, points.columns, centroid_cols)
-    w = Window.partitionBy(*[F.col(c) for c in (cols.traj_id, cols.t, cols.x, cols.y)]).orderBy(
-        F.col("dist").asc(), F.col(cid).asc()
-    )
-    out = cand.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
-    return out.withColumnRenamed("__rk", "knn_rank")
-
-
 def tile_rollup_median(
     df: DataFrame,
     res: int,
@@ -424,8 +366,6 @@ def tile_rollup_median(
     (rank = 0.5*(n-1); linear between the two straddling order stats),
     so the result matches percentile(value_col, 0.5) bit-for-bit when
     values and counts are exactly representable."""
-    from pyspark.sql import Window
-
     tagged = with_cell(df, res, bounds, cols, "cell")
     hist = tagged.groupBy("cell", F.col(value_col).alias("__v")).agg(
         F.count("*").alias("__c")
@@ -469,36 +409,17 @@ def tile_rollup(
     res: int,
     value_col: str | None = None,
     bounds=cells.WORLD,
-    n_salt: int = 0,
     cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Raster<->vector tile rollup: per-cell counts (+ optional value
-    aggregates) at resolution `res`. With n_salt > 0 the aggregation runs
-    two-phase (salted partial then final) so one hot tile cannot skew a
-    reducer — the north rule's explicit skew handling for tiling."""
+    aggregates) at resolution `res`. Every aggregate combines map-side,
+    so a hot tile reaches its reducer as one partial row per map task
+    (skew evidence: tools/bench_skew.py)."""
     tagged = with_cell(df, res, bounds, cols, "cell")
     aggs = [F.count("*").alias("n_points"), F.count_distinct(cols.traj_id).alias("n_trajs")]
     if value_col:
         aggs += [F.sum(value_col).alias("sum_value")]
-    if n_salt <= 0:
-        return tagged.groupBy("cell").agg(*aggs)
-    salted = with_salt(tagged, n_salt)
-    # counts roll up two-phase; exact distinct goes through a dedup first
-    # (dedup shuffles on (cell, traj_id) — already skew-diffused)
-    partial = salted.groupBy("cell", "salt").agg(
-        F.count("*").alias("__pn"), *( [F.sum(value_col).alias("__pv")] if value_col else [] )
-    )
-    final_aggs = [F.sum("__pn").alias("n_points")]
-    if value_col:
-        final_aggs += [F.sum("__pv").alias("sum_value")]
-    counts = partial.groupBy("cell").agg(*final_aggs)
-    distincts = (
-        tagged.select("cell", cols.traj_id)
-        .distinct()
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_trajs"))
-    )
-    return counts.join(distincts, "cell", "left")
+    return tagged.groupBy("cell").agg(*aggs)
 
 
 def tile_rollup_multires(

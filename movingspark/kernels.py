@@ -685,44 +685,3 @@ def segments_intersect_polygon(ax, ay, bx, by, poly: np.ndarray) -> np.ndarray:
         )
         hit |= bbox & (d1 * d2 <= 0) & (d3 * d4 <= 0)
     return hit
-
-
-def segment_polygon_clip(p0, p1, poly: np.ndarray):
-    """Clip segment p0->p1 against a simple polygon; returns list of
-    (t_enter, t_exit) parameter intervals (0..1) where the segment lies
-    inside the polygon. Backs the overlay clip (overlay.py:12-46).
-
-    Works for convex and concave simple polygons: collect edge-crossing
-    parameters, classify midpoints of the resulting sub-intervals.
-    """
-    p0 = np.asarray(p0, dtype=np.float64)
-    p1 = np.asarray(p1, dtype=np.float64)
-    poly = np.asarray(poly, dtype=np.float64)
-    if np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    d = p1 - p0
-    params = [0.0, 1.0]
-    n = len(poly)
-    for i in range(n):
-        a = poly[i]
-        b = poly[(i + 1) % n]
-        e = b - a
-        denom = d[0] * e[1] - d[1] * e[0]
-        if denom == 0.0:
-            continue
-        # p0 + t*d = a + s*e
-        w = a - p0
-        t = (w[0] * e[1] - w[1] * e[0]) / denom
-        s = (w[0] * d[1] - w[1] * d[0]) / denom
-        if 0.0 <= t <= 1.0 and 0.0 <= s <= 1.0:
-            params.append(t)
-    params = sorted(set(params))
-    out = []
-    for t0, t1 in zip(params[:-1], params[1:]):
-        mid = p0 + (t0 + t1) / 2.0 * d
-        if point_in_polygon(np.array([mid[0]]), np.array([mid[1]]), poly)[0]:
-            if out and abs(out[-1][1] - t0) < 1e-15:
-                out[-1] = (out[-1][0], t1)
-            else:
-                out.append((t0, t1))
-    return out

@@ -2,12 +2,12 @@
 
 - brute_force_topk: exact cosine top-k; broadcast the query set, keep
   the corpus distributed — the correctness baseline.
-- ivf_topk: IVF-style scale path — corpus is bucketed by nearest
-  centroid (coarse quantizer trained with a few k-means iterations on a
-  sample, deterministic seed), queries probe `nprobe` nearest buckets;
-  candidate set shrinks by ~n_centroids/nprobe.
-- lsh_bucket_topk: sign-random-projection (SimHash) bucketing with
-  deterministic projection vectors; same-bucket candidates only.
+- write_ivf_index + ivf_topk_indexed: IVF scale path — the corpus is
+  written partitioned by nearest coarse centroid (a few deterministic
+  k-means iterations on a sample), queries probe the `nprobe` nearest
+  bucket directories; the scan shrinks to ~nprobe/n_centroids.
+- embedding_near_dups: multi-band sign-random-projection LSH bucket
+  join + exact cosine refinement.
 
 Vector math uses a vectorized Arrow pandas UDF (numpy matmul over the
 batch) — the built-in aggregate/zip_with path is kept for the oracle-
@@ -99,58 +99,6 @@ def train_centroids(corpus: DataFrame, n_centroids: int, iters: int = 5,
     return C
 
 
-def assign_bucket_udf(C: np.ndarray):
-    @F.pandas_udf(T.IntegerType())
-    def bucket(v: pd.Series) -> pd.Series:
-        M = _as_matrix(v)
-        d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    return bucket
-
-
-def ivf_topk(corpus: DataFrame, queries: dict[int, np.ndarray], k: int = 10,
-             n_centroids: int = 16, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF: bucket corpus by coarse centroid; per query probe the nprobe
-    nearest buckets only. Approximate (recall < 1 when the true neighbor
-    lives outside probed buckets) — the 100TB path: the corpus scan
-    prunes to nprobe/n_centroids of the data via partition pruning when
-    the table is written bucketed/partitioned by `bucket`."""
-    C = train_centroids(corpus, n_centroids, vec_col=vec_col)
-    bucket = assign_bucket_udf(C)
-    bucketed = corpus.withColumn("bucket", bucket(F.col(vec_col)))
-
-    probe_rows = []
-    for qid, qv in queries.items():
-        d = ((C - np.asarray(qv, dtype=np.float64)) ** 2).sum(axis=1)
-        for b in np.argsort(d)[:nprobe]:
-            probe_rows.append((int(qid), int(b)))
-    spark = corpus.sparkSession
-    probes = spark.createDataFrame(probe_rows, "query_id int, bucket int")
-
-    cand = bucketed.join(F.broadcast(probes), "bucket")
-    return _score_and_topk(cand, queries, k, id_col, vec_col)
-
-
-def _score_and_topk(cand: DataFrame, queries: dict[int, np.ndarray], k: int,
-                    id_col: str, vec_col: str) -> DataFrame:
-    """Shared IVF tail: cosine against each candidate's probing query,
-    then the two-phase top-k."""
-    qids, sims = cosine_udf(queries)
-    qpos = {q: i for i, q in enumerate(qids)}
-    pos_expr = F.element_at(
-        F.create_map(*[x for q, i in qpos.items() for x in (F.lit(q), F.lit(i))]),
-        F.col("query_id"),
-    )
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(F.element_at(sims(F.col(vec_col)), pos_expr + 1), 6).alias("sim"),
-    ).filter(F.col("query_id") != F.col("vec_id"))
-    return _topk_per_query(scored, k)
-
-
 def write_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
                     id_col: str = "vec_id", vec_col: str = "embedding") -> np.ndarray:
     """Materialize the IVF index on disk: the corpus written
@@ -160,7 +108,13 @@ def write_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
     bucket IN-list lands in the scan's PartitionFilters, so a query
     physically reads only nprobe/n_centroids of the corpus files."""
     C = train_centroids(corpus, n_centroids, vec_col=vec_col)
-    bucket = assign_bucket_udf(C)
+
+    @F.pandas_udf(T.IntegerType())
+    def bucket(v: pd.Series) -> pd.Series:
+        M = _as_matrix(v)
+        d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        return pd.Series(d.argmin(axis=1).astype(np.int32))
+
     corpus.withColumn("bucket", bucket(F.col(vec_col))).write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(f"{path}/corpus")
@@ -196,29 +150,19 @@ def ivf_topk_indexed(spark, path: str, queries: dict[int, np.ndarray], k: int = 
     corpus = spark.read.parquet(f"{path}/corpus").filter(F.col("bucket").isin(buckets))
     probes = spark.createDataFrame(probe_rows, "query_id int, bucket int")
     cand = corpus.join(F.broadcast(probes), "bucket")
-    return _score_and_topk(cand, queries, k, id_col, vec_col)
-
-
-def simhash_bucket(corpus: DataFrame, n_planes: int = 8, vec_col: str = "embedding",
-                   dim: int | None = None) -> DataFrame:
-    """LSH: sign-random-projection bucket id. Projection vectors are
-    deterministic (closed-form pseudo-random from plane/dim indices) so
-    repeated runs and oracles agree."""
-    first = corpus.select(F.size(vec_col).alias("d")).first()
-    d = dim or first["d"]
-    # deterministic "random" planes: sin-hash of (plane, dim) index
-    P = np.sin(np.arange(n_planes)[:, None] * 7919 + np.arange(d)[None, :] * 104729).astype(np.float64)
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket(v: pd.Series) -> pd.Series:
-        M = _as_matrix(v)
-        signs = (M @ P.T) > 0
-        out = np.zeros(len(M), dtype=np.int32)
-        for b in range(n_planes):
-            out |= signs[:, b].astype(np.int32) << b
-        return pd.Series(out)
-
-    return corpus.withColumn("lsh_bucket", bucket(F.col(vec_col)))
+    # cosine against each candidate's probing query, then two-phase top-k
+    qids, sims = cosine_udf(queries)
+    qpos = {q: i for i, q in enumerate(qids)}
+    pos_expr = F.element_at(
+        F.create_map(*[x for q, i in qpos.items() for x in (F.lit(q), F.lit(i))]),
+        F.col("query_id"),
+    )
+    scored = cand.select(
+        "query_id",
+        F.col(id_col).alias("vec_id"),
+        F.round(F.element_at(sims(F.col(vec_col)), pos_expr + 1), 6).alias("sim"),
+    ).filter(F.col("query_id") != F.col("vec_id"))
+    return _topk_per_query(scored, k)
 
 
 def embedding_near_dups(corpus: DataFrame, threshold: float = 0.95, n_planes: int = 16,

@@ -60,12 +60,6 @@ def punct_ratio_expr(text: Column) -> Column:
     return p / n
 
 
-def stopword_ratio_expr(text: Column, lang: str = "en") -> Column:
-    toks = F.transform(tokens_expr(lower_ascii(text)), lambda t: t)
-    hits = F.size(F.filter(toks, lambda t: t.isin(LANG_MARKERS[lang])))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def lang_id_expr(text: Column) -> Column:
     """Heuristic language ID: the language whose marker stopwords occur
     most often among the first 64 tokens; 'und' (undetermined) if none."""
@@ -370,27 +364,6 @@ def winnow_near_dup_pairs(
     )
 
 
-def simhash_expr(text: Column, bits: int = 16) -> Column:
-    """SimHash over word tokens: per token take md5-derived bit
-    projections; the document hash is the sign-aggregated bit vector.
-    Implemented with only built-in expressions: for each bit b, count
-    tokens whose md5 hex nibble pattern sets bit b; bit is 1 when the
-    count exceeds half the token count."""
-    toks = tokens_expr(lower_ascii(text))
-    n = F.greatest(F.size(toks), F.lit(1))
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        # token votes for bit b: md5 hex char at position b, high nibble bit
-        votes = F.size(
-            F.filter(
-                toks,
-                lambda t: F.conv(F.substring(F.md5(t), b + 1, 1), 16, 10).cast("int") >= 8,
-            )
-        )
-        out = out + F.when(votes * 2 > n, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
-    return out
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -555,18 +528,20 @@ def add_simhash(
     bits: int = 16,
     out_col: str = "simhash",
 ) -> DataFrame:
-    """Scale-path SimHash: same values as `simhash_expr`, but ONE md5
-    per token instead of `bits` (simhash_expr evaluates md5 inside a
-    HOF filter lambda per bit — 16x the hashing, on the interpreted
-    expression path). Shape: explode tokens, hash once, project the
-    `bits` per-token votes off the single hash string, then a map-side
-    combinable groupBy(doc).sum — everything whole-stage codegen.
+    """SimHash over word tokens with ONE md5 per token: token t votes
+    for bit b when md5(t) hex nibble b is >= 8, and bit b is set when
+    its votes exceed half the token count. (The per-row formulation,
+    md5 inside a HOF filter lambda per bit, hashes 16x and runs on the
+    interpreted expression path; it is kept only as the test oracle
+    `tests/oracles.py:simhash_expr`.) Shape: explode tokens, hash once,
+    project the `bits` per-token votes off the single hash string, then
+    a map-side combinable groupBy(doc).sum — all whole-stage codegen.
     Returns (id_col, out_col); join back if the full row is needed.
     """
     toks = tokens_expr(lower_ascii(F.col(text_col)))
     # explode_OUTER: a null-text doc keeps one null-token row, so every
     # doc survives to the aggregate (votes 0 -> hash 0, same as the
-    # expression path) with NO join-back — one exchange total.
+    # per-row oracle) with NO join-back — one exchange total.
     ex = df.select(F.col(id_col), F.explode_outer(toks).alias("__tok")).select(
         id_col, F.md5(F.col("__tok")).alias("__h")
     )

@@ -8,14 +8,19 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - dp_mask_np       ~ kernels.dp_mask       (np.cross chord distance)
 - kf_rts_1d        ~ smooth._kf_rts        (per-axis 2x2 matrix form)
 - clip_ranges_scalar ~ overlay._clip_ranges_linebased (one segment at a time)
+- segment_polygon_clip  one segment against a polygon (clip_ranges_scalar's core)
+- simhash_expr     ~ text.add_simhash      (per-row HOF expression, md5 per bit)
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from movingspark import kernels
 from movingspark.overlay import SNAP_S
+from movingspark.text import lower_ascii, tokens_expr
 
 
 def convex_hull_np(xy: np.ndarray) -> np.ndarray:
@@ -114,7 +119,7 @@ def kf_rts_1d(z: np.ndarray, dts: np.ndarray, q: float, r: float) -> np.ndarray:
 
 def clip_ranges_scalar(x, y, t, poly):
     """[(t0, tn, p0, pn)] ranges of the track inside poly, one segment
-    at a time through kernels.segment_polygon_clip."""
+    at a time through segment_polygon_clip."""
     poly = np.asarray(poly, float)
     if np.array_equal(poly[0], poly[-1]):
         poly = poly[:-1]
@@ -133,7 +138,7 @@ def clip_ranges_scalar(x, y, t, poly):
             if kernels.point_in_polygon(np.array([x0]), np.array([y0]), poly)[0]:
                 ranges.append((t[i - 1], t[i], (x0, y0), (x1, y1)))
             continue
-        for s0, s1 in kernels.segment_polygon_clip((x0, y0), (x1, y1), poly):
+        for s0, s1 in segment_polygon_clip((x0, y0), (x1, y1), poly):
             t0 = t[i - 1] + (t[i] - t[i - 1]) * s0
             tn = t[i - 1] + (t[i] - t[i - 1]) * s1
             # microsecond reconstruction (overlay.py:29-34)
@@ -163,3 +168,65 @@ def clip_ranges_scalar(x, y, t, poly):
     if cur is not None:
         dissolved.append(tuple(cur))
     return dissolved
+
+
+def segment_polygon_clip(p0, p1, poly: np.ndarray):
+    """Clip segment p0->p1 against a simple polygon; returns list of
+    (t_enter, t_exit) parameter intervals (0..1) where the segment lies
+    inside the polygon (the per-segment clip of overlay.py:12-46).
+
+    Works for convex and concave simple polygons: collect edge-crossing
+    parameters, classify midpoints of the resulting sub-intervals.
+    """
+    p0 = np.asarray(p0, dtype=np.float64)
+    p1 = np.asarray(p1, dtype=np.float64)
+    poly = np.asarray(poly, dtype=np.float64)
+    if np.array_equal(poly[0], poly[-1]):
+        poly = poly[:-1]
+    d = p1 - p0
+    params = [0.0, 1.0]
+    n = len(poly)
+    for i in range(n):
+        a = poly[i]
+        b = poly[(i + 1) % n]
+        e = b - a
+        denom = d[0] * e[1] - d[1] * e[0]
+        if denom == 0.0:
+            continue
+        # p0 + t*d = a + s*e
+        w = a - p0
+        t = (w[0] * e[1] - w[1] * e[0]) / denom
+        s = (w[0] * d[1] - w[1] * d[0]) / denom
+        if 0.0 <= t <= 1.0 and 0.0 <= s <= 1.0:
+            params.append(t)
+    params = sorted(set(params))
+    out = []
+    for t0, t1 in zip(params[:-1], params[1:]):
+        mid = p0 + (t0 + t1) / 2.0 * d
+        if kernels.point_in_polygon(np.array([mid[0]]), np.array([mid[1]]), poly)[0]:
+            if out and abs(out[-1][1] - t0) < 1e-15:
+                out[-1] = (out[-1][0], t1)
+            else:
+                out.append((t0, t1))
+    return out
+
+
+def simhash_expr(text: Column, bits: int = 16) -> Column:
+    """SimHash over word tokens: per token take md5-derived bit
+    projections; the document hash is the sign-aggregated bit vector.
+    Implemented with only built-in expressions: for each bit b, count
+    tokens whose md5 hex nibble pattern sets bit b; bit is 1 when the
+    count exceeds half the token count."""
+    toks = tokens_expr(lower_ascii(text))
+    n = F.greatest(F.size(toks), F.lit(1))
+    out = F.lit(0).cast("long")
+    for b in range(bits):
+        # token votes for bit b: md5 hex char at position b, high nibble bit
+        votes = F.size(
+            F.filter(
+                toks,
+                lambda t: F.conv(F.substring(F.md5(t), b + 1, 1), 16, 10).cast("int") >= 8,
+            )
+        )
+        out = out + F.when(votes * 2 > n, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
+    return out

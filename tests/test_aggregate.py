@@ -122,20 +122,30 @@ def test_cluster_scale_fallback_two_level(spark):
     cents = sorted((r["cx"], r["cy"]) for r in got)
     assert abs(cents[0][0] - 1.0) < 1.5 and abs(cents[1][0] - 1001.0) < 1.5
 
-    # hard error still available on request
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        aggregate.cluster_significant_points(
-            sig, max_distance=10.0, max_points=10, scale_fallback=False
-        )
-
     # below the cap: exact driver-side path unchanged vs grid_cluster
     small = aggregate.cluster_significant_points(sig, max_distance=10.0)
     pts = [(r["x"], r["y"]) for r in sig.orderBy("traj_id", "seq").collect()]
     want = aggregate.grid_cluster(pts, 10.0)
     got_small = [(r["cx"], r["cy"], r["n"]) for r in small.orderBy("cluster_id").collect()]
     assert [(c[0], c[1], c[2]) for c in want] == got_small
+
+
+def test_grid_cluster_span_exact_multiple_of_cell():
+    """A point span that is an exact multiple of max_distance puts the
+    max-coordinate point in cell floor(span/cell); when it opens a new
+    cluster that cell must exist (x, y and diagonal)."""
+    assert aggregate.grid_cluster([(0.0, 0.0), (20.0, 0.0)], 10.0) == [
+        (0.0, 0.0, 1), (20.0, 0.0, 1)
+    ]
+    assert aggregate.grid_cluster([(0.0, 0.0), (0.0, 20.0)], 10.0) == [
+        (0.0, 0.0, 1), (0.0, 20.0, 1)
+    ]
+    assert aggregate.grid_cluster([(0.0, 0.0), (10.0, 10.0), (20.0, 20.0)], 10.0) == [
+        (0.0, 0.0, 1), (10.0, 10.0, 1), (20.0, 20.0, 1)
+    ]
+    assert aggregate.grid_cluster_weighted([(0.0, 0.0), (20.0, 20.0)], [2, 3], 10.0) == [
+        (0.0, 0.0, 2), (20.0, 20.0, 3)
+    ]
 
 
 def test_grid_cluster_weighted_zero_weight_partials():

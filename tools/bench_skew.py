@@ -6,9 +6,11 @@ rows (~1000:1 vs the mean occupied cell; ingest.synth_skewed_points)
 plus a uniform twin at identical row count, then measures every skew
 surface the engine has:
 
-A. tile_rollup: plain on uniform (baseline), plain on skewed, salted
-   (n_salt=32) on skewed — and asserts the salted result EQUALS the
-   plain result on the skewed input (same 4k rows).
+A. tile_rollup: plain on uniform (baseline) vs plain on skewed — every
+   rollup aggregate combines map-side, so the hot cell reaches its
+   reducer as one partial row per map task. A2 contrasts the median
+   rollup, which does not combine: percentile() vs the value histogram
+   (tile_rollup_median), results asserted equal.
 B. point-in-polygon join on skewed vs uniform: the engine broadcasts
    the polygon cell cover, so point rows never shuffle — the hot cell
    cannot concentrate on a reducer by construction.
@@ -19,7 +21,7 @@ C. a forced sort-merge join on the skewed cell key (broadcast disabled)
    same shape.
 D. per-partition lineage: Checkpointer manifests for the skewed points
    written hash-partitioned by cell (hot reducer visible as
-   skew_factor >> 1) vs by (cell, salt) (rebalanced, ~1).
+   skew_factor >> 1) vs round-robin (balanced, ~1).
 E. window skew: per-trajectory kinematics with one mega-trajectory
    holding 30% of rows vs uniform trajectories — order-dependent
    window semantics are inherently bounded by the largest group
@@ -78,7 +80,7 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from movingspark import cells, derive, ingest, joins
+    from movingspark import derive, ingest, joins
     from movingspark.checkpoint import Checkpointer
     from movingspark.session import tune_builder
 
@@ -108,16 +110,6 @@ def main():
     # -- A: tile rollup --------------------------------------------------
     out["rollup_uniform_plain"] = timed(lambda: force(joins.tile_rollup(uniform, res=6, value_col="value")), args.iters)
     out["rollup_skewed_plain"] = timed(lambda: force(joins.tile_rollup(skewed, res=6, value_col="value")), args.iters)
-    out["rollup_skewed_salted"] = timed(lambda: force(joins.tile_rollup(skewed, res=6, value_col="value", n_salt=32)), args.iters)
-    plain_rows = {r["cell"]: r.asDict() for r in joins.tile_rollup(skewed, res=6, value_col="value").collect()}
-    salted_rows = {r["cell"]: r.asDict() for r in joins.tile_rollup(skewed, res=6, value_col="value", n_salt=32).collect()}
-    assert plain_rows.keys() == salted_rows.keys()
-    for c, p in plain_rows.items():
-        s = salted_rows[c]
-        assert p["n_points"] == s["n_points"] and p["n_trajs"] == s["n_trajs"], c
-        # float sums associate differently across groupings; equal to 1 ulp-ish
-        assert abs(p["sum_value"] - s["sum_value"]) <= 1e-6 * max(abs(p["sum_value"]), 1.0), c
-    out["rollup_salted_equals_plain"] = True
 
     # -- A2: median rollup — the rollup shape partial agg does NOT save.
     # percentile() buffers every group value, so the hot cell's whole
@@ -183,19 +175,18 @@ def main():
               "spark.sql.adaptive.forceOptimizeSkewedJoin"):
         spark.conf.unset(k)
 
-    # -- D: lineage skew_factor before/after salting ---------------------
+    # -- D: lineage skew_factor, hash-by-cell vs round-robin -------------
     ck_dir = tempfile.mkdtemp(prefix="skew_ck_")
     try:
         ck = Checkpointer(spark, ck_dir)
         by_cell = joins.with_cell(skewed, res=6).repartition(args.cpus, F.col("cell"))
         ck.stage("points_by_cell", lambda: by_cell)
         m1 = ck.manifest("points_by_cell")
-        salted = joins.with_salt(joins.with_cell(skewed, res=6), 32)
-        by_cell_salt = salted.repartition(args.cpus, F.col("cell"), F.col("salt"))
-        ck.stage("points_by_cell_salted", lambda: by_cell_salt)
-        m2 = ck.manifest("points_by_cell_salted")
+        round_robin = joins.with_cell(skewed, res=6).repartition(args.cpus)
+        ck.stage("points_round_robin", lambda: round_robin)
+        m2 = ck.manifest("points_round_robin")
         out["lineage_skew_factor_by_cell"] = m1["skew"]["skew_factor"]
-        out["lineage_skew_factor_salted"] = m2["skew"]["skew_factor"]
+        out["lineage_skew_factor_round_robin"] = m2["skew"]["skew_factor"]
     finally:
         shutil.rmtree(ck_dir, ignore_errors=True)
 
@@ -205,9 +196,6 @@ def main():
     out["kinematics_uniform_trajs"] = timed(lambda: force(derive.add_all_kinematics(uniform)), args.iters)
     out["kinematics_mega_traj"] = timed(lambda: force(derive.add_all_kinematics(hot_traj)), args.iters)
 
-    out["salted_vs_uniform_ratio"] = round(
-        out["rollup_skewed_salted"]["sec"] / max(out["rollup_uniform_plain"]["sec"], 1e-9), 2
-    )
     out["median_hist_vs_uniform_ratio"] = round(
         out["median_skewed_histogram"]["sec"] / max(out["median_uniform_percentile"]["sec"], 1e-9), 2
     )
@@ -236,7 +224,6 @@ uniform twin at identical row count. Best-of-iters, steal/sys annotated.
 | --- | --- | --- | --- | --- |
 {row("tile_rollup plain, uniform", "rollup_uniform_plain", "baseline")}
 {row("tile_rollup plain, skewed", "rollup_skewed_plain", "flat: map-side partial agg makes combinable aggs (count/sum/count-distinct) structurally skew-immune")}
-{row("tile_rollup salted(32), skewed", "rollup_skewed_salted", "= plain result (asserted); explicit salting is pure overhead HERE - its niche is engines/aggs without partial merge")}
 {row("median rollup via percentile(), uniform", "median_uniform_percentile", "proportional-state agg: buffers every group value")}
 {row("median rollup via percentile(), skewed", "median_skewed_percentile", "hot cell's whole row mass lands on ONE reducer")}
 {row("median rollup via value histogram, skewed", "median_skewed_histogram", f"tile_rollup_median: = percentile result (asserted); {r['median_hist_vs_uniform_ratio']}x the uniform percentile baseline")}
@@ -250,10 +237,10 @@ uniform twin at identical row count. Best-of-iters, steal/sys annotated.
 Lineage evidence (Checkpointer per-partition parquet-footer row counts):
 writing the skewed points hash-partitioned **by cell** records
 `skew_factor = {r['lineage_skew_factor_by_cell']}`; the same rows
-partitioned **by (cell, salt=32)** record
-`skew_factor = {r['lineage_skew_factor_salted']}` — the manifest makes a
-hot reducer visible before a 100 TB job wastes a day on it, and the salted
-layout is the fix the manifest verifies.
+repartitioned **round-robin** record
+`skew_factor = {r['lineage_skew_factor_round_robin']}` — the manifest makes a
+hot reducer visible before a 100 TB job wastes a day on it, and verifies
+the balanced layout that fixes it.
 
 AQE skew-join thresholds were scaled to sandbox data volume
 (`skewedPartitionThresholdInBytes=4m`, factor 2, advisory 4m,
@@ -265,9 +252,8 @@ adaptive plan shows `SortMergeJoin(skew=true)` with an
 What this measures, honestly: Spark's hash aggregation with partial
 (map-side) combine is structurally skew-immune for combinable
 aggregates — the hot cell reaches the reducer as at most one partial
-row per map task — so for counts/sums/count-distinct the PLAIN rollup
-is both the fastest and the safe plan, and `tile_rollup(n_salt>0)`
-exists for aggregate shapes without that property. The rollup shape
+row per map task — so for counts/sums/count-distinct the plain rollup
+is both the fastest and the safe plan. The rollup shape
 that genuinely skews is the proportional-state aggregate (exact
 percentile buffers every value), and there the engine's answer is
 algebraic restructuring (`tile_rollup_median`: compose through the
