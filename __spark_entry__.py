@@ -1887,81 +1887,13 @@ FROM documents GROUP BY 1 HAVING COUNT(*) > 1
 """
 
 
-def q_dedup_minhash(spark, sf_dir):
-    """MinHash-style near-dup candidates: 3-gram word shingles hashed with
-    md5, per-doc signature = lexicographic min over shingles for 4 salted
-    hash families, banded into one bucket key; docs sharing a bucket are
-    candidate pairs. (Shingle->minhash->band->bucket-join.)"""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # Shape notes (measured, not cosmetic):
-    # - split/lowercase the text ONCE per doc in its own projection. The
-    #   earlier transform(sequence(...), lambda)-built shingle array ran
-    #   on the interpreted expression path (higher-order functions break
-    #   whole-stage codegen) and re-evaluated split(translate(text)) for
-    #   EVERY shingle — a straggler task sat minutes in UTF8String
-    #   .translate/Pattern.split.
-    # - explode a shingle INDEX (plain generator, codegen'd) and slice
-    #   the words array per row; hash each shingle once per family with
-    #   map-side partial min aggregation — the shape that scales.
-    # - repartition after the scan: a small parquet file arrives as ONE
-    #   input split (at production scale the table has thousands of
-    #   splits, so the explode parallelism is free; here it must be
-    #   re-established explicitly or the whole query runs on one core).
-    n_part = spark.sparkContext.defaultParallelism
-    w = docs.repartition(n_part, "doc_id").select(
-        "doc_id", F.split(_lower_ascii(F.col("text")), "\\s+").alias("words")
-    )
-    ex = w.select(
-        "doc_id",
-        "words",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.size("words") - 3, F.lit(0)))).alias("k"),
-    ).select("doc_id", F.concat_ws(" ", F.slice("words", F.col("k") + 1, 3)).alias("s"))
-    g = ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(str(salt)), F.col("s")))).alias(f"mh{salt}")
-            for salt in range(4)
-        ]
-    )
-    band = F.md5(F.concat_ws("|", "mh0", "mh1", "mh2", "mh3"))
-    return (
-        g.withColumn("band", band)
-        .groupBy("band")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-SQL_DEDUP_MINHASH = """
-WITH w AS (
-  SELECT doc_id, string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS words FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_transform(range(0, GREATEST(len(words) - 3, 0) + 1),
-             i -> array_to_string(words[i+1: i+3], ' ')) AS shingles
-  FROM w
-),
-mh AS (
-  SELECT doc_id,
-         list_min(list_transform(shingles, s -> md5('0' || s))) AS mh0,
-         list_min(list_transform(shingles, s -> md5('1' || s))) AS mh1,
-         list_min(list_transform(shingles, s -> md5('2' || s))) AS mh2,
-         list_min(list_transform(shingles, s -> md5('3' || s))) AS mh3
-  FROM sh
-)
-SELECT md5(mh0 || '|' || mh1 || '|' || mh2 || '|' || mh3) AS band,
-       COUNT(*) AS n_docs, MIN(doc_id) AS keep_doc_id
-FROM mh GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
 N_BANDS, ROWS_PER_BAND = 8, 2
 
 
 def q_dedup_minhash_banded(spark, sf_dir):
     """b x r banded MinHash LSH (text.minhash_band_pairs): the real
     near-dup detector — recall 1-(1-J^r)^b ~ 0.9998 at J=0.8 with b=8,
-    r=2, vs J^4 ~ 0.41 for the single-band signature query above."""
+    r=2, vs J^4 ~ 0.41 for a single band of four minhashes."""
     from movingspark.text import minhash_band_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -2655,39 +2587,16 @@ FROM documents GROUP BY lang
 """
 
 
-def q_ann_cosine(spark, sf_dir):
-    """Brute-force cosine top-k (k=5) neighbors for the first 3 vectors.
-    Similarity rounded before ranking so ordering is reproducible."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pairs = emb.crossJoin(F.broadcast(qs)).filter(F.col("vec_id") != F.col("query_id"))
-    dot = F.aggregate(
-        F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-    )
-    na = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, z: acc + z * z))
-    nb = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda acc, z: acc + z * z))
-    sim = F.round(dot / (na * nb), 4)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        pairs.withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "vec_id", "sim", "rk")
-    )
-
-
 def q_ann_quantized(spark, sf_dir):
     """Compressed-domain ANN: top-k (k=5) neighbors ranked by the
-    COSINE OF THE INT8 CODES (similarity.quantize_int8's quantizer) —
+    COSINE OF THE INT8 CODES (similarity.int8_scale / int8_code) —
     the search mode a 100 TB index actually runs, scanning 4x less
     data. The int dot product and squared norms are exact integer
     arithmetic (order-free, engine-exact); per-vector scales cancel in
     the cosine. Ties and the final rounding are deterministic, so the
     oracle reproduces the ranking bit-for-bit."""
+    from movingspark.similarity import int8_code, int8_scale
+
     # repartition before the array kernels: higher-order functions run
     # interpreted, so a single parquet split would serialize the whole
     # quantize+score pipeline onto one core (measured 2.7 s -> 1.5 s
@@ -2698,15 +2607,12 @@ def q_ann_quantized(spark, sf_dir):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    amax = F.array_max(F.transform(F.col("v"), lambda x: F.abs(x)))
-    scale = F.when(amax == F.lit(0.0), F.lit(1.0)).otherwise(amax / F.lit(127.0))
-    base = emb.select("vec_id", F.col("v"), scale.alias("__s"))
-    code = lambda x: F.greatest(
-        F.lit(-127.0),
-        F.least(F.lit(127.0), F.floor(x / F.col("__s") + F.lit(0.5)).cast("double")),
-    ).cast("long")
+    base = emb.select("vec_id", F.col("v"), int8_scale(F.col("v")).alias("__s"))
+    # one transform, the long cast inside the lambda: no second
+    # interpreted pass over the codes
     base = base.select(
-        "vec_id", F.transform(F.col("v"), code).alias("codes")
+        "vec_id",
+        F.transform(F.col("v"), lambda x: int8_code(x, F.col("__s")).cast("long")).alias("codes"),
     ).withColumn(
         "ssq",
         F.aggregate(
@@ -2769,23 +2675,6 @@ pairs AS (
          FLOOR(CAST(list_aggregate(list_transform(list_zip(codes, qcodes), z -> z[1] * z[2]), 'sum') AS DOUBLE)
                / SQRT(CAST(ssq AS DOUBLE) * CAST(qssq AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS sim
   FROM n, qs WHERE n.vec_id <> qs.query_id
-)
-SELECT query_id, vec_id, sim, rk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) AS rk
-  FROM pairs
-) WHERE rk <= 5
-"""
-
-
-SQL_ANN_COSINE = """
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-qs AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 3),
-pairs AS (
-  SELECT query_id, vec_id,
-         ROUND(list_sum(list_transform(list_zip(v, qv), z -> z[1] * z[2]))
-               / (SQRT(list_sum(list_transform(v, a -> a * a)))
-                  * SQRT(list_sum(list_transform(qv, a -> a * a)))), 4) + 0.0 AS sim
-  FROM emb CROSS JOIN qs WHERE vec_id != query_id
 )
 SELECT query_id, vec_id, sim, rk FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) AS rk
@@ -3526,7 +3415,7 @@ FROM d
 # Registry entries bench.py times after its own kinematics, stop,
 # rollup and doc-pipeline legs.
 BENCH = (
-    "dedup_minhash", "text_stats", "simhash", "ann_cosine",
+    "dedup_minhash_banded", "text_stats", "simhash", "ann_topk_scale",
     "winnow_fingerprints", "gap_sessions", "overlay_clip", "gopher_rules",
     "contamination", "tile_rollup_median", "media_decode", "raster_regions",
     "resample", "proximity_pairs", "asof_join", "frechet_route",
@@ -3659,7 +3548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hausdorff_route": q_hausdorff_route,
         "visit_counts": q_visit_counts,
         "doc_points": q_doc_points,
-        "dedup_minhash": q_dedup_minhash,
         "semantic_dedup": q_semantic_dedup,
         "clean_corpus_stats": q_clean_corpus_stats,
         "pii_counts": q_pii_counts,
@@ -3672,7 +3560,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "offset_minutes": q_offset_minutes,
         "kinematics_latlon": q_kinematics_latlon,
         "lang_stats": q_lang_stats,
-        "ann_cosine": q_ann_cosine,
         "split_value_change": q_split_value_change,
         "split_speed": q_split_speed,
         "min_length_filter": q_min_length_filter,
@@ -3745,7 +3632,6 @@ def oracle_sql() -> dict[str, str]:
         "doc_tiling": SQL_DOC_TILING,
         "doc_spatial_join": SQL_DOC_SPATIAL_JOIN,
         "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_minhash": SQL_DEDUP_MINHASH,
         "dedup_minhash_banded": SQL_DEDUP_MINHASH_BANDED,
         "dedup_components": SQL_DEDUP_COMPONENTS,
         "dedup_survivors": SQL_DEDUP_SURVIVORS,
@@ -3762,7 +3648,6 @@ def oracle_sql() -> dict[str, str]:
         "winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
         "winnow_near_dups": SQL_WINNOW_NEAR_DUPS,
         "lang_stats": SQL_LANG_STATS,
-        "ann_cosine": SQL_ANN_COSINE,
         "ann_topk_scale": SQL_ANN_TOPK_SCALE,
         "split_value_change": SQL_SPLIT_VALUE_CHANGE,
         "split_speed": SQL_SPLIT_SPEED,

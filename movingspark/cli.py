@@ -14,7 +14,8 @@ Subcommands:
   per-partition lineage (resume by re-running with the same
   --checkpoints path).
 - dedup: training-data dedup — [gopher filter] -> banded LSH pairs ->
-  connected components -> survivors parquet, checkpointed per stage.
+  exact-Jaccard verification -> connected components -> survivors
+  parquet, checkpointed per stage.
 - kinematics: derive D1-D6 columns for a point table.
 """
 
@@ -79,9 +80,7 @@ def cmd_dedup(args) -> int:
     pairs are CANDIDATES (a J~0.3 pair collides in some band with ~50%
     probability at b=8/r=2, and over-cap band buckets are chain-linked
     by key alone), so each candidate's n-gram Jaccard is recomputed
-    exactly and only pairs >= --threshold feed the components stage.
-    --no-verify opts out (recall-max mode: deletes on raw band
-    collisions; documented precision trade)."""
+    exactly and only pairs >= --threshold feed the components stage."""
     from movingspark import components, ingest
     from movingspark.checkpoint import Checkpointer
     from movingspark.text import gopher_filter, minhash_band_pairs, verify_pairs_jaccard
@@ -110,19 +109,13 @@ def cmd_dedup(args) -> int:
 
     if args.gopher:
         docs = ck.stage("quality", lambda: gopher_filter(docs))
+    cand = ck.stage("pairs", lambda: minhash_band_pairs(docs, "doc_id", "text"))
     pairs = ck.stage(
-        "pairs",
-        lambda: minhash_band_pairs(docs, "doc_id", "text",
-                                   max_band_bucket=args.max_band_bucket),
+        "verify",
+        lambda: verify_pairs_jaccard(
+            docs, cand, "doc_id", "text", threshold=args.threshold
+        ).select("doc_a", "doc_b"),
     )
-    if not args.no_verify:
-        docs_v = docs
-        pairs = ck.stage(
-            "verify",
-            lambda: verify_pairs_jaccard(
-                docs_v, pairs, "doc_id", "text", threshold=args.threshold
-            ).select("doc_a", "doc_b"),
-        )
     comp = ck.stage("components", lambda: components.connected_components(
         pairs, src="doc_a", dst="doc_b"))
     losers = comp.filter(F.col("node") != F.col("component")).select(
@@ -170,11 +163,8 @@ def main(argv=None) -> int:
     d.add_argument("--checkpoints", required=True)
     d.add_argument("--output", required=True)
     d.add_argument("--gopher", action="store_true", help="apply the Gopher quality filter first")
-    d.add_argument("--max-band-bucket", type=int, default=2000)
     d.add_argument("--threshold", type=float, default=0.8,
                    help="exact n-gram Jaccard a candidate pair must reach before its docs dedup")
-    d.add_argument("--no-verify", action="store_true",
-                   help="skip exact verification and dedup on raw band collisions (recall-max)")
     d.set_defaults(fn=cmd_dedup)
 
     k = sub.add_parser("kinematics")

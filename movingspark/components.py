@@ -1,9 +1,11 @@
 """Distributed connected components + dedup-cluster survivor selection.
 
-Near-dup detection (`text.minhash_band_pairs`, `text.ngram_jaccard_pairs`,
-`similarity.embedding_near_dups`) emits candidate PAIRS; a production
-dedup pipeline must turn those pairs into duplicate CLUSTERS and keep one
-canonical survivor per cluster. That is a connected-components problem on
+Near-dup detection emits PAIRS: `text.minhash_band_pairs` candidates
+(exact-checked by `text.verify_pairs_jaccard` in the CLI dedup job),
+`text.ngram_jaccard_pairs`, `text.winnow_near_dup_pairs` and
+`similarity.embedding_near_dups`. A production dedup pipeline must turn
+those pairs into duplicate CLUSTERS and keep one canonical survivor per
+cluster. That is a connected-components problem on
 a graph whose nodes are doc ids and whose edges are the near-dup pairs.
 
 Algorithm: alternating large-star / small-star (Kiveris et al., "Connected

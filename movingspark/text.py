@@ -7,7 +7,7 @@ function returns Column expressions usable in any select.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -120,6 +120,8 @@ def contamination_hits(
     the corpus or its gram explosion. n=13 makes
     false collisions vanishingly rare, so hashing n-grams (8-byte keys
     in the broadcast set) is sound."""
+    # its own tokenizer, not _word_shingles: a doc shorter than n words
+    # emits no gram here (the oracle pins this), not one short shingle
     def grams(df, id_alias):
         words = F.split(lower_ascii(F.regexp_replace(F.col(text_col), "\\s+", " ")), " ")
         return (
@@ -327,7 +329,7 @@ def winnow_near_dup_pairs(
     k: int = 8,
     w: int = 16,
     min_shared: int = 2,
-    max_fp_doc_freq: int | None = 2000,
+    max_fp_doc_freq: int = 2000,
 ) -> DataFrame:
     """MOSS-style near-dup detection over winnowing fingerprints
     (Schleimer et al. 2003 §4): two documents sharing >= `min_shared`
@@ -335,32 +337,57 @@ def winnow_near_dup_pairs(
     guaranteed shared k-gram; winnowing guarantees any match of length
     >= w+k-1 shares at least one). Output (doc_a, doc_b, n_shared).
 
-    Scale shape mirrors `ngram_jaccard_pairs`: inverted index on the
-    fingerprint, with `max_fp_doc_freq` capping degenerate fingerprints
-    (boilerplate k-grams present in thousands of docs would emit
-    DF^2/2 candidate rows; capped fingerprints are dropped from pair
-    GENERATION only — matching Stanford MOSS, which ignores
-    over-common fingerprints as 'template code'). Pass None to opt out.
-    """
+    The pairs come from the fingerprint inverted index of
+    `_shared_key_pairs`; fingerprints in more than `max_fp_doc_freq`
+    docs are dropped from pair GENERATION only — matching Stanford MOSS,
+    which ignores over-common fingerprints as 'template code'."""
     fps = winnow_fingerprints(docs, text_col=text_col, k=k, w=w, doc_col=doc_col)
-    fps = fps.select(F.col(doc_col).alias("doc"), "fp")
-    if max_fp_doc_freq is not None:
-        from pyspark.sql import Window
+    keyed = fps.select(F.col(doc_col).alias("doc"), F.col("fp").alias("key"))
+    return _shared_key_pairs(keyed, max_fp_doc_freq).filter(F.col("n_shared") >= min_shared)
 
-        wc = Window.partitionBy("fp")
-        fps = (
-            fps.withColumn("__df", F.count("*").over(wc))
-            .filter(F.col("__df") <= max_fp_doc_freq)
-            .drop("__df")
-        )
-    a, b = fps.alias("a"), fps.alias("b")
-    pairs = a.join(
-        b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc") < F.col("b.doc"))
-    ).select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+
+def _word_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc, s): every word n-gram of the ASCII-lowercased, whitespace-
+    split text, duplicates kept; a doc shorter than n words yields its
+    whole text as one shingle.
+
+    Shape: split once in its own projection, explode a shingle INDEX
+    (plain generator, codegen'd), slice the words array per row — NOT
+    transform(sequence, lambda). Higher-order functions run on the
+    interpreted path, and a split() captured inside the lambda
+    re-evaluates the regex tokenization per ELEMENT (measured 20-50x on
+    the minhash pipeline: a straggler task sat minutes in
+    UTF8String.translate/Pattern.split)."""
+    words = F.split(lower_ascii(F.col(text_col)), "\\s+")
     return (
-        pairs.groupBy("doc_a", "doc_b")
+        df.select(F.col(id_col).alias("doc"), words.alias("__w"))
+        .select(
+            "doc",
+            "__w",
+            F.explode(F.sequence(F.lit(0), F.greatest(F.size("__w") - n, F.lit(0)))).alias("__k"),
+        )
+        .select("doc", F.concat_ws(" ", F.slice("__w", F.col("__k") + 1, n)).alias("s"))
+    )
+
+
+def _shared_key_pairs(keyed: DataFrame, max_doc_freq: int) -> DataFrame:
+    """Inverted-index pair join over a distinct (doc, key) table:
+    (doc_a, doc_b, n_shared) for every doc pair sharing a key, doc_a <
+    doc_b. Keys held by more than `max_doc_freq` docs are dropped first
+    (a key with DF=d emits d^2/2 join rows — quadratic blowup on exactly
+    the boilerplate keys that carry no near-dup signal); a cap no key
+    reaches gives the uncapped result. The DF count is a window over
+    the key, the same single shuffle the self-join needs anyway."""
+    idx = (
+        keyed.withColumn("__df", F.count("*").over(Window.partitionBy("key")))
+        .filter(F.col("__df") <= max_doc_freq)
+        .drop("__df")
+    )
+    a, b = idx.alias("a"), idx.alias("b")
+    return (
+        a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
     )
 
 
@@ -370,95 +397,23 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = 1000,
-    cache_index: bool = True,
+    max_doc_freq: int = 1000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via shingle inverted index:
-    explode shingles -> self-join on shingle -> count common shingles per
-    pair -> Jaccard = common / (|A| + |B| - common). Shuffles on shingle
-    hash — pair candidates only materialize for docs sharing shingles.
+    """Exact n-gram Jaccard near-dup pairs: candidates from the shingle
+    inverted index (`_shared_key_pairs`), scored by `verify_pairs_jaccard`
+    — Jaccard = |A ∩ B| / |A ∪ B| over the full shingle sets. Shuffles
+    on the shingle — pair candidates only materialize for docs sharing
+    shingles.
 
-    max_doc_freq: corpus-scale guard, ON BY DEFAULT (1000). Shingles
-    appearing in more than this many documents (stopword runs: "of the
-    and") are EXCLUDED from the inverted index, because a shingle with
-    DF=d contributes d^2/2 candidate rows — quadratic blowup on exactly
-    the shingles that carry no near-dup signal. Candidate pairs then
-    come from the capped index, and the Jaccard is recomputed EXACTLY
-    from the full shingle arrays (array_intersect on the candidate pairs
-    only), so reported scores are unchanged; only pairs whose overlap is
-    exclusively hot shingles can be missed (documented recall trade —
-    such pairs are far below any near-dup threshold in practice). Pass
-    None to opt OUT (all-pairs over the uncapped index: only safe on
-    corpora known to have no high-DF shingles)."""
-    # Shingle via words-projection + exploded index + per-row slice —
-    # NOT transform(sequence, lambda): a captured split() inside a HOF
-    # lambda re-evaluates the regex tokenization per ELEMENT on the
-    # interpreted path (the same pathology measured at 20-50x on the
-    # minhash pipeline; see minhash_band_pairs / q_dedup_minhash).
-    words = F.split(lower_ascii(F.col(text_col)), "\\s+")
-    wbase = df.select(F.col(id_col).alias("doc"), words.alias("__w"))
-    ex = (
-        wbase.select(
-            "doc",
-            "__w",
-            F.explode(F.sequence(F.lit(0), F.greatest(F.size("__w") - n, F.lit(0)))).alias("k"),
-        )
-        .select("doc", F.md5(F.concat_ws(" ", F.slice("__w", F.col("k") + 1, n))).alias("shingle"))
-        .distinct()  # array_distinct equivalent: the shingle SET per doc
-    )
-    if cache_index:
-        # the inverted index is referenced by sizes, both join sides, and
-        # the DF cap — without persisting, each reference re-reads the
-        # corpus and re-shingles (4x the map work). MEMORY_AND_DISK:
-        # at corpus scale this is THE table you materialize once.
-        from pyspark import StorageLevel
-
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = ex.groupBy("doc").agg(F.count("*").alias("n_sh"))
-
-    if max_doc_freq is not None:
-        # full shingle sets rebuilt only for the capped path's exact
-        # per-pair recomputation
-        base = ex.groupBy("doc").agg(F.collect_list("shingle").alias("sh"))
-        cold = (
-            ex.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_doc_freq)
-            .select("shingle")
-        )
-        ex_idx = ex.join(cold, "shingle", "left_semi")
-        a = ex_idx.alias("a")
-        b = ex_idx.alias("b")
-        cand = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .distinct()
-        )
-        ba = base.select(F.col("doc").alias("doc_a"), F.col("sh").alias("__sha"))
-        bb = base.select(F.col("doc").alias("doc_b"), F.col("sh").alias("__shb"))
-        common = (
-            cand.join(ba, "doc_a")
-            .join(bb, "doc_b")
-            .select(
-                "doc_a", "doc_b", F.size(F.array_intersect("__sha", "__shb")).alias("common")
-            )
-        )
-    else:
-        a = ex.alias("a")
-        b = ex.alias("b")
-        common = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count("*").alias("common"))
-        )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    j = (
-        common.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("jaccard", F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return j.select("doc_a", "doc_b", F.round("jaccard", 5).alias("jaccard"))
+    max_doc_freq (1000): shingles in more than this many documents
+    (stopword runs: "of the and") are EXCLUDED from the index. Scores
+    are still exact, because verification recomputes them from the full
+    sets; only pairs whose overlap is exclusively hot shingles can be
+    missed (such pairs are far below any near-dup threshold in
+    practice)."""
+    sh = _word_shingles(df, id_col, text_col, n).select("doc", F.col("s").alias("key"))
+    cand = _shared_key_pairs(sh.distinct(), max_doc_freq).select("doc_a", "doc_b")
+    return verify_pairs_jaccard(df, cand, id_col, text_col, n=n, threshold=threshold)
 
 
 def verify_pairs_jaccard(
@@ -485,25 +440,14 @@ def verify_pairs_jaccard(
     Jaccard is a codegen array_intersect — no index self-join, no
     quadratic path."""
     touched = (
-        pairs.select(F.col("doc_a").alias("doc"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc")))
+        pairs.select(F.col("doc_a").alias(id_col))
+        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
         .distinct()
-    )
-    words = F.split(lower_ascii(F.col(text_col)), "\\s+")
-    wbase = (
-        docs.select(F.col(id_col).alias("doc"), words.alias("__w"))
-        .join(touched, "doc", "left_semi")
     )
     sh = (
-        wbase.select(
-            "doc",
-            "__w",
-            F.explode(F.sequence(F.lit(0), F.greatest(F.size("__w") - n, F.lit(0)))).alias("k"),
-        )
-        .select("doc", F.md5(F.concat_ws(" ", F.slice("__w", F.col("k") + 1, n))).alias("shingle"))
-        .distinct()
+        _word_shingles(docs.join(touched, id_col, "left_semi"), id_col, text_col, n)
         .groupBy("doc")
-        .agg(F.collect_list("shingle").alias("sh"))
+        .agg(F.collect_set("s").alias("sh"))
     )
     ba = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("__sha"))
     bb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("__shb"))
@@ -570,7 +514,7 @@ def minhash_band_pairs(
     n_bands: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    max_band_bucket: int | None = 2000,
+    max_band_bucket: int = 2000,
 ) -> DataFrame:
     """b x r banded MinHash LSH candidate pairs (the real near-dup
     detector; a single band of k minhashes has recall J^k — 0.41 at
@@ -580,24 +524,15 @@ def minhash_band_pairs(
     one candidate pair (exploded band join, distinct across bands).
     Output: (doc_a, doc_b) candidates for exact verification.
 
-    max_band_bucket: corpus-scale guard, ON BY DEFAULT (2000). A
-    degenerate band bucket (thousands of boilerplate-identical docs
-    sharing a band key) would emit |bucket|^2/2 pairs from the self-join.
-    Buckets larger than the cap are diverted to a CHAIN path instead:
-    docs sorted within the bucket and linked consecutively — linear in
-    bucket size, and connectivity-preserving, so a downstream dedup
-    union-find groups the same documents; only the (quadratic) explicit
-    pair list is thinned. Pass None to opt out."""
+    max_band_bucket (2000): a degenerate band bucket (thousands of
+    boilerplate-identical docs sharing a band key) would emit
+    |bucket|^2/2 pairs from the self-join. Buckets larger than the cap
+    are diverted to a CHAIN path instead: docs sorted within the bucket
+    and linked consecutively — linear in bucket size, and
+    connectivity-preserving, so a downstream dedup union-find groups the
+    same documents; only the (quadratic) explicit pair list is thinned."""
     n_hash = n_bands * rows_per_band
-    words = F.split(lower_ascii(F.col(text_col)), "\\s+")
-    base = df.select(F.col(id_col).alias("doc"), words.alias("words"))
-    ex = base.select(
-        "doc",
-        "words",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.size("words") - shingle_n, F.lit(0)))
-        ).alias("k"),
-    ).select("doc", F.concat_ws(" ", F.slice("words", F.col("k") + 1, shingle_n)).alias("s"))
+    ex = _word_shingles(df, id_col, text_col, shingle_n)
     sig = ex.groupBy("doc").agg(
         *[
             F.min(F.md5(F.concat(F.lit(str(h)), F.lit(":"), F.col("s")))).alias(f"mh{h}")
@@ -620,23 +555,18 @@ def minhash_band_pairs(
     keyed = sig.select("doc", F.explode(bands).alias("bk")).select(
         "doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    if max_band_bucket is not None:
-        from pyspark.sql import Window
-
-        # window count over (band, key) — same single shuffle the join
-        # needs anyway, no extra aggregate-and-join round trip
-        wcount = Window.partitionBy("band", "key")
-        keyed = keyed.withColumn("__bn", F.count("*").over(wcount))
-        small = keyed.filter(F.col("__bn") <= max_band_bucket).drop("__bn")
-        wchain = Window.partitionBy("band", "key").orderBy("doc")
-        chain = (
-            keyed.filter(F.col("__bn") > max_band_bucket)
-            .withColumn("__prev", F.lag("doc").over(wchain))
-            .filter(F.col("__prev").isNotNull())
-            .select(F.col("__prev").alias("doc_a"), F.col("doc").alias("doc_b"))
-        )
-    else:
-        small, chain = keyed, None
+    # window count over (band, key) — same single shuffle the join
+    # needs anyway, no extra aggregate-and-join round trip
+    wcount = Window.partitionBy("band", "key")
+    keyed = keyed.withColumn("__bn", F.count("*").over(wcount))
+    small = keyed.filter(F.col("__bn") <= max_band_bucket).drop("__bn")
+    wchain = Window.partitionBy("band", "key").orderBy("doc")
+    chain = (
+        keyed.filter(F.col("__bn") > max_band_bucket)
+        .withColumn("__prev", F.lag("doc").over(wchain))
+        .filter(F.col("__prev").isNotNull())
+        .select(F.col("__prev").alias("doc_a"), F.col("doc").alias("doc_b"))
+    )
     a = small.alias("a")
     b = small.alias("b")
     pairs = a.join(
@@ -645,9 +575,7 @@ def minhash_band_pairs(
         & (F.col("a.key") == F.col("b.key"))
         & (F.col("a.doc") < F.col("b.doc")),
     ).select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-    if chain is not None:
-        pairs = pairs.unionByName(chain)
-    return pairs.distinct()
+    return pairs.unionByName(chain).distinct()
 
 
 def dedup_lines(
@@ -669,8 +597,6 @@ def dedup_lines(
     (hash keys diffuse any hot document) -> groupBy(doc) reassembly that
     reuses nothing wider than the doc key. Line text itself never
     shuffles twice: the winner decision rides on (md5, doc, pos)."""
-    from pyspark.sql import Window
-
     lines = docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")).alias(

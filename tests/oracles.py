@@ -10,6 +10,7 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - clip_ranges_scalar ~ overlay._clip_ranges_linebased (one segment at a time)
 - segment_polygon_clip  one segment against a polygon (clip_ranges_scalar's core)
 - simhash_expr     ~ text.add_simhash      (per-row HOF expression, md5 per bit)
+- band_keys_loop   ~ similarity._band_keys (per row, per band, per bit)
 """
 
 from __future__ import annotations
@@ -229,4 +230,19 @@ def simhash_expr(text: Column, bits: int = 16) -> Column:
             )
         )
         out = out + F.when(votes * 2 > n, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
+    return out
+
+
+def band_keys_loop(signs: np.ndarray, n_bands: int, n_planes: int) -> list:
+    """Sign-LSH bucket keys, one row, band and bit at a time: each band's
+    bits shifted in most-significant first, band index above them."""
+    out = []
+    for row in signs:
+        keys = []
+        for band in range(n_bands):
+            key = 0
+            for bit in row[band * n_planes : (band + 1) * n_planes]:
+                key = (key << 1) | int(bit)
+            keys.append((band << n_planes) | key)
+        out.append(keys)
     return out

@@ -76,12 +76,35 @@ def test_ngram_jaccard_pairs(spark, docs):
     assert pairs[0]["jaccard"] == 1.0
 
 
+def test_ngram_jaccard_pairs_leaves_no_cache(spark, docs):
+    """The pair job persists nothing: a cached shingle index that no
+    caller can unpersist would leak executor storage on every call."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    text.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_brute_force_topk(spark):
     rows = [(i, [float(i), 1.0]) for i in range(20)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = similarity.brute_force_topk(corpus, {0: np.array([0.0, 1.0])}, k=3)
     got = [r["vec_id"] for r in out.orderBy("rk").collect()]
     assert got[0] == 1  # most aligned with (0,1) excluding self
+
+
+def test_brute_force_topk_zero_query_is_warning_free(spark):
+    """A zero query vector has no direction: every sim is 0.0 (the
+    corpus-side norm guard applied to the query side), never a 0/0."""
+    import warnings
+
+    rows = [(i, [float(i), 1.0]) for i in range(6)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = similarity.brute_force_topk(corpus, {99: np.zeros(2)}, k=3).collect()
+    assert len(out) == 3
+    assert all(r["sim"] == 0.0 for r in out)
 
 
 def test_ivf_topk_recall(spark, tmp_path):
@@ -111,6 +134,13 @@ def test_embedding_near_dups(spark):
     out = similarity.embedding_near_dups(corpus, threshold=0.99)
     got = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
     assert got == {(1, 2)}
+
+
+def test_embedding_near_dups_empty_corpus(spark):
+    corpus = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = similarity.embedding_near_dups(corpus)
+    assert out.columns == ["doc_a", "doc_b", "cosine"]
+    assert out.count() == 0
 
 
 def test_minhash_banded_recovers_08_jaccard(spark):
@@ -191,8 +221,8 @@ def test_minhash_band_bucket_cap_linear(spark):
     for a, b in boiler_pairs:
         parent[find(a)] = find(b)
     assert len({find(f"boiler{i:03d}") for i in range(60)}) == 1
-    # uncapped path (opt-out) really is quadratic on the same input
-    full = minhash_band_pairs(docs, "doc_id", "text", max_band_bucket=None)
+    # a cap the bucket does not reach really is quadratic on the same input
+    full = minhash_band_pairs(docs, "doc_id", "text", max_band_bucket=len(rows))
     n_full_boiler = sum(
         1 for r in full.collect() if r["doc_a"].startswith("boiler")
     )
@@ -202,6 +232,8 @@ def test_minhash_band_bucket_cap_linear(spark):
 def test_ngram_jaccard_doc_freq_cap(spark):
     """max_doc_freq drops corpus-hot shingles from the inverted index but
     reported Jaccard stays EXACT (recomputed from full shingle sets)."""
+    from itertools import combinations
+
     from movingspark.text import ngram_jaccard_pairs
 
     # 'of the and' appears in every doc (hot); docs 1/2 share real content
@@ -212,12 +244,22 @@ def test_ngram_jaccard_doc_freq_cap(spark):
         ("d4", "seven eight nine ten eleven twelve of the and"),
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    full = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.2, max_doc_freq=None)
+
+    def shingles(t):
+        w = t.lower().split()
+        return {" ".join(w[k : k + 3]) for k in range(max(len(w) - 3, 0) + 1)}
+
+    exact = {}
+    for (a, ta), (b, tb) in combinations(rows, 2):
+        sa, sb = shingles(ta), shingles(tb)
+        j = round(len(sa & sb) / len(sa | sb), 5)
+        if j >= 0.2:
+            exact[(a, b)] = j
+    assert exact == {("d1", "d2"): 0.4}
     capped = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.2, max_doc_freq=2)
-    fm = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in full.collect()}
     cm = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
     assert ("d1", "d2") in cm
-    assert cm[("d1", "d2")] == fm[("d1", "d2")]  # scores identical
+    assert cm[("d1", "d2")] == exact[("d1", "d2")]  # score is the exact Jaccard
     # pairs that only shared hot shingles are pruned by the cap
     assert all(p[0] in ("d1",) or "d3" not in p for p in cm)
 
@@ -412,7 +454,7 @@ def test_verify_pairs_jaccard_guards_band_collisions(spark):
 
 
 def test_cli_dedup_verify_stage(spark, tmp_path):
-    """End-to-end: with verification on (default), a planted band
+    """End-to-end: the verification stage always runs, so a planted band
     collision does not delete a non-duplicate doc; true dups still
     dedup."""
     import json
@@ -704,7 +746,7 @@ def test_ann_quantized_recall_vs_exact(spark):
 
     sf = "/root/testdata/sf0.001"
     exact = {}
-    for r in E.q_ann_cosine(spark, sf).collect():
+    for r in E.q_ann_topk_scale(spark, sf).collect():
         exact.setdefault(r["query_id"], set()).add(r["vec_id"])
     quant = {}
     for r in E.q_ann_quantized(spark, sf).collect():

@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from movingspark import kernels as K
-from movingspark import smooth
+from movingspark import similarity, smooth
 from movingspark.smooth import _kf_rts
 from tests import oracles
 
@@ -177,3 +177,14 @@ def test_point_in_polygon_near_horizontal_edge_is_warning_free(dy):
         warnings.simplefilter("error", RuntimeWarning)
         got = K.point_in_polygon(px, py, poly)
     assert got.tolist() == [True, False, False, False]
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 257])
+@pytest.mark.parametrize("n_bands,n_planes", [(4, 16), (1, 1), (3, 31), (2, 60)])
+def test_band_keys_match_loop_oracle(n, n_bands, n_planes):
+    rng = np.random.default_rng(n * 100 + n_planes)
+    signs = rng.random((n, n_bands * n_planes)) > 0.5
+    got = similarity._band_keys(signs, n_bands, n_planes)
+    want = np.array(oracles.band_keys_loop(signs, n_bands, n_planes), dtype=np.int64)
+    assert got.dtype == np.int64
+    assert np.array_equal(got, want.reshape(n, n_bands))
