@@ -3338,7 +3338,9 @@ def q_reproject_3395(spark, sf_dir):
     centimeter grid keeps the tie margin far above JVM-vs-C ln/exp
     ulps), double-rounded through 6dp like _round2 so a value one ulp
     either side of a 2dp tie rounds the same on both engines;
-    round-tripped degrees via _round2."""
+    round-tripped degrees via _round2. Both engines null the meter and
+    round-tripped columns where lat is null, NaN or |lat| >= 90
+    (crs.mercator_xy_exprs / mercator_xy_sql)."""
     from movingspark import crs
 
     pts = _events(spark, sf_dir).select(

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels
+from movingspark import kernels, pyworker
 from movingspark.schema import C_EARTH, PointCols, TRAJ_COLS
 
 
@@ -171,6 +171,7 @@ def cluster_significant_points(
         clusters = grid_cluster(pts, max_distance, latlon)
     else:
         def per_part(batches):
+            pyworker.prepare()
             chunks = [pdf for pdf in batches]
             if not chunks:
                 return

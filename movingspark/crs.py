@@ -59,10 +59,14 @@ def _tanh(z: Column) -> Column:
 
 
 def mercator_xy_exprs(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """EPSG:3395 forward as two pure-codegen column expressions."""
+    """EPSG:3395 forward as two pure-codegen column expressions. Both
+    are null where lat is null, NaN or |lat| >= 90: the projection has
+    no finite y there, and a null keeps Inf out of every downstream
+    sum, distance and rounding."""
+    ok = ~F.isnan(lat) & (F.abs(lat) < F.lit(90.0))
     s = F.sin(F.radians(lat))
-    x = F.lit(WGS84_A) * F.radians(lon)
-    y = F.lit(WGS84_A) * (_atanh(s) - F.lit(_E) * _atanh(s, _E))
+    x = F.when(ok, F.lit(WGS84_A) * F.radians(lon))
+    y = F.when(ok, F.lit(WGS84_A) * (_atanh(s) - F.lit(_E) * _atanh(s, _E)))
     return x, y
 
 
@@ -122,9 +126,10 @@ def _tanh_sql(z: str) -> str:
 
 
 def mercator_xy_sql(lon: str, lat: str) -> tuple[str, str]:
+    ok = f"(NOT ISNAN({lat}) AND ABS({lat}) < 90.0)"
     s = f"SIN(RADIANS({lat}))"
-    x = f"({WGS84_A!r} * RADIANS({lon}))"
-    y = f"({WGS84_A!r} * ({_atanh_sql(s)} - {_E!r} * {_atanh_sql(s, _E)}))"
+    x = f"CASE WHEN {ok} THEN {WGS84_A!r} * RADIANS({lon}) END"
+    y = f"CASE WHEN {ok} THEN {WGS84_A!r} * ({_atanh_sql(s)} - {_E!r} * {_atanh_sql(s, _E)}) END"
     return x, y
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movingspark import kernels, schema
+from movingspark import kernels, pyworker, schema
 from movingspark.schema import PointCols, TRAJ_COLS
 from movingspark.units import get_conversion
 
@@ -53,6 +53,7 @@ def haversine_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Co
 
 @F.pandas_udf(T.DoubleType())
 def _geodesic_udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
+    pyworker.prepare()
     out = kernels.geodesic(
         lon1.to_numpy(float), lat1.to_numpy(float), lon2.to_numpy(float), lat2.to_numpy(float)
     )

@@ -17,6 +17,19 @@ shuffle cost is identical to applyInPandas (same hash exchange); only
 the Python-side dispatch changes. At 100 TB this matters more, not
 less: group count grows with data while per-group size stays bounded,
 so per-group overhead scales with the dominant term.
+
+One level up sits a fixed cost per TASK. Before every task pyspark's
+worker calls importlib.invalidate_caches(), which on Python 3.11/3.12
+re-reads the directory of every zip on the worker path (16
+zipimporters over the pyspark and py4j zips): 0.24 s of CPU per call,
+more than a bench-scale task's kernel work. `per_batch` therefore calls
+`pyworker.prepare()` first, which makes the re-read stat-checked for
+the rest of the worker's life (0.1 ms per call). Measured on a 4-vCPU
+VM at local[4]: an identity grouped map over 15k points (4 tasks,
+median of 5) went from 1.24 to 0.24 s of Python-worker CPU, and the
+median per-query CPU of the bench's traj_analytics workload (10 runs)
+went stops 1.84 -> 1.04 s, overlay clip 1.56 -> 0.80 s,
+Douglas-Peucker 1.48 -> 0.73 s, Kalman 1.41 -> 0.63 s.
 """
 
 from __future__ import annotations
@@ -27,6 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from movingspark import pyworker
 from movingspark.schema import TRAJ_COLS, PointCols
 
 
@@ -58,6 +72,7 @@ def grouped_apply_sorted(
     order = order or cols.t
 
     def per_batch(batches):
+        pyworker.prepare()
         carry = None
         for pdf in batches:
             if carry is not None:

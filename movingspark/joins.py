@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movingspark import cells, kernels
+from movingspark import cells, kernels, pyworker
 from movingspark.derive import dist_expr
 from movingspark.schema import PointCols, TRAJ_COLS
 
@@ -160,6 +160,7 @@ def point_in_polygon_join(
 
     @F.pandas_udf(T.BooleanType())
     def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
+        pyworker.prepare()
         out = np.zeros(len(px), dtype=bool)
         for p in pid.unique():
             m = (pid == p).to_numpy()
@@ -258,6 +259,7 @@ def intersecting_traj_ids_line(
     else:
         @F.pandas_udf(T.BooleanType())
         def refine(pxs: pd.Series, pys: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
+            pyworker.prepare()
             return pd.Series(
                 kernels.segments_intersect_polygon(
                     pxs.to_numpy(float), pys.to_numpy(float), xs.to_numpy(float), ys.to_numpy(float), poly

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from movingspark import pyworker
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -51,6 +53,7 @@ def synth_media_bytes(media: DataFrame, n_bytes: int = 64) -> DataFrame:
 
     @F.pandas_udf(T.BinaryType())
     def fetch(ref: pd.Series) -> pd.Series:
+        pyworker.prepare()
         out = []
         for r in ref:
             h = hashlib.sha256(r.encode()).hexdigest().encode()
@@ -172,6 +175,7 @@ def synth_ppm_bytes(media: DataFrame, seed_col: str, w: int = 8, h: int = 8) -> 
 
     @F.pandas_udf(T.BinaryType())
     def render(seed: pd.Series) -> pd.Series:
+        pyworker.prepare()
         j = np.arange(npx, dtype=np.int64)
         out = []
         for s in seed:
@@ -215,6 +219,7 @@ def extract_media_features(
     )
 
     def batches(it):
+        pyworker.prepare()
         for pdf in it:
             feats, nb, ch = [], [], []
             for buf in pdf["payload"]:
@@ -255,6 +260,7 @@ def extract_image_features(
     )
 
     def batches(it):
+        pyworker.prepare()
         for pdf in it:
             nb, ch, ws, hs = [], [], [], []
             fcols: list[list] = [[] for _ in range(8)]

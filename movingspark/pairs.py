@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels
+from movingspark import kernels, pyworker
 from movingspark.schema import PointCols, TRAJ_COLS
 
 
@@ -68,6 +68,7 @@ def trajectory_pair_metrics(
 
     @F.pandas_udf("min_distance double, hausdorff double")
     def metrics(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series) -> pd.DataFrame:
+        pyworker.prepare()
         mins, hds = [], []
         for i in range(len(xa)):
             la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])
@@ -104,6 +105,7 @@ def trajectory_to_line_metrics(
 
     @F.pandas_udf("min_distance double, hausdorff double")
     def metrics(xa: pd.Series, ya: pd.Series) -> pd.DataFrame:
+        pyworker.prepare()
         mins, hds = [], []
         for i in range(len(xa)):
             la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from movingspark import pyworker
+
 
 def _as_matrix(series: pd.Series) -> np.ndarray:
     return np.vstack(series.apply(np.asarray).to_numpy()).astype(np.float64)
@@ -38,6 +40,7 @@ def cosine_udf(queries: dict[int, np.ndarray]):
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def sims(v: pd.Series) -> pd.Series:
+        pyworker.prepare()
         M = _as_matrix(v)
         M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
         S = M @ Q.T
@@ -113,6 +116,7 @@ def write_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
 
     @F.pandas_udf(T.IntegerType())
     def bucket(v: pd.Series) -> pd.Series:
+        pyworker.prepare()
         M = _as_matrix(v)
         d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         return pd.Series(d.argmin(axis=1).astype(np.int32))
@@ -205,6 +209,7 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.95, n_planes: in
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_buckets(v: pd.Series) -> pd.Series:
+        pyworker.prepare()
         signs = (_as_matrix(v) @ P.T) > 0  # (n, n_bands*n_planes)
         return pd.Series(list(_band_keys(signs, n_bands, n_planes)))
 
@@ -229,6 +234,7 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.95, n_planes: in
 
     @F.pandas_udf(T.DoubleType())
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
+        pyworker.prepare()
         A = _as_matrix(va)
         B = _as_matrix(vb)
         num = (A * B).sum(axis=1)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movingspark import pyworker
 from movingspark.cells import WORLD, cell_id_expr
 from movingspark.schema import PointCols, TRAJ_COLS
 
@@ -69,6 +70,7 @@ def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> Data
     state_schema = "t_us long, x double, y double"
 
     def fn(key, pdfs, state):
+        pyworker.prepare()
         import numpy as np
 
         parts = [p for p in pdfs]
@@ -145,6 +147,7 @@ def streaming_stops(
     state_schema = "xs array<double>, ys array<double>, ts array<double>"
 
     def fn(key, pdfs, state):
+        pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         pdf = pdf.sort_values(cols.t, kind="mergesort")
@@ -273,6 +276,7 @@ def streaming_geofence(
     state_schema = "t_us long, inside boolean"
 
     def fn(key, pdfs, state):
+        pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         pdf = pdf.sort_values(cols.t, kind="mergesort").reset_index(drop=True)
@@ -339,6 +343,7 @@ def streaming_cell_visits(
     state_schema = "cell long, enter_us long, leave_us long, n long"
 
     def fn(key, pdfs, state):
+        pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         pdf = pdf.sort_values(cols.t, kind="mergesort").reset_index(drop=True)

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from movingspark import pyworker
+
 _UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _LOWER = "abcdefghijklmnopqrstuvwxyz"
 
@@ -274,6 +276,7 @@ def winnow_fingerprints(
     table = str.maketrans(_UPPER, _LOWER)
 
     def kernel(batches):
+        pyworker.prepare()
         for pdf in batches:
             out_doc: list = []
             out_fp: list = []

@@ -80,3 +80,27 @@ def test_from_mercator_iterations_suffice_at_extreme_latitude():
     lon, lat = mercator_inverse(x, y, iterations=crs._INVERSE_ITERS)
     assert abs(lat.item() - 84.99) < 1e-9
     assert abs(lon.item() - 12.0) < 1e-12
+
+
+def test_forward_is_null_outside_the_latitude_domain(spark):
+    """|lat| >= 90, NaN and null have no finite Mercator y: both meter
+    columns are null (never +-Inf), in Catalyst and in the DuckDB twin
+    the reproject_3395 oracle runs."""
+    import duckdb
+
+    lats = [90.0, -90.0, 91.0, float("nan"), None, 45.0]
+    df = spark.createDataFrame(
+        [(i, 10.0, la) for i, la in enumerate(lats)], "i int, lon double, lat double"
+    )
+    got = crs.to_mercator(df, "lon", "lat", "xm", "ym").orderBy("i").collect()
+    x_sql, y_sql = crs.mercator_xy_sql("lon", "lat")
+    con = duckdb.connect()
+    for r in got[:-1]:
+        assert r["xm"] is None and r["ym"] is None, r
+        assert con.execute(
+            f"SELECT {x_sql}, {y_sql} FROM (SELECT 10.0::DOUBLE AS lon, ?::DOUBLE AS lat)",
+            [r["lat"]],
+        ).fetchone() == (None, None)
+    ex, ey = mercator_forward(np.array([10.0]), np.array([45.0]))
+    assert abs(got[-1]["xm"] - ex.item()) < 1e-6
+    assert abs(got[-1]["ym"] - ey.item()) < 1e-6

@@ -4,9 +4,16 @@ batch-boundary carry path, and its transitive case: a group larger
 than two batches). Kernels are defined inside the tests so cloudpickle
 ships them by value to the workers."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pandas as pd
 
 from movingspark.gmap import grouped_apply_sorted
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCHEMA = "traj_id string, n long, x_first double, x_last double, y_sum double"
 
@@ -66,3 +73,78 @@ def test_grouped_apply_filters_and_empty_groups(spark):
     got = sorted(map(tuple, grouped_apply_sorted(df, drop_evens, schema).collect()))
     assert got == expected
     assert not any(r[0] == "2" for r in got)
+
+
+# One worker on local[1], so the addPyFile task runs in the worker the
+# grouped-map query already patched (pyworker.prepare).
+ADDPYFILE_JOB = """
+import json, os, sys, zipfile
+import pandas as pd
+from pyspark.sql import SparkSession
+from movingspark.gmap import grouped_apply_sorted
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .appName("gmap-addpyfile")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+
+
+def worker_state(probe):
+    def run(it):
+        import zipimport
+
+        for _ in it:
+            pass
+        patched = zipimport.zipimporter.invalidate_caches.__module__ == "movingspark.pyworker"
+        yield pd.DataFrame({"pid": [os.getpid()], "patched": [patched], "value": [probe()]})
+
+    return run
+
+
+df = spark.createDataFrame(
+    [(str(i % 3), i, float(i), 0.0) for i in range(30)], "traj_id string, t long, x double, y double"
+)
+n_groups = grouped_apply_sorted(df, lambda pdf: pdf.head(1), df.schema, order="t").count()
+schema = "pid long, patched boolean, value long"
+before = df.coalesce(1).mapInPandas(worker_state(lambda: -1), schema).collect()
+
+zip_path = os.path.join(sys.argv[1], "addpyfile_probe.zip")
+with zipfile.ZipFile(zip_path, "w") as z:
+    z.writestr("addpyfile_probe.py", "VALUE = 42\\n")
+spark.sparkContext.addPyFile(zip_path)
+
+
+def imported():
+    import addpyfile_probe
+
+    return addpyfile_probe.VALUE
+
+
+after = df.coalesce(1).mapInPandas(worker_state(imported), schema).collect()
+print("GMAP_ADDPYFILE " + json.dumps(
+    {"groups": n_groups, "before": [r.asDict() for r in before], "after": [r.asDict() for r in after]}
+))
+spark.stop()
+"""
+
+
+def test_patched_worker_still_imports_an_added_py_file(tmp_path):
+    """pyspark invalidates import caches per task so that sc.addPyFile
+    archives become importable; the stat-checked invalidation installed
+    by a grouped-map query must keep that contract."""
+    r = subprocess.run(
+        [sys.executable, "-c", ADDPYFILE_JOB, str(tmp_path)],
+        capture_output=True, text=True, cwd=ROOT, timeout=420,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    line = [l for l in r.stdout.splitlines() if l.startswith("GMAP_ADDPYFILE ")]
+    assert line, (r.stdout[-1000:], r.stderr[-1000:])
+    got = json.loads(line[0].split(" ", 1)[1])
+    assert got["groups"] == 3
+    assert [w["patched"] for w in got["before"]] == [True]
+    (after,) = got["after"]
+    assert after == {"pid": got["before"][0]["pid"], "patched": True, "value": 42}

@@ -3,6 +3,7 @@ must run a pipeline with the engine imported FROM THE ZIP (no repo on
 the python path) — the exact mechanics of shipping to a multi-executor
 cluster, exercised for real in client mode."""
 
+import inspect
 import os
 import subprocess
 import sys
@@ -11,7 +12,20 @@ import pyspark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-JOB = """
+
+def kalman_digest(spark):
+    """md5 over the Kalman-smoothed rows (a grouped-map query) of a
+    closed-form point table; run by the submitted job and in-repo."""
+    import hashlib
+
+    from movingspark import ingest, smooth
+
+    pts = ingest.synth_skewed_points(spark, 2000, n_trajs=20).drop("value")
+    rows = smooth.kalman_smooth(pts).orderBy("traj_id", "t").collect()
+    return hashlib.md5(repr([tuple(r) for r in rows]).encode()).hexdigest()
+
+
+JOB = inspect.getsource(kalman_digest) + """
 import sys
 from pyspark.sql import SparkSession
 
@@ -33,12 +47,13 @@ pts = ingest.explode_doc_points(docs)
 tiles = joins.tile_rollup(pts, res=3)
 n_pts = pts.count()
 n_tiles = tiles.count()
-print(f"SUBMIT_OK points={n_pts} tiles={n_tiles} violations={bad}")
+kalman = kalman_digest(spark)
+print(f"SUBMIT_OK points={n_pts} tiles={n_tiles} violations={bad} kalman={kalman}")
 spark.stop()
 """
 
 
-def test_spark_submit_py_files_runs_pipeline(tmp_path):
+def test_spark_submit_py_files_runs_pipeline(spark, tmp_path):
     # build the zip the north rule ships
     out = subprocess.run(
         [sys.executable, os.path.join(ROOT, "tools", "package.py")],
@@ -63,3 +78,6 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
     parts = dict(p.split("=") for p in marker[0].split()[1:])
     assert int(parts["points"]) > 0 and int(parts["tiles"]) > 0
     assert parts["violations"] == "0"
+    # the grouped-map query, with the engine (pyworker included) imported
+    # from the zip in every worker, equals the in-repo run
+    assert parts["kalman"] == kalman_digest(spark)
