@@ -3574,101 +3574,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "traj_construction": SQL_TRAJ_CONSTRUCTION,
-        "derive_kinematics": SQL_DERIVE_KINEMATICS,
-        "traj_summary": SQL_TRAJ_SUMMARY,
-        "locations_at": SQL_LOCATIONS_AT,
-        "interpolate_position_at": SQL_INTERPOLATE_POSITION_AT,
-        "segment_between": SQL_SEGMENT_BETWEEN,
-        "filter_by_first_value": SQL_FILTER_BY_FIRST_VALUE,
-        "line_export": SQL_LINE_EXPORT,
-        "split_gap": SQL_SPLIT_GAP,
-        "gap_sessions": SQL_GAP_SESSIONS,
-        "split_temporal_day": SQL_SPLIT_TEMPORAL_DAY,
-        "split_temporal_2h": SQL_SPLIT_TEMPORAL_2H,
-        "traj_gdf_agg": SQL_TRAJ_GDF_AGG,
-        "iqr_clean": SQL_IQR_CLEAN,
-        "min_duration_filter": SQL_MIN_DURATION_FILTER,
-        "tile_rollup": SQL_TILE_ROLLUP,
-        "tile_rollup_values": SQL_TILE_ROLLUP_VALUES,
-        "tile_rollup_median": SQL_TILE_ROLLUP_MEDIAN,
-        "media_decode": SQL_MEDIA_DECODE,
-        "dedup_lines": SQL_DEDUP_LINES,
-        "chunk_documents": SQL_CHUNK_DOCUMENTS,
-        "redact_spans": SQL_REDACT_SPANS,
-        "tile_vectorize": SQL_TILE_VECTORIZE,
-        "raster_regions": SQL_RASTER_REGIONS,
-        "resample": SQL_RESAMPLE,
-        "asof_join": SQL_ASOF_JOIN,
-        "proximity_pairs": SQL_PROXIMITY_PAIRS,
-        "frechet_route": SQL_FRECHET_ROUTE,
-        "geofence_events": SQL_GEOFENCE_EVENTS,
-        "quantize_embeddings": SQL_QUANTIZE_EMBEDDINGS,
-        "frequent_tokens": SQL_FREQUENT_TOKENS,
-        "tile_rollup_multires": SQL_TILE_ROLLUP_MULTIRES,
-        "geotag_media": SQL_GEOTAG_MEDIA,
-        "tile_dwell": SQL_TILE_DWELL,
-        "od_matrix": SQL_OD_MATRIX,
-        "ann_quantized": SQL_ANN_QUANTIZED,
-        "route_progress": SQL_ROUTE_PROGRESS,
-        "speed_quantiles": SQL_SPEED_QUANTILES,
-        "corridor_cells": SQL_CORRIDOR_CELLS,
-        "pipeline_tile_speed": SQL_PIPELINE_TILE_SPEED,
-        "cell_visits": SQL_CELL_VISITS,
-        "hotspot_gi": SQL_HOTSPOT_GI,
-        "reproject_3395": SQL_REPROJECT_3395,
-        "convoy_pairs": SQL_CONVOY_PAIRS,
-        "point_in_polygon": SQL_POINT_IN_POLYGON,
-        "intersecting_trajs": SQL_INTERSECTING_TRAJS,
-        "intersecting_trajs_line": SQL_INTERSECTING_TRAJS_LINE,
-        "traj_point_distance": SQL_TRAJ_POINT_DISTANCE,
-        "knn": SQL_KNN,
-        "knn_top3": SQL_KNN_TOP3,
-        "knn_latlon": SQL_KNN_LATLON,
-        "hausdorff_route": SQL_HAUSDORFF_ROUTE,
-        "flows": SQL_FLOWS,
-        "visit_counts": SQL_VISIT_COUNTS,
-        "doc_points": SQL_DOC_POINTS,
-        "span_invariant": SQL_SPAN_INVARIANT,
-        "doc_tiling": SQL_DOC_TILING,
-        "doc_spatial_join": SQL_DOC_SPATIAL_JOIN,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_minhash_banded": SQL_DEDUP_MINHASH_BANDED,
-        "dedup_components": SQL_DEDUP_COMPONENTS,
-        "dedup_survivors": SQL_DEDUP_SURVIVORS,
-        "semantic_dedup": SQL_SEMANTIC_DEDUP,
-        "gopher_rules": SQL_GOPHER_RULES,
-        "clean_corpus_stats": SQL_CLEAN_CORPUS_STATS,
-        "pii_counts": SQL_PII_COUNTS,
-        "repetition_stats": SQL_REPETITION_STATS,
-        "contamination": SQL_CONTAMINATION,
-        "corpus_stats": SQL_CORPUS_STATS,
-        "stratified_sample": SQL_STRATIFIED_SAMPLE,
-        "text_stats": SQL_TEXT_STATS,
-        "simhash": SQL_SIMHASH,
-        "winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
-        "winnow_near_dups": SQL_WINNOW_NEAR_DUPS,
-        "lang_stats": SQL_LANG_STATS,
-        "ann_topk_scale": SQL_ANN_TOPK_SCALE,
-        "split_value_change": SQL_SPLIT_VALUE_CHANGE,
-        "split_speed": SQL_SPLIT_SPEED,
-        "min_length_filter": SQL_MIN_LENGTH_FILTER,
-        "lang_id": SQL_LANG_ID,
-        "ngram_jaccard": SQL_NGRAM_JACCARD,
-        "traj_export": SQL_TRAJ_EXPORT,
-        "embedding_near_dups": SQL_EMBEDDING_NEAR_DUPS,
-        "media_features": SQL_MEDIA_FEATURES,
-        "mfjson_roundtrip": SQL_MFJSON_ROUNDTRIP,
-        "offset_minutes": SQL_OFFSET_MINUTES,
-        "kinematics_latlon": SQL_KINEMATICS_LATLON,
-        # sequential kernels with no closed-form SQL (mcp, stop_points,
-        # the generalizers, overlay clip, angle split, kalman, outlier
-        # clean, significant points, cluster centroids): their oracles
-        # are deterministic expected-value joins generated by
-        # tools/gen_pinned_oracles.py (see below).
-        **_pinned_oracles(),
-    }
+    """Each registry query's DuckDB oracle: the module constant
+    SQL_<NAME>. The sequential kernels with no closed-form SQL (mcp,
+    stop_points, the generalizers, overlay clip, angle split, kalman,
+    outlier clean, significant points, cluster centroids) have none;
+    their oracles are the deterministic expected-value joins generated
+    by tools/gen_pinned_oracles.py (see below)."""
+    consts = globals()
+    closed_form = {n: consts[f"SQL_{n.upper()}"] for n in queries() if f"SQL_{n.upper()}" in consts}
+    return {**closed_form, **_pinned_oracles()}
 
 
 def _pinned_oracles() -> dict[str, str]:

@@ -20,18 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 
 from movingspark.session import tune_builder
+from perfbench.harness import cpu_fractions, cpu_jiffies
 
 
 def force(df):
     df.write.format("noop").mode("overwrite").save()
-
-
-def _cpu_jiffies() -> tuple[int, int, int]:
-    """(steal, system, total) jiffies from /proc/stat."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(v) for v in parts[1:9]]  # user nice sys idle iowait irq sirq steal
-    return vals[7], vals[2], sum(vals)
 
 
 def _noisy(before, after) -> bool:
@@ -39,10 +32,8 @@ def _noisy(before, after) -> bool:
     kernel-time storm (this VM shows recurring windows where steal+sys
     eat >60% of all cycles and identical Spark jobs run 2-10x slower —
     see BENCH.md 'noise discipline')."""
-    ds = after[0] - before[0]
-    dsys = after[1] - before[1]
-    dt = max(after[2] - before[2], 1)
-    return (ds / dt) > 0.15 or (dsys / dt) > 0.35
+    f = cpu_fractions(before, after)
+    return f["steal_frac"] > 0.15 or f["sys_frac"] > 0.35
 
 
 def build_spark(cpus: int) -> SparkSession:
@@ -85,7 +76,7 @@ def bench_queries(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         best = float("inf")
         passes = 0
         while passes < 2:
-            pre = _cpu_jiffies()
+            pre = cpu_jiffies()
             t0 = time.time()
             thunk()
             dt = time.time() - t0
@@ -93,7 +84,7 @@ def bench_queries(spark: SparkSession, sf_dir: str) -> dict[str, float]:
             # it is wildly slower than this query's own best (sub-threshold
             # contention the steal/sys counters miss — measured 3-4x
             # inflation with clean counters on this VM)
-            contaminated = _noisy(pre, _cpu_jiffies()) or (
+            contaminated = _noisy(pre, cpu_jiffies()) or (
                 best != float("inf") and dt > 2.5 * best
             )
             if contaminated:

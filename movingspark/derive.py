@@ -1,17 +1,31 @@
 """Derived-column window transforms (SURVEY.md §2.5, D1-D7).
 
-Every derived column is a 1-row-lookback window over the time-ordered
-trajectory: W = Window.partitionBy(traj_id).orderBy(t). All planar math
-is pure Spark SQL (whole-stage codegen, no Python); only the geodesic
-distance for lat/lon data drops into an Arrow-batched pandas UDF.
+D1-D6 come from one private builder, `_kinematics`, over
+W = Window.partitionBy(traj_id).orderBy(t), in at most two Window
+nodes on one sort:
 
-First-row boundary rules (reference trajectory.py):
-- timedelta: null        (trajectory.py:1480-1484)
-- distance:  0.0         (trajectory.py:1496-1498)
-- speed:     = 2nd row   (trajectory.py:1513-1514)
-- direction: = 2nd row   (trajectory.py:1195-1196)
-- angular_difference: 0  (trajectory.py:1234-1235)
-- acceleration: = 2nd row (trajectory.py:1528-1529)
+1. One window reads each row's raw neighbours: lag and lead of x, y, t
+   and row_number. Every row owns one segment, from the previous row
+   to itself; the first row, which has none, owns the second row's.
+   Δt, distance, speed and direction are defined once over that
+   segment, as projections; the geodesic UDF for lat/lon data is the
+   one Python call, once per row.
+2. Angular difference and acceleration also need the previous row's
+   direction and speed (for the first row, the next row's speed): a
+   lag/lead in one more window over W. Under latlon=True it is the one
+   re-shuffle, after the Python eval.
+
+Planar math is pure Spark SQL (whole-stage codegen, no Python). The
+public add_* functions, add_all_kinematics and the split / queries /
+ingest consumers are all calls into `_kinematics`.
+
+First-row rules (reference trajectory.py) and where each lives:
+- timedelta: null         (1480-1484)  masked by row_number
+- distance:  0.0          (1496-1498)  masked by row_number
+- speed:     = 2nd row    (1513-1514)  the first row's segment is the 2nd's
+- direction: = 2nd row    (1195-1196)  the first row's segment is the 2nd's
+- angular_difference: 0   (1234-1235)  no previous direction (lag is null)
+- acceleration: = 2nd row (1528-1529)  first row: next speed minus its own
 """
 
 from __future__ import annotations
@@ -95,27 +109,98 @@ def angular_difference_expr(d1: Column, d2: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _first_row_patch(df: DataFrame, name: str, cols: PointCols, mode: str) -> DataFrame:
-    """Apply the reference first-row rule to a freshly computed window col."""
+def _kinematics(
+    df: DataFrame,
+    outputs: dict,
+    units=None,
+    latlon: bool = False,
+    crs_units=None,
+    cols: PointCols = TRAJ_COLS,
+) -> DataFrame:
+    """Add the columns named in `outputs` (column name -> one of
+    "timedelta", "timedelta_us", "distance", "speed", "direction",
+    "angular_difference", "acceleration"), each replacing an input
+    column of that name in place or appended in `outputs` order.
+
+    Every row owns one segment: from the previous row to itself, and
+    for the first row (which has none) the second row's. Δt, distance,
+    speed and direction are defined once, over that segment, from one
+    window's lag/lead of x, y, t and row_number; the geodesic UDF runs
+    once per row. Angular difference and acceleration also read the
+    previous (first row: next) row's direction or speed, a lag/lead in
+    a second window over the same spec. They read an input `direction`
+    / `speed` column instead when there is one and this call does not
+    derive it (the reference's reuse rule).
+
+    Only what the outputs need is built: every Column call is a round
+    trip to the JVM, so an unused expression costs driver time even
+    though Catalyst would prune it from the plan."""
+    conv = get_conversion(units, crs_units)
     w = traj_window(cols)
-    rn = F.row_number().over(w)
-    if mode == "second":
-        patched = F.when(rn == 1, F.lead(name, 1).over(w)).otherwise(F.col(name))
-    elif mode == "zero":
-        patched = F.when(rn == 1, F.lit(0.0)).otherwise(F.col(name))
-    elif mode == "null":
-        return df
-    else:  # pragma: no cover
-        raise ValueError(mode)
-    return df.withColumn(name, patched)
+    kinds = set(outputs.values())
+    # the reference reads the input columns named `speed`/`direction`
+    reuse = {k: k in df.columns and k not in kinds for k in (schema.SPEED, schema.DIRECTION)}
+    own_speed = "speed" in kinds or ("acceleration" in kinds and not reuse[schema.SPEED])
+    own_direction = "direction" in kinds or ("angular_difference" in kinds and not reuse[schema.DIRECTION])
+    own_dist = own_speed or "distance" in kinds
+
+    raw = {"t": F.unix_micros(F.col(cols.t))}
+    if own_dist or own_direction:
+        raw.update(x=F.col(cols.x), y=F.col(cols.y))
+    first = F.col("__k_first")
+    seg = df.select(
+        "*",
+        (F.row_number().over(w) == 1).alias("__k_first"),
+        *[F.lag(c).over(w).alias(f"__k_prev_{k}") for k, c in raw.items()],
+        *[F.lead(c).over(w).alias(f"__k_next_{k}") for k, c in raw.items()],
+    )
+    start = {k: F.when(first, c).otherwise(F.col(f"__k_prev_{k}")) for k, c in raw.items()}
+    end = {k: F.when(first, F.col(f"__k_next_{k}")).otherwise(c) for k, c in raw.items()}
+    quantities = {"__k_dt_us": end["t"] - start["t"]}
+    if own_dist:
+        d = dist_expr(start["x"], start["y"], end["x"], end["y"], latlon)
+        quantities["__k_dist"] = d * F.lit(conv.crs / conv.distance)
+    if own_direction:
+        same = (start["x"] == end["x"]) & (start["y"] == end["y"])
+        b = bearing_expr(start["x"], start["y"], end["x"], end["y"], latlon)
+        quantities["__k_direction"] = F.when(same, F.lit(0.0)).otherwise(b)
+    seg = seg.withColumns(quantities)
+    dt = F.col("__k_dt_us") / F.lit(1_000_000.0)
+    if own_speed:
+        seg = seg.withColumn("__k_speed", F.col("__k_dist") / dt * F.lit(conv.time))
+
+    # second window: the neighbours' direction and speed
+    direction = F.col(schema.DIRECTION if reuse[schema.DIRECTION] else "__k_direction")
+    speed = F.col(schema.SPEED if reuse[schema.SPEED] else "__k_speed")
+    if "angular_difference" in kinds:
+        seg = seg.withColumn("__k_prev_direction", F.lag(direction).over(w))
+    if "acceleration" in kinds:
+        seg = seg.withColumns({"__k_prev_speed": F.lag(speed).over(w), "__k_next_speed": F.lead(speed).over(w)})
+
+    def acceleration() -> Column:
+        speed0 = F.when(first, speed).otherwise(F.col("__k_prev_speed"))
+        speed1 = F.when(first, F.col("__k_next_speed")).otherwise(speed)
+        return (speed1 - speed0) / dt * F.lit(conv.time2)
+
+    exprs = {
+        "timedelta": lambda: F.when(~first, dt),
+        "timedelta_us": lambda: F.when(~first, F.col("__k_dt_us")),
+        "distance": lambda: F.coalesce(F.when(~first, F.col("__k_dist")), F.lit(0.0)),
+        "speed": lambda: F.col("__k_speed"),
+        "direction": lambda: F.col("__k_direction"),
+        "angular_difference": lambda: F.coalesce(
+            angular_difference_expr(F.col("__k_prev_direction"), direction), F.lit(0.0)
+        ),
+        "acceleration": acceleration,
+    }
+    out = seg.withColumns({name: exprs[kind]() for name, kind in outputs.items()})
+    return out.drop(*[c for c in seg.columns if c not in df.columns])
 
 
 def add_timedelta(df: DataFrame, name: str = schema.TIMEDELTA, cols: PointCols = TRAJ_COLS) -> DataFrame:
     """D1: seconds since previous observation; first row null
     (trajectory.py:1456-1484; emitted as double seconds, not interval)."""
-    w = traj_window(cols)
-    t_us = F.unix_micros(F.col(cols.t))
-    return df.withColumn(name, (t_us - F.lag(t_us).over(w)) / F.lit(1_000_000.0))
+    return _kinematics(df, {name: "timedelta"}, cols=cols)
 
 
 def add_distance(
@@ -127,12 +212,7 @@ def add_distance(
     cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """D2: distance from previous point; first row 0 (trajectory.py:1240-1302)."""
-    conv = get_conversion(units, crs_units)
-    w = traj_window(cols)
-    px, py = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
-    d = dist_expr(px, py, F.col(cols.x), F.col(cols.y), latlon)
-    d = d * F.lit(conv.crs / conv.distance)
-    return df.withColumn(name, F.coalesce(d, F.lit(0.0)))
+    return _kinematics(df, {name: "distance"}, units, latlon, crs_units, cols)
 
 
 def add_speed(
@@ -145,13 +225,7 @@ def add_speed(
 ) -> DataFrame:
     """D3: distance/Δt·conv; first row copies the second row's value
     (trajectory.py:1304-1374, 1502-1516)."""
-    conv = get_conversion(units, crs_units)
-    w = traj_window(cols)
-    px, py = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
-    dt = (F.unix_micros(F.col(cols.t)) - F.lag(F.unix_micros(F.col(cols.t))).over(w)) / 1_000_000.0
-    d = dist_expr(px, py, F.col(cols.x), F.col(cols.y), latlon) * F.lit(conv.crs / conv.distance)
-    df = df.withColumn(name, d / dt * F.lit(conv.time))
-    return _first_row_patch(df, name, cols, "second")
+    return _kinematics(df, {name: "speed"}, units, latlon, crs_units, cols)
 
 
 def add_direction(
@@ -162,12 +236,7 @@ def add_direction(
 ) -> DataFrame:
     """D4: bearing from previous point; identical points -> 0; first row
     copies the second row (trajectory.py:1169-1198)."""
-    w = traj_window(cols)
-    px, py = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
-    same = (px == F.col(cols.x)) & (py == F.col(cols.y))
-    b = bearing_expr(px, py, F.col(cols.x), F.col(cols.y), latlon)
-    df = df.withColumn(name, F.when(same, F.lit(0.0)).otherwise(b))
-    return _first_row_patch(df, name, cols, "second")
+    return _kinematics(df, {name: "direction"}, latlon=latlon, cols=cols)
 
 
 def add_angular_difference(
@@ -179,16 +248,7 @@ def add_angular_difference(
     """D5: |Δ direction| folded to [0,180]; first row 0
     (trajectory.py:1200-1238). Reuses an existing `direction` column if
     present (same rule as the reference), else derives one on the fly."""
-    w = traj_window(cols)
-    tmp = schema.DIRECTION in df.columns
-    if not tmp:
-        df = add_direction(df, schema.DIRECTION, latlon=latlon, cols=cols)
-    prev = F.lag(schema.DIRECTION).over(w)
-    diff = angular_difference_expr(prev, F.col(schema.DIRECTION))
-    df = df.withColumn(name, F.coalesce(diff, F.lit(0.0)))
-    if not tmp:
-        df = df.drop(schema.DIRECTION)
-    return df
+    return _kinematics(df, {name: "angular_difference"}, latlon=latlon, cols=cols)
 
 
 def add_acceleration(
@@ -202,30 +262,21 @@ def add_acceleration(
     """D6: Δspeed/Δt·time2conv; first row copies the second row
     (trajectory.py:1376-1454, 1518-1530). Reuses an existing `speed`
     column when present, matching the reference."""
-    conv = get_conversion(units, crs_units)
-    w = traj_window(cols)
-    has_speed = schema.SPEED in df.columns
-    if not has_speed:
-        df = add_speed(df, schema.SPEED, units=units, latlon=latlon, crs_units=crs_units, cols=cols)
-    dt = (F.unix_micros(F.col(cols.t)) - F.lag(F.unix_micros(F.col(cols.t))).over(w)) / 1_000_000.0
-    acc = (F.col(schema.SPEED) - F.lag(schema.SPEED).over(w)) / dt * F.lit(conv.time2)
-    df = df.withColumn(name, acc)
-    df = _first_row_patch(df, name, cols, "second")
-    if not has_speed:
-        df = df.drop(schema.SPEED)
-    return df
+    return _kinematics(df, {name: "acceleration"}, units, latlon, crs_units, cols)
 
 
 def add_all_kinematics(df: DataFrame, latlon: bool = False, cols: PointCols = TRAJ_COLS) -> DataFrame:
     """Convenience: timedelta + distance + speed + direction + angular
     difference + acceleration in one pass (single shuffle on traj_id)."""
-    df = add_timedelta(df, cols=cols)
-    df = add_distance(df, latlon=latlon, cols=cols)
-    df = add_speed(df, latlon=latlon, cols=cols)
-    df = add_direction(df, latlon=latlon, cols=cols)
-    df = add_angular_difference(df, latlon=latlon, cols=cols)
-    df = add_acceleration(df, latlon=latlon, cols=cols)
-    return df
+    kinds = {
+        schema.TIMEDELTA: "timedelta",
+        schema.DISTANCE: "distance",
+        schema.SPEED: "speed",
+        schema.DIRECTION: "direction",
+        schema.ANGULAR_DIFFERENCE: "angular_difference",
+        schema.ACCELERATION: "acceleration",
+    }
+    return _kinematics(df, kinds, latlon=latlon, cols=cols)
 
 
 def apply_offset_minutes(df: DataFrame, column: str, offset: int, cols: PointCols = TRAJ_COLS) -> DataFrame:

@@ -90,16 +90,11 @@ def filter_min_length(
 ) -> DataFrame:
     """Drop trajectories whose path length < min_length
     (trajectory_collection.py:246-253; length per trajectory.py:1005-1033)."""
-    from movingspark.derive import dist_expr, traj_window
+    from movingspark.derive import _kinematics
 
-    w = traj_window(cols)
-    seg = F.coalesce(
-        dist_expr(F.lag(cols.x).over(w), F.lag(cols.y).over(w), F.col(cols.x), F.col(cols.y), latlon),
-        F.lit(0.0),
-    )
     wlen = Window.partitionBy(cols.traj_id)
     return (
-        df.withColumn("__seg", seg)
+        _kinematics(df, {"__seg": "distance"}, latlon=latlon, cols=cols)
         .withColumn("__len", F.sum("__seg").over(wlen))
         .filter(F.col("__len") > min_length)
         .drop("__seg", "__len")

@@ -310,11 +310,17 @@ def mercator_forward(lon_deg, lat_deg):
     1987 eq. 7-7's log/tan form). This is the metric frame the
     reference's KalmanSmootherCV filters latlon trajectories in
     (trajectory_smoother.py:197-233 reprojects through EPSG:3395
-    before smoothing and back after)."""
+    before smoothing and back after).
+
+    Outside the latitude domain (lat NaN or |lat| >= 90) both
+    coordinates are NaN, as crs.mercator_xy_exprs gives null: y has no
+    finite value at the poles, and past them sin() would fold 91 onto 89."""
+    lat = np.asarray(lat_deg, dtype=np.float64)
+    inside = np.abs(lat) < 90.0
     lon = np.radians(np.asarray(lon_deg, dtype=np.float64))
-    s = np.sin(np.radians(np.asarray(lat_deg, dtype=np.float64)))
-    x = WGS84_A * lon
-    y = WGS84_A * (np.arctanh(s) - _WGS84_E * np.arctanh(_WGS84_E * s))
+    s = np.sin(np.radians(np.where(inside, lat, 0.0)))
+    x = np.where(inside, WGS84_A * lon, np.nan)
+    y = np.where(inside, WGS84_A * (np.arctanh(s) - _WGS84_E * np.arctanh(_WGS84_E * s)), np.nan)
     return x, y
 
 

@@ -13,17 +13,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels
-from movingspark.derive import bearing_expr, dist_expr, traj_window
+from movingspark.derive import _kinematics, bearing_expr, traj_window
 from movingspark.schema import PointCols, TRAJ_COLS
 from movingspark.units import get_conversion
-
-
-def _seg_dist(latlon: bool, cols: PointCols):
-    w = traj_window(cols)
-    return F.coalesce(
-        dist_expr(F.lag(cols.x).over(w), F.lag(cols.y).over(w), F.col(cols.x), F.col(cols.y), latlon),
-        F.lit(0.0),
-    )
 
 
 def traj_summary(df: DataFrame, latlon: bool = False, units=None, cols: PointCols = TRAJ_COLS) -> DataFrame:
@@ -31,13 +23,9 @@ def traj_summary(df: DataFrame, latlon: bool = False, units=None, cols: PointCol
     A4 start/end locations, A5 length, A6 direction, A7 sampling interval
     (exact median of Δt). The to_traj_gdf analogue (trajectory.py:661-713)."""
     conv = get_conversion(units)
-    w = traj_window(cols)
-    t_us = F.unix_micros(F.col(cols.t))
     # Δt kept in integer microseconds so the median interpolates exactly
     # (ties at .5 µs stay exact in float64 — oracle-reproducible)
-    enriched = df.withColumn("__seg", _seg_dist(latlon, cols)).withColumn(
-        "__dt_us", t_us - F.lag(t_us).over(w)
-    )
+    enriched = _kinematics(df, {"__seg": "distance", "__dt_us": "timedelta_us"}, latlon=latlon, cols=cols)
     start = F.min_by(F.struct(cols.x, cols.y), cols.t)
     end = F.max_by(F.struct(cols.x, cols.y), cols.t)
     agg = enriched.groupBy(cols.traj_id).agg(
@@ -74,7 +62,7 @@ def get_length(df: DataFrame, latlon: bool = False, units=None, cols: PointCols 
     """A5 (trajectory.py:1005-1033): sum of consecutive segment distances."""
     conv = get_conversion(units)
     return (
-        df.withColumn("__seg", _seg_dist(latlon, cols))
+        _kinematics(df, {"__seg": "distance"}, latlon=latlon, cols=cols)
         .groupBy(cols.traj_id)
         .agg((F.sum("__seg") * F.lit(conv.crs / conv.distance)).alias("length"))
     )

@@ -108,7 +108,12 @@ def kalman_smooth(
     latlon: bool = False,
     cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
-    """X15: replace x/y with CV-Kalman+RTS smoothed positions."""
+    """X15: replace x/y with CV-Kalman+RTS smoothed positions.
+
+    With latlon=True the filter runs in EPSG:3395 meters
+    (kernels.mercator_forward); a trajectory with a point at NaN or
+    |lat| >= 90 has no Mercator position there and smooths to NaN,
+    not +-Inf."""
     q = float(process_noise_std) ** 2
     r = float(measurement_noise_std) ** 2
     if not r > 0.0:

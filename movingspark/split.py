@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, schema
-from movingspark.derive import add_direction, add_speed, traj_window
+from movingspark.derive import _kinematics, traj_window
 from movingspark.ingest import filter_min_length
 from movingspark.schema import PointCols, TRAJ_COLS
 
@@ -44,6 +44,28 @@ def _finalize(df: DataFrame, piece_col, min_length: float, latlon: bool, cols: P
     return out
 
 
+def _with_boundary_rows(base: DataFrame, cols: PointCols) -> DataFrame:
+    """Append the first row of each piece k > 0 to piece k-1 as well."""
+    first_of_piece = F.row_number().over(Window.partitionBy(cols.traj_id, "__piece").orderBy(cols.t))
+    boundary = (
+        base.withColumn("__fr", first_of_piece)
+        .filter((F.col("__fr") == 1) & (F.col("__piece") > 0))
+        .drop("__fr")
+        .withColumn("__piece", F.col("__piece") - 1)
+    )
+    return base.unionByName(boundary)
+
+
+def _own_columns(df: DataFrame, kinds: list, latlon: bool, cols: PointCols):
+    """(df, column names) for each of `kinds` (schema.SPEED /
+    schema.DIRECTION): the input's column of that name where there is
+    one (the reference reuses it), else derived in one pass into a
+    private `__<kind>` column."""
+    names = [k if k in df.columns else f"__{k}" for k in kinds]
+    derived = {n: k for k, n in zip(kinds, names) if n != k}
+    return _kinematics(df, derived, latlon=latlon, cols=cols), names
+
+
 def split_by_observation_gap(
     df: DataFrame,
     gap_s: float,
@@ -54,11 +76,10 @@ def split_by_observation_gap(
     """X2 (trajectory_splitter.py:156-194): new piece when Δt > gap
     (strict); piece index counts every gap group, including ones later
     dropped for having < 2 rows."""
-    w = traj_window(cols)
-    dt = (F.unix_micros(F.col(cols.t)) - F.lag(F.unix_micros(F.col(cols.t))).over(w)) / 1e6
-    flag = F.when(dt > gap_s, 1).otherwise(0)
-    piece = F.sum(flag).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return _finalize(df.withColumn("__piece", piece), "__piece", min_length, latlon, cols)
+    flag = F.when(F.col("__dt") > gap_s, 1).otherwise(0)
+    piece = F.sum(flag).over(traj_window(cols).rowsBetween(Window.unboundedPreceding, 0))
+    base = _kinematics(df, {"__dt": "timedelta"}, cols=cols).withColumn("__piece", piece).drop("__dt")
+    return _finalize(base, "__piece", min_length, latlon, cols)
 
 
 def split_by_speed(
@@ -72,12 +93,8 @@ def split_by_speed(
 ) -> DataFrame:
     """X4 (trajectory_splitter.py:197-228): keep rows with speed within
     [speed, max_speed] (inclusive), then gap-split with gap=duration."""
-    has_speed = schema.SPEED in df.columns
-    if not has_speed:
-        df = add_speed(df, latlon=latlon, cols=cols)
-    df = df.filter((F.col(schema.SPEED) >= speed) & (F.col(schema.SPEED) <= max_speed))
-    if not has_speed:
-        df = df.drop(schema.SPEED)
+    df, (spd,) = _own_columns(df, [schema.SPEED], latlon, cols)
+    df = df.filter((F.col(spd) >= speed) & (F.col(spd) <= max_speed)).drop("__speed")
     return split_by_observation_gap(df, duration_s, min_length, latlon, cols)
 
 
@@ -102,15 +119,7 @@ def split_by_value_change(
     ).otherwise((F.col(col_name) != prev).cast("int"))
     piece = F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
     base = df.withColumn("__piece", piece)
-
-    first_of_piece = F.row_number().over(Window.partitionBy(cols.traj_id, "__piece").orderBy(cols.t))
-    boundary = (
-        base.withColumn("__fr", first_of_piece)
-        .filter((F.col("__fr") == 1) & (F.col("__piece") > 0))
-        .drop("__fr")
-        .withColumn("__piece", F.col("__piece") - 1)
-    )
-    return _finalize(base.unionByName(boundary), "__piece", min_length, latlon, cols)
+    return _finalize(_with_boundary_rows(base, cols), "__piece", min_length, latlon, cols)
 
 
 def split_temporally(
@@ -152,15 +161,7 @@ def split_temporally(
     base = df.withColumn("__bucket", bucket)
     idx = F.dense_rank().over(Window.partitionBy(cols.traj_id).orderBy("__bucket")) - 1
     base = base.withColumn("__piece", idx).drop("__bucket")
-
-    first_of_piece = F.row_number().over(Window.partitionBy(cols.traj_id, "__piece").orderBy(cols.t))
-    boundary = (
-        base.withColumn("__fr", first_of_piece)
-        .filter((F.col("__fr") == 1) & (F.col("__piece") > 0))
-        .drop("__fr")
-        .withColumn("__piece", F.col("__piece") - 1)
-    )
-    return _finalize(base.unionByName(boundary), "__piece", min_length, latlon, cols)
+    return _finalize(_with_boundary_rows(base, cols), "__piece", min_length, latlon, cols)
 
 
 def angle_change_groups(dirs, spds, min_angle: float, min_speed: float) -> np.ndarray:
@@ -193,16 +194,10 @@ def split_by_angle_change(
     sequential, so a grouped-map pandas UDF with the loop in numpy.
     Each piece with >1 rows gets the previous piece's LAST row prepended
     (i > 0); 1-row pieces are dropped before prepending."""
-    had_dir = schema.DIRECTION in df.columns
-    had_speed = schema.SPEED in df.columns
-    if not had_dir:
-        df = add_direction(df, latlon=latlon, cols=cols)
-    if not had_speed:
-        df = add_speed(df, latlon=latlon, cols=cols)
-
+    df, (dircol, spcol) = _own_columns(df, [schema.DIRECTION, schema.SPEED], latlon, cols)
     out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
     out_schema = ", ".join(out_fields + ["parent string"])
-    tcol, dircol, spcol = cols.traj_id, schema.DIRECTION, schema.SPEED
+    tcol = cols.traj_id
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(cols.t).reset_index(drop=True)
@@ -230,11 +225,7 @@ def split_by_angle_change(
 
     from movingspark.gmap import grouped_apply_sorted
 
-    out = grouped_apply_sorted(df, per_traj, out_schema, cols)
-    if not had_dir:
-        out = out.drop(schema.DIRECTION)
-    if not had_speed:
-        out = out.drop(schema.SPEED)
+    out = grouped_apply_sorted(df, per_traj, out_schema, cols).drop("__direction", "__speed")
     if min_length > 0:
         out = filter_min_length(out, min_length, latlon=latlon, cols=cols)
     return out

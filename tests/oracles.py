@@ -11,17 +11,23 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - segment_polygon_clip  one segment against a polygon (clip_ranges_scalar's core)
 - simhash_expr     ~ text.add_simhash      (per-row HOF expression, md5 per bit)
 - band_keys_loop   ~ similarity._band_keys (per row, per band, per bit)
+- chained_kinematics ~ derive._kinematics (one window per D1-D6 helper,
+  first rows patched by a further row_number/lead window each)
+- seg_dist_lag     ~ derive._kinematics "distance" (the lag-only segment
+  distance queries and ingest used to inline)
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from movingspark import kernels
+from movingspark import kernels, schema
+from movingspark.derive import angular_difference_expr, bearing_expr, dist_expr, traj_window
 from movingspark.overlay import SNAP_S
 from movingspark.text import lower_ascii, tokens_expr
+from movingspark.units import get_conversion
 
 
 def convex_hull_np(xy: np.ndarray) -> np.ndarray:
@@ -246,3 +252,82 @@ def band_keys_loop(signs: np.ndarray, n_bands: int, n_planes: int) -> list:
             keys.append((band << n_planes) | key)
         out.append(keys)
     return out
+
+
+def _lag_dist(latlon: bool, cols) -> Column:
+    w = traj_window(cols)
+    return dist_expr(F.lag(cols.x).over(w), F.lag(cols.y).over(w), F.col(cols.x), F.col(cols.y), latlon)
+
+
+def seg_dist_lag(latlon: bool, cols) -> Column:
+    """Distance from the previous row, 0 on the first row."""
+    return F.coalesce(_lag_dist(latlon, cols), F.lit(0.0))
+
+
+def _first_row_copy(df: DataFrame, name: str, cols) -> DataFrame:
+    """The first row takes the second row's value of `name`."""
+    w = traj_window(cols)
+    patched = F.when(F.row_number().over(w) == 1, F.lead(name, 1).over(w)).otherwise(F.col(name))
+    return df.withColumn(name, patched)
+
+
+def _lag_dt(cols) -> Column:
+    w = traj_window(cols)
+    t_us = F.unix_micros(F.col(cols.t))
+    return (t_us - F.lag(t_us).over(w)) / F.lit(1_000_000.0)
+
+
+def chained_timedelta(df, name, cols):
+    return df.withColumn(name, _lag_dt(cols))
+
+
+def chained_distance(df, name, units, latlon, crs_units, cols):
+    conv = get_conversion(units, crs_units)
+    return df.withColumn(name, F.coalesce(_lag_dist(latlon, cols) * F.lit(conv.crs / conv.distance), F.lit(0.0)))
+
+
+def chained_speed(df, name, units, latlon, crs_units, cols):
+    conv = get_conversion(units, crs_units)
+    d = _lag_dist(latlon, cols) * F.lit(conv.crs / conv.distance)
+    df = df.withColumn(name, d / _lag_dt(cols) * F.lit(conv.time))
+    return _first_row_copy(df, name, cols)
+
+
+def chained_direction(df, name, latlon, cols):
+    w = traj_window(cols)
+    px, py = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
+    same = (px == F.col(cols.x)) & (py == F.col(cols.y))
+    b = bearing_expr(px, py, F.col(cols.x), F.col(cols.y), latlon)
+    df = df.withColumn(name, F.when(same, F.lit(0.0)).otherwise(b))
+    return _first_row_copy(df, name, cols)
+
+
+def chained_angular_difference(df, name, latlon, cols):
+    w = traj_window(cols)
+    tmp = schema.DIRECTION not in df.columns
+    if tmp:
+        df = chained_direction(df, schema.DIRECTION, latlon, cols)
+    diff = angular_difference_expr(F.lag(schema.DIRECTION).over(w), F.col(schema.DIRECTION))
+    df = df.withColumn(name, F.coalesce(diff, F.lit(0.0)))
+    return df.drop(schema.DIRECTION) if tmp else df
+
+
+def chained_acceleration(df, name, units, latlon, crs_units, cols):
+    conv = get_conversion(units, crs_units)
+    w = traj_window(cols)
+    tmp = schema.SPEED not in df.columns
+    if tmp:
+        df = chained_speed(df, schema.SPEED, units, latlon, crs_units, cols)
+    acc = (F.col(schema.SPEED) - F.lag(schema.SPEED).over(w)) / _lag_dt(cols) * F.lit(conv.time2)
+    df = _first_row_copy(df.withColumn(name, acc), name, cols)
+    return df.drop(schema.SPEED) if tmp else df
+
+
+def chained_kinematics(df, latlon, cols):
+    """add_all_kinematics as six chained helpers."""
+    df = chained_timedelta(df, schema.TIMEDELTA, cols)
+    df = chained_distance(df, schema.DISTANCE, None, latlon, None, cols)
+    df = chained_speed(df, schema.SPEED, None, latlon, None, cols)
+    df = chained_direction(df, schema.DIRECTION, latlon, cols)
+    df = chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, latlon, cols)
+    return chained_acceleration(df, schema.ACCELERATION, None, latlon, None, cols)

@@ -104,3 +104,19 @@ def test_forward_is_null_outside_the_latitude_domain(spark):
     ex, ey = mercator_forward(np.array([10.0]), np.array([45.0]))
     assert abs(got[-1]["xm"] - ex.item()) < 1e-6
     assert abs(got[-1]["ym"] - ey.item()) < 1e-6
+
+
+def test_numpy_forward_is_nan_outside_the_latitude_domain():
+    """kernels.mercator_forward mirrors the Catalyst null: NaN for both
+    coordinates at lat +-90 (was +-Inf), 91 (was sin-folded onto 89)
+    and NaN; in-domain values are the closed form, bit for bit."""
+    from movingspark.kernels import WGS84_A, _WGS84_E
+
+    lats = np.array([90.0, -90.0, 91.0, -91.0, np.nan, 45.0])
+    x, y = mercator_forward(np.full(6, 10.0), lats)
+    assert np.isnan(x[:5]).all() and np.isnan(y[:5]).all()
+    s = np.sin(np.radians(45.0))
+    assert x[5] == WGS84_A * np.radians(10.0)
+    assert y[5] == WGS84_A * (np.arctanh(s) - _WGS84_E * np.arctanh(_WGS84_E * s))
+    sx, sy = mercator_forward(10.0, 90.0)
+    assert np.isnan(sx) and np.isnan(sy)

@@ -1,9 +1,16 @@
 """Derived-column parity with reference test_trajectory.py pinned values."""
 
+import datetime as _dt
+import math
+import struct
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from movingspark import derive, schema
+from movingspark import derive, ingest, queries, schema
+from movingspark.schema import TRAJ_COLS
+from tests import oracles
 from tests.conftest import rows_to_points
 
 
@@ -155,3 +162,144 @@ def test_apply_offset_seconds(spark, grid5):
     out = derive.apply_offset_seconds(grid5.withColumn("v", F.col("x")), "v", 10)
     vals = _vals(out, "v")
     assert vals == [6.0, 10.0, 10.0, 0.0, None]
+
+
+# ---------------------------------------------------------------------------
+# one-builder outputs == the chained formulation (tests/oracles.py), exactly
+# ---------------------------------------------------------------------------
+
+
+def _seeded(spark, seed, latlon=False, dup_t=False):
+    """Trajectories of 1, 2, 3, 6 and 40 points: repeated positions,
+    one NaN coordinate, and (dup_t) Δt = 0 steps."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for tid, n in enumerate([1, 2, 3, 6, 40]):
+        steps = rng.integers(0 if dup_t else 1, 4 if dup_t else 90, n)
+        t0 = _dt.datetime(2020, 1, 1) + _dt.timedelta(hours=int(tid))
+        x, y = (rng.uniform(-170, 170), rng.uniform(-70, 70)) if latlon else rng.uniform(-500, 500, 2)
+        for i in range(n):
+            if rng.random() > 0.2:  # else: repeat the previous position
+                scale = 0.05 if latlon else 40.0
+                x, y = x + rng.normal(0, scale), y + rng.normal(0, scale)
+            us = 0 if dup_t else int(rng.integers(0, 4)) * 250_000
+            t = t0 + _dt.timedelta(seconds=int(steps[: i + 1].sum()), microseconds=us)
+            rows.append((f"tr{tid}", t, float("nan") if (n == 40 and i == 17) else float(x), float(y)))
+    return spark.createDataFrame(rows, "traj_id string, t timestamp, x double, y double")
+
+
+def _same(u, v) -> bool:
+    if isinstance(u, float) and isinstance(v, float):
+        return (math.isnan(u) and math.isnan(v)) or struct.pack("<d", u) == struct.pack("<d", v)
+    return u == v
+
+
+def assert_rows_identical(got, want):
+    assert got.columns == want.columns
+    order = [c for c in ("traj_id", "t", "x", "y") if c in got.columns]
+    g, e = got.orderBy(*order).collect(), want.orderBy(*order).collect()
+    assert len(g) == len(e)
+    for rg, re_ in zip(g, e):
+        assert all(_same(a, b) for a, b in zip(rg, re_)), (rg, re_)
+
+
+@pytest.mark.parametrize("latlon", [False, True])
+def test_all_kinematics_bit_identical_to_chained(spark, latlon):
+    for seed in (1, 2):
+        df = _seeded(spark, seed, latlon=latlon)
+        assert_rows_identical(
+            derive.add_all_kinematics(df, latlon=latlon),
+            oracles.chained_kinematics(df, latlon, TRAJ_COLS),
+        )
+
+
+@pytest.mark.parametrize("latlon", [False, True])
+def test_each_kinematic_with_units_and_names_bit_identical(spark, latlon):
+    c = TRAJ_COLS
+    df = _seeded(spark, 3, latlon=latlon)
+    for units in (None, ("km", "h"), ("km", "h", "min")):
+        assert_rows_identical(
+            derive.add_distance(df, "d", units=units, latlon=latlon),
+            oracles.chained_distance(df, "d", units, latlon, None, c),
+        )
+        assert_rows_identical(
+            derive.add_speed(df, "v", units=units, latlon=latlon),
+            oracles.chained_speed(df, "v", units, latlon, None, c),
+        )
+        assert_rows_identical(
+            derive.add_acceleration(df, "a", units=units, latlon=latlon),
+            oracles.chained_acceleration(df, "a", units, latlon, None, c),
+        )
+    assert_rows_identical(
+        derive.add_direction(df, "b", latlon=latlon), oracles.chained_direction(df, "b", latlon, c)
+    )
+    assert_rows_identical(
+        derive.add_angular_difference(df, "ad", latlon=latlon),
+        oracles.chained_angular_difference(df, "ad", latlon, c),
+    )
+
+
+def test_existing_speed_and_direction_columns_are_reused(spark):
+    """The input's own `speed`/`direction` (here arbitrary values with
+    nulls) feed acceleration and angular difference; `add_speed` /
+    `add_direction` still overwrite them."""
+    c = TRAJ_COLS
+    base = _seeded(spark, 4)
+    h = F.abs(F.hash("traj_id", "t"))
+    df = base.withColumn(schema.SPEED, F.when(h % 7 == 0, None).otherwise(h % 13 / 3.0)).withColumn(
+        schema.DIRECTION, F.when(h % 5 == 0, None).otherwise(h % 360 * 1.0)
+    )
+    cases = [
+        (derive.add_acceleration(df, "acc", units=("km", "h")),
+         oracles.chained_acceleration(df, "acc", ("km", "h"), False, None, c)),
+        (derive.add_angular_difference(df, "ang"), oracles.chained_angular_difference(df, "ang", False, c)),
+        (derive.add_speed(df), oracles.chained_speed(df, schema.SPEED, None, False, None, c)),
+        (derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False, c)),
+        (derive.add_all_kinematics(df), oracles.chained_kinematics(df, False, c)),
+    ]
+    for got, want in cases:
+        assert_rows_identical(got, want)
+
+
+def test_duplicate_timestamps_bit_identical(spark):
+    """Δt = 0: the division-free columns match everywhere; speed and
+    acceleration raise DIVIDE_BY_ZERO under ANSI on both formulations
+    and are null at the same rows with ANSI off."""
+    from pyspark.errors import ArithmeticException
+
+    c = TRAJ_COLS
+    df = _seeded(spark, 5, dup_t=True)
+    assert_rows_identical(derive.add_timedelta(df), oracles.chained_timedelta(df, schema.TIMEDELTA, c))
+    assert_rows_identical(derive.add_distance(df), oracles.chained_distance(df, schema.DISTANCE, None, False, None, c))
+    assert_rows_identical(derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False, c))
+    assert_rows_identical(
+        derive.add_angular_difference(df), oracles.chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, False, c)
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for f in (derive.add_speed, oracles.chained_speed):
+            with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+                (f(df) if f is derive.add_speed else f(df, schema.SPEED, None, False, None, c)).collect()
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        assert_rows_identical(derive.add_all_kinematics(df), oracles.chained_kinematics(df, False, c))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+@pytest.mark.parametrize("latlon", [False, True])
+def test_length_consumers_match_lag_segment_sum(spark, latlon):
+    """get_length, traj_summary and filter_min_length sum the same
+    per-row distance the lag-only segment formulation gave."""
+    df = _seeded(spark, 6, latlon=latlon)
+    want = df.withColumn("s", oracles.seg_dist_lag(latlon, TRAJ_COLS)).groupBy("traj_id").agg(
+        F.sum("s").alias("length")
+    )
+    assert_rows_identical(queries.get_length(df, latlon=latlon), want)
+    summ = queries.traj_summary(df, latlon=latlon).select("traj_id", "length")
+    assert_rows_identical(summ, want)
+    # keep trajectories strictly longer than the median length
+    lens = sorted(r["length"] for r in want.collect() if not math.isnan(r["length"]))
+    cut = lens[len(lens) // 2]
+    kept = {r["traj_id"] for r in ingest.filter_min_length(df, cut, latlon=latlon).collect()}
+    assert kept == {r["traj_id"] for r in want.filter(F.col("length") > cut).collect()}

@@ -224,3 +224,38 @@ def test_contamination_no_corpus_exchange_before_semi_join(spark):
     # Post-join exchanges carry only colliding grams and are fine.
     left_branch = [ln for ln in plan.splitlines() if ln.lstrip().startswith(":")]
     assert left_branch and not any("Exchange" in ln for ln in left_branch)
+
+
+def n_nodes(plan: str, op: str) -> int:
+    return len([ln for ln in plan.splitlines() if re.match(rf"^\(\d+\) {op}\b", ln)])
+
+
+def test_all_kinematics_planar_two_windows_one_sort(spark):
+    """D1-D6 read one window of raw neighbours (lag/lead of x, y, t and
+    row_number) plus one window for the previous row's direction and
+    speed — never one window per derived column."""
+    plan = plan_of(derive.add_all_kinematics(_pts(spark)))
+    assert n_nodes(plan, "Window") <= 2, plan
+    assert n_exchanges(plan) == 1 and n_nodes(plan, "Sort") == 1, plan
+    assert _no_python_exec(plan)
+
+
+def test_all_kinematics_latlon_one_geodesic_evaluation(spark):
+    """The geodesic UDF runs once per row (one ArrowEvalPython holding
+    one call), so only the second window re-shuffles after it."""
+    plan = plan_of(derive.add_all_kinematics(_pts(spark), latlon=True))
+    assert n_nodes(plan, "ArrowEvalPython") == 1, plan
+    evals = [ln for ln in plan.splitlines() if "_geodesic_udf(" in ln and ln.startswith("Arguments")]
+    assert len(evals) == 1 and evals[0].count("_geodesic_udf(") == 1, evals
+    assert n_exchanges(plan) <= 2, plan
+
+
+def test_speed_and_angle_splits_derive_in_one_window(spark):
+    """split_by_speed / split_by_angle_change derive speed and direction
+    in the one neighbour window (5 and 4 Window nodes when each column
+    was patched by its own further window)."""
+    from movingspark import split
+
+    df = _pts(spark)
+    assert n_nodes(plan_of(split.split_by_speed(df, 0.1, 60.0)), "Window") < 5
+    assert n_nodes(plan_of(split.split_by_angle_change(df, 30.0)), "Window") < 4

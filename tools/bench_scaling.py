@@ -33,6 +33,7 @@ def run_one(cpus: int, n_docs: int, iters: int) -> dict:
 
     from movingspark import ingest, joins
     from movingspark.session import tune_builder
+    from perfbench.harness import cpu_fractions, cpu_jiffies
 
     spark = (
         tune_builder(
@@ -59,23 +60,17 @@ def run_one(cpus: int, n_docs: int, iters: int) -> dict:
         force(joins.tile_rollup(pts, res=6))
         force(ingest.span_invariant_violations(docs))
 
-    def jiffies():
-        v = [int(x) for x in open("/proc/stat").readline().split()[1:9]]
-        return v[7], v[2], sum(v)  # steal, system, total
-
     pipeline()  # untimed warmup (JIT, codegen, Arrow workers)
     best = float("inf")
     worst_steal = worst_sys = 0.0
     for _ in range(iters):
-        pre = jiffies()
+        pre = cpu_jiffies()
         t0 = time.time()
         pipeline()
         dt = time.time() - t0
-        post = jiffies()
-        tot = max(post[2] - pre[2], 1)
+        host = cpu_fractions(pre, cpu_jiffies())
         if dt == min(best, dt):
-            worst_steal = (post[0] - pre[0]) / tot
-            worst_sys = (post[1] - pre[1]) / tot
+            worst_steal, worst_sys = host["steal_frac"], host["sys_frac"]
         best = min(best, dt)
     spark.stop()
     # steal/sys fractions measured around the BEST pass: >0.15 steal or

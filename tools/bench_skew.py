@@ -45,28 +45,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.harness import cpu_fractions, cpu_jiffies
+
 AOI = [(-60.0, 60.0), (60.0, 60.0), (60.0, -60.0), (-60.0, -60.0)]
-
-
-def jiffies():
-    v = [int(x) for x in open("/proc/stat").readline().split()[1:9]]
-    return v[7], v[2], sum(v)  # steal, system, total
 
 
 def timed(fn, iters):
     fn()  # warmup: JIT, codegen, Arrow workers
     best, steal, sysf = float("inf"), 0.0, 0.0
     for _ in range(iters):
-        pre = jiffies()
+        pre = cpu_jiffies()
         t0 = time.time()
         fn()
         dt = time.time() - t0
-        post = jiffies()
-        tot = max(post[2] - pre[2], 1)
+        host = cpu_fractions(pre, cpu_jiffies())
         if dt < best:
             best = dt
-            steal = (post[0] - pre[0]) / tot
-            sysf = (post[1] - pre[1]) / tot
+            steal, sysf = host["steal_frac"], host["sys_frac"]
     return {"sec": round(best, 3), "steal_frac": round(steal, 3), "sys_frac": round(sysf, 3)}
 
 
