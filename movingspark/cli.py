@@ -16,7 +16,8 @@ Subcommands:
 - dedup: training-data dedup — [gopher filter] -> banded LSH pairs ->
   exact-Jaccard verification -> connected components -> survivors
   parquet, checkpointed per stage.
-- kinematics: derive D1-D6 columns for a point table.
+- kinematics: derive D1-D6 columns for a point table, normalized
+  first as the reference's Trajectory constructor does.
 """
 
 from __future__ import annotations
@@ -134,14 +135,21 @@ def cmd_dedup(args) -> int:
 
 
 def cmd_kinematics(args) -> int:
-    from movingspark import derive
+    """D1-D6 columns for a (traj_id, t, x, y) table. The input goes
+    through `ingest.make_traj_points` first, as the reference's
+    Trajectory constructor does: t becomes TIMESTAMP (a pandas-written
+    parquet reads back as TIMESTAMP_NTZ), a repeated (traj_id, t) keeps
+    its first row (a zero Δt would divide by zero), and one-point
+    trajectories are dropped."""
+    from movingspark import derive, ingest
+    from movingspark.catalog import read_table
 
     spark = build_session("movingspark-kinematics")
-    from movingspark.catalog import read_table
-    df = read_table(spark, args.input)
+    raw = read_table(spark, args.input)
+    df = ingest.make_traj_points(raw, "traj_id", "t", "x", "y")
     out = derive.add_all_kinematics(df, latlon=args.latlon)
     out.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
+    print(json.dumps({"rows_in": raw.count(), "rows": spark.read.parquet(args.output).count()}))
     return 0
 
 

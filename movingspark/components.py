@@ -61,6 +61,13 @@ def _digest(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of an eager localCheckpoint. They are not in the
+    cache manager, so `df.unpersist()` cannot reach them; the RDD behind
+    the checkpoint's LogicalRDD plan can."""
+    df._jdf.logicalPlan().rdd().unpersist(True)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -125,6 +132,7 @@ def connected_components(
         )
 
         digest = _digest(small)
+        _free_checkpoint(prev)
         prev = small
         global LAST_ROUNDS
         LAST_ROUNDS = it + 1

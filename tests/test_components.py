@@ -4,6 +4,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from movingspark import components
 from movingspark.components import connected_components, dedup_survivors
 
 
@@ -56,6 +57,22 @@ def test_long_chain_converges_in_log_rounds(spark):
     edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     got = _cc(spark, edges, max_iter=8)
     assert got == {i: ids[0] for i in ids}
+
+
+def test_rounds_free_the_checkpoints_they_replace(spark):
+    """Every round's eager localCheckpoint frees the one before it, so a
+    call leaves at most one new persisted RDD: the final round's, which
+    the result reads. Compared by RDD id, as in
+    test_ngram_jaccard_pairs_leaves_no_cache: the context holds persisted
+    RDDs weakly, and other tests' dropped checkpoints can vanish mid-call."""
+    n = 200
+    ids = [f"n{i:03d}" for i in range(n)]
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert _cc(spark, edges) == {i: ids[0] for i in ids}
+    assert components.LAST_ROUNDS > 2
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
 
 
 def test_random_graphs_match_union_find(spark):

@@ -303,3 +303,41 @@ def test_length_consumers_match_lag_segment_sum(spark, latlon):
     cut = lens[len(lens) // 2]
     kept = {r["traj_id"] for r in ingest.filter_min_length(df, cut, latlon=latlon).collect()}
     assert kept == {r["traj_id"] for r in want.filter(F.col("length") > cut).collect()}
+
+
+def test_cli_kinematics_normalizes_a_pandas_parquet(spark, tmp_path):
+    """A pandas-written parquet reads back with t as TIMESTAMP_NTZ and
+    here repeats one (traj_id, t): the CLI job normalizes it as the
+    reference constructor does instead of failing on unix_micros(t) or
+    dividing by a zero Δt, and writes one row per distinct (traj_id, t)."""
+    import contextlib
+    import io
+    import json
+
+    import pandas as pd
+
+    from movingspark.cli import main
+
+    pdf = pd.DataFrame({
+        "traj_id": ["a"] * 4 + ["b"] * 3,
+        "t": pd.to_datetime([
+            "2024-01-01 00:00:00", "2024-01-01 00:00:10", "2024-01-01 00:00:10",
+            "2024-01-01 00:00:30", "2024-01-01 01:00:00", "2024-01-01 01:00:05",
+            "2024-01-01 01:00:20",
+        ]).astype("datetime64[us]"),
+        "x": [0.0, 10.0, 11.0, 30.0, 5.0, 6.0, 9.0],
+        "y": [0.0, 0.0, 1.0, 0.0, 5.0, 5.0, 7.0],
+    })
+    src, dst = str(tmp_path / "in.parquet"), str(tmp_path / "out")
+    pdf.to_parquet(src)
+    assert dict(spark.read.parquet(src).dtypes)["t"] == "timestamp_ntz"
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(["kinematics", "--input", src, "--output", dst])
+    assert rc == 0
+    assert json.loads(buf.getvalue().splitlines()[-1]) == {"rows_in": 7, "rows": 6}
+    rows = spark.read.parquet(dst).collect()
+    keys = [(r["traj_id"], r["t"]) for r in rows]
+    assert len(keys) == len(set(keys)) == len(pdf.drop_duplicates(["traj_id", "t"]))
+    assert all(math.isfinite(r["speed"]) for r in rows)
