@@ -3578,23 +3578,14 @@ def oracle_sql() -> dict[str, str]:
     SQL_<NAME>. The sequential kernels with no closed-form SQL (mcp,
     stop_points, the generalizers, overlay clip, angle split, kalman,
     outlier clean, significant points, cluster centroids) have none;
-    their oracles are the deterministic expected-value joins generated
-    by tools/gen_pinned_oracles.py (see below)."""
-    consts = globals()
-    closed_form = {n: consts[f"SQL_{n.upper()}"] for n in queries() if f"SQL_{n.upper()}" in consts}
-    return {**closed_form, **_pinned_oracles()}
-
-
-def _pinned_oracles() -> dict[str, str]:
-    """Expected-output oracles for the sequential ops (Douglas-Peucker,
-    stop detector, convex hull), generated at sf0.01 by
-    tools/gen_pinned_oracles.py running the numpy kernels over the
+    their oracles are expected-output joins generated at sf0.01 by
+    tools/gen_pinned_oracles.py, which runs the numpy kernels over the
     parquet data WITHOUT Spark (pandas path). The driver's comparison
     then checks that the distributed execution (grouping, ordering,
-    Arrow batching) reproduces the single-process kernel output."""
-    try:
-        from movingspark.pinned_oracles_sf001 import PINNED_SQL
+    Arrow batching) reproduces the single-process kernel output. The
+    pinned module ships with the package, so a failed import raises."""
+    from movingspark.pinned_oracles_sf001 import PINNED_SQL
 
-        return PINNED_SQL
-    except Exception:
-        return {}
+    consts = globals()
+    closed_form = {n: consts[f"SQL_{n.upper()}"] for n in queries() if f"SQL_{n.upper()}" in consts}
+    return {**closed_form, **PINNED_SQL}

@@ -144,13 +144,22 @@ def cell_bounds_np(cell_ids: np.ndarray, res: int, bounds=WORLD) -> np.ndarray:
     return np.column_stack([x0, y0, x0 + w, y0 + h])
 
 
+# cap on the (polygon vertices x 4 rect sides x cells) orientation
+# arrays the cover builds per chunk of cells
+_COVER_CHUNK_ELEMS = 1 << 20
+
+
 def polygon_cover(poly: np.ndarray, res: int, bounds=WORLD):
     """Driver-side polygon -> covering cells at resolution `res`.
 
     Returns (cells, full) where `full[i]` marks cells entirely inside the
     polygon (points there skip the exact point-in-polygon refinement —
-    the standard two-list spatial-join cover). Cost is O(cells in bbox);
-    choose res so the polygon spans a sane number of cells.
+    the standard two-list spatial-join cover). A bbox cell is covered
+    when a corner is inside, a vertex lies in it or an edge cuts a side;
+    it is full when all four corners are inside and no edge cuts a side.
+    Cells come in ix-major order. Cost is O(cells in bbox x edges) array
+    work in chunks of cells; choose res so the polygon spans a sane
+    number of cells.
     """
     poly = np.asarray(poly, dtype=np.float64)
     if np.array_equal(poly[0], poly[-1]):
@@ -165,60 +174,41 @@ def polygon_cover(poly: np.ndarray, res: int, bounds=WORLD):
     ix1 = max(0, min(n - 1, int((pmaxx - minx) // w)))
     iy0 = max(0, min(n - 1, int((pminy - miny) // h)))
     iy1 = max(0, min(n - 1, int((pmaxy - miny) // h)))
+    ix = np.repeat(np.arange(ix0, ix1 + 1), iy1 - iy0 + 1)
+    iy = np.tile(np.arange(iy0, iy1 + 1), ix1 - ix0 + 1)
 
-    cells = []
-    full = []
-    for ix in range(ix0, ix1 + 1):
-        x0 = minx + ix * w
-        x1 = x0 + w
-        for iy in range(iy0, iy1 + 1):
-            y0 = miny + iy * h
-            y1 = y0 + h
-            corners_in = kernels.point_in_polygon(
-                np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), poly
-            )
-            if corners_in.all():
-                # fully inside unless a polygon edge cuts through
-                cut = _rect_edge_cut(x0, y0, x1, y1, poly)
-                cells.append((ix, iy))
-                full.append(not cut)
-                continue
-            if corners_in.any() or _poly_vertex_in_rect(x0, y0, x1, y1, poly) or _rect_edge_cut(x0, y0, x1, y1, poly):
-                cells.append((ix, iy))
-                full.append(False)
-    if not cells:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
-    ixs = np.array([c[0] for c in cells], dtype=np.int64)
-    iys = np.array([c[1] for c in cells], dtype=np.int64)
-    return _interleave_bits_np(ixs, iys, res), np.array(full, dtype=bool)
+    chunk = max(1, _COVER_CHUNK_ELEMS // (4 * len(poly)))
+    flags = [
+        _cover_flags(poly, minx + ix[s : s + chunk] * w, miny + iy[s : s + chunk] * h, w, h)
+        for s in range(0, len(ix), chunk)
+    ]
+    keep, full = (np.concatenate(f) for f in zip(*flags))
+    return _interleave_bits_np(ix[keep], iy[keep], res), full[keep]
 
 
-def _poly_vertex_in_rect(x0, y0, x1, y1, poly) -> bool:
-    return bool(
-        ((poly[:, 0] >= x0) & (poly[:, 0] <= x1) & (poly[:, 1] >= y0) & (poly[:, 1] <= y1)).any()
-    )
+def _cover_flags(poly, x0, y0, w, h):
+    """(covered, full) per cell of lower-left corners x0, y0. Each cell's
+    x1 is its own x0 + w (the next cell's x0 can differ by an ulp).
+    Corners run counter-clockwise from (x0, y0); rect side j runs corner
+    j -> j+1. An edge a->b cuts side c->d when orient(a, b, c) and
+    orient(a, b, d) differ in sign and so do orient(c, d, a) and
+    orient(c, d, b) (a touch on both lines does not count)."""
+    x1, y1 = x0 + w, y0 + h
+    cx, cy = np.stack([x0, x1, x1, x0]), np.stack([y0, y0, y1, y1])
+    corners_in = kernels.point_in_polygon(cx.ravel(), cy.ravel(), poly).reshape(cx.shape)
+    ax, ay = poly[:, 0, None, None], poly[:, 1, None, None]
+    bx, by = np.roll(ax, -1, axis=0), np.roll(ay, -1, axis=0)
+    dx, dy = np.roll(cx, -1, axis=0), np.roll(cy, -1, axis=0)
+    # (vertices, 4, cells): corner j against edge i; vertex i against side j
+    s = _sign((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))
+    t = _sign((dx - cx) * (ay - cy) - (dy - cy) * (ax - cx))
+    cut = ((s != np.roll(s, -1, axis=1)) & (t != np.roll(t, -1, axis=0))).any(axis=(0, 1))
+    ax, ay = ax[:, 0], ay[:, 0]
+    vertex_in = ((ax >= x0) & (ax <= x1) & (ay >= y0) & (ay <= y1)).any(axis=0)
+    return corners_in.any(axis=0) | vertex_in | cut, corners_in.all(axis=0) & ~cut
 
 
-def _rect_edge_cut(x0, y0, x1, y1, poly) -> bool:
-    """Does any polygon edge intersect any rectangle edge?"""
-    rect = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
-    n = len(poly)
-    for i in range(n):
-        a, b = poly[i], poly[(i + 1) % n]
-        for j in range(4):
-            c, d = rect[j], rect[(j + 1) % 4]
-            if _seg_intersect(a, b, c, d):
-                return True
-    return False
-
-
-def _seg_intersect(a, b, c, d) -> bool:
-    def orient(p, q, r):
-        v = (q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0])
-        return 0 if v == 0 else (1 if v > 0 else -1)
-
-    o1, o2 = orient(a, b, c), orient(a, b, d)
-    o3, o4 = orient(c, d, a), orient(c, d, b)
-    if o1 != o2 and o3 != o4:
-        return True
-    return False
+def _sign(v):
+    """0/1/2 for negative/zero/positive orientation; NaN counts as
+    negative."""
+    return (v >= 0).astype(np.int8) + (v > 0)

@@ -162,7 +162,6 @@ def dedup_survivors(
     id_col: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Keep one canonical document per duplicate cluster: the member with
     the minimum id survives; docs in no pair survive unchanged. Returns
@@ -179,8 +178,5 @@ def dedup_survivors(
     )
     # the components output is a checkpointed RDD scan with no stats, so
     # the optimizer cannot see it is small — hint the broadcast explicitly
-    # (duplicate members are a small fraction of any real corpus; pass
-    # broadcast=False if yours is pathological and let it shuffle).
-    if broadcast:
-        losers = F.broadcast(losers)
-    return docs.join(losers, id_col, "left_anti")
+    # (duplicate members are a small fraction of any real corpus)
+    return docs.join(F.broadcast(losers), id_col, "left_anti")

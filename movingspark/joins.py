@@ -52,7 +52,7 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
     Driver-side cover -> small DataFrame (cell, poly_id, full) to
     broadcast. With holes, cells whose bbox touches a hole's bbox are
     conservatively demoted from full to boundary (they refine exactly)."""
-    rows = []
+    ids, covers, fulls = [], [np.empty(0, np.int64)], [np.empty(0, bool)]
     for poly_id, verts in polygons:
         outer, holes = _norm_poly(verts)
         cell_ids, full = cells.polygon_cover(outer, res, bounds)
@@ -66,9 +66,11 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
                     & (cb[:, 1] <= hmaxy) & (cb[:, 3] >= hminy)
                 )
                 full = full & ~touches
-        for c, f in zip(cell_ids.tolist(), full.tolist()):
-            rows.append((int(c), str(poly_id), bool(f)))
-    return spark.createDataFrame(rows or [], "cell long, poly_id string, full boolean")
+        ids += [str(poly_id)] * len(cell_ids)
+        covers.append(cell_ids)
+        fulls.append(full)
+    rows = zip(np.concatenate(covers).tolist(), ids, np.concatenate(fulls).tolist())
+    return spark.createDataFrame(list(rows), "cell long, poly_id string, full boolean")
 
 
 # polygons with at most this many total vertices refine via a generated

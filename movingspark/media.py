@@ -197,7 +197,6 @@ def extract_media_features(
     media_with_payload: DataFrame,
     dim: int = 16,
     decoder=None,
-    batch_hint: int = 1024,
 ) -> DataFrame:
     """Decode/feature-extract media payloads with mapInPandas (Arrow
     batches; one python worker per partition, vectorized over the

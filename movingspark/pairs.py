@@ -8,10 +8,10 @@ vertex-to-line). Tests: test_trajectory.py:1130-1176.
 
 Scale shape: each trajectory is folded to one row of coordinate arrays
 with a map-side-combinable collect_list (trajectories are bounded-size
-groups by construction); the pair table joins against that folded table
-twice — broadcast when the pair list is small — and a struct-returning
-Arrow-batched pandas UDF computes both metrics per pair. The point-table
-never ships twice and nothing is quadratic in points.
+groups by construction); the broadcast pair table joins against that
+folded table twice, and a struct-returning Arrow-batched pandas UDF
+computes both metrics per pair. The point-table never ships twice and
+nothing is quadratic in points.
 
 `distance_to_point` needs no Python at all: consecutive-point segments
 via the per-trajectory lag window, a codegen'd clamp-projection distance
@@ -51,7 +51,6 @@ def trajectory_pair_metrics(
     df: DataFrame,
     pairs,
     cols: PointCols = TRAJ_COLS,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """min line-line distance + discrete Hausdorff for every (traj_a,
     traj_b) pair. `pairs`: DataFrame with columns (traj_a, traj_b) or a
@@ -63,8 +62,7 @@ def trajectory_pair_metrics(
         )
     a = _traj_coords(df, cols, "traj_a")
     b = _traj_coords(df, cols, "traj_b")
-    p = F.broadcast(pairs) if broadcast_pairs else pairs
-    j = a.join(p, "traj_a").join(b, "traj_b")
+    j = a.join(F.broadcast(pairs), "traj_a").join(b, "traj_b")
 
     @F.pandas_udf("min_distance double, hausdorff double")
     def metrics(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series) -> pd.DataFrame:

@@ -11,6 +11,7 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - segment_polygon_clip  one segment against a polygon (clip_ranges_scalar's core)
 - simhash_expr     ~ text.add_simhash      (per-row HOF expression, md5 per bit)
 - band_keys_loop   ~ similarity._band_keys (per row, per band, per bit)
+- polygon_cover_loop ~ cells.polygon_cover (one bbox cell at a time)
 - chained_kinematics ~ derive._kinematics (one window per D1-D6 helper,
   first rows patched by a further row_number/lead window each)
 - seg_dist_lag     ~ derive._kinematics "distance" (the lag-only segment
@@ -24,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movingspark import kernels, schema
+from movingspark.cells import WORLD, _interleave_bits_np
 from movingspark.derive import angular_difference_expr, bearing_expr, dist_expr, traj_window
 from movingspark.overlay import SNAP_S
 from movingspark.text import lower_ascii, tokens_expr
@@ -252,6 +254,86 @@ def band_keys_loop(signs: np.ndarray, n_bands: int, n_planes: int) -> list:
             keys.append((band << n_planes) | key)
         out.append(keys)
     return out
+
+
+def polygon_cover_loop(poly: np.ndarray, res: int, bounds=WORLD):
+    """Driver-side polygon -> covering cells at resolution `res`.
+
+    Returns (cells, full) where `full[i]` marks cells entirely inside the
+    polygon (points there skip the exact point-in-polygon refinement —
+    the standard two-list spatial-join cover). Cost is O(cells in bbox);
+    choose res so the polygon spans a sane number of cells.
+    """
+    poly = np.asarray(poly, dtype=np.float64)
+    if np.array_equal(poly[0], poly[-1]):
+        poly = poly[:-1]
+    minx, miny, maxx, maxy = bounds
+    n = 1 << res
+    w = (maxx - minx) / n
+    h = (maxy - miny) / n
+    pminx, pminy = poly.min(axis=0)
+    pmaxx, pmaxy = poly.max(axis=0)
+    ix0 = max(0, min(n - 1, int((pminx - minx) // w)))
+    ix1 = max(0, min(n - 1, int((pmaxx - minx) // w)))
+    iy0 = max(0, min(n - 1, int((pminy - miny) // h)))
+    iy1 = max(0, min(n - 1, int((pmaxy - miny) // h)))
+
+    cells = []
+    full = []
+    for ix in range(ix0, ix1 + 1):
+        x0 = minx + ix * w
+        x1 = x0 + w
+        for iy in range(iy0, iy1 + 1):
+            y0 = miny + iy * h
+            y1 = y0 + h
+            corners_in = kernels.point_in_polygon(
+                np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), poly
+            )
+            if corners_in.all():
+                # fully inside unless a polygon edge cuts through
+                cut = _rect_edge_cut(x0, y0, x1, y1, poly)
+                cells.append((ix, iy))
+                full.append(not cut)
+                continue
+            if corners_in.any() or _poly_vertex_in_rect(x0, y0, x1, y1, poly) or _rect_edge_cut(x0, y0, x1, y1, poly):
+                cells.append((ix, iy))
+                full.append(False)
+    if not cells:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
+    ixs = np.array([c[0] for c in cells], dtype=np.int64)
+    iys = np.array([c[1] for c in cells], dtype=np.int64)
+    return _interleave_bits_np(ixs, iys, res), np.array(full, dtype=bool)
+
+
+def _poly_vertex_in_rect(x0, y0, x1, y1, poly) -> bool:
+    return bool(
+        ((poly[:, 0] >= x0) & (poly[:, 0] <= x1) & (poly[:, 1] >= y0) & (poly[:, 1] <= y1)).any()
+    )
+
+
+def _rect_edge_cut(x0, y0, x1, y1, poly) -> bool:
+    """Does any polygon edge intersect any rectangle edge?"""
+    rect = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
+    n = len(poly)
+    for i in range(n):
+        a, b = poly[i], poly[(i + 1) % n]
+        for j in range(4):
+            c, d = rect[j], rect[(j + 1) % 4]
+            if _seg_intersect(a, b, c, d):
+                return True
+    return False
+
+
+def _seg_intersect(a, b, c, d) -> bool:
+    def orient(p, q, r):
+        v = (q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0])
+        return 0 if v == 0 else (1 if v > 0 else -1)
+
+    o1, o2 = orient(a, b, c), orient(a, b, d)
+    o3, o4 = orient(c, d, a), orient(c, d, b)
+    if o1 != o2 and o3 != o4:
+        return True
+    return False
 
 
 def _lag_dist(latlon: bool, cols) -> Column:

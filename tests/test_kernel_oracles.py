@@ -11,8 +11,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from movingspark import cells, similarity, smooth
 from movingspark import kernels as K
-from movingspark import similarity, smooth
+from perfbench.gen import make_polygons
 from movingspark.smooth import _kf_rts
 from tests import oracles
 
@@ -188,3 +189,110 @@ def test_band_keys_match_loop_oracle(n, n_bands, n_planes):
     want = np.array(oracles.band_keys_loop(signs, n_bands, n_planes), dtype=np.int64)
     assert got.dtype == np.int64
     assert np.array_equal(got, want.reshape(n, n_bands))
+
+
+def _cover_cases(seed: int, count: int):
+    """(polygon, res, bounds) at res 3-10, cycling through five kinds:
+    bench hexagons (world bounds up to res 6), concave stars, vertices on
+    integer and on half-integer lattice points of a unit-cell grid (edges
+    run along cell lines), and polygons cut by `bounds` on the low or the
+    high side. Outside the lattice kinds the grid is sized so the polygon
+    spans 2-8 cells, over bounds whose cell width is not a dyadic
+    fraction (so x0 + w and the next cell's x0 differ by an ulp)."""
+    rng = np.random.default_rng(seed)
+    for i in range(count):
+        res = int(rng.integers(3, 11))
+        n = 1 << res
+        kind = i % 5
+        if kind == 0:
+            centre = (rng.uniform(-150, 150), rng.uniform(-60, 60))
+            poly = np.array(make_polygons(rng, [centre])[0][1])
+        elif kind == 1:
+            k = int(rng.integers(5, 13))
+            ang = np.arange(2 * k) * np.pi / k + rng.uniform(0, np.pi)
+            rad = np.where(np.arange(2 * k) % 2 == 0, 1.0, rng.uniform(0.2, 0.5)) * rng.uniform(1, 10)
+            poly = np.column_stack([rad * np.cos(ang), rad * np.sin(ang)]) + rng.uniform(-50, 50, 2)
+        else:
+            k = int(rng.integers(3, 10))
+            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+            rad = rng.uniform(1, 6, k)
+            poly = np.column_stack([rad * np.cos(ang), rad * np.sin(ang)])
+        lo, hi = poly.min(axis=0), poly.max(axis=0)
+        if kind in (2, 3):
+            q = 1.0 if kind == 2 else 2.0
+            poly = np.round(poly * q) / q
+            o = float(n // 2 + rng.integers(-2, 3))
+            bounds = (-o, -o, n - o, n - o)
+        elif kind == 0 and res <= 6:
+            bounds = cells.WORLD
+        else:
+            cw, ch = (hi - lo) / rng.uniform(2, 8) + 1e-3
+            ox, oy = lo - rng.uniform(0, 1, 2) * (hi - lo)
+            if kind == 4:
+                ox, oy = lo + rng.uniform(0.2, 0.7, 2) * (hi - lo)
+                if i % 2:
+                    ox, oy = ox - n * cw, oy - n * ch
+            bounds = (float(ox), float(oy), float(ox + n * cw), float(oy + n * ch))
+        yield poly, res, bounds
+
+
+def _assert_same_cover(poly, res, bounds=cells.WORLD):
+    got, got_full = cells.polygon_cover(poly, res, bounds)
+    want, want_full = oracles.polygon_cover_loop(poly, res, bounds)
+    assert got.dtype == want.dtype and got_full.dtype == want_full.dtype
+    assert np.array_equal(got, want)
+    assert np.array_equal(got_full, want_full)
+    return got_full
+
+
+def test_polygon_cover_matches_cell_loop_oracle():
+    n_full = n_clipped = 0
+    for poly, res, bounds in _cover_cases(1, 1000):
+        n_full += int(_assert_same_cover(poly, res, bounds).sum())
+        lo, hi = poly.min(axis=0), poly.max(axis=0)
+        n_clipped += bool(lo[0] < bounds[0] or lo[1] < bounds[1] or hi[0] > bounds[2] or hi[1] > bounds[3])
+    assert n_full > 1000 and n_clipped > 100
+
+
+def test_polygon_cover_matches_oracle_on_a_2000_vertex_polygon():
+    rng = np.random.default_rng(7)
+    ang = np.linspace(0, 2 * np.pi, 2000, endpoint=False)
+    rad = 8 + 1.5 * np.sin(37 * ang) + rng.uniform(-0.5, 0.5, 2000)
+    poly = np.column_stack([20 + rad * np.cos(ang), -10 + 0.7 * rad * np.sin(ang)])
+    full = _assert_same_cover(poly, 6)
+    assert full.any() and (~full).any()
+
+
+def test_polygon_cover_uses_each_cells_own_far_edge():
+    """The loop takes a cell's x1 as x0 + w, which can differ by an ulp
+    from the next cell's x0 = minx + (ix + 1) * w. Tiny triangles with
+    their apex on whichever of the two lies further right pin that."""
+    rng = np.random.default_rng(2)
+    n_cases = 0
+    while n_cases < 200:
+        res = int(rng.integers(3, 11))
+        n = 1 << res
+        minx, miny = rng.uniform(-50, 50, 2)
+        cw, ch = rng.uniform(0.01, 3, 2)
+        bounds = (float(minx), float(miny), float(minx + n * cw), float(miny + n * ch))
+        w, h = (bounds[2] - bounds[0]) / n, (bounds[3] - bounds[1]) / n
+        ix = np.arange(n - 1)
+        own, nxt = (bounds[0] + ix * w) + w, bounds[0] + (ix + 1) * w
+        differ = np.flatnonzero(own != nxt)
+        if not len(differ):
+            continue
+        i = int(rng.choice(differ))
+        vx, ym = max(own[i], nxt[i]), bounds[1] + (rng.integers(0, n) + 0.5) * h
+        poly = np.array([[vx, ym], [vx + 0.3 * w, ym - 0.2 * h], [vx + 0.3 * w, ym + 0.2 * h]])
+        _assert_same_cover(poly, res, bounds)
+        n_cases += 1
+
+
+@pytest.mark.parametrize("elems", [1, 100, 4096])
+def test_polygon_cover_is_the_same_in_any_chunking(monkeypatch, elems):
+    cases = list(_cover_cases(3, 200))
+    want = [cells.polygon_cover(*case) for case in cases]
+    monkeypatch.setattr(cells, "_COVER_CHUNK_ELEMS", elems)
+    for case, (want_cells, want_full) in zip(cases, want):
+        got_cells, got_full = cells.polygon_cover(*case)
+        assert np.array_equal(got_cells, want_cells) and np.array_equal(got_full, want_full)

@@ -7,6 +7,7 @@ confusing off-by-a-few row mismatches."""
 
 import hashlib
 import os
+import sys
 
 import pytest
 
@@ -96,3 +97,13 @@ def test_registry_and_oracles_are_bijective():
         f"oracles-without-query: {sorted(onames - qnames)}"
     )
     assert set(entry_mod.BENCH) <= qnames
+
+
+def test_oracle_sql_raises_when_the_pinned_oracles_cannot_import(monkeypatch):
+    """A failed import of the shipped pin module must not turn the 15
+    sequential-op queries into unchecked rows-only runs."""
+    import __spark_entry__ as entry_mod
+
+    monkeypatch.setitem(sys.modules, "movingspark.pinned_oracles_sf001", None)
+    with pytest.raises(ImportError):
+        entry_mod.oracle_sql()

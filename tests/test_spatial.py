@@ -163,6 +163,55 @@ def test_segments_intersect_polygon_kernel_matches_expr(spark):
     assert got == want
 
 
+def _wiggly_ring(cx, cy, r, k, rng):
+    ang = np.linspace(0, 2 * np.pi, k, endpoint=False)
+    rad = r * (1 + 0.15 * np.sin(7 * ang)) + rng.uniform(-0.05, 0.05, k) * r
+    return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+
+
+def _boundary_points(ring):
+    """Every vertex and every edge midpoint of a ring."""
+    return np.concatenate([ring, (ring + np.roll(ring, -1, axis=0)) / 2])
+
+
+def test_large_polygon_refines_through_the_numpy_kernels(spark):
+    """Above joins._PIP_EXPR_MAX_VERTS the point join refines boundary
+    cells through an Arrow UDF, and above half of it the line test does:
+    both must agree with the numpy kernels, holes and boundary points
+    included."""
+    from movingspark import kernels
+
+    rng = np.random.default_rng(3)
+    outer = _wiggly_ring(20.0, 10.0, 8.0, 300, rng)
+    hole = _wiggly_ring(20.5, 9.5, 3.0, 24, rng)
+    assert len(outer) + len(hole) > joins._PIP_EXPR_MAX_VERTS and 2 * len(outer) > joins._PIP_EXPR_MAX_VERTS
+    xy = np.concatenate(
+        [rng.uniform([10, 0], [30, 20], (400, 2)), _boundary_points(outer), _boundary_points(hole)]
+    )
+    df = rows_to_points(spark, [(i, "2020-01-01T00:00:00", x, y) for i, (x, y) in enumerate(xy)])
+    hits = joins.point_in_polygon_join(df, [("ring", (outer, [hole]))], res=8)
+    got = sorted((int(r["traj_id"]), r["poly_id"]) for r in hits.collect())
+    pts = sorted((int(r["traj_id"]), r["x"], r["y"]) for r in df.collect())
+    ids, px, py = (np.array(c) for c in zip(*pts))
+    inside = kernels.point_in_polygon(px, py, outer, [hole])
+    assert got == [(int(i), "ring") for i in ids[inside]]
+    assert inside[400:].all() and 0 < inside[:400].sum() < 400
+
+    # three-point tracks through the ring: random, and from a boundary point
+    starts = np.concatenate([rng.uniform([10, 0], [30, 20], (60, 2)), _boundary_points(outer)[::10]])
+    steps = rng.normal(0.0, 2.0, (len(starts), 2, 2))
+    tracks = np.concatenate([starts[:, None], starts[:, None] + np.cumsum(steps, axis=1)], axis=1)
+    rows = [(i, f"2020-01-01T00:00:{j:02d}", x, y) for i, tr in enumerate(tracks) for j, (x, y) in enumerate(tr)]
+    line_ids = {int(r["traj_id"]) for r in joins.intersecting_traj_ids_line(rows_to_points(spark, rows), outer).collect()}
+    # each track's segments: the first point against itself, then each step
+    a, b = tracks[:, [0, 0, 1]], tracks
+    seg_hit = kernels.segments_intersect_polygon(
+        a[..., 0].ravel(), a[..., 1].ravel(), b[..., 0].ravel(), b[..., 1].ravel(), outer
+    ).reshape(len(tracks), 3)
+    assert line_ids == set(np.flatnonzero(seg_hit.any(axis=1)).tolist())
+    assert 0 < len(line_ids) < len(tracks)
+
+
 def test_knn_join(spark):
     pts = rows_to_points(
         spark,

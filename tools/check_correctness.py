@@ -101,19 +101,16 @@ def main():
     oracles = E.oracle_sql()
     # the sequential-op oracles are pinned per sf dir; swap in the set
     # matching this run's sf (the driver always runs the sf0.01 set)
-    try:
-        from movingspark.pinned_oracles_sf001 import PINNED_SQL_BY_SF
+    from movingspark.pinned_oracles_sf001 import PINNED_SQL_BY_SF
 
-        key = sf_dir.rstrip("/")
-        matched = {d.rstrip("/"): v for d, v in PINNED_SQL_BY_SF.items()}.get(key)
-        if matched:
-            oracles.update(matched)
-        else:
-            for name in PINNED_SQL_BY_SF[next(iter(PINNED_SQL_BY_SF))]:
-                oracles.pop(name, None)
-            print(f"note: no pinned oracles for {sf_dir}; mcp/stop_points/generalize_dp run rows-only")
-    except Exception:
-        pass
+    key = sf_dir.rstrip("/")
+    matched = {d.rstrip("/"): v for d, v in PINNED_SQL_BY_SF.items()}.get(key)
+    if matched:
+        oracles.update(matched)
+    else:
+        for name in PINNED_SQL_BY_SF[next(iter(PINNED_SQL_BY_SF))]:
+            oracles.pop(name, None)
+        print(f"note: no pinned oracles for {sf_dir}; mcp/stop_points/generalize_dp run rows-only")
     n_ok = n_bad = 0
     for name, fn in qs.items():
         if only and name not in only:
