@@ -2962,12 +2962,13 @@ def q_embedding_near_dups(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Multimodal plumbing: media refs -> deterministic payloads ->
-    mapInPandas feature extraction (rows-only check)."""
+    mapInPandas feature extraction. The payloads are not images, so
+    every row is kept with null pixel features."""
     from movingspark import media
 
     docs = ingest.synth_interleaved_docs(spark, N_DOCS)
     refs = media.media_refs_from_docs(docs)
-    feats = media.extract_media_features(media.synth_media_bytes(refs), dim=8)
+    feats = media.extract_image_features(media.synth_media_bytes(refs))
     return feats.select("doc_id", "offset", "media_ref", "n_bytes", "content_hash")
 
 

@@ -20,11 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 
 from movingspark.session import tune_builder
-from perfbench.harness import cpu_fractions, cpu_jiffies
-
-
-def force(df):
-    df.write.format("noop").mode("overwrite").save()
+from perfbench.harness import cpu_fractions, cpu_jiffies, force
 
 
 def _noisy(before, after) -> bool:

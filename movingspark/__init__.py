@@ -1,11 +1,12 @@
 """movingspark — a from-scratch PySpark-native trajectory analytics engine.
 
 Re-implements the query & data-processing capabilities of MovingPandas
-(reference: /root/reference, movingpandas v0.22.4) as stateless
-DataFrame -> DataFrame transforms: window algebra for derived columns,
-groupBy().applyInPandas with vectorized numpy kernels for inherently
-sequential per-trajectory algorithms, and a native quadtree cell index
-for distributed spatial joins (point-in-polygon, kNN, tiling).
+(movingpandas v0.22.4) as stateless DataFrame -> DataFrame transforms:
+window algebra for derived columns, `gmap.grouped_apply_sorted` (one
+mapInPandas pass over traj_id-partitioned, time-sorted rows) with
+vectorized numpy kernels for inherently sequential per-trajectory
+algorithms, and a native quadtree cell index for distributed spatial
+joins (point-in-polygon, kNN, tiling).
 
 No Trajectory objects, no RDDs, no per-row Python. The canonical data
 model is one long DataFrame: (traj_id string, obj_id string,
@@ -13,8 +14,6 @@ t timestamp, x double, y double, <attrs...>); a "TrajectoryCollection"
 is simply the set of groups under traj_id (SURVEY.md §1.2).
 """
 
-from movingspark.schema import PointCols, TRAJ_COLS
-
 __version__ = "0.1.0"
 
-__all__ = ["PointCols", "TRAJ_COLS", "__version__"]
+__all__ = ["__version__"]

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, pyworker
-from movingspark.schema import C_EARTH, PointCols, TRAJ_COLS
+from movingspark.schema import C_EARTH
 
 
 # ---------------------------------------------------------------------------
@@ -98,25 +98,23 @@ def extract_significant_points(
     min_stop_duration_s: float,
     min_angle: float = 45,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X16: (traj_id, seq, x, y) significant points; seq preserves the
     reference's emission order within each trajectory (start, end, scan
     finds) so downstream clustering is order-reproducible."""
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t)
         pts = _sig_points_np(
-            pdf[cols.x].to_numpy(float),
-            pdf[cols.y].to_numpy(float),
-            pdf[cols.t].astype("int64").to_numpy() / 1e9,
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
             max_distance,
             min_distance,
             min_stop_duration_s,
             min_angle,
             latlon,
         )
-        tid = pdf[cols.traj_id].iloc[0]
+        tid = pdf["traj_id"].iloc[0]
         return pd.DataFrame(
             {
                 "traj_id": pd.Series([tid] * len(pts), dtype=str),
@@ -129,7 +127,7 @@ def extract_significant_points(
     from movingspark.gmap import grouped_apply_sorted
 
     return grouped_apply_sorted(
-        df, per_traj, "traj_id string, seq long, x double, y double", cols
+        df, per_traj, "traj_id string, seq long, x double, y double"
     )
 
 
@@ -324,12 +322,7 @@ def grid_cluster_weighted(points, weights, max_distance, latlon=False):
 # ---------------------------------------------------------------------------
 
 
-def compute_flows(
-    df: DataFrame,
-    centroids: DataFrame,
-    latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def compute_flows(df: DataFrame, centroids: DataFrame, latlon: bool = False) -> DataFrame:
     """X18: assign every point its nearest centroid (broadcast kNN),
     compress consecutive repeats per trajectory, count transitions:
     weight = #transitions, obj_weight = #distinct obj ids (exact).
@@ -337,15 +330,15 @@ def compute_flows(
     weight, obj_weight)."""
     from movingspark.joins import knn_join
 
-    has_obj = cols.obj_id in df.columns
-    obj = F.col(cols.obj_id) if has_obj else F.lit(None).cast("string")
-    near = knn_join(df.withColumn("__obj", obj), centroids, k=1, latlon=latlon, cols=cols)
+    has_obj = "obj_id" in df.columns
+    obj = F.col("obj_id") if has_obj else F.lit(None).cast("string")
+    near = knn_join(df.withColumn("__obj", obj), centroids, k=1, latlon=latlon)
 
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
+    w = Window.partitionBy("traj_id").orderBy("t")
     kept = near.withColumn("__prev", F.lag("cluster_id").over(w)).filter(
         F.col("__prev").isNull() | (F.col("__prev") != F.col("cluster_id"))
     )
-    w2 = Window.partitionBy(cols.traj_id).orderBy(cols.t)
+    w2 = Window.partitionBy("traj_id").orderBy("t")
     trans = kept.withColumn("from_cluster", F.lag("cluster_id").over(w2)).filter(
         F.col("from_cluster").isNotNull()
     )
@@ -370,23 +363,18 @@ def compute_flows(
     )
 
 
-def cell_visit_counts(
-    df: DataFrame,
-    centroids: DataFrame,
-    latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def cell_visit_counts(df: DataFrame, centroids: DataFrame, latlon: bool = False) -> DataFrame:
     """A12 hour-quartile visit counters (trajectory_aggregator.py:281-287):
     per cluster the number of sequence entries, split by hour-of-day
     quartile (h // 6 + 1)."""
     from movingspark.joins import knn_join
 
-    near = knn_join(df, centroids, k=1, latlon=latlon, cols=cols)
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
+    near = knn_join(df, centroids, k=1, latlon=latlon)
+    w = Window.partitionBy("traj_id").orderBy("t")
     kept = near.withColumn("__prev", F.lag("cluster_id").over(w)).filter(
         F.col("__prev").isNull() | (F.col("__prev") != F.col("cluster_id"))
     )
-    bucket = (F.hour(cols.t) / 6).cast("int") + 1
+    bucket = (F.hour("t") / 6).cast("int") + 1
     return (
         kept.withColumn("__b", bucket)
         .groupBy("cluster_id", "__b")
@@ -402,24 +390,18 @@ def aggregate_flows(
     min_stop_duration_s: float,
     min_angle: float = 45,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ):
     """Full TrajectoryCollectionAggregator pipeline; returns
     (significant_points_df, centroids_df, flows_df)."""
     sig = extract_significant_points(
-        df, max_distance, min_distance, min_stop_duration_s, min_angle, latlon, cols
+        df, max_distance, min_distance, min_stop_duration_s, min_angle, latlon
     )
     cents = cluster_significant_points(sig, max_distance, latlon)
-    flows = compute_flows(df, cents, latlon, cols)
+    flows = compute_flows(df, cents, latlon)
     return sig, cents, flows
 
 
-def od_matrix(
-    df: DataFrame,
-    res: int,
-    bounds=None,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def od_matrix(df: DataFrame, res: int, bounds=None) -> DataFrame:
     """Origin-destination matrix: one row per (origin cell, destination
     cell) pair with trip counts, where origin/destination are the tile
     cells of each trajectory's first/last observation — the aggregate
@@ -435,8 +417,8 @@ def od_matrix(
     from movingspark import cells as _cells
 
     bounds = bounds if bounds is not None else _cells.WORLD
-    t, x, y = F.col(cols.t), F.col(cols.x), F.col(cols.y)
-    per_trip = df.groupBy(cols.traj_id).agg(
+    t, x, y = F.col("t"), F.col("x"), F.col("y")
+    per_trip = df.groupBy("traj_id").agg(
         F.min_by(F.struct(x.alias("x"), y.alias("y")), t).alias("__o"),
         F.max_by(F.struct(x.alias("x"), y.alias("y")), t).alias("__d"),
     )

@@ -13,15 +13,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, schema
-from movingspark.schema import PointCols, TRAJ_COLS
 from movingspark.units import get_conversion
 
 
-def iqr_clean(df: DataFrame, columns: dict[str, float], cols: PointCols = TRAJ_COLS) -> DataFrame:
+def iqr_clean(df: DataFrame, columns: dict[str, float]) -> DataFrame:
     """X13 (trajectory_cleaner.py:59-109): drop rows where ANY listed
     column falls outside [q25 - a*IQR, q75 + a*IQR]; quantiles computed
     per trajectory with linear interpolation (pandas/Spark `percentile`)."""
-    w = Window.partitionBy(cols.traj_id)
+    w = Window.partitionBy("traj_id")
     cond = F.lit(False)
     out = df
     for i, (column, alpha) in enumerate(columns.items()):
@@ -42,7 +41,6 @@ def outlier_clean(
     units=None,
     alpha: float = 3.0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X14 (trajectory_cleaner.py:112-172): walk rows in time order; drop
     a row when speed(last_kept -> row) > v_max, NOT advancing the kept
@@ -52,18 +50,17 @@ def outlier_clean(
     out_schema = df.schema
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t).reset_index(drop=True)
         keep = outlier_keep_mask(
-            pdf[cols.x].to_numpy(float),
-            pdf[cols.y].to_numpy(float),
-            pdf[cols.t].astype("int64").to_numpy() / 1e9,
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
             v_max, alpha, conv, latlon,
         )
         return pdf[keep]
 
     from movingspark.gmap import grouped_apply_sorted
 
-    return grouped_apply_sorted(df, per_traj, out_schema, cols)
+    return grouped_apply_sorted(df, per_traj, out_schema)
 
 
 def outlier_keep_mask(x, y, t, v_max, alpha, conv, latlon) -> np.ndarray:

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import cells
-from movingspark.schema import PointCols, TRAJ_COLS
 
 __all__ = ["together_epochs", "convoy_pairs", "convoys"]
 
@@ -49,7 +48,6 @@ def together_epochs(
     epoch_s: float,
     res: int,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """(traj_a, traj_b, epoch) facts: the pair had at least one point
     pair within `max_dist` (euclidean) during that epoch. traj_a <
@@ -66,12 +64,12 @@ def together_epochs(
     if ep_us <= 0:
         raise ValueError("epoch_s must be positive")
 
-    ix, iy = cells.cell_ixiy_expr(F.col(cols.x), F.col(cols.y), res, bounds)
+    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
     base = df.select(
-        F.col(cols.traj_id).alias("__traj"),
-        F.floor(F.unix_micros(F.col(cols.t)) / F.lit(ep_us)).alias("__e"),
-        F.col(cols.x).alias("__x"),
-        F.col(cols.y).alias("__y"),
+        F.col("traj_id").alias("__traj"),
+        F.floor(F.unix_micros(F.col("t")) / F.lit(ep_us)).alias("__e"),
+        F.col("x").alias("__x"),
+        F.col("y").alias("__y"),
         ix.alias("__ix"),
         iy.alias("__iy"),
     )
@@ -122,14 +120,13 @@ def convoy_pairs(
     min_epochs: int,
     res: int,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Co-traveling pairs: (traj_a, traj_b, max_run, n_epochs) for pairs
     whose longest CONSECUTIVE-epoch together run >= min_epochs.
     max_run = that longest run; n_epochs = total together epochs
     (consecutive or not). Run/total counts are integers, so the output
     is engine-exact."""
-    tog = together_epochs(df, max_dist, epoch_s, res, bounds, cols)
+    tog = together_epochs(df, max_dist, epoch_s, res, bounds)
     w = Window.partitionBy("traj_a", "traj_b").orderBy("e")
     runs = tog.withColumn("__g", F.col("e") - F.row_number().over(w))
     per_run = runs.groupBy("traj_a", "traj_b", "__g").agg(
@@ -152,18 +149,17 @@ def convoys(
     min_epochs: int,
     res: int,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Convoy groups: (traj_id, convoy_id, n_members) — connected
     components over the qualifying co-travel pairs, convoy_id = min
     member id (deterministic, partitioning-invariant)."""
     from movingspark.components import connected_components
 
-    pairs = convoy_pairs(df, max_dist, epoch_s, min_epochs, res, bounds, cols)
+    pairs = convoy_pairs(df, max_dist, epoch_s, min_epochs, res, bounds)
     comp = connected_components(pairs, src="traj_a", dst="traj_b")
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "component").select(
-        F.col("node").alias(cols.traj_id),
+        F.col("node").alias("traj_id"),
         F.col("component").alias("convoy_id"),
         "n_members",
     )

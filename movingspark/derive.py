@@ -36,12 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movingspark import kernels, pyworker, schema
-from movingspark.schema import PointCols, TRAJ_COLS
 from movingspark.units import get_conversion
 
 
-def traj_window(cols: PointCols = TRAJ_COLS):
-    return Window.partitionBy(cols.traj_id).orderBy(cols.t)
+def traj_window():
+    return Window.partitionBy("traj_id").orderBy("t")
 
 
 # ---------------------------------------------------------------------------
@@ -115,7 +114,6 @@ def _kinematics(
     units=None,
     latlon: bool = False,
     crs_units=None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Add the columns named in `outputs` (column name -> one of
     "timedelta", "timedelta_us", "distance", "speed", "direction",
@@ -136,7 +134,7 @@ def _kinematics(
     trip to the JVM, so an unused expression costs driver time even
     though Catalyst would prune it from the plan."""
     conv = get_conversion(units, crs_units)
-    w = traj_window(cols)
+    w = traj_window()
     kinds = set(outputs.values())
     # the reference reads the input columns named `speed`/`direction`
     reuse = {k: k in df.columns and k not in kinds for k in (schema.SPEED, schema.DIRECTION)}
@@ -144,9 +142,9 @@ def _kinematics(
     own_direction = "direction" in kinds or ("angular_difference" in kinds and not reuse[schema.DIRECTION])
     own_dist = own_speed or "distance" in kinds
 
-    raw = {"t": F.unix_micros(F.col(cols.t))}
+    raw = {"t": F.unix_micros(F.col("t"))}
     if own_dist or own_direction:
-        raw.update(x=F.col(cols.x), y=F.col(cols.y))
+        raw.update(x=F.col("x"), y=F.col("y"))
     first = F.col("__k_first")
     seg = df.select(
         "*",
@@ -197,10 +195,10 @@ def _kinematics(
     return out.drop(*[c for c in seg.columns if c not in df.columns])
 
 
-def add_timedelta(df: DataFrame, name: str = schema.TIMEDELTA, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def add_timedelta(df: DataFrame, name: str = schema.TIMEDELTA) -> DataFrame:
     """D1: seconds since previous observation; first row null
     (trajectory.py:1456-1484; emitted as double seconds, not interval)."""
-    return _kinematics(df, {name: "timedelta"}, cols=cols)
+    return _kinematics(df, {name: "timedelta"})
 
 
 def add_distance(
@@ -209,10 +207,9 @@ def add_distance(
     units=None,
     latlon: bool = False,
     crs_units=None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """D2: distance from previous point; first row 0 (trajectory.py:1240-1302)."""
-    return _kinematics(df, {name: "distance"}, units, latlon, crs_units, cols)
+    return _kinematics(df, {name: "distance"}, units, latlon, crs_units)
 
 
 def add_speed(
@@ -221,34 +218,27 @@ def add_speed(
     units=None,
     latlon: bool = False,
     crs_units=None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """D3: distance/Δt·conv; first row copies the second row's value
     (trajectory.py:1304-1374, 1502-1516)."""
-    return _kinematics(df, {name: "speed"}, units, latlon, crs_units, cols)
+    return _kinematics(df, {name: "speed"}, units, latlon, crs_units)
 
 
-def add_direction(
-    df: DataFrame,
-    name: str = schema.DIRECTION,
-    latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def add_direction(df: DataFrame, name: str = schema.DIRECTION, latlon: bool = False) -> DataFrame:
     """D4: bearing from previous point; identical points -> 0; first row
     copies the second row (trajectory.py:1169-1198)."""
-    return _kinematics(df, {name: "direction"}, latlon=latlon, cols=cols)
+    return _kinematics(df, {name: "direction"}, latlon=latlon)
 
 
 def add_angular_difference(
     df: DataFrame,
     name: str = schema.ANGULAR_DIFFERENCE,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """D5: |Δ direction| folded to [0,180]; first row 0
     (trajectory.py:1200-1238). Reuses an existing `direction` column if
     present (same rule as the reference), else derives one on the fly."""
-    return _kinematics(df, {name: "angular_difference"}, latlon=latlon, cols=cols)
+    return _kinematics(df, {name: "angular_difference"}, latlon=latlon)
 
 
 def add_acceleration(
@@ -257,15 +247,14 @@ def add_acceleration(
     units=None,
     latlon: bool = False,
     crs_units=None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """D6: Δspeed/Δt·time2conv; first row copies the second row
     (trajectory.py:1376-1454, 1518-1530). Reuses an existing `speed`
     column when present, matching the reference."""
-    return _kinematics(df, {name: "acceleration"}, units, latlon, crs_units, cols)
+    return _kinematics(df, {name: "acceleration"}, units, latlon, crs_units)
 
 
-def add_all_kinematics(df: DataFrame, latlon: bool = False, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def add_all_kinematics(df: DataFrame, latlon: bool = False) -> DataFrame:
     """Convenience: timedelta + distance + speed + direction + angular
     difference + acceleration in one pass (single shuffle on traj_id)."""
     kinds = {
@@ -276,32 +265,32 @@ def add_all_kinematics(df: DataFrame, latlon: bool = False, cols: PointCols = TR
         schema.ANGULAR_DIFFERENCE: "angular_difference",
         schema.ACCELERATION: "acceleration",
     }
-    return _kinematics(df, kinds, latlon=latlon, cols=cols)
+    return _kinematics(df, kinds, latlon=latlon)
 
 
-def apply_offset_minutes(df: DataFrame, column: str, offset: int, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def apply_offset_minutes(df: DataFrame, column: str, offset: int) -> DataFrame:
     """D7 minutes variant (trajectory.py:1696-1707) — alias of
     apply_offset_seconds with a 60x factor."""
-    return apply_offset_seconds(df, column, int(offset) * 60, cols=cols)
+    return apply_offset_seconds(df, column, int(offset) * 60)
 
 
-def apply_offset_seconds(df: DataFrame, column: str, offset: int, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def apply_offset_seconds(df: DataFrame, column: str, offset: int) -> DataFrame:
     """D7 (trajectory.py:1683-1707): shift a column's values backward
     along the time axis by `offset` seconds — the value at time t becomes
     the value that was observed at t+offset (pandas shift(-offset, freq)
     semantics, realized as a time-keyed self-join to avoid assuming a
     regular sampling interval)."""
     shifted = df.select(
-        F.col(cols.traj_id).alias("__tid"),
-        (F.unix_micros(F.col(cols.t)) - F.lit(int(offset) * 1_000_000)).alias("__t_us2"),
+        F.col("traj_id").alias("__tid"),
+        (F.unix_micros(F.col("t")) - F.lit(int(offset) * 1_000_000)).alias("__t_us2"),
         F.col(column).alias("__shifted"),
     )
     out = (
-        df.withColumn("__t_us", F.unix_micros(F.col(cols.t)))
+        df.withColumn("__t_us", F.unix_micros(F.col("t")))
         .join(
             shifted,
             on=[
-                F.col(cols.traj_id) == F.col("__tid"),
+                F.col("traj_id") == F.col("__tid"),
                 F.col("__t_us") == F.col("__t_us2"),
             ],
             how="left",

@@ -14,7 +14,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from movingspark import kernels
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
 def _point_seg_dist(px, py, ax, ay, bx, by):
@@ -30,22 +29,21 @@ def _point_seg_dist(px, py, ax, ay, bx, by):
     return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
 
 
-def _grouped_filter(df: DataFrame, mask_fn, cols: PointCols) -> DataFrame:
+def _grouped_filter(df: DataFrame, mask_fn) -> DataFrame:
     """Run mask_fn(x, y, t_sec) -> bool mask per trajectory, keep rows."""
     out_schema = df.schema
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t).reset_index(drop=True)
         mask = mask_fn(
-            pdf[cols.x].to_numpy(float),
-            pdf[cols.y].to_numpy(float),
-            pdf[cols.t].astype("int64").to_numpy() / 1e9,
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
         )
         return pdf[mask]
 
     from movingspark.gmap import grouped_apply_sorted
 
-    return grouped_apply_sorted(df, per_traj, out_schema, cols)
+    return grouped_apply_sorted(df, per_traj, out_schema)
 
 
 def min_distance_mask(x, y, tolerance: float, latlon: bool = False) -> np.ndarray:
@@ -66,10 +64,10 @@ def min_distance_mask(x, y, tolerance: float, latlon: bool = False) -> np.ndarra
     return keep
 
 
-def min_distance(df: DataFrame, tolerance: float, latlon: bool = False, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def min_distance(df: DataFrame, tolerance: float, latlon: bool = False) -> DataFrame:
     """X8 (trajectory_generalizer.py:61-94): keep a row when its distance
     to the last KEPT row >= tolerance; row 0 and the last row always kept."""
-    return _grouped_filter(df, lambda x, y, t: min_distance_mask(x, y, tolerance, latlon), cols)
+    return _grouped_filter(df, lambda x, y, t: min_distance_mask(x, y, tolerance, latlon))
 
 
 def min_timedelta_mask(t, tolerance_s: float) -> np.ndarray:
@@ -85,19 +83,19 @@ def min_timedelta_mask(t, tolerance_s: float) -> np.ndarray:
     return keep
 
 
-def min_timedelta(df: DataFrame, tolerance_s: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def min_timedelta(df: DataFrame, tolerance_s: float) -> DataFrame:
     """X9 (trajectory_generalizer.py:97-130): keep a row when Δt to the
     last KEPT row >= tolerance; row 0 and the last row always kept."""
-    return _grouped_filter(df, lambda x, y, t: min_timedelta_mask(t, tolerance_s), cols)
+    return _grouped_filter(df, lambda x, y, t: min_timedelta_mask(t, tolerance_s))
 
 
-def max_distance(df: DataFrame, tolerance: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def max_distance(df: DataFrame, tolerance: float) -> DataFrame:
     """X10 (trajectory_generalizer.py:133-169): single-pass chord check —
     walking segment anchor->current, split when any intermediate point
     deviates > tolerance from the chord. Ported loop-exact, including the
     reference's keep-index behavior (keeps the row BEFORE the splitting
     point) and always keeping first and last rows."""
-    return _grouped_filter(df, lambda x, y, t: max_distance_mask(x, y, tolerance), cols)
+    return _grouped_filter(df, lambda x, y, t: max_distance_mask(x, y, tolerance))
 
 
 def max_distance_mask(x, y, tolerance: float) -> np.ndarray:
@@ -125,7 +123,7 @@ def max_distance_mask(x, y, tolerance: float) -> np.ndarray:
     return keep
 
 
-def douglas_peucker(df: DataFrame, tolerance: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def douglas_peucker(df: DataFrame, tolerance: float) -> DataFrame:
     """X11 (trajectory_generalizer.py:172-205): classic DP on the vertex
     chain, then keep every input row whose COORDINATE appears among the
     simplified vertices (the reference matches by coordinate membership,
@@ -138,14 +136,14 @@ def douglas_peucker(df: DataFrame, tolerance: float, cols: PointCols = TRAJ_COLS
         kept = set(map(tuple, xy[dp].tolist()))
         return np.array([p in kept for p in map(tuple, xy.tolist())])
 
-    return _grouped_filter(df, mask, cols)
+    return _grouped_filter(df, mask)
 
 
-def top_down_time_ratio(df: DataFrame, tolerance: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def top_down_time_ratio(df: DataFrame, tolerance: float) -> DataFrame:
     """X12 (trajectory_generalizer.py:208-277): TDTR — recursive split at
     the max deviation from the time-ratio projection onto the chord."""
 
     def mask(x, y, t):
         return kernels.tdtr_mask(np.column_stack([x, y]), t, tolerance)
 
-    return _grouped_filter(df, mask, cols)
+    return _grouped_filter(df, mask)

@@ -27,37 +27,31 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark.joins import pip_expr
-from movingspark.schema import PointCols, TRAJ_COLS
 
 __all__ = ["geofence_events"]
 
 
-def geofence_events(
-    df: DataFrame,
-    polygon,
-    holes=None,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def geofence_events(df: DataFrame, polygon, holes=None) -> DataFrame:
     """Enter/exit events for one driver-known fence polygon. Output:
     (traj_id, t, x, y, event, t_prev) where `event` is 'enter'|'exit',
     `t` the first observation on the new side and `t_prev` the last
     observation on the old side (the crossing happened in between)."""
-    inside = pip_expr(F.col(cols.x), F.col(cols.y), polygon, holes)
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
+    inside = pip_expr(F.col("x"), F.col("y"), polygon, holes)
+    w = Window.partitionBy("traj_id").orderBy("t")
     flagged = (
         df.withColumn("__in", inside)
         .withColumn("__prev_in", F.lag("__in").over(w))
-        .withColumn("__t_prev", F.lag(cols.t).over(w))
+        .withColumn("__t_prev", F.lag("t").over(w))
     )
     return (
         flagged.filter(
             F.col("__prev_in").isNotNull() & (F.col("__in") != F.col("__prev_in"))
         )
         .select(
-            cols.traj_id,
-            cols.t,
-            cols.x,
-            cols.y,
+            "traj_id",
+            "t",
+            "x",
+            "y",
             F.when(F.col("__in"), F.lit("enter")).otherwise(F.lit("exit")).alias("event"),
             F.col("__t_prev").alias("t_prev"),
         )

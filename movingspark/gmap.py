@@ -10,7 +10,7 @@ dispatch, not kernel).
 
 `grouped_apply_sorted` runs the same per-group function as ONE
 mapInPandas pass over partitions hash-partitioned and sorted by
-(key, order): group boundaries are found with a numpy scan, the last
+(traj_id, t): group boundaries are found with a numpy scan, the last
 (possibly incomplete) group of each Arrow batch is carried into the
 next batch, and each batch yields a single concatenated frame. The
 shuffle cost is identical to applyInPandas (same hash exchange); only
@@ -47,35 +47,26 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from movingspark import pyworker
-from movingspark.schema import TRAJ_COLS, PointCols
 
 
-def grouped_apply_sorted(
-    df: DataFrame,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-    cols: PointCols = TRAJ_COLS,
-    key: str | None = None,
-    order: str | None = None,
-) -> DataFrame:
+def grouped_apply_sorted(df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], schema) -> DataFrame:
     """Semantically equivalent to
-    ``df.groupBy(key).applyInPandas(fn, schema)`` for a per-group pure
-    function, executed as mapInPandas over (key, order)-sorted hash
-    partitions with a batch-boundary carry. `fn` receives each group
-    with a reset index, rows pre-sorted by `order` (kernels that
-    re-sort internally stay correct and cheap — sorting sorted data).
+    ``df.groupBy("traj_id").applyInPandas(fn, schema)`` for a per-group
+    pure function, executed as mapInPandas over (traj_id, t)-sorted hash
+    partitions with a batch-boundary carry. Contract: `fn` receives one
+    whole trajectory per call, its rows in ascending `t` order, with a
+    fresh RangeIndex (0..n-1), so `fn` needs no sort of its own
+    (pinned in tests/test_gmap.py).
 
     Known trade-offs vs applyInPandas (both acceptable here): the
     explicit repartition is not elided when the input is already
-    hash-partitioned on `key` (FlatMapGroupsInPandas declares a
+    hash-partitioned on traj_id (FlatMapGroupsInPandas declares a
     ClusteredDistribution that Catalyst can satisfy without a shuffle;
     RepartitionByExpression is unconditional) — none of this engine's
     pipelines chain two grouped-map kernels without an intervening
     exchange, so nothing regresses; and one pathological giant group
     still lands on a single task, exactly as it does with
     applyInPandas (inherent to per-group sequential semantics)."""
-    key = key or cols.traj_id
-    order = order or cols.t
 
     def per_batch(batches):
         pyworker.prepare()
@@ -86,7 +77,7 @@ def grouped_apply_sorted(
                 carry = None
             if len(pdf) == 0:
                 continue
-            keys = pdf[key].to_numpy()
+            keys = pdf["traj_id"].to_numpy()
             boundary = np.nonzero(keys[1:] != keys[:-1])[0] + 1
             starts = np.concatenate([[0], boundary])
             # hold back the final group — it may continue in the next batch
@@ -103,7 +94,7 @@ def grouped_apply_sorted(
             if len(out):
                 yield out
 
-    # Explicit partition count: repartition(key) alone lets AQE coalesce
+    # Explicit partition count: repartition(traj_id) alone lets AQE coalesce
     # by SHUFFLE BYTES, which is miscalibrated for a CPU-bound Python
     # stage — at sf0.1 it folded 1500 trajectory groups onto 3 tasks and
     # tripled overlay-clip wall time. Passing N pins the exchange to the
@@ -116,7 +107,7 @@ def grouped_apply_sorted(
     except (TypeError, ValueError):
         n_parts = spark.sparkContext.defaultParallelism
     return (
-        df.repartition(n_parts, key)
-        .sortWithinPartitions(key, order)
+        df.repartition(n_parts, "traj_id")
+        .sortWithinPartitions("traj_id", "t")
         .mapInPandas(per_batch, schema=schema)
     )

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from movingspark.schema import PointCols, TRAJ_COLS
-
 
 # ---------------------------------------------------------------------------
 # S1/S2 — trajectory point-table construction
@@ -77,24 +75,22 @@ def make_traj_points(
     return out
 
 
-def filter_min_duration(df: DataFrame, min_duration_s: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def filter_min_duration(df: DataFrame, min_duration_s: float) -> DataFrame:
     """Drop trajectories shorter than min_duration seconds
     (trajectory_collection.py:246-253)."""
-    w = Window.partitionBy(cols.traj_id)
-    dur = (F.unix_micros(F.max(cols.t).over(w)) - F.unix_micros(F.min(cols.t).over(w))) / 1e6
+    w = Window.partitionBy("traj_id")
+    dur = (F.unix_micros(F.max("t").over(w)) - F.unix_micros(F.min("t").over(w))) / 1e6
     return df.withColumn("__dur", dur).filter(F.col("__dur") > min_duration_s).drop("__dur")
 
 
-def filter_min_length(
-    df: DataFrame, min_length: float, latlon: bool = False, cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def filter_min_length(df: DataFrame, min_length: float, latlon: bool = False) -> DataFrame:
     """Drop trajectories whose path length < min_length
     (trajectory_collection.py:246-253; length per trajectory.py:1005-1033)."""
     from movingspark.derive import _kinematics
 
-    wlen = Window.partitionBy(cols.traj_id)
+    wlen = Window.partitionBy("traj_id")
     return (
-        _kinematics(df, {"__seg": "distance"}, latlon=latlon, cols=cols)
+        _kinematics(df, {"__seg": "distance"}, latlon=latlon)
         .withColumn("__len", F.sum("__seg").over(wlen))
         .filter(F.col("__len") > min_length)
         .drop("__seg", "__len")

@@ -26,12 +26,11 @@ from pyspark.sql import types as T
 
 from movingspark import cells, kernels, pyworker
 from movingspark.derive import dist_expr
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
-def with_cell(df: DataFrame, res: int, bounds=cells.WORLD, cols: PointCols = TRAJ_COLS, name: str = "cell") -> DataFrame:
+def with_cell(df: DataFrame, res: int, bounds=cells.WORLD, name: str = "cell") -> DataFrame:
     """Stamp the Z-order cell id (pure SQL, codegen'd)."""
-    return df.withColumn(name, cells.cell_id_expr(F.col(cols.x), F.col(cols.y), res, bounds))
+    return df.withColumn(name, cells.cell_id_expr(F.col("x"), F.col("y"), res, bounds))
 
 
 def _norm_poly(verts):
@@ -124,13 +123,7 @@ def pip_expr(px, py, poly, holes=None) -> F.Column:
     return inside | on_edge
 
 
-def point_in_polygon_join(
-    df: DataFrame,
-    polygons,
-    res: int = 8,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:
     """J4+J5: inner join points -> polygons they fall in (boundary
     counts as inside, matching shapely `intersects`). `polygons` is a
     list of (poly_id, vertices). Returns input columns + poly_id.
@@ -145,7 +138,7 @@ def point_in_polygon_join(
     poly_map = {str(pid): _norm_poly(v) for pid, v in polygons}
     cover = cover_to_df(spark, polygons, res, bounds)
 
-    pts = with_cell(df, res, bounds, cols, "__cell")
+    pts = with_cell(df, res, bounds, "__cell")
     joined = pts.join(
         F.broadcast(cover), on=F.col("__cell") == cover["cell"], how="inner"
     ).drop("cell")
@@ -155,7 +148,7 @@ def point_in_polygon_join(
         # single-pass JVM refine: CASE over poly_id -> unrolled ray-cast
         pred = None
         for pid, (outer, holes) in poly_map.items():
-            hit = pip_expr(F.col(cols.x), F.col(cols.y), outer, holes)
+            hit = pip_expr(F.col("x"), F.col("y"), outer, holes)
             branch = (F.col("poly_id") == F.lit(pid)) & hit
             pred = branch if pred is None else (pred | branch)
         return joined.filter(F.col("full") | pred).drop("full", "__cell")
@@ -177,18 +170,18 @@ def point_in_polygon_join(
     interior = joined.filter(F.col("full")).drop("full", "__cell")
     boundary = (
         joined.filter(~F.col("full"))
-        .withColumn("__ok", refine(F.col(cols.x), F.col(cols.y), F.col("poly_id")))
+        .withColumn("__ok", refine(F.col("x"), F.col("y"), F.col("poly_id")))
         .filter(F.col("__ok"))
         .drop("__ok", "full", "__cell")
     )
     return interior.unionByName(boundary)
 
 
-def intersecting_traj_ids(df: DataFrame, polygon, res: int = 8, bounds=cells.WORLD, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def intersecting_traj_ids(df: DataFrame, polygon, res: int = 8, bounds=cells.WORLD) -> DataFrame:
     """F7/F8 point-based variant: trajectories with >= 1 point inside the
     polygon (semi-join of traj_ids)."""
-    hits = point_in_polygon_join(df, [("p", polygon)], res, bounds, cols)
-    return hits.select(cols.traj_id).distinct()
+    hits = point_in_polygon_join(df, [("p", polygon)], res, bounds)
+    return hits.select("traj_id").distinct()
 
 
 def seg_intersects_expr(ax, ay, bx, by, poly) -> F.Column:
@@ -221,19 +214,17 @@ def seg_intersects_expr(ax, ay, bx, by, poly) -> F.Column:
     return hit
 
 
-def _traj_segments(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def _traj_segments(df: DataFrame) -> DataFrame:
     """Consecutive-point segments per trajectory (__px,__py)->(x,y); the
     first point of each trajectory becomes a degenerate point-segment so
     single-point trajectories are still testable."""
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
-    return df.withColumn("__px", F.coalesce(F.lag(cols.x).over(w), F.col(cols.x))).withColumn(
-        "__py", F.coalesce(F.lag(cols.y).over(w), F.col(cols.y))
+    w = Window.partitionBy("traj_id").orderBy("t")
+    return df.withColumn("__px", F.coalesce(F.lag("x").over(w), F.col("x"))).withColumn(
+        "__py", F.coalesce(F.lag("y").over(w), F.col("y"))
     )
 
 
-def intersecting_traj_ids_line(
-    df: DataFrame, polygon, cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def intersecting_traj_ids_line(df: DataFrame, polygon) -> DataFrame:
     """F7/F8 LINE-based semantics (reference trajectory.py:1533-1546 ->
     overlay.py:86-91): trajectories whose LineString intersects the
     polygon — a trajectory that crosses a small polygon between two
@@ -245,10 +236,10 @@ def intersecting_traj_ids_line(
     driver-known literals) -> codegen'd exact segment test -> distinct
     traj_ids. No Python, no extra shuffle beyond the per-traj window."""
     poly = np.asarray(polygon, dtype=np.float64)
-    seg = _traj_segments(df, cols)
+    seg = _traj_segments(df)
     minx, miny = float(poly[:, 0].min()), float(poly[:, 1].min())
     maxx, maxy = float(poly[:, 0].max()), float(poly[:, 1].max())
-    x, y, px, py = F.col(cols.x), F.col(cols.y), F.col("__px"), F.col("__py")
+    x, y, px, py = F.col("x"), F.col("y"), F.col("__px"), F.col("__py")
     cand = seg.filter(
         (F.least(px, x) <= F.lit(maxx))
         & (F.greatest(px, x) >= F.lit(minx))
@@ -269,19 +260,19 @@ def intersecting_traj_ids_line(
             )
 
         hits = cand.filter(refine(px, py, x, y))
-    return hits.select(cols.traj_id).distinct()
+    return hits.select("traj_id").distinct()
 
 
-def get_intersecting(df: DataFrame, polygon, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_intersecting(df: DataFrame, polygon) -> DataFrame:
     """F8: the full point rows of every trajectory whose LINE intersects
     the polygon (reference TrajectoryCollection.get_intersecting,
     trajectory_collection.py — line semantics). Broadcast semi-join of
     the (small) matching id set back onto the point table."""
-    ids = intersecting_traj_ids_line(df, polygon, cols)
-    return df.join(F.broadcast(ids), cols.traj_id, "left_semi")
+    ids = intersecting_traj_ids_line(df, polygon)
+    return df.join(F.broadcast(ids), "traj_id", "left_semi")
 
 
-def _nn1_agg(cross: DataFrame, point_columns, centroid_cols) -> DataFrame:
+def _nn1_agg(cross: DataFrame, point_columns) -> DataFrame:
     """k=1 nearest: map-side-combinable min_by over the candidate rows.
 
     `groupBy(point row) + min_by(candidate, struct(dist, cid))` partially
@@ -289,18 +280,17 @@ def _nn1_agg(cross: DataFrame, point_columns, centroid_cols) -> DataFrame:
     exchange — vs a row_number() window that sort-shuffles the full
     |points| x |candidates| product on a near-unique key. Ties broken by
     centroid id (struct ordering is lexicographic) for determinism."""
-    cid, cx, cy = centroid_cols
     nn = cross.groupBy(*point_columns).agg(
         F.min_by(
-            F.struct(F.col(cid), F.col(cx), F.col(cy), F.col("dist")),
-            F.struct(F.col("dist"), F.col(cid)),
+            F.struct(F.col("cluster_id"), F.col("cx"), F.col("cy"), F.col("dist")),
+            F.struct(F.col("dist"), F.col("cluster_id")),
         ).alias("__nn")
     )
     return nn.select(
         *point_columns,
-        F.col(f"__nn.{cid}").alias(cid),
-        F.col(f"__nn.{cx}").alias(cx),
-        F.col(f"__nn.{cy}").alias(cy),
+        F.col("__nn.cluster_id").alias("cluster_id"),
+        F.col("__nn.cx").alias("cx"),
+        F.col("__nn.cy").alias("cy"),
         F.col("__nn.dist").alias("dist"),
         F.lit(1).alias("knn_rank"),
     )
@@ -311,12 +301,10 @@ def knn_join(
     centroids: DataFrame,
     k: int = 1,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
-    centroid_cols=("cluster_id", "cx", "cy"),
     metric: str | None = None,
 ) -> DataFrame:
     """J6: for each point the k nearest centroids (broadcast cross-join +
-    per-point top-k). Correct for any centroid count; efficient when the
+    per-point top-k); `centroids` has columns (cluster_id, cx, cy). Correct for any centroid count; efficient when the
     centroid table is broadcastable (the reference's use case — cluster
     centroids). Ties broken by centroid id for determinism.
 
@@ -329,20 +317,17 @@ def knn_join(
     Python workers on the scoring path, argmin differences vs the
     ellipsoid only matter for points near-equidistant between two
     centroids at the ~0.3% sphere-vs-WGS84 scale."""
-    cid, cx, cy = centroid_cols
     cross = points.join(F.broadcast(centroids), how="cross")
     if latlon and metric == "haversine":
         from movingspark.derive import haversine_expr
 
-        d = haversine_expr(F.col(cols.x), F.col(cols.y), F.col(cx), F.col(cy))
+        d = haversine_expr(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
     else:
-        d = dist_expr(F.col(cols.x), F.col(cols.y), F.col(cx), F.col(cy), latlon)
+        d = dist_expr(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"), latlon)
     cross = cross.withColumn("dist", d)
     if k == 1:
-        return _nn1_agg(cross, points.columns, centroid_cols)
-    w = Window.partitionBy(*[F.col(c) for c in (cols.traj_id, cols.t, cols.x, cols.y)]).orderBy(
-        F.col("dist").asc(), F.col(cid).asc()
-    )
+        return _nn1_agg(cross, points.columns)
+    w = Window.partitionBy("traj_id", "t", "x", "y").orderBy(F.col("dist").asc(), F.col("cluster_id").asc())
     out = cross.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
     return out.withColumnRenamed("__rk", "knn_rank")
 
@@ -352,7 +337,6 @@ def tile_rollup_median(
     res: int,
     value_col: str = "value",
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Exact per-cell median via value-histogram composition — the
     skew-aware formulation of a proportional-state aggregate.
@@ -370,7 +354,7 @@ def tile_rollup_median(
     (rank = 0.5*(n-1); linear between the two straddling order stats),
     so the result matches percentile(value_col, 0.5) bit-for-bit when
     values and counts are exactly representable."""
-    tagged = with_cell(df, res, bounds, cols, "cell")
+    tagged = with_cell(df, res, bounds)
     hist = tagged.groupBy("cell", F.col(value_col).alias("__v")).agg(
         F.count("*").alias("__c")
     )
@@ -413,14 +397,13 @@ def tile_rollup(
     res: int,
     value_col: str | None = None,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Raster<->vector tile rollup: per-cell counts (+ optional value
     aggregates) at resolution `res`. Every aggregate combines map-side,
     so a hot tile reaches its reducer as one partial row per map task
     (skew evidence: tools/bench_skew.py)."""
-    tagged = with_cell(df, res, bounds, cols, "cell")
-    aggs = [F.count("*").alias("n_points"), F.count_distinct(cols.traj_id).alias("n_trajs")]
+    tagged = with_cell(df, res, bounds)
+    aggs = [F.count("*").alias("n_points"), F.count_distinct("traj_id").alias("n_trajs")]
     if value_col:
         aggs += [F.sum(value_col).alias("sum_value")]
     return tagged.groupBy("cell").agg(*aggs)
@@ -432,7 +415,6 @@ def tile_rollup_multires(
     res_coarse: int,
     value_col: str | None = None,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Hierarchical tile rollup: materialize the fine-resolution rollup
     ONCE, then derive every coarser level by re-aggregating cell ids
@@ -450,7 +432,7 @@ def tile_rollup_multires(
     needed.)"""
     if res_coarse >= res_fine:
         raise ValueError("res_coarse must be coarser (smaller) than res_fine")
-    tagged = with_cell(df, res_fine, bounds, cols, "cell")
+    tagged = with_cell(df, res_fine, bounds)
     aggs = [F.count("*").alias("n_points")]
     if value_col:
         aggs.append(F.sum(value_col).alias("sum_value"))
@@ -470,12 +452,7 @@ def tile_rollup_multires(
     )
 
 
-def tile_dwell(
-    df: DataFrame,
-    res: int,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def tile_dwell(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
     """Time-weighted tile occupancy: each consecutive segment's duration
     is allocated to the cell of its START observation, so a cell's
     `dwell_s` approximates total time spent in it rather than sample
@@ -489,12 +466,12 @@ def tile_dwell(
     reusing the canonical traj_id exchange — then a map-side-combinable
     two-column rollup per cell. Final observations have no successor
     and contribute no time (they end the trajectory)."""
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
+    w = Window.partitionBy("traj_id").orderBy("t")
     # sum MICROSECONDS (exact integers, order-free) and divide once at
     # the end: a float sum's value depends on partial-agg association,
     # which differs between engines and between runs.
-    dt_us = F.unix_micros(F.lead(cols.t).over(w)) - F.unix_micros(F.col(cols.t))
-    tagged = with_cell(df, res, bounds, cols, "cell").withColumn("__dt", dt_us)
+    dt_us = F.unix_micros(F.lead("t").over(w)) - F.unix_micros(F.col("t"))
+    tagged = with_cell(df, res, bounds).withColumn("__dt", dt_us)
     return (
         tagged.filter(F.col("__dt").isNotNull())
         .groupBy("cell")
@@ -505,12 +482,7 @@ def tile_dwell(
     )
 
 
-def cell_visits(
-    df: DataFrame,
-    res: int,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def cell_visits(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
     """Cell-visit segmentation: consecutive observations in the same
     tile cell collapse into one VISIT row (traj_id, cell, visit number,
     enter/leave time, duration, point count) — the tile-granular dwell
@@ -523,8 +495,8 @@ def cell_visits(
     map-side-combinable group — the standard single-exchange shape;
     duration sums integer microseconds (exact, order-free) and divides
     once."""
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
-    tagged = with_cell(df, res, bounds, cols, "cell")
+    w = Window.partitionBy("traj_id").orderBy("t")
+    tagged = with_cell(df, res, bounds)
     new_visit = F.when(
         F.lag("cell").over(w).isNull() | (F.lag("cell").over(w) != F.col("cell")),
         F.lit(1),
@@ -532,16 +504,16 @@ def cell_visits(
     visits = tagged.withColumn(
         "visit",
         F.sum(new_visit).over(
-            Window.partitionBy(cols.traj_id)
-            .orderBy(cols.t)
+            Window.partitionBy("traj_id")
+            .orderBy("t")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    t_us = F.unix_micros(F.col(cols.t))
-    return visits.groupBy(cols.traj_id, "visit").agg(
+    t_us = F.unix_micros(F.col("t"))
+    return visits.groupBy("traj_id", "visit").agg(
         F.first("cell").alias("cell"),
-        F.min(cols.t).alias("enter_t"),
-        F.max(cols.t).alias("leave_t"),
+        F.min("t").alias("enter_t"),
+        F.max("t").alias("leave_t"),
         ((F.max(t_us) - F.min(t_us)).cast("double") / F.lit(1e6)).alias("duration_s"),
         F.count(F.lit(1)).alias("n_points"),
     )

@@ -4,9 +4,9 @@ metadata (north rule: interleaved text+media documents).
 Image decode is REAL for the two uncompressed formats a pure-numpy
 decoder can own with no codec libraries: PPM (P6 binary / P3 ascii) and
 BMP (24-bit uncompressed BITMAPINFOHEADER) — `decode_image` parses the
-actual header + pixel bytes. Compressed formats (JPEG/PNG/...) remain
-behind the documented stub: pass `decoder=` (bytes -> HxWx3 uint8) to
-wire libjpeg-turbo/ffmpeg in production.
+actual header + pixel bytes. Payloads in any other format (JPEG/PNG/...,
+audio, video) keep their row in `extract_image_features` with null
+pixel features.
 """
 
 from __future__ import annotations
@@ -133,8 +133,7 @@ def decode_bmp(buf: bytes) -> np.ndarray:
 
 def decode_image(buf: bytes) -> np.ndarray:
     """Dispatch on magic bytes: PPM (P6/P3) or 24-bit BMP -> (h, w, 3)
-    uint8 RGB. Anything else raises ValueError (compressed formats need
-    a real codec — inject via extract_media_features(decoder=...))."""
+    uint8 RGB. Anything else raises ValueError."""
     if buf[:2] in (b"P6", b"P3"):
         return decode_ppm(buf)
     if buf[:2] == b"BM":
@@ -185,67 +184,14 @@ def synth_ppm_bytes(media: DataFrame, seed_col: str, w: int = 8, h: int = 8) -> 
     return media.withColumn("payload", render(F.col(seed_col).cast("long")))
 
 
-def _stub_decode(buf: bytes, dim: int) -> np.ndarray:
-    """Deterministic fake decoder: feature vector from byte statistics.
-    Replace with a real image/audio decode in production."""
-    a = np.frombuffer(buf, dtype=np.uint8).astype(np.float64)
-    reps = int(np.ceil(dim / max(len(a), 1)))
-    return np.resize(a, dim) / 255.0 if len(a) else np.zeros(dim)
-
-
-def extract_media_features(
-    media_with_payload: DataFrame,
-    dim: int = 16,
-    decoder=None,
-) -> DataFrame:
-    """Decode/feature-extract media payloads with mapInPandas (Arrow
-    batches; one python worker per partition, vectorized over the
-    batch). Output: input columns minus payload, plus n_bytes,
-    content_hash, feature array<double>.
-
-    decoder: bytes -> np.ndarray[dim]; defaults to the deterministic
-    stub (real decoders raise NotImplementedError paths are for the
-    caller to provide — see module docstring)."""
-    dec = decoder or (lambda b: _stub_decode(b, dim))
-    in_cols = [c for c in media_with_payload.columns if c != "payload"]
-    out_schema = T.StructType(
-        [media_with_payload.schema[c] for c in in_cols]
-        + [
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("content_hash", T.StringType()),
-            T.StructField("feature", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def batches(it):
-        pyworker.prepare()
-        for pdf in it:
-            feats, nb, ch = [], [], []
-            for buf in pdf["payload"]:
-                b = bytes(buf)
-                nb.append(len(b))
-                ch.append(hashlib.md5(b).hexdigest())
-                feats.append(dec(b).tolist())
-            out = pdf[in_cols].copy()
-            out["n_bytes"] = pd.Series(nb, index=pdf.index, dtype="int64")
-            out["content_hash"] = pd.Series(ch, index=pdf.index)
-            out["feature"] = pd.Series(feats, index=pdf.index)
-            yield out
-
-    return media_with_payload.mapInPandas(batches, schema=out_schema)
-
-
-def extract_image_features(
-    media_with_payload: DataFrame, decoder=None
-) -> DataFrame:
+def extract_image_features(media_with_payload: DataFrame) -> DataFrame:
     """REAL image decode + pixel-statistics features over Arrow batches:
-    parses each payload with decode_image (PPM/BMP pure-numpy; inject
-    `decoder` for codec formats) and emits scalar feature columns
+    parses each payload with decode_image (PPM/BMP pure-numpy) and
+    emits n_bytes, content_hash (md5 hex) and scalar feature columns
     (driver-hash friendly — no arrays): img_w, img_h, f0..f7 per
     image_features(). Payloads that fail to decode keep their row with
     NULL features (the undecodable-rate is a data-quality signal worth
     aggregating, not a reason to kill a 100 TB job)."""
-    dec = decoder or decode_image
     in_cols = [c for c in media_with_payload.columns if c != "payload"]
     out_schema = T.StructType(
         [media_with_payload.schema[c] for c in in_cols]
@@ -268,7 +214,7 @@ def extract_image_features(
                 nb.append(len(b))
                 ch.append(hashlib.md5(b).hexdigest())
                 try:
-                    px = dec(b)
+                    px = decode_image(b)
                     feats = image_features(px)
                     ws.append(px.shape[1])
                     hs.append(px.shape[0])

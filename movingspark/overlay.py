@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from movingspark import kernels
-from movingspark.schema import PointCols, TRAJ_COLS
 
 SNAP_S = 0.010  # 10 ms tolerance (overlay.py:75-83)
 
@@ -191,12 +190,7 @@ def _clip_ranges_pointbased(x, y, t, poly):
     return ranges
 
 
-def clip(
-    df: DataFrame,
-    polygon,
-    point_based: bool = False,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def clip(df: DataFrame, polygon, point_based: bool = False) -> DataFrame:
     """X19 (overlay.py:219-229): clip each trajectory by the polygon.
     Output = input schema + `parent`; piece traj_id = "{parent}_{n}".
     Synthesized entry/exit rows inherit the padded previous row's
@@ -205,12 +199,11 @@ def clip(
     out_schema = T.StructType(df.schema.fields + [T.StructField("parent", T.StringType())])
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t).reset_index(drop=True)
-        x = pdf[cols.x].to_numpy(float)
-        y = pdf[cols.y].to_numpy(float)
-        t_ns = pdf[cols.t].astype("int64").to_numpy()
+        x = pdf["x"].to_numpy(float)
+        y = pdf["y"].to_numpy(float)
+        t_ns = pdf["t"].astype("int64").to_numpy()
         tsec = t_ns / 1e9
-        tid = pdf[cols.traj_id].iloc[0]
+        tid = pdf["traj_id"].iloc[0]
 
         if point_based:
             ranges = _clip_ranges_pointbased(x, y, tsec, poly)
@@ -295,21 +288,21 @@ def clip(
         sx = np.concatenate(sx)
         sy = np.concatenate(sy)
         out = pdf.iloc[take].copy().reset_index(drop=True)
-        out[cols.t] = pd.to_datetime(out_ns)
-        ox = out[cols.x].to_numpy(float)
-        oy = out[cols.y].to_numpy(float)
+        out["t"] = pd.to_datetime(out_ns)
+        ox = out["x"].to_numpy(float)
+        oy = out["y"].to_numpy(float)
         syn = ~np.isnan(sx)
         ox[syn] = sx[syn]
         oy[syn] = sy[syn]
-        out[cols.x] = ox
-        out[cols.y] = oy
+        out["x"] = ox
+        out["y"] = oy
         out["parent"] = tid
-        out[cols.traj_id] = labels
+        out["traj_id"] = labels
         return out[[*pdf.columns, "parent"]]
 
     from movingspark.gmap import grouped_apply_sorted
 
-    return grouped_apply_sorted(df, per_traj, out_schema, cols)
+    return grouped_apply_sorted(df, per_traj, out_schema)
 
 
 def intersection_with_feature(
@@ -317,13 +310,12 @@ def intersection_with_feature(
     polygon,
     feature_props: dict,
     point_based: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X20 (overlay.py:246-258): clip + append the intersecting feature's
     properties as `intersecting_<key>` columns."""
     from pyspark.sql import functions as F
 
-    out = clip(df, polygon, point_based, cols)
+    out = clip(df, polygon, point_based)
     for k, v in feature_props.items():
         out = out.withColumn(f"intersecting_{k}", F.lit(v))
     return out

@@ -26,32 +26,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, pyworker
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
-def _traj_coords(df: DataFrame, cols: PointCols, key: str) -> DataFrame:
+def _traj_coords(df: DataFrame, key: str) -> DataFrame:
     """Fold each trajectory to one row: (key, xs array, ys array), in
     time order (array_sort on (t,x,y) structs — t first => time order)."""
     return (
-        df.groupBy(F.col(cols.traj_id).alias(key))
+        df.groupBy(F.col("traj_id").alias(key))
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col(cols.t), F.col(cols.x), F.col(cols.y)))
+                F.collect_list(F.struct(F.col("t"), F.col("x"), F.col("y")))
             ).alias("__s")
         )
         .select(
             key,
-            F.col(f"__s.{cols.x}").alias(f"__{key}_xs"),
-            F.col(f"__s.{cols.y}").alias(f"__{key}_ys"),
+            F.col("__s.x").alias(f"__{key}_xs"),
+            F.col("__s.y").alias(f"__{key}_ys"),
         )
     )
 
 
-def trajectory_pair_metrics(
-    df: DataFrame,
-    pairs,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def trajectory_pair_metrics(df: DataFrame, pairs) -> DataFrame:
     """min line-line distance + discrete Hausdorff for every (traj_a,
     traj_b) pair. `pairs`: DataFrame with columns (traj_a, traj_b) or a
     list of id tuples. Output: (traj_a, traj_b, min_distance, hausdorff)."""
@@ -60,8 +55,8 @@ def trajectory_pair_metrics(
         pairs = spark.createDataFrame(
             [(str(a), str(b)) for a, b in pairs], "traj_a string, traj_b string"
         )
-    a = _traj_coords(df, cols, "traj_a")
-    b = _traj_coords(df, cols, "traj_b")
+    a = _traj_coords(df, "traj_a")
+    b = _traj_coords(df, "traj_b")
     j = a.join(F.broadcast(pairs), "traj_a").join(b, "traj_b")
 
     @F.pandas_udf("min_distance double, hausdorff double")
@@ -89,9 +84,7 @@ def trajectory_pair_metrics(
     )
 
 
-def trajectory_to_line_metrics(
-    df: DataFrame, line, cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def trajectory_to_line_metrics(df: DataFrame, line) -> DataFrame:
     """Per-trajectory min distance + discrete Hausdorff against ONE
     driver-known polyline/point (reference: traj.distance(geometry),
     traj.hausdorff_distance(geometry)). Output: (traj_id, min_distance,
@@ -99,7 +92,7 @@ def trajectory_to_line_metrics(
     line_np = np.asarray(line, dtype=np.float64)
     if line_np.ndim == 1:
         line_np = line_np.reshape(1, 2)
-    a = _traj_coords(df, cols, cols.traj_id)
+    a = _traj_coords(df, "traj_id")
 
     @F.pandas_udf("min_distance double, hausdorff double")
     def metrics(xa: pd.Series, ya: pd.Series) -> pd.DataFrame:
@@ -111,11 +104,10 @@ def trajectory_to_line_metrics(
             hds.append(kernels.discrete_hausdorff_line(la, line_np))
         return pd.DataFrame({"min_distance": mins, "hausdorff": hds})
 
-    k = cols.traj_id
     return a.select(
-        k, metrics(F.col(f"__{k}_xs"), F.col(f"__{k}_ys")).alias("__m")
+        "traj_id", metrics(F.col("__traj_id_xs"), F.col("__traj_id_ys")).alias("__m")
     ).select(
-        k,
+        "traj_id",
         F.col("__m.min_distance").alias("min_distance"),
         F.col("__m.hausdorff").alias("hausdorff"),
     )
@@ -133,23 +125,21 @@ def point_segment_dist_expr(qx: float, qy: float, ax, ay, bx, by) -> F.Column:
     return F.sqrt((F.lit(qx) - cx) * (F.lit(qx) - cx) + (F.lit(qy) - cy) * (F.lit(qy) - cy))
 
 
-def distance_to_point(df: DataFrame, qx: float, qy: float, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def distance_to_point(df: DataFrame, qx: float, qy: float) -> DataFrame:
     """Per-trajectory min distance from the trajectory LINE to a fixed
     point — measure_distance_line parity (geometry_utils.py:102-107)
     without Python: lag window -> codegen'd point-segment distance ->
     map-side-combinable min per trajectory."""
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
-    seg = df.withColumn("__px", F.lag(cols.x).over(w)).withColumn("__py", F.lag(cols.y).over(w))
+    w = Window.partitionBy("traj_id").orderBy("t")
+    seg = df.withColumn("__px", F.lag("x").over(w)).withColumn("__py", F.lag("y").over(w))
     # first row per traj: degenerate segment (point distance)
-    ax = F.coalesce(F.col("__px"), F.col(cols.x))
-    ay = F.coalesce(F.col("__py"), F.col(cols.y))
-    d = point_segment_dist_expr(qx, qy, ax, ay, F.col(cols.x), F.col(cols.y))
-    return seg.withColumn("__d", d).groupBy(cols.traj_id).agg(F.min("__d").alias("min_distance"))
+    ax = F.coalesce(F.col("__px"), F.col("x"))
+    ay = F.coalesce(F.col("__py"), F.col("y"))
+    d = point_segment_dist_expr(qx, qy, ax, ay, F.col("x"), F.col("y"))
+    return seg.withColumn("__d", d).groupBy("traj_id").agg(F.min("__d").alias("min_distance"))
 
 
-def hausdorff_to_polyline(
-    df: DataFrame, polyline: list[tuple[float, float]], cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def hausdorff_to_polyline(df: DataFrame, polyline: list[tuple[float, float]]) -> DataFrame:
     """Directed discrete Hausdorff from each trajectory's POINTS to a
     fixed query polyline: max over the trajectory's points of the min
     distance to any polyline segment — the similarity-search primitive
@@ -161,7 +151,7 @@ def hausdorff_to_polyline(
     roles swapped — point is a column, segment is constant), then one
     map-side-combinable MAX per trajectory. No Python, no join, no
     second shuffle: at 100 TB this is a single scan + one partial agg."""
-    x, y = F.col(cols.x), F.col(cols.y)
+    x, y = F.col("x"), F.col("y")
     dists = []
     for (ax, ay), (bx, by) in zip(polyline, polyline[1:]):
         dx, dy = bx - ax, by - ay
@@ -176,14 +166,12 @@ def hausdorff_to_polyline(
     d = F.least(*dists) if len(dists) > 1 else dists[0]
     return (
         df.withColumn("__d", d)
-        .groupBy(cols.traj_id)
+        .groupBy("traj_id")
         .agg(F.max("__d").alias("hausdorff"))
     )
 
 
-def frechet_to_polyline(
-    df: DataFrame, polyline: list[tuple[float, float]], cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def frechet_to_polyline(df: DataFrame, polyline: list[tuple[float, float]]) -> DataFrame:
     """Discrete Fréchet distance (Eiter & Mannila 1994 coupling DP) from
     each trajectory's time-ordered points to a fixed query route — the
     order-aware route-similarity metric Hausdorff lacks (a trajectory
@@ -208,9 +196,8 @@ def frechet_to_polyline(
     m = len(polyline)
     if m < 1:
         raise ValueError("polyline needs at least one vertex")
-    k = cols.traj_id
-    a = _traj_coords(df, cols, k)
-    xs, ys = f"__{k}_xs", f"__{k}_ys"
+    a = _traj_coords(df, "traj_id")
+    xs, ys = "__traj_id_xs", "__traj_id_ys"
     pts = F.arrays_zip(F.col(xs), F.col(ys))
 
     def d(p, j):
@@ -237,12 +224,10 @@ def frechet_to_polyline(
 
     rest = F.slice(pts, F.lit(2), F.greatest(F.size(pts) - F.lit(1), F.lit(0)))
     out = F.aggregate(rest, init_state(pts[0]), step, lambda acc: acc[f"c{m-1}"])
-    return a.select(k, out.alias("frechet"))
+    return a.select("traj_id", out.alias("frechet"))
 
 
-def route_progress(
-    df: DataFrame, polyline: list[tuple[float, float]], cols: PointCols = TRAJ_COLS
-) -> DataFrame:
+def route_progress(df: DataFrame, polyline: list[tuple[float, float]]) -> DataFrame:
     """Linear referencing (map-matching-lite): snap every observation to
     a driver-known route polyline and report `route_offset` (distance
     along the route from its start to the snapped point) and
@@ -259,7 +244,7 @@ def route_progress(
     fold in as plan-time literals. One scan at any scale."""
     import math
 
-    x, y = F.col(cols.x), F.col(cols.y)
+    x, y = F.col("x"), F.col("y")
     if len(polyline) < 2:
         raise ValueError("route needs at least 2 vertices")
     best_d, best_off = None, None
@@ -285,8 +270,8 @@ def route_progress(
             best_d = F.when(closer, d).otherwise(best_d)
         cum += seg_len
     return df.select(
-        cols.traj_id,
-        cols.t,
+        "traj_id",
+        "t",
         best_off.alias("route_offset"),
         best_d.alias("route_dist"),
     )

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movingspark import cells
-from movingspark.schema import PointCols, TRAJ_COLS
 
 __all__ = ["proximity_pairs"]
 
@@ -45,7 +44,6 @@ def proximity_pairs(
     max_dt_s: float,
     res: int,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """All unordered trajectory pairs (traj_a < traj_b) with at least one
     contact (point pairs within `max_dist` and `max_dt_s`). Output:
@@ -63,12 +61,12 @@ def proximity_pairs(
     if tol_us <= 0:
         raise ValueError("max_dt_s must be positive")
 
-    ix, iy = cells.cell_ixiy_expr(F.col(cols.x), F.col(cols.y), res, bounds)
+    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
     base = df.select(
-        F.col(cols.traj_id).alias("__traj"),
-        F.unix_micros(F.col(cols.t)).alias("__tu"),
-        F.col(cols.x).alias("__x"),
-        F.col(cols.y).alias("__y"),
+        F.col("traj_id").alias("__traj"),
+        F.unix_micros(F.col("t")).alias("__tu"),
+        F.col("x").alias("__x"),
+        F.col("y").alias("__y"),
         ix.alias("__ix"),
         iy.alias("__iy"),
     ).withColumn("__tb", F.floor(F.col("__tu") / F.lit(tol_us)))

@@ -14,64 +14,63 @@ from pyspark.sql import functions as F
 
 from movingspark import kernels
 from movingspark.derive import _kinematics, bearing_expr, traj_window
-from movingspark.schema import PointCols, TRAJ_COLS
 from movingspark.units import get_conversion
 
 
-def traj_summary(df: DataFrame, latlon: bool = False, units=None, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def traj_summary(df: DataFrame, latlon: bool = False, units=None) -> DataFrame:
     """One row per trajectory: A1 size, A2 bbox, A3 start/end/duration,
     A4 start/end locations, A5 length, A6 direction, A7 sampling interval
     (exact median of Δt). The to_traj_gdf analogue (trajectory.py:661-713)."""
     conv = get_conversion(units)
     # Δt kept in integer microseconds so the median interpolates exactly
     # (ties at .5 µs stay exact in float64 — oracle-reproducible)
-    enriched = _kinematics(df, {"__seg": "distance", "__dt_us": "timedelta_us"}, latlon=latlon, cols=cols)
-    start = F.min_by(F.struct(cols.x, cols.y), cols.t)
-    end = F.max_by(F.struct(cols.x, cols.y), cols.t)
-    agg = enriched.groupBy(cols.traj_id).agg(
+    enriched = _kinematics(df, {"__seg": "distance", "__dt_us": "timedelta_us"}, latlon=latlon)
+    start = F.min_by(F.struct("x", "y"), "t")
+    end = F.max_by(F.struct("x", "y"), "t")
+    agg = enriched.groupBy("traj_id").agg(
         F.count("*").alias("n"),
-        F.min(cols.t).alias("start_t"),
-        F.max(cols.t).alias("end_t"),
-        ((F.unix_micros(F.max(cols.t)) - F.unix_micros(F.min(cols.t))) / 1e6).alias("duration_s"),
-        F.min(cols.x).alias("min_x"),
-        F.min(cols.y).alias("min_y"),
-        F.max(cols.x).alias("max_x"),
-        F.max(cols.y).alias("max_y"),
+        F.min("t").alias("start_t"),
+        F.max("t").alias("end_t"),
+        ((F.unix_micros(F.max("t")) - F.unix_micros(F.min("t"))) / 1e6).alias("duration_s"),
+        F.min("x").alias("min_x"),
+        F.min("y").alias("min_y"),
+        F.max("x").alias("max_x"),
+        F.max("y").alias("max_y"),
         (F.sum("__seg") * F.lit(conv.crs / conv.distance)).alias("length"),
-        start.getField(cols.x).alias("start_x"),
-        start.getField(cols.y).alias("start_y"),
-        end.getField(cols.x).alias("end_x"),
-        end.getField(cols.y).alias("end_y"),
+        start.getField("x").alias("start_x"),
+        start.getField("y").alias("start_y"),
+        end.getField("x").alias("end_x"),
+        end.getField("y").alias("end_y"),
         (F.percentile("__dt_us", F.lit(0.5)) / 1e6).alias("sampling_interval_s"),
     )
     direction = bearing_expr(F.col("start_x"), F.col("start_y"), F.col("end_x"), F.col("end_y"), latlon)
     return agg.withColumn("direction", direction)
 
 
-def get_bbox(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_bbox(df: DataFrame) -> DataFrame:
     """A2 (trajectory.py:764-774)."""
-    return df.groupBy(cols.traj_id).agg(
-        F.min(cols.x).alias("min_x"),
-        F.min(cols.y).alias("min_y"),
-        F.max(cols.x).alias("max_x"),
-        F.max(cols.y).alias("max_y"),
+    return df.groupBy("traj_id").agg(
+        F.min("x").alias("min_x"),
+        F.min("y").alias("min_y"),
+        F.max("x").alias("max_x"),
+        F.max("y").alias("max_y"),
     )
 
 
-def get_length(df: DataFrame, latlon: bool = False, units=None, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_length(df: DataFrame, latlon: bool = False, units=None) -> DataFrame:
     """A5 (trajectory.py:1005-1033): sum of consecutive segment distances."""
     conv = get_conversion(units)
     return (
-        _kinematics(df, {"__seg": "distance"}, latlon=latlon, cols=cols)
-        .groupBy(cols.traj_id)
+        _kinematics(df, {"__seg": "distance"}, latlon=latlon)
+        .groupBy("traj_id")
         .agg((F.sum("__seg") * F.lit(conv.crs / conv.distance)).alias("length"))
     )
 
 
-def is_valid(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def is_valid(df: DataFrame) -> DataFrame:
     """F6 (trajectory.py:409-421): ≥2 rows and start < end, per trajectory."""
-    return df.groupBy(cols.traj_id).agg(
-        ((F.count("*") >= 2) & (F.min(cols.t) < F.max(cols.t))).alias("is_valid")
+    return df.groupBy("traj_id").agg(
+        ((F.count("*") >= 2) & (F.min("t") < F.max("t"))).alias("is_valid")
     )
 
 
@@ -95,7 +94,6 @@ def to_traj_gdf(
     agg: dict | None = None,
     latlon: bool = False,
     units=None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """General to_traj_gdf (trajectory.py:661-713): one row per
     trajectory with (traj_id, start_t, end_t, length, direction), plus
@@ -111,12 +109,12 @@ def to_traj_gdf(
     All aggregates for one call run in ONE extra groupBy pass; each
     distinct mode column adds one counting pass. Everything joins back
     on traj_id (AQE broadcasts the one-row-per-traj sides)."""
-    base = traj_summary(df, latlon, units, cols).select(
-        cols.traj_id, "start_t", "end_t", "length", "direction"
+    base = traj_summary(df, latlon, units).select(
+        "traj_id", "start_t", "end_t", "length", "direction"
     )
     out = base
     if wkt:
-        out = out.join(to_linestringm_wkt(df, cols), cols.traj_id)
+        out = out.join(to_linestringm_wkt(df), "traj_id")
     if agg:
         exprs = []
         mode_cols = []
@@ -134,27 +132,27 @@ def to_traj_gdf(
                 else:
                     raise ValueError(f"unsupported agg mode {m!r} for column {col!r}")
         if exprs:
-            out = out.join(df.groupBy(cols.traj_id).agg(*exprs), cols.traj_id)
+            out = out.join(df.groupBy("traj_id").agg(*exprs), "traj_id")
         for col in dict.fromkeys(mode_cols):
-            counts = df.groupBy(cols.traj_id, col).agg(F.count("*").alias("__c"))
-            modes_df = counts.groupBy(cols.traj_id).agg(
+            counts = df.groupBy("traj_id", col).agg(F.count("*").alias("__c"))
+            modes_df = counts.groupBy("traj_id").agg(
                 F.min_by(F.col(col), F.struct((-F.col("__c")).alias("nc"), F.col(col))).alias(
                     f"{col}_mode"
                 )
             )
-            out = out.join(modes_df, cols.traj_id)
+            out = out.join(modes_df, "traj_id")
     return out
 
 
-def get_mcp(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_mcp(df: DataFrame) -> DataFrame:
     """A9 (trajectory.py:1731-1744): convex hull vertices per trajectory,
     CCW order, as an array of (x, y) structs. Monotone-chain numpy kernel
     in a grouped-map UDF."""
     def hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = kernels.convex_hull(pdf[[cols.x, cols.y]].to_numpy(float))
+        h = kernels.convex_hull(pdf[["x", "y"]].to_numpy(float))
         return pd.DataFrame(
             {
-                cols.traj_id: pdf[cols.traj_id].iloc[0],
+                "traj_id": pdf["traj_id"].iloc[0],
                 "vertex": range(len(h)),
                 "x": h[:, 0],
                 "y": h[:, 1],
@@ -164,7 +162,7 @@ def get_mcp(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
     from movingspark.gmap import grouped_apply_sorted
 
     return grouped_apply_sorted(
-        df, hull, f"{cols.traj_id} string, vertex int, x double, y double", cols
+        df, hull, "traj_id string, vertex int, x double, y double"
     )
 
 
@@ -177,7 +175,6 @@ def get_locations_at(
     df: DataFrame,
     t,
     method: str = "nearest",
-    cols: PointCols = TRAJ_COLS,
     with_direction: bool = False,
     drop_outside: bool = False,
 ) -> DataFrame:
@@ -196,67 +193,67 @@ def get_locations_at(
     if with_direction and "direction" not in df.columns:
         from movingspark.derive import add_direction
 
-        df = add_direction(df, cols=cols)
+        df = add_direction(df)
     if t in ("start", "end"):
-        order = F.col(cols.t).asc() if t == "start" else F.col(cols.t).desc()
-        w = Window.partitionBy(cols.traj_id).orderBy(order)
+        order = F.col("t").asc() if t == "start" else F.col("t").desc()
+        w = Window.partitionBy("traj_id").orderBy(order)
         cand = df
     else:
         tl = F.lit(t).cast("timestamp")
-        diff = F.abs(F.unix_micros(F.col(cols.t)) - F.unix_micros(tl))
+        diff = F.abs(F.unix_micros(F.col("t")) - F.unix_micros(tl))
         if method == "nearest":
-            w = Window.partitionBy(cols.traj_id).orderBy(diff.asc(), F.col(cols.t).asc())
+            w = Window.partitionBy("traj_id").orderBy(diff.asc(), F.col("t").asc())
             cand = df
         elif method == "ffill":
-            cand = df.filter(F.col(cols.t) <= tl)
-            w = Window.partitionBy(cols.traj_id).orderBy(F.col(cols.t).desc())
+            cand = df.filter(F.col("t") <= tl)
+            w = Window.partitionBy("traj_id").orderBy(F.col("t").desc())
         elif method == "bfill":
-            cand = df.filter(F.col(cols.t) >= tl)
-            w = Window.partitionBy(cols.traj_id).orderBy(F.col(cols.t).asc())
+            cand = df.filter(F.col("t") >= tl)
+            w = Window.partitionBy("traj_id").orderBy(F.col("t").asc())
         else:
             raise ValueError(method)
         if drop_outside:
-            wt = Window.partitionBy(cols.traj_id)
+            wt = Window.partitionBy("traj_id")
             cand = (
-                cand.withColumn("__tmin", F.min(cols.t).over(wt))
-                .withColumn("__tmax", F.max(cols.t).over(wt))
+                cand.withColumn("__tmin", F.min("t").over(wt))
+                .withColumn("__tmax", F.max("t").over(wt))
                 .filter((tl >= F.col("__tmin")) & (tl <= F.col("__tmax")))
                 .drop("__tmin", "__tmax")
             )
     return cand.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def get_start_locations(df: DataFrame, with_direction: bool = False, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_start_locations(df: DataFrame, with_direction: bool = False) -> DataFrame:
     """trajectory_collection.py:416-425."""
-    return get_locations_at(df, "start", cols=cols, with_direction=with_direction)
+    return get_locations_at(df, "start", with_direction=with_direction)
 
 
-def get_end_locations(df: DataFrame, with_direction: bool = False, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_end_locations(df: DataFrame, with_direction: bool = False) -> DataFrame:
     """trajectory_collection.py:427-436."""
-    return get_locations_at(df, "end", cols=cols, with_direction=with_direction)
+    return get_locations_at(df, "end", with_direction=with_direction)
 
 
-def interpolate_position_at(df: DataFrame, t, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def interpolate_position_at(df: DataFrame, t) -> DataFrame:
     """J2 (trajectory.py:832-916): linear interpolation between the
     bracketing rows by time ratio; clamps to the first/last observation
     outside the observed range (reference returns boundary rows there)."""
     tl = F.lit(t).cast("timestamp")
-    t_us = F.unix_micros(F.col(cols.t))
+    t_us = F.unix_micros(F.col("t"))
     target = F.unix_micros(tl)
 
     prev = (
-        df.filter(F.col(cols.t) <= tl)
-        .withColumn("__rn", F.row_number().over(Window.partitionBy(cols.traj_id).orderBy(F.col(cols.t).desc())))
+        df.filter(F.col("t") <= tl)
+        .withColumn("__rn", F.row_number().over(Window.partitionBy("traj_id").orderBy(F.col("t").desc())))
         .filter(F.col("__rn") == 1)
-        .select(cols.traj_id, F.col(cols.t).alias("t0"), F.col(cols.x).alias("x0"), F.col(cols.y).alias("y0"))
+        .select("traj_id", F.col("t").alias("t0"), F.col("x").alias("x0"), F.col("y").alias("y0"))
     )
     nxt = (
-        df.filter(F.col(cols.t) >= tl)
-        .withColumn("__rn", F.row_number().over(Window.partitionBy(cols.traj_id).orderBy(F.col(cols.t).asc())))
+        df.filter(F.col("t") >= tl)
+        .withColumn("__rn", F.row_number().over(Window.partitionBy("traj_id").orderBy(F.col("t").asc())))
         .filter(F.col("__rn") == 1)
-        .select(cols.traj_id, F.col(cols.t).alias("tn"), F.col(cols.x).alias("xn"), F.col(cols.y).alias("yn"))
+        .select("traj_id", F.col("t").alias("tn"), F.col("x").alias("xn"), F.col("y").alias("yn"))
     )
-    j = prev.join(nxt, cols.traj_id, "full_outer")
+    j = prev.join(nxt, "traj_id", "full_outer")
     ratio = (target - F.unix_micros(F.col("t0"))) / (
         F.unix_micros(F.col("tn")) - F.unix_micros(F.col("t0"))
     )
@@ -266,21 +263,21 @@ def interpolate_position_at(df: DataFrame, t, cols: PointCols = TRAJ_COLS) -> Da
     y = F.when(F.col("t0").isNull(), F.col("yn")).when(F.col("tn").isNull(), F.col("y0")).when(
         F.col("tn") == F.col("t0"), F.col("y0")
     ).otherwise(F.col("y0") + (F.col("yn") - F.col("y0")) * ratio)
-    return j.select(cols.traj_id, tl.alias("t"), x.alias("x"), y.alias("y"))
+    return j.select("traj_id", tl.alias("t"), x.alias("x"), y.alias("y"))
 
 
-def get_segment_between(df: DataFrame, t1, t2, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def get_segment_between(df: DataFrame, t1, t2) -> DataFrame:
     """F4/F5 (trajectory.py:956-983): inclusive time slice; trajectories
     whose slice has < 2 rows are dropped (invalid segment)."""
-    sl = df.filter((F.col(cols.t) >= F.lit(t1).cast("timestamp")) & (F.col(cols.t) <= F.lit(t2).cast("timestamp")))
-    w = Window.partitionBy(cols.traj_id)
+    sl = df.filter((F.col("t") >= F.lit(t1).cast("timestamp")) & (F.col("t") <= F.lit(t2).cast("timestamp")))
+    w = Window.partitionBy("traj_id")
     return sl.withColumn("__n", F.count("*").over(w)).filter(F.col("__n") >= 2).drop("__n")
 
 
-def filter_by_first_value(df: DataFrame, column: str, values, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def filter_by_first_value(df: DataFrame, column: str, values) -> DataFrame:
     """F2 (trajectory_collection.py:557-592): keep trajectories whose
     FIRST row's `column` value is in `values`."""
-    w = traj_window(cols)
+    w = traj_window()
     first = F.first(column).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     return df.withColumn("__f", first).filter(F.col("__f").isin(list(values))).drop("__f")
 
@@ -290,50 +287,49 @@ def filter_by_first_value(df: DataFrame, column: str, values, cols: PointCols = 
 # ---------------------------------------------------------------------------
 
 
-def to_line_df(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def to_line_df(df: DataFrame) -> DataFrame:
     """S5 to_line_gdf (trajectory.py:630-659): consecutive-point segments
     with (t, prev_t, x0, y0, x1, y1); the first row of each trajectory is
     dropped (it has no predecessor)."""
-    w = traj_window(cols)
+    w = traj_window()
     out = df.select(
-        cols.traj_id,
-        F.col(cols.t).alias("t"),
-        F.lag(cols.t).over(w).alias("prev_t"),
-        F.lag(cols.x).over(w).alias("x0"),
-        F.lag(cols.y).over(w).alias("y0"),
-        F.col(cols.x).alias("x1"),
-        F.col(cols.y).alias("y1"),
+        "traj_id",
+        F.col("t").alias("t"),
+        F.lag("t").over(w).alias("prev_t"),
+        F.lag("x").over(w).alias("x0"),
+        F.lag("y").over(w).alias("y0"),
+        F.col("x").alias("x1"),
+        F.col("y").alias("y1"),
     )
     return out.filter(F.col("prev_t").isNotNull())
 
 
-def to_linestring_wkt(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def to_linestring_wkt(df: DataFrame) -> DataFrame:
     """S5 to_linestring (trajectory.py:593-605): WKT LINESTRING per
     trajectory, vertices in time order."""
-    pts = F.array_sort(F.collect_list(F.struct(cols.t, cols.x, cols.y)))
-    coord = lambda s: F.concat_ws(" ", F.format_number(s[cols.x], 6), F.format_number(s[cols.y], 6))
-    return df.groupBy(cols.traj_id).agg(
+    pts = F.array_sort(F.collect_list(F.struct("t", "x", "y")))
+    coord = lambda s: F.concat_ws(" ", F.format_number(s["x"], 6), F.format_number(s["y"], 6))
+    return df.groupBy("traj_id").agg(
         F.concat(F.lit("LINESTRING ("), F.concat_ws(", ", F.transform(pts, coord)), F.lit(")")).alias("wkt")
     )
 
 
-def to_linestringm_wkt(df: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def to_linestringm_wkt(df: DataFrame) -> DataFrame:
     """S5 LINESTRING M export (trajectory.py:607-623): m = unix seconds."""
-    pts = F.array_sort(F.collect_list(F.struct(cols.t, cols.x, cols.y)))
+    pts = F.array_sort(F.collect_list(F.struct("t", "x", "y")))
     coord = lambda s: F.concat_ws(
         " ",
-        s[cols.x].cast("string"),
-        s[cols.y].cast("string"),
-        (F.unix_micros(s[cols.t]) / 1_000_000).cast("double").cast("string"),
+        s["x"].cast("string"),
+        s["y"].cast("string"),
+        (F.unix_micros(s["t"]) / 1_000_000).cast("double").cast("string"),
     )
-    return df.groupBy(cols.traj_id).agg(
+    return df.groupBy("traj_id").agg(
         F.concat(F.lit("LINESTRING M ("), F.concat_ws(", ", F.transform(pts, coord)), F.lit(")")).alias("wkt")
     )
 
 
 def to_mf_json(
     df: DataFrame,
-    cols: PointCols = TRAJ_COLS,
     temporal_columns: list | None = None,
     temporal_columns_static_fields: dict | None = None,
     property_columns: list | None = None,
@@ -354,22 +350,22 @@ def to_mf_json(
     property_columns = property_columns or []
 
     pts = F.array_sort(
-        F.collect_list(F.struct(cols.t, cols.x, cols.y, *[F.col(c) for c in temporal_columns]))
+        F.collect_list(F.struct("t", "x", "y", *[F.col(c) for c in temporal_columns]))
     )
     aggs = [pts.alias("__pts")] + [F.min(c).alias(f"__p_{c}") for c in property_columns]
-    per = df.groupBy(cols.traj_id).agg(*aggs)
+    per = df.groupBy("traj_id").agg(*aggs)
 
-    datetimes = F.transform("__pts", lambda s: F.date_format(s[cols.t], "yyyy-MM-dd'T'HH:mm:ss"))
+    datetimes = F.transform("__pts", lambda s: F.date_format(s["t"], "yyyy-MM-dd'T'HH:mm:ss"))
     fields = [
         F.lit("Feature").alias("type"),
         F.struct(
             F.lit("MovingPoint").alias("type"),
-            F.transform("__pts", lambda s: F.array(s[cols.x], s[cols.y])).alias("coordinates"),
+            F.transform("__pts", lambda s: F.array(s["x"], s["y"])).alias("coordinates"),
             datetimes.alias("datetimes"),
             F.lit("Linear").alias("interpolation"),
         ).alias("temporalGeometry"),
         F.struct(
-            F.col(cols.traj_id).alias("traj_id"),
+            F.col("traj_id").alias("traj_id"),
             *[F.col(f"__p_{c}").alias(c) for c in property_columns],
         ).alias("properties"),
     ]
@@ -389,4 +385,4 @@ def to_mf_json(
             ],
         )
         fields.append(F.array(group).alias("temporalProperties"))
-    return per.select(cols.traj_id, F.to_json(F.struct(*fields)).alias("mf_json"))
+    return per.select("traj_id", F.to_json(F.struct(*fields)).alias("mf_json"))

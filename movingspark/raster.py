@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from movingspark import cells
 from movingspark.components import connected_components
-from movingspark.joins import TRAJ_COLS, PointCols
 
 __all__ = ["rasterize", "vectorize_tiles", "raster_regions", "corridor_cells", "hotspot_gi"]
 
@@ -46,16 +45,15 @@ def rasterize(
     res: int,
     bounds=cells.WORLD,
     value_col: str | None = None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Point table -> raster keyed by grid coords: (ix, iy, cell,
     n_points, n_trajs[, sum_value]). Same single map-side-combinable
     aggregation as `joins.tile_rollup`, but keeps (ix, iy) alongside the
     Morton cell id so downstream adjacency needs no bit de-interleave."""
-    ix, iy = cells.cell_ixiy_expr(F.col(cols.x), F.col(cols.y), res, bounds)
+    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
     aggs = [
         F.count("*").alias("n_points"),
-        F.count_distinct(cols.traj_id).alias("n_trajs"),
+        F.count_distinct("traj_id").alias("n_trajs"),
     ]
     if value_col:
         aggs.append(F.sum(value_col).alias("sum_value"))
@@ -82,13 +80,12 @@ def vectorize_tiles(
     res: int,
     bounds=cells.WORLD,
     value_col: str | None = None,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Raster -> vector polygons: one row per occupied cell with the
     cell rectangle as WKT POLYGON (CCW from SW corner, closed ring) and
     the per-cell aggregates. Pure codegen expressions after the rollup —
     the WKT is a format_string, not a geometry library call."""
-    ras = rasterize(df, res, bounds, value_col, cols)
+    ras = rasterize(df, res, bounds, value_col)
     x0, y0, x1, y1 = _cell_rect(F.col("ix"), F.col("iy"), res, bounds)
     wkt = F.format_string(
         "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f))",
@@ -152,7 +149,6 @@ def raster_regions(
     res: int,
     min_points: int,
     bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
     max_local_cells: int = 200_000,
 ) -> DataFrame:
     """Raster -> vector regionization: cells with >= `min_points` points
@@ -181,7 +177,7 @@ def raster_regions(
     the guard it falls back to the fully distributed
     large-star/small-star path. Both paths are exact and
     insertion-order-free; tests pin their equality."""
-    ras = rasterize(df, res, bounds, None, cols).filter(
+    ras = rasterize(df, res, bounds, None).filter(
         F.col("n_points") >= F.lit(int(min_points))
     )
     # the raster is tiny relative to the points and reused three times
@@ -222,12 +218,7 @@ def raster_regions(
     return out
 
 
-def corridor_cells(
-    df: DataFrame,
-    res: int,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def corridor_cells(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
     """Exact segment supercover: every grid cell each trajectory SEGMENT
     passes through (not just the cells containing observations) — the
     corridor membership query behind "which tiles did this vehicle
@@ -258,15 +249,15 @@ def corridor_cells(
     minx, miny, maxx, maxy = bounds
     n = 1 << res
     spanx, spany = maxx - minx, maxy - miny
-    w = Window.partitionBy(cols.traj_id).orderBy(cols.t)
-    x0, y0 = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
+    w = Window.partitionBy("traj_id").orderBy("t")
+    x0, y0 = F.lag("x").over(w), F.lag("y").over(w)
     seg = (
         df.select(
-            cols.traj_id,
+            "traj_id",
             x0.alias("x0"),
             y0.alias("y0"),
-            F.col(cols.x).alias("x1"),
-            F.col(cols.y).alias("y1"),
+            F.col("x").alias("x1"),
+            F.col("y").alias("y1"),
         )
         .filter(F.col("x0").isNotNull())
     )
@@ -274,7 +265,7 @@ def corridor_cells(
     ix1, iy1 = cells.cell_ixiy_expr(F.col("x1"), F.col("y1"), res, bounds)
     dx, dy = F.col("x1") - F.col("x0"), F.col("y1") - F.col("y0")
     coef = seg.select(
-        cols.traj_id,
+        "traj_id",
         "x0",
         "y0",
         "x1",
@@ -310,7 +301,7 @@ def corridor_cells(
     tx = crossings(F.col("cxlo"), F.col("cxhi"), F.col("ax"), F.col("bx"), F.col("x0"), F.col("x1"))
     ty = crossings(F.col("cylo"), F.col("cyhi"), F.col("ay"), F.col("by"), F.col("y0"), F.col("y1"))
     ts = F.array_sort(F.concat(F.array(F.lit(0.0), F.lit(1.0)), tx, ty))
-    withts = coef.select(cols.traj_id, "gx0", "gxd", "gy0", "gyd", ts.alias("ts"))
+    withts = coef.select("traj_id", "gx0", "gxd", "gy0", "gyd", ts.alias("ts"))
     k = F.size(F.col("ts"))
 
     def packed_cell(j):
@@ -320,19 +311,14 @@ def corridor_cells(
         return F.shiftleft(gx, res) + gy
 
     codes = F.transform(F.sequence(F.lit(1), k - F.lit(1)), packed_cell)
-    exploded = withts.select(cols.traj_id, F.explode(codes).alias("code"))
+    exploded = withts.select("traj_id", F.explode(codes).alias("code"))
     gx = F.shiftright(F.col("code"), res)
     gy = F.col("code").bitwiseAND(F.lit(n - 1))
     cell = F.coalesce(cells.interleave_expr(gx, gy, res), F.lit(-1).cast("long"))
-    return exploded.select(cols.traj_id, cell.alias("cell")).distinct()
+    return exploded.select("traj_id", cell.alias("cell")).distinct()
 
 
-def hotspot_gi(
-    df: DataFrame,
-    res: int,
-    bounds=cells.WORLD,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def hotspot_gi(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
     """Getis-Ord Gi* hotspot statistic over the tile raster (binary 3x3
     neighborhood incl. self, study area = occupied cells): per cell a
     z-score for whether its NEIGHBORHOOD's point density is anomalously
@@ -352,7 +338,7 @@ def hotspot_gi(
     row — so the statistic's cost is raster-sized regardless of input.
     Cells with undefined variance (s = 0 or N < 2) return NULL gi_z,
     mirrored by the oracle."""
-    ras = rasterize(df, res, bounds, None, cols).select("ix", "iy", "cell", "n_points")
+    ras = rasterize(df, res, bounds, None).select("ix", "iy", "cell", "n_points")
     stats = ras.agg(
         F.count(F.lit(1)).alias("__N"),
         F.sum("n_points").alias("__sum"),

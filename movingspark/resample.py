@@ -30,16 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from movingspark.schema import PointCols, TRAJ_COLS
 
 __all__ = ["resample_trajectories"]
 
 
-def resample_trajectories(
-    df: DataFrame,
-    interval_s: float,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def resample_trajectories(df: DataFrame, interval_s: float) -> DataFrame:
     """Resample each trajectory to one point every `interval_s` seconds,
     grid anchored at the trajectory's first observation. Output columns:
     (traj_id, t, x, y) with t on the grid. Trajectories with a single
@@ -47,15 +42,15 @@ def resample_trajectories(
     i_us = int(round(interval_s * 1_000_000))
     if i_us <= 0:
         raise ValueError("interval_s must be positive")
-    w = Window.partitionBy(cols.traj_id).orderBy("__t")
-    wp = Window.partitionBy(cols.traj_id)
-    t_us = F.unix_micros(F.col(cols.t))
+    w = Window.partitionBy("traj_id").orderBy("__t")
+    wp = Window.partitionBy("traj_id")
+    t_us = F.unix_micros(F.col("t"))
     seg = (
         df.select(
-            cols.traj_id,
+            "traj_id",
             t_us.alias("__t"),
-            F.col(cols.x).alias("__x"),
-            F.col(cols.y).alias("__y"),
+            F.col("x").alias("__x"),
+            F.col("y").alias("__y"),
         )
         .withColumn("__t1", F.lead("__t").over(w))
         .withColumn("__x1", F.lead("__x").over(w))
@@ -103,8 +98,8 @@ def resample_trajectories(
     x = F.col("__x") + (F.col("__x1") - F.col("__x")) * frac
     y = F.col("__y") + (F.col("__y1") - F.col("__y")) * frac
     return ticks.select(
-        F.col(cols.traj_id),
-        F.timestamp_micros(tick_us).alias(cols.t),
-        F.coalesce(x, F.col("__x")).alias(cols.x),
-        F.coalesce(y, F.col("__y")).alias(cols.y),
+        F.col("traj_id"),
+        F.timestamp_micros(tick_us).alias("t"),
+        F.coalesce(x, F.col("__x")).alias("x"),
+        F.coalesce(y, F.col("__y")).alias("y"),
     )

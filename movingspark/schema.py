@@ -3,9 +3,12 @@
 Mirrors the reference's derived-column name registry
 (reference trajectory.py:43-49) and the north-rule interleaved
 document schema (BASELINE.json:15 / FIXTURES.md §3).
-"""
 
-from dataclasses import dataclass
+Every operator reads the point table by its fixed column names
+(traj_id, t, x, y[, obj_id]); `ingest.make_traj_points` binds the
+caller's names to them once, as the reference's Trajectory
+constructor does.
+"""
 
 from pyspark.sql import types as T
 
@@ -26,20 +29,6 @@ C_EARTH = 40075016.6856  # equatorial circumference, meters
 # WGS84 ellipsoid (public constants; used by the geodesic kernel)
 WGS84_A = 6378137.0
 WGS84_F = 1.0 / 298.257223563
-
-
-@dataclass(frozen=True)
-class PointCols:
-    """Column-name binding for a trajectory point DataFrame."""
-
-    traj_id: str = "traj_id"
-    t: str = "t"
-    x: str = "x"
-    y: str = "y"
-    obj_id: str = "obj_id"
-
-
-TRAJ_COLS = PointCols()
 
 # Canonical point schema (SURVEY.md §1.2)
 POINT_SCHEMA = T.StructType(

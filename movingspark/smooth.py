@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from movingspark import kernels
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
 def _kf_rts(zx: np.ndarray, zy: np.ndarray, dts: np.ndarray, q: float, r: float):
@@ -106,7 +105,6 @@ def kalman_smooth(
     process_noise_std: float = 0.5,
     measurement_noise_std: float = 1.0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X15: replace x/y with CV-Kalman+RTS smoothed positions.
 
@@ -121,20 +119,19 @@ def kalman_smooth(
     out_schema = df.schema
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t).reset_index(drop=True)
         if len(pdf) < 2:
             return pdf
-        t = pdf[cols.t].astype("int64").to_numpy() / 1e9
+        t = pdf["t"].astype("int64").to_numpy() / 1e9
         dts = np.diff(t, prepend=t[0])
-        x = pdf[cols.x].to_numpy(float)
-        y = pdf[cols.y].to_numpy(float)
+        x = pdf["x"].to_numpy(float)
+        y = pdf["y"].to_numpy(float)
         if latlon:
             sx, sy = _kf_rts(*kernels.mercator_forward(x, y), dts, q, r)
-            pdf[cols.x], pdf[cols.y] = kernels.mercator_inverse(sx, sy)
+            pdf["x"], pdf["y"] = kernels.mercator_inverse(sx, sy)
         else:
-            pdf[cols.x], pdf[cols.y] = _kf_rts(x, y, dts, q, r)
+            pdf["x"], pdf["y"] = _kf_rts(x, y, dts, q, r)
         return pdf
 
     from movingspark.gmap import grouped_apply_sorted
 
-    return grouped_apply_sorted(df, per_traj, out_schema, cols)
+    return grouped_apply_sorted(df, per_traj, out_schema)

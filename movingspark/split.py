@@ -23,30 +23,29 @@ from pyspark.sql import functions as F
 from movingspark import kernels, schema
 from movingspark.derive import _kinematics, traj_window
 from movingspark.ingest import filter_min_length
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
-def _finalize(df: DataFrame, piece_col, min_length: float, latlon: bool, cols: PointCols) -> DataFrame:
+def _finalize(df: DataFrame, piece_col, min_length: float, latlon: bool) -> DataFrame:
     """Common tail: drop <2-row pieces, stamp piece traj_id, keep parent,
     apply min_length (reference TrajectoryCollection(min_length=...),
     trajectory_collection.py:81-86)."""
-    w = Window.partitionBy(cols.traj_id, piece_col)
+    w = Window.partitionBy("traj_id", piece_col)
     out = (
         df.withColumn("__n", F.count("*").over(w))
         .filter(F.col("__n") >= 2)
         .drop("__n")
-        .withColumn("parent", F.col(cols.traj_id))
-        .withColumn(cols.traj_id, F.concat_ws("_", cols.traj_id, F.col(piece_col).cast("string")))
+        .withColumn("parent", F.col("traj_id"))
+        .withColumn("traj_id", F.concat_ws("_", "traj_id", F.col(piece_col).cast("string")))
         .drop(piece_col)
     )
     if min_length > 0:
-        out = filter_min_length(out, min_length, latlon=latlon, cols=cols)
+        out = filter_min_length(out, min_length, latlon=latlon)
     return out
 
 
-def _with_boundary_rows(base: DataFrame, cols: PointCols) -> DataFrame:
+def _with_boundary_rows(base: DataFrame) -> DataFrame:
     """Append the first row of each piece k > 0 to piece k-1 as well."""
-    first_of_piece = F.row_number().over(Window.partitionBy(cols.traj_id, "__piece").orderBy(cols.t))
+    first_of_piece = F.row_number().over(Window.partitionBy("traj_id", "__piece").orderBy("t"))
     boundary = (
         base.withColumn("__fr", first_of_piece)
         .filter((F.col("__fr") == 1) & (F.col("__piece") > 0))
@@ -56,14 +55,14 @@ def _with_boundary_rows(base: DataFrame, cols: PointCols) -> DataFrame:
     return base.unionByName(boundary)
 
 
-def _own_columns(df: DataFrame, kinds: list, latlon: bool, cols: PointCols):
+def _own_columns(df: DataFrame, kinds: list, latlon: bool):
     """(df, column names) for each of `kinds` (schema.SPEED /
     schema.DIRECTION): the input's column of that name where there is
     one (the reference reuses it), else derived in one pass into a
     private `__<kind>` column."""
     names = [k if k in df.columns else f"__{k}" for k in kinds]
     derived = {n: k for k, n in zip(kinds, names) if n != k}
-    return _kinematics(df, derived, latlon=latlon, cols=cols), names
+    return _kinematics(df, derived, latlon=latlon), names
 
 
 def split_by_observation_gap(
@@ -71,15 +70,14 @@ def split_by_observation_gap(
     gap_s: float,
     min_length: float = 0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X2 (trajectory_splitter.py:156-194): new piece when Δt > gap
     (strict); piece index counts every gap group, including ones later
     dropped for having < 2 rows."""
     flag = F.when(F.col("__dt") > gap_s, 1).otherwise(0)
-    piece = F.sum(flag).over(traj_window(cols).rowsBetween(Window.unboundedPreceding, 0))
-    base = _kinematics(df, {"__dt": "timedelta"}, cols=cols).withColumn("__piece", piece).drop("__dt")
-    return _finalize(base, "__piece", min_length, latlon, cols)
+    piece = F.sum(flag).over(traj_window().rowsBetween(Window.unboundedPreceding, 0))
+    base = _kinematics(df, {"__dt": "timedelta"}).withColumn("__piece", piece).drop("__dt")
+    return _finalize(base, "__piece", min_length, latlon)
 
 
 def split_by_speed(
@@ -89,13 +87,12 @@ def split_by_speed(
     min_length: float = 0,
     max_speed: float = float("inf"),
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X4 (trajectory_splitter.py:197-228): keep rows with speed within
     [speed, max_speed] (inclusive), then gap-split with gap=duration."""
-    df, (spd,) = _own_columns(df, [schema.SPEED], latlon, cols)
+    df, (spd,) = _own_columns(df, [schema.SPEED], latlon)
     df = df.filter((F.col(spd) >= speed) & (F.col(spd) <= max_speed)).drop("__speed")
-    return split_by_observation_gap(df, duration_s, min_length, latlon, cols)
+    return split_by_observation_gap(df, duration_s, min_length, latlon)
 
 
 def split_by_value_change(
@@ -103,14 +100,13 @@ def split_by_value_change(
     col_name: str,
     min_length: float = 0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X7 (trajectory_splitter.py:346-390): new piece when `col_name`
     changes between consecutive rows; each non-last piece additionally
     receives the NEXT piece's first row (boundary continuity), applied
     BEFORE the 2-row validity check (so a 1-row piece + boundary row
     survives)."""
-    w = traj_window(cols)
+    w = traj_window()
     prev = F.lag(col_name).over(w)
     rn = F.row_number().over(w)
     # pandas semantics: NaN != anything (incl. NaN) is True
@@ -119,7 +115,7 @@ def split_by_value_change(
     ).otherwise((F.col(col_name) != prev).cast("int"))
     piece = F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
     base = df.withColumn("__piece", piece)
-    return _finalize(_with_boundary_rows(base, cols), "__piece", min_length, latlon, cols)
+    return _finalize(_with_boundary_rows(base), "__piece", min_length, latlon)
 
 
 def split_temporally(
@@ -127,7 +123,6 @@ def split_temporally(
     mode: str = "day",
     min_length: float = 0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X3 (trajectory_splitter.py:100-153): bucket rows by calendar
     period (hour/day/month/year) OR any raw fixed-frequency alias the
@@ -140,7 +135,7 @@ def split_temporally(
     each non-last piece receives the next piece's first row before the
     2-row validity check."""
     if mode in {"hour", "day", "month", "year"}:
-        bucket = F.date_trunc(mode, F.col(cols.t))
+        bucket = F.date_trunc(mode, F.col("t"))
     else:
         m = re.fullmatch(r"(\d*)\s*(s|sec|second|min|t|h|hour|d)", mode.strip(), re.IGNORECASE)
         if not m:
@@ -156,12 +151,12 @@ def split_temporally(
             "d": 86_400_000_000,
         }[m.group(2).lower()]
         freq_us = n * unit_us
-        origin = F.unix_micros(F.date_trunc("day", F.min(cols.t).over(Window.partitionBy(cols.traj_id))))
-        bucket = F.floor((F.unix_micros(F.col(cols.t)) - origin) / F.lit(freq_us))
+        origin = F.unix_micros(F.date_trunc("day", F.min("t").over(Window.partitionBy("traj_id"))))
+        bucket = F.floor((F.unix_micros(F.col("t")) - origin) / F.lit(freq_us))
     base = df.withColumn("__bucket", bucket)
-    idx = F.dense_rank().over(Window.partitionBy(cols.traj_id).orderBy("__bucket")) - 1
+    idx = F.dense_rank().over(Window.partitionBy("traj_id").orderBy("__bucket")) - 1
     base = base.withColumn("__piece", idx).drop("__bucket")
-    return _finalize(_with_boundary_rows(base, cols), "__piece", min_length, latlon, cols)
+    return _finalize(_with_boundary_rows(base), "__piece", min_length, latlon)
 
 
 def angle_change_groups(dirs, spds, min_angle: float, min_speed: float) -> np.ndarray:
@@ -186,7 +181,6 @@ def split_by_angle_change(
     min_speed: float = 0,
     min_length: float = 0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X6 (trajectory_splitter.py:273-343): carried comparison direction
     comp_dir updates only when a split fires (speed >= min_speed AND
@@ -194,17 +188,15 @@ def split_by_angle_change(
     sequential, so a grouped-map pandas UDF with the loop in numpy.
     Each piece with >1 rows gets the previous piece's LAST row prepended
     (i > 0); 1-row pieces are dropped before prepending."""
-    df, (dircol, spcol) = _own_columns(df, [schema.DIRECTION, schema.SPEED], latlon, cols)
+    df, (dircol, spcol) = _own_columns(df, [schema.DIRECTION, schema.SPEED], latlon)
     out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
     out_schema = ", ".join(out_fields + ["parent string"])
-    tcol = cols.traj_id
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t).reset_index(drop=True)
         groups = angle_change_groups(
             pdf[dircol].to_numpy(float), pdf[spcol].to_numpy(float), min_angle, min_speed
         )
-        tid = pdf[tcol].iloc[0]
+        tid = pdf["traj_id"].iloc[0]
         pieces = []
         bounds = np.flatnonzero(np.diff(groups)) + 1
         starts = np.concatenate([[0], bounds])
@@ -217,7 +209,7 @@ def split_by_angle_change(
                 piece = pd.concat([pdf.iloc[starts[i - 1] + (ends[i - 1] - starts[i - 1]) - 1 : ends[i - 1]], piece])
             piece = piece.copy()
             piece["parent"] = tid
-            piece[tcol] = f"{tid}_{i}"
+            piece["traj_id"] = f"{tid}_{i}"
             pieces.append(piece)
         if not pieces:
             return pdf.iloc[0:0].assign(parent=pd.Series(dtype=str))
@@ -225,9 +217,9 @@ def split_by_angle_change(
 
     from movingspark.gmap import grouped_apply_sorted
 
-    out = grouped_apply_sorted(df, per_traj, out_schema, cols).drop("__direction", "__speed")
+    out = grouped_apply_sorted(df, per_traj, out_schema).drop("__direction", "__speed")
     if min_length > 0:
-        out = filter_min_length(out, min_length, latlon=latlon, cols=cols)
+        out = filter_min_length(out, min_length, latlon=latlon)
     return out
 
 
@@ -237,7 +229,6 @@ def split_by_stops(
     min_duration_s: float,
     min_length: float = 0,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """X5 (trajectory_splitter.py:231-270): detect stops (X1), take the
     complement time ranges [start..stop1.t0], [stop1.tn..stop2.t0], ...,
@@ -246,24 +237,24 @@ def split_by_stops(
     naming, trajectory.py:974)."""
     from movingspark.stops import get_stop_time_ranges
 
-    stops = get_stop_time_ranges(df, max_diameter, min_duration_s, latlon, cols)
+    stops = get_stop_time_ranges(df, max_diameter, min_duration_s, latlon)
 
-    extent = df.groupBy(cols.traj_id).agg(
-        F.min(cols.t).alias("t_first"), F.max(cols.t).alias("t_last")
+    extent = df.groupBy("traj_id").agg(
+        F.min("t").alias("t_first"), F.max("t").alias("t_last")
     )
     # complement ranges: pair boundary instants in time order
-    b_start = extent.select(cols.traj_id, F.col("t_first").alias("edge"), F.lit(0).alias("kind"))
-    b_end = extent.select(cols.traj_id, F.col("t_last").alias("edge"), F.lit(1).alias("kind"))
-    s0 = stops.select(F.col("traj_id").alias(cols.traj_id), F.col("start_t").alias("edge"), F.lit(1).alias("kind"))
-    s1 = stops.select(F.col("traj_id").alias(cols.traj_id), F.col("end_t").alias("edge"), F.lit(0).alias("kind"))
+    b_start = extent.select("traj_id", F.col("t_first").alias("edge"), F.lit(0).alias("kind"))
+    b_end = extent.select("traj_id", F.col("t_last").alias("edge"), F.lit(1).alias("kind"))
+    s0 = stops.select(F.col("traj_id").alias("traj_id"), F.col("start_t").alias("edge"), F.lit(1).alias("kind"))
+    s1 = stops.select(F.col("traj_id").alias("traj_id"), F.col("end_t").alias("edge"), F.lit(0).alias("kind"))
     edges = b_start.unionByName(s0).unionByName(s1).unionByName(b_end)
-    w = Window.partitionBy(cols.traj_id).orderBy("edge", "kind")
+    w = Window.partitionBy("traj_id").orderBy("edge", "kind")
     ranges = (
         edges.withColumn("__rn", F.row_number().over(w))
         .withColumn("nxt", F.lead("edge").over(w))
         .filter(F.col("__rn") % 2 == 1)  # odd rows open a between-stops range
         .select(
-            F.col(cols.traj_id).alias("traj_id"),
+            F.col("traj_id").alias("traj_id"),
             F.col("edge").alias("start_t"),
             F.col("nxt").alias("end_t"),
         )
@@ -272,19 +263,19 @@ def split_by_stops(
 
     from movingspark.stops import attach_ranges
 
-    seg = attach_ranges(df, ranges, cols)
-    wp = Window.partitionBy(cols.traj_id, "start_t")
+    seg = attach_ranges(df, ranges)
+    wp = Window.partitionBy("traj_id", "start_t")
     out = (
         seg.withColumn("__n", F.count("*").over(wp))
-        .withColumn("__span", (F.max(cols.t).over(wp) > F.min(cols.t).over(wp)).cast("int"))
+        .withColumn("__span", (F.max("t").over(wp) > F.min("t").over(wp)).cast("int"))
         .filter((F.col("__n") >= 2) & (F.col("__span") == 1))
-        .withColumn("parent", F.col(cols.traj_id))
+        .withColumn("parent", F.col("traj_id"))
         .withColumn(
-            cols.traj_id,
-            F.concat_ws("_", cols.traj_id, F.date_format("start_t", "yyyy-MM-dd HH:mm:ss")),
+            "traj_id",
+            F.concat_ws("_", "traj_id", F.date_format("start_t", "yyyy-MM-dd HH:mm:ss")),
         )
         .drop("start_t", "end_t", "__n", "__span")
     )
     if min_length > 0:
-        out = filter_min_length(out, min_length, latlon=latlon, cols=cols)
+        out = filter_min_length(out, min_length, latlon=latlon)
     return out

@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movingspark import kernels
-from movingspark.schema import PointCols, TRAJ_COLS
 
 RANGE_SCHEMA = "traj_id string, start_t timestamp, end_t timestamp"
 
@@ -134,22 +133,20 @@ def get_stop_time_ranges(
     max_diameter: float,
     min_duration_s: float,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Detected stops as (traj_id, start_t, end_t)."""
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(cols.t)
-        ts = pdf[cols.t].astype("int64").to_numpy() / 1e9
+        ts = pdf["t"].astype("int64").to_numpy() / 1e9
         stops = _detect_stops_np(
-            pdf[cols.x].to_numpy(float),
-            pdf[cols.y].to_numpy(float),
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
             ts,
             max_diameter,
             min_duration_s,
             latlon,
         )
-        tid = pdf[cols.traj_id].iloc[0]
+        tid = pdf["traj_id"].iloc[0]
         out = pd.DataFrame(
             {
                 "traj_id": pd.Series([tid] * len(stops), dtype=str),
@@ -161,19 +158,19 @@ def get_stop_time_ranges(
 
     from movingspark.gmap import grouped_apply_sorted
 
-    return grouped_apply_sorted(df, per_traj, RANGE_SCHEMA, cols)
+    return grouped_apply_sorted(df, per_traj, RANGE_SCHEMA)
 
 
-def attach_ranges(df: DataFrame, ranges: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def attach_ranges(df: DataFrame, ranges: DataFrame) -> DataFrame:
     """Inner range-join of points to stop ranges (t BETWEEN start_t AND
     end_t). Ranges are few relative to points — broadcast them so the
     join needs no shuffle of the point table."""
     return df.join(
         F.broadcast(ranges),
         on=[
-            df[cols.traj_id] == ranges["traj_id"],
-            df[cols.t] >= ranges["start_t"],
-            df[cols.t] <= ranges["end_t"],
+            df["traj_id"] == ranges["traj_id"],
+            df["t"] >= ranges["start_t"],
+            df["t"] <= ranges["end_t"],
         ],
         how="inner",
     ).drop(ranges["traj_id"])
@@ -184,23 +181,22 @@ def get_stop_points(
     max_diameter: float,
     min_duration_s: float,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """A11 (trajectory_stop_detector.py:219-267): per stop the median
     location, start/end time, duration seconds and parent traj id;
     stop_id = "{traj_id}_{start_t}" (get_segment_between naming,
     trajectory.py:974)."""
-    ranges = get_stop_time_ranges(df, max_diameter, min_duration_s, latlon, cols)
-    joined = attach_ranges(df, ranges, cols)
-    agg = joined.groupBy(cols.traj_id, "start_t", "end_t").agg(
-        F.percentile(cols.x, F.lit(0.5)).alias("x"),
-        F.percentile(cols.y, F.lit(0.5)).alias("y"),
-        F.min(cols.t).alias("start_time"),
-        F.max(cols.t).alias("end_time"),
+    ranges = get_stop_time_ranges(df, max_diameter, min_duration_s, latlon)
+    joined = attach_ranges(df, ranges)
+    agg = joined.groupBy("traj_id", "start_t", "end_t").agg(
+        F.percentile("x", F.lit(0.5)).alias("x"),
+        F.percentile("y", F.lit(0.5)).alias("y"),
+        F.min("t").alias("start_time"),
+        F.max("t").alias("end_time"),
     )
     return agg.select(
-        F.concat_ws("_", cols.traj_id, F.date_format("start_t", "yyyy-MM-dd HH:mm:ss")).alias("stop_id"),
-        F.col(cols.traj_id).alias("traj_id"),
+        F.concat_ws("_", "traj_id", F.date_format("start_t", "yyyy-MM-dd HH:mm:ss")).alias("stop_id"),
+        F.col("traj_id").alias("traj_id"),
         "start_time",
         "end_time",
         ((F.unix_micros("end_time") - F.unix_micros("start_time")) / 1e6).alias("duration_s"),

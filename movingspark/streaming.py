@@ -17,22 +17,21 @@ from pyspark.sql import functions as F
 
 from movingspark import pyworker
 from movingspark.cells import WORLD, cell_id_expr
-from movingspark.schema import PointCols, TRAJ_COLS
 
 
-def gap_sessions(df: DataFrame, gap: str = "1 hour", cols: PointCols = TRAJ_COLS) -> DataFrame:
+def gap_sessions(df: DataFrame, gap: str = "1 hour") -> DataFrame:
     """Per-trajectory observation sessions with the given gap timeout —
     the session-window rendition of X2 (one row per contiguous burst of
     observations). Works on both batch and streaming inputs."""
     return (
-        df.groupBy(cols.traj_id, F.session_window(cols.t, gap).alias("session"))
+        df.groupBy("traj_id", F.session_window("t", gap).alias("session"))
         .agg(
             F.count("*").alias("n"),
-            F.min(cols.t).alias("start_t"),
-            F.max(cols.t).alias("end_t"),
+            F.min("t").alias("start_t"),
+            F.max("t").alias("end_t"),
         )
         .select(
-            cols.traj_id,
+            "traj_id",
             F.col("session.start").alias("session_start"),
             F.col("session.end").alias("session_end"),
             "n",
@@ -42,7 +41,7 @@ def gap_sessions(df: DataFrame, gap: str = "1 hour", cols: PointCols = TRAJ_COLS
     )
 
 
-def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> DataFrame:
+def streaming_kinematics(stream: DataFrame) -> DataFrame:
     """Custom STATEFUL streaming operator (applyInPandasWithState): the
     incremental form of derive.add_all_kinematics — per-trajectory
     timedelta/distance/speed computed across micro-batches by carrying
@@ -64,7 +63,7 @@ def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> Data
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = (
-        f"{cols.traj_id} string, {cols.t} timestamp, {cols.x} double, {cols.y} double, "
+        "traj_id string, t timestamp, x double, y double, "
         "timedelta_s double, distance double, speed double"
     )
     state_schema = "t_us long, x double, y double"
@@ -75,10 +74,10 @@ def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> Data
 
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(cols.t, kind="mergesort").reset_index(drop=True)
-        t_us = pdf[cols.t].astype("int64").to_numpy() // 1000  # ns -> µs
-        xs = pdf[cols.x].to_numpy(float)
-        ys = pdf[cols.y].to_numpy(float)
+        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
+        t_us = pdf["t"].astype("int64").to_numpy() // 1000  # ns -> µs
+        xs = pdf["x"].to_numpy(float)
+        ys = pdf["y"].to_numpy(float)
         if state.exists:
             p_tus, p_x, p_y = state.get
             prev_tus = np.concatenate([[p_tus], t_us[:-1]])
@@ -97,10 +96,10 @@ def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> Data
             speed = np.where(dt > 0, dist / np.where(dt == 0, 1.0, dt), 0.0)
         out = pd.DataFrame(
             {
-                cols.traj_id: pdf[cols.traj_id] if cols.traj_id in pdf else key[0],
-                cols.t: pdf[cols.t],
-                cols.x: xs,
-                cols.y: ys,
+                "traj_id": pdf["traj_id"] if "traj_id" in pdf else key[0],
+                "t": pdf["t"],
+                "x": xs,
+                "y": ys,
                 "timedelta_s": np.where(valid, dt, np.nan),
                 "distance": np.where(valid, dist, np.nan),
                 "speed": np.where(valid, speed, np.nan),
@@ -109,7 +108,7 @@ def streaming_kinematics(stream: DataFrame, cols: PointCols = TRAJ_COLS) -> Data
         state.update((int(t_us[-1]), float(xs[-1]), float(ys[-1])))
         yield out
 
-    return stream.groupBy(cols.traj_id).applyInPandasWithState(
+    return stream.groupBy("traj_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -119,7 +118,6 @@ def streaming_stops(
     max_diameter: float,
     min_duration_s: float,
     latlon: bool = False,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """STATEFUL streaming stop detection (applyInPandasWithState): the
     incremental form of stops.get_stop_time_ranges. Per trajectory the
@@ -143,17 +141,17 @@ def streaming_stops(
 
     from movingspark.stops import _detect_stops_np
 
-    out_schema = f"{cols.traj_id} string, start_t timestamp, end_t timestamp"
+    out_schema = "traj_id string, start_t timestamp, end_t timestamp"
     state_schema = "xs array<double>, ys array<double>, ts array<double>"
 
     def fn(key, pdfs, state):
         pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(cols.t, kind="mergesort")
-        xs = pdf[cols.x].to_numpy(float)
-        ys = pdf[cols.y].to_numpy(float)
-        ts = pdf[cols.t].astype("int64").to_numpy() / 1e9
+        pdf = pdf.sort_values("t", kind="mergesort")
+        xs = pdf["x"].to_numpy(float)
+        ys = pdf["y"].to_numpy(float)
+        ts = pdf["t"].astype("int64").to_numpy() / 1e9
         if state.exists:
             sxs, sys_, sts = state.get
             xs = np.concatenate([np.asarray(sxs, float), xs])
@@ -165,13 +163,13 @@ def streaming_stops(
         state.update((xs[lo:].tolist(), ys[lo:].tolist(), ts[lo:].tolist()))
         yield pd.DataFrame(
             {
-                cols.traj_id: [key[0]] * len(stops_found),
+                "traj_id": [key[0]] * len(stops_found),
                 "start_t": [pd.Timestamp(round(s * 1e6) * 1000) for s, _ in stops_found],
                 "end_t": [pd.Timestamp(round(e * 1e6) * 1000) for _, e in stops_found],
             }
         )
 
-    return stream.groupBy(cols.traj_id).applyInPandasWithState(
+    return stream.groupBy("traj_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -227,7 +225,6 @@ def streaming_tile_rollup(
     window: str = "1 minute",
     watermark: str = "2 minutes",
     bounds=WORLD,
-    cols: PointCols = TRAJ_COLS,
 ) -> DataFrame:
     """Watermarked streaming tile rollup: per (cell, time window) point
     counts; late data beyond the watermark is dropped by the engine.
@@ -236,20 +233,15 @@ def streaming_tile_rollup(
         (streaming_tile_rollup(src, res=6)
            .writeStream.outputMode("update").format("memory")...)
     """
-    tagged = stream.withWatermark(cols.t, watermark).withColumn(
-        "cell", cell_id_expr(F.col(cols.x), F.col(cols.y), res, bounds)
+    tagged = stream.withWatermark("t", watermark).withColumn(
+        "cell", cell_id_expr(F.col("x"), F.col("y"), res, bounds)
     )
-    return tagged.groupBy("cell", F.window(cols.t, window).alias("w")).agg(
+    return tagged.groupBy("cell", F.window("t", window).alias("w")).agg(
         F.count("*").alias("n_points")
     ).select("cell", F.col("w.start").alias("window_start"), "n_points")
 
 
-def streaming_geofence(
-    stream: DataFrame,
-    polygon,
-    holes=None,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def streaming_geofence(stream: DataFrame, polygon, holes=None) -> DataFrame:
     """STATEFUL streaming twin of geofence.geofence_events
     (applyInPandasWithState): enter/exit transition events against one
     fence polygon, with each trajectory's last (t, inside) carried as
@@ -269,20 +261,17 @@ def streaming_geofence(
 
     poly = np.asarray(polygon, float)
     hs = [np.asarray(h, float) for h in (holes or [])]
-    out_schema = (
-        f"{cols.traj_id} string, {cols.t} timestamp, {cols.x} double, "
-        f"{cols.y} double, event string, t_prev timestamp"
-    )
+    out_schema = "traj_id string, t timestamp, x double, y double, event string, t_prev timestamp"
     state_schema = "t_us long, inside boolean"
 
     def fn(key, pdfs, state):
         pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(cols.t, kind="mergesort").reset_index(drop=True)
-        xs = pdf[cols.x].to_numpy(float)
-        ys = pdf[cols.y].to_numpy(float)
-        t_us = pdf[cols.t].astype("int64").to_numpy() // 1000
+        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
+        xs = pdf["x"].to_numpy(float)
+        ys = pdf["y"].to_numpy(float)
+        t_us = pdf["t"].astype("int64").to_numpy() // 1000
         inside = kernels.point_in_polygon(xs, ys, poly)
         for h in hs:
             inside &= ~kernels.point_in_polygon(xs, ys, h)
@@ -299,27 +288,22 @@ def streaming_geofence(
         state.update((int(t_us[-1]), bool(inside[-1])))
         out = pd.DataFrame(
             {
-                cols.traj_id: pdf[cols.traj_id][chg],
-                cols.t: pdf[cols.t][chg],
-                cols.x: xs[chg],
-                cols.y: ys[chg],
+                "traj_id": pdf["traj_id"][chg],
+                "t": pdf["t"][chg],
+                "x": xs[chg],
+                "y": ys[chg],
                 "event": np.where(inside[chg], "enter", "exit"),
                 "t_prev": pd.to_datetime(prev_t[chg], unit="us"),
             }
         )
         yield out
 
-    return stream.groupBy(cols.traj_id).applyInPandasWithState(
+    return stream.groupBy("traj_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
-def streaming_cell_visits(
-    stream: DataFrame,
-    res: int,
-    bounds=None,
-    cols: PointCols = TRAJ_COLS,
-) -> DataFrame:
+def streaming_cell_visits(stream: DataFrame, res: int, bounds=None) -> DataFrame:
     """STATEFUL streaming twin of joins.cell_visits: tile-visit rows
     (traj_id, cell, enter_t, leave_t, duration_s, n_points) emitted as
     visits CLOSE — i.e. when a later observation lands in a different
@@ -337,7 +321,7 @@ def streaming_cell_visits(
 
     bounds = bounds if bounds is not None else _cells.WORLD
     out_schema = (
-        f"{cols.traj_id} string, cell long, enter_t timestamp, leave_t timestamp, "
+        "traj_id string, cell long, enter_t timestamp, leave_t timestamp, "
         "duration_s double, n_points long"
     )
     state_schema = "cell long, enter_us long, leave_us long, n long"
@@ -346,10 +330,10 @@ def streaming_cell_visits(
         pyworker.prepare()
         parts = [p for p in pdfs]
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(cols.t, kind="mergesort").reset_index(drop=True)
-        xs = pdf[cols.x].to_numpy(float)
-        ys = pdf[cols.y].to_numpy(float)
-        t_us = pdf[cols.t].astype("int64").to_numpy() // 1000
+        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
+        xs = pdf["x"].to_numpy(float)
+        ys = pdf["y"].to_numpy(float)
+        t_us = pdf["t"].astype("int64").to_numpy() // 1000
         cell = _cells.cell_id_np(xs, ys, res, bounds)
 
         runs = []  # (cell, enter_us, leave_us, n)
@@ -371,7 +355,7 @@ def streaming_cell_visits(
             state.update(runs[-1])
         out = pd.DataFrame(
             {
-                cols.traj_id: [key[0]] * len(closed),
+                "traj_id": [key[0]] * len(closed),
                 "cell": [c for c, *_ in closed],
                 "enter_t": pd.to_datetime([e for _, e, _, _ in closed], unit="us"),
                 "leave_t": pd.to_datetime([l for _, _, l, _ in closed], unit="us"),
@@ -381,6 +365,6 @@ def streaming_cell_visits(
         )
         yield out
 
-    return stream.groupBy(cols.traj_id).applyInPandasWithState(
+    return stream.groupBy("traj_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

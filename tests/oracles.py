@@ -336,80 +336,80 @@ def _seg_intersect(a, b, c, d) -> bool:
     return False
 
 
-def _lag_dist(latlon: bool, cols) -> Column:
-    w = traj_window(cols)
-    return dist_expr(F.lag(cols.x).over(w), F.lag(cols.y).over(w), F.col(cols.x), F.col(cols.y), latlon)
+def _lag_dist(latlon: bool) -> Column:
+    w = traj_window()
+    return dist_expr(F.lag("x").over(w), F.lag("y").over(w), F.col("x"), F.col("y"), latlon)
 
 
-def seg_dist_lag(latlon: bool, cols) -> Column:
+def seg_dist_lag(latlon: bool) -> Column:
     """Distance from the previous row, 0 on the first row."""
-    return F.coalesce(_lag_dist(latlon, cols), F.lit(0.0))
+    return F.coalesce(_lag_dist(latlon), F.lit(0.0))
 
 
-def _first_row_copy(df: DataFrame, name: str, cols) -> DataFrame:
+def _first_row_copy(df: DataFrame, name: str) -> DataFrame:
     """The first row takes the second row's value of `name`."""
-    w = traj_window(cols)
+    w = traj_window()
     patched = F.when(F.row_number().over(w) == 1, F.lead(name, 1).over(w)).otherwise(F.col(name))
     return df.withColumn(name, patched)
 
 
-def _lag_dt(cols) -> Column:
-    w = traj_window(cols)
-    t_us = F.unix_micros(F.col(cols.t))
+def _lag_dt() -> Column:
+    w = traj_window()
+    t_us = F.unix_micros(F.col("t"))
     return (t_us - F.lag(t_us).over(w)) / F.lit(1_000_000.0)
 
 
-def chained_timedelta(df, name, cols):
-    return df.withColumn(name, _lag_dt(cols))
+def chained_timedelta(df, name):
+    return df.withColumn(name, _lag_dt())
 
 
-def chained_distance(df, name, units, latlon, crs_units, cols):
+def chained_distance(df, name, units, latlon, crs_units):
     conv = get_conversion(units, crs_units)
-    return df.withColumn(name, F.coalesce(_lag_dist(latlon, cols) * F.lit(conv.crs / conv.distance), F.lit(0.0)))
+    return df.withColumn(name, F.coalesce(_lag_dist(latlon) * F.lit(conv.crs / conv.distance), F.lit(0.0)))
 
 
-def chained_speed(df, name, units, latlon, crs_units, cols):
+def chained_speed(df, name, units, latlon, crs_units):
     conv = get_conversion(units, crs_units)
-    d = _lag_dist(latlon, cols) * F.lit(conv.crs / conv.distance)
-    df = df.withColumn(name, d / _lag_dt(cols) * F.lit(conv.time))
-    return _first_row_copy(df, name, cols)
+    d = _lag_dist(latlon) * F.lit(conv.crs / conv.distance)
+    df = df.withColumn(name, d / _lag_dt() * F.lit(conv.time))
+    return _first_row_copy(df, name)
 
 
-def chained_direction(df, name, latlon, cols):
-    w = traj_window(cols)
-    px, py = F.lag(cols.x).over(w), F.lag(cols.y).over(w)
-    same = (px == F.col(cols.x)) & (py == F.col(cols.y))
-    b = bearing_expr(px, py, F.col(cols.x), F.col(cols.y), latlon)
+def chained_direction(df, name, latlon):
+    w = traj_window()
+    px, py = F.lag("x").over(w), F.lag("y").over(w)
+    same = (px == F.col("x")) & (py == F.col("y"))
+    b = bearing_expr(px, py, F.col("x"), F.col("y"), latlon)
     df = df.withColumn(name, F.when(same, F.lit(0.0)).otherwise(b))
-    return _first_row_copy(df, name, cols)
+    return _first_row_copy(df, name)
 
 
-def chained_angular_difference(df, name, latlon, cols):
-    w = traj_window(cols)
+def chained_angular_difference(df, name, latlon):
+    w = traj_window()
     tmp = schema.DIRECTION not in df.columns
     if tmp:
-        df = chained_direction(df, schema.DIRECTION, latlon, cols)
+        df = chained_direction(df, schema.DIRECTION, latlon)
     diff = angular_difference_expr(F.lag(schema.DIRECTION).over(w), F.col(schema.DIRECTION))
     df = df.withColumn(name, F.coalesce(diff, F.lit(0.0)))
     return df.drop(schema.DIRECTION) if tmp else df
 
 
-def chained_acceleration(df, name, units, latlon, crs_units, cols):
+def chained_acceleration(df, name, units, latlon, crs_units):
     conv = get_conversion(units, crs_units)
-    w = traj_window(cols)
+    w = traj_window()
     tmp = schema.SPEED not in df.columns
     if tmp:
-        df = chained_speed(df, schema.SPEED, units, latlon, crs_units, cols)
-    acc = (F.col(schema.SPEED) - F.lag(schema.SPEED).over(w)) / _lag_dt(cols) * F.lit(conv.time2)
-    df = _first_row_copy(df.withColumn(name, acc), name, cols)
+        df = chained_speed(df, schema.SPEED, units, latlon, crs_units)
+    acc = (F.col(schema.SPEED) - F.lag(schema.SPEED).over(w)) / _lag_dt() * F.lit(conv.time2)
+    df = _first_row_copy(df.withColumn(name, acc), name)
     return df.drop(schema.SPEED) if tmp else df
 
 
-def chained_kinematics(df, latlon, cols):
+def chained_kinematics(df, latlon):
     """add_all_kinematics as six chained helpers."""
-    df = chained_timedelta(df, schema.TIMEDELTA, cols)
-    df = chained_distance(df, schema.DISTANCE, None, latlon, None, cols)
-    df = chained_speed(df, schema.SPEED, None, latlon, None, cols)
-    df = chained_direction(df, schema.DIRECTION, latlon, cols)
-    df = chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, latlon, cols)
-    return chained_acceleration(df, schema.ACCELERATION, None, latlon, None, cols)
+    df = chained_timedelta(df, schema.TIMEDELTA)
+    df = chained_distance(df, schema.DISTANCE, None, latlon, None)
+    df = chained_speed(df, schema.SPEED, None, latlon, None)
+    df = chained_direction(df, schema.DIRECTION, latlon)
+    df = chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, latlon)
+    return chained_acceleration(df, schema.ACCELERATION, None, latlon, None)

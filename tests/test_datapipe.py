@@ -287,13 +287,14 @@ def test_media_pipeline(spark):
     n_refs = refs.count()
     assert n_refs > 0
     with_bytes = media.synth_media_bytes(refs, n_bytes=32)
-    feats = media.extract_media_features(with_bytes, dim=8)
+    feats = media.extract_image_features(with_bytes)
     rows = feats.collect()
     assert len(rows) == n_refs
-    assert all(len(r["feature"]) == 8 for r in rows)
+    # the payloads are not images: every row is kept, with null features
+    assert all(r["img_w"] is None for r in rows)
     assert all(r["n_bytes"] == 32 for r in rows)
     # deterministic: same ref -> same hash
-    again = {r["media_ref"]: r["content_hash"] for r in media.extract_media_features(with_bytes, dim=8).collect()}
+    again = {r["media_ref"]: r["content_hash"] for r in media.extract_image_features(with_bytes).collect()}
     assert all(again[r["media_ref"]] == r["content_hash"] for r in rows)
 
 

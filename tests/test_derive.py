@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from movingspark import derive, ingest, queries, schema
-from movingspark.schema import TRAJ_COLS
 from tests import oracles
 from tests.conftest import rows_to_points
 
@@ -209,33 +208,32 @@ def test_all_kinematics_bit_identical_to_chained(spark, latlon):
         df = _seeded(spark, seed, latlon=latlon)
         assert_rows_identical(
             derive.add_all_kinematics(df, latlon=latlon),
-            oracles.chained_kinematics(df, latlon, TRAJ_COLS),
+            oracles.chained_kinematics(df, latlon),
         )
 
 
 @pytest.mark.parametrize("latlon", [False, True])
 def test_each_kinematic_with_units_and_names_bit_identical(spark, latlon):
-    c = TRAJ_COLS
     df = _seeded(spark, 3, latlon=latlon)
     for units in (None, ("km", "h"), ("km", "h", "min")):
         assert_rows_identical(
             derive.add_distance(df, "d", units=units, latlon=latlon),
-            oracles.chained_distance(df, "d", units, latlon, None, c),
+            oracles.chained_distance(df, "d", units, latlon, None),
         )
         assert_rows_identical(
             derive.add_speed(df, "v", units=units, latlon=latlon),
-            oracles.chained_speed(df, "v", units, latlon, None, c),
+            oracles.chained_speed(df, "v", units, latlon, None),
         )
         assert_rows_identical(
             derive.add_acceleration(df, "a", units=units, latlon=latlon),
-            oracles.chained_acceleration(df, "a", units, latlon, None, c),
+            oracles.chained_acceleration(df, "a", units, latlon, None),
         )
     assert_rows_identical(
-        derive.add_direction(df, "b", latlon=latlon), oracles.chained_direction(df, "b", latlon, c)
+        derive.add_direction(df, "b", latlon=latlon), oracles.chained_direction(df, "b", latlon)
     )
     assert_rows_identical(
         derive.add_angular_difference(df, "ad", latlon=latlon),
-        oracles.chained_angular_difference(df, "ad", latlon, c),
+        oracles.chained_angular_difference(df, "ad", latlon),
     )
 
 
@@ -243,7 +241,6 @@ def test_existing_speed_and_direction_columns_are_reused(spark):
     """The input's own `speed`/`direction` (here arbitrary values with
     nulls) feed acceleration and angular difference; `add_speed` /
     `add_direction` still overwrite them."""
-    c = TRAJ_COLS
     base = _seeded(spark, 4)
     h = F.abs(F.hash("traj_id", "t"))
     df = base.withColumn(schema.SPEED, F.when(h % 7 == 0, None).otherwise(h % 13 / 3.0)).withColumn(
@@ -251,11 +248,11 @@ def test_existing_speed_and_direction_columns_are_reused(spark):
     )
     cases = [
         (derive.add_acceleration(df, "acc", units=("km", "h")),
-         oracles.chained_acceleration(df, "acc", ("km", "h"), False, None, c)),
-        (derive.add_angular_difference(df, "ang"), oracles.chained_angular_difference(df, "ang", False, c)),
-        (derive.add_speed(df), oracles.chained_speed(df, schema.SPEED, None, False, None, c)),
-        (derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False, c)),
-        (derive.add_all_kinematics(df), oracles.chained_kinematics(df, False, c)),
+         oracles.chained_acceleration(df, "acc", ("km", "h"), False, None)),
+        (derive.add_angular_difference(df, "ang"), oracles.chained_angular_difference(df, "ang", False)),
+        (derive.add_speed(df), oracles.chained_speed(df, schema.SPEED, None, False, None)),
+        (derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False)),
+        (derive.add_all_kinematics(df), oracles.chained_kinematics(df, False)),
     ]
     for got, want in cases:
         assert_rows_identical(got, want)
@@ -267,22 +264,21 @@ def test_duplicate_timestamps_bit_identical(spark):
     and are null at the same rows with ANSI off."""
     from pyspark.errors import ArithmeticException
 
-    c = TRAJ_COLS
     df = _seeded(spark, 5, dup_t=True)
-    assert_rows_identical(derive.add_timedelta(df), oracles.chained_timedelta(df, schema.TIMEDELTA, c))
-    assert_rows_identical(derive.add_distance(df), oracles.chained_distance(df, schema.DISTANCE, None, False, None, c))
-    assert_rows_identical(derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False, c))
+    assert_rows_identical(derive.add_timedelta(df), oracles.chained_timedelta(df, schema.TIMEDELTA))
+    assert_rows_identical(derive.add_distance(df), oracles.chained_distance(df, schema.DISTANCE, None, False, None))
+    assert_rows_identical(derive.add_direction(df), oracles.chained_direction(df, schema.DIRECTION, False))
     assert_rows_identical(
-        derive.add_angular_difference(df), oracles.chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, False, c)
+        derive.add_angular_difference(df), oracles.chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, False)
     )
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     try:
         spark.conf.set("spark.sql.ansi.enabled", "true")
         for f in (derive.add_speed, oracles.chained_speed):
             with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
-                (f(df) if f is derive.add_speed else f(df, schema.SPEED, None, False, None, c)).collect()
+                (f(df) if f is derive.add_speed else f(df, schema.SPEED, None, False, None)).collect()
         spark.conf.set("spark.sql.ansi.enabled", "false")
-        assert_rows_identical(derive.add_all_kinematics(df), oracles.chained_kinematics(df, False, c))
+        assert_rows_identical(derive.add_all_kinematics(df), oracles.chained_kinematics(df, False))
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
 
@@ -292,7 +288,7 @@ def test_length_consumers_match_lag_segment_sum(spark, latlon):
     """get_length, traj_summary and filter_min_length sum the same
     per-row distance the lag-only segment formulation gave."""
     df = _seeded(spark, 6, latlon=latlon)
-    want = df.withColumn("s", oracles.seg_dist_lag(latlon, TRAJ_COLS)).groupBy("traj_id").agg(
+    want = df.withColumn("s", oracles.seg_dist_lag(latlon)).groupBy("traj_id").agg(
         F.sum("s").alias("length")
     )
     assert_rows_identical(queries.get_length(df, latlon=latlon), want)

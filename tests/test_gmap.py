@@ -75,6 +75,42 @@ def test_grouped_apply_filters_and_empty_groups(spark):
     assert not any(r[0] == "2" for r in got)
 
 
+def test_each_group_arrives_time_sorted_with_a_fresh_range_index(spark):
+    """The contract the per-trajectory kernels rely on instead of
+    sorting again: one whole trajectory per call, rows in ascending t,
+    index 0..n-1; here from input rows in reverse t order spread over
+    several partitions, with groups that span several Arrow batches
+    (23 rows) and groups that share one (3 rows)."""
+
+    def check(pdf: pd.DataFrame) -> pd.DataFrame:
+        assert pdf["t"].is_monotonic_increasing, pdf["t"].tolist()
+        assert isinstance(pdf.index, pd.RangeIndex) and pdf.index.start == 0 and pdf.index.step == 1
+        assert pdf["traj_id"].nunique() == 1
+        return pd.DataFrame(
+            {
+                "traj_id": [pdf["traj_id"].iloc[0]],
+                "n": [len(pdf)],
+                "x_first": [float(pdf["x"].iloc[0])],
+                "x_last": [float(pdf["x"].iloc[-1])],
+                "y_sum": [float(pdf["y"].sum())],
+            }
+        )
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        for n_trajs, rows_per in ((5, 23), (12, 3)):
+            df = spark.createDataFrame(_mk_points(spark, n_trajs, rows_per).toPandas().iloc[::-1])
+            assert df.rdd.getNumPartitions() > 1
+            got = sorted(map(tuple, grouped_apply_sorted(df, check, SCHEMA).collect()))
+            # x rises with t in every trajectory, so first/last x are the time ends
+            y_sum = float(sum(i % 5 for i in range(rows_per)))
+            want = [(str(i), rows_per, i * 100.0, i * 100.0 + rows_per - 1, y_sum) for i in range(n_trajs)]
+            assert got == sorted(want)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 # One worker on local[1], so the addPyFile task runs in the worker the
 # grouped-map query already patched (pyworker.prepare).
 ADDPYFILE_JOB = """
@@ -108,7 +144,7 @@ def worker_state(probe):
 df = spark.createDataFrame(
     [(str(i % 3), i, float(i), 0.0) for i in range(30)], "traj_id string, t long, x double, y double"
 )
-n_groups = grouped_apply_sorted(df, lambda pdf: pdf.head(1), df.schema, order="t").count()
+n_groups = grouped_apply_sorted(df, lambda pdf: pdf.head(1), df.schema).count()
 schema = "pid long, patched boolean, value long"
 before = df.coalesce(1).mapInPandas(worker_state(lambda: -1), schema).collect()
 

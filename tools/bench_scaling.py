@@ -33,7 +33,7 @@ def run_one(cpus: int, n_docs: int, iters: int) -> dict:
 
     from movingspark import ingest, joins
     from movingspark.session import tune_builder
-    from perfbench.harness import cpu_fractions, cpu_jiffies
+    from perfbench.harness import cpu_fractions, cpu_jiffies, force
 
     spark = (
         tune_builder(
@@ -47,9 +47,6 @@ def run_one(cpus: int, n_docs: int, iters: int) -> dict:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
 
     docs = ingest.synth_interleaved_docs(spark, n_docs).repartition(cpus * 4).persist()
     docs.count()
@@ -90,9 +87,6 @@ def main():
     ap.add_argument("--levels", type=str, default="8,32",
                     help="N,4N parallelism pair (e.g. 2,8 or 8,32)")
     ap.add_argument("--one", type=int, default=None, help="internal: run a single parallelism level")
-    ap.add_argument("--taskset", action="store_true", default=True,
-                    help="pin each leg to its core count (honest N-core box emulation)")
-    ap.add_argument("--no-taskset", dest="taskset", action="store_false")
     args = ap.parse_args()
 
     if args.one is not None:
@@ -109,17 +103,15 @@ def main():
     results = {}
     for _ in range(args.rounds):
         for cpus in (lo, hi):
-            cmd = [sys.executable, os.path.abspath(__file__), "--one", str(cpus),
-                   "--docs", str(args.docs), "--iters", str(args.iters)]
-            if args.taskset:
-                # pin the WHOLE process tree (JVM worker threads AND its
-                # GC/shuffle-IO/codegen threads) to exactly `cpus` cores.
-                # Without this a local[2] JVM on a 32-core host runs its
-                # background threads on the other 30 cores, inflating the
-                # low-parallelism leg and understating scaling efficiency
-                # — the 4N leg gets 4x the cores of the N leg in EVERY
-                # resource, which is what N->4N executors means.
-                cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+            # pin the WHOLE process tree (JVM worker threads AND its
+            # GC/shuffle-IO/codegen threads) to exactly `cpus` cores.
+            # Without this a local[2] JVM on a 32-core host runs its
+            # background threads on the other 30 cores, inflating the
+            # low-parallelism leg and understating scaling efficiency
+            # — the 4N leg gets 4x the cores of the N leg in EVERY
+            # resource, which is what N->4N executors means.
+            cmd = ["taskset", "-c", f"0-{cpus - 1}", sys.executable, os.path.abspath(__file__),
+                   "--one", str(cpus), "--docs", str(args.docs), "--iters", str(args.iters)]
             out = subprocess.run(cmd, capture_output=True, text=True, check=True)
             line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
             r = json.loads(line)

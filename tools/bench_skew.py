@@ -45,7 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from perfbench.harness import cpu_fractions, cpu_jiffies
+from perfbench.harness import cpu_fractions, cpu_jiffies, force
 
 AOI = [(-60.0, 60.0), (60.0, 60.0), (60.0, -60.0), (-60.0, -60.0)]
 
@@ -91,9 +91,6 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
 
     n = args.points
     skewed = ingest.synth_skewed_points(spark, n, hot_frac=0.30).persist()
