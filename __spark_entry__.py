@@ -25,6 +25,7 @@ from movingspark import asof, proximity
 from movingspark import resample as resample_mod
 from movingspark import io as mio, overlay, queries as q, smooth, split, stops
 from movingspark.ingest import EVENTS_POINTS_ORACLE_FULL, docs_oracle_sql
+from movingspark.schema import local_frame
 from movingspark.pinned_params import (
     ANGLE_MIN_ANGLE,
     ANGLE_MIN_SPEED,
@@ -1149,7 +1150,7 @@ def q_pipeline_tile_speed(spark, sf_dir):
         + (F.col("y") - F.lag("y").over(w)) * (F.col("y") - F.lag("y").over(w))
     )
     spd = rs.withColumn("__v", dist / dt).filter(F.col("__v").isNotNull())
-    cell = cells.cell_id_expr(F.col("x"), F.col("y"), CELL_RES, CELL_BOUNDS)
+    cell = cells.cell_id_expr("x", "y", CELL_RES, CELL_BOUNDS)
     return (
         spd.select(cell.alias("cell"), "__v")
         .groupBy("cell")
@@ -1579,7 +1580,7 @@ SELECT traj_id, ROUND(ROUND(MIN(d), 9), {R}) AS min_distance FROM dd GROUP BY tr
 
 def q_knn(spark, sf_dir):
     pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
-    cents = spark.createDataFrame(KNN_CENTROIDS, "cluster_id string, cx double, cy double")
+    cents = local_frame(spark, KNN_CENTROIDS, "cluster_id string, cx double, cy double")
     out = joins.knn_join(pts, cents, k=1)
     return _round(out.select("traj_id", "t", "x", "y", "cluster_id", "dist"), ["dist"])
 
@@ -1603,7 +1604,7 @@ def q_knn_top3(spark, sf_dir):
     ranks (row_number window path of joins.knn_join; ties broken by
     centroid id)."""
     pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
-    cents = spark.createDataFrame(KNN_CENTROIDS, "cluster_id string, cx double, cy double")
+    cents = local_frame(spark, KNN_CENTROIDS, "cluster_id string, cx double, cy double")
     out = joins.knn_join(pts, cents, k=3)
     return _round(
         out.select("traj_id", "t", "x", "y", "cluster_id", "dist", "knn_rank"), ["dist"]
@@ -1637,7 +1638,8 @@ def q_knn_latlon(spark, sf_dir):
         F.col("x").alias("x"),
         (F.col("y") * 0.8 - 40.0).alias("y"),
     )
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(c, cx, cy * 0.8 - 40.0) for c, cx, cy in KNN_CENTROIDS],
         "cluster_id string, cx double, cy double",
     )
@@ -1711,7 +1713,7 @@ def q_flows(spark, sf_dir):
         .select("traj_id", "t", "x", "y")
         .withColumn("obj_id", F.col("traj_id"))
     )
-    cents = spark.createDataFrame(KNN_CENTROIDS, "cluster_id string, cx double, cy double")
+    cents = local_frame(spark, KNN_CENTROIDS, "cluster_id string, cx double, cy double")
     out = aggregate.compute_flows(pts, cents)
     return out.select(
         "from_cluster", "to_cluster", "from_x", "from_y", "to_x", "to_y", "weight", "obj_weight"
@@ -1757,7 +1759,7 @@ def q_visit_counts(spark, sf_dir):
     from movingspark import aggregate
 
     pts = _events(spark, sf_dir).select("traj_id", "t", "x", "y")
-    cents = spark.createDataFrame(KNN_CENTROIDS, "cluster_id string, cx double, cy double")
+    cents = local_frame(spark, KNN_CENTROIDS, "cluster_id string, cx double, cy double")
     return aggregate.cell_visit_counts(pts, cents)
 
 

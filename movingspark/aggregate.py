@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, pyworker
-from movingspark.schema import C_EARTH
+from movingspark.schema import C_EARTH, local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -192,9 +192,7 @@ def cluster_significant_points(
     rows = [
         (f"c{i}", float(cx), float(cy), int(cn)) for i, (cx, cy, cn) in enumerate(clusters)
     ]
-    return sig.sparkSession.createDataFrame(
-        rows, "cluster_id string, cx double, cy double, n long"
-    )
+    return local_frame(sig.sparkSession, rows, "cluster_id string, cx double, cy double, n long")
 
 
 def _grid_cluster(points, weights, max_distance, latlon, cluster):
@@ -422,8 +420,8 @@ def od_matrix(df: DataFrame, res: int, bounds=None) -> DataFrame:
         F.min_by(F.struct(x.alias("x"), y.alias("y")), t).alias("__o"),
         F.max_by(F.struct(x.alias("x"), y.alias("y")), t).alias("__d"),
     )
-    o_cell = _cells.cell_id_expr(F.col("__o.x"), F.col("__o.y"), res, bounds)
-    d_cell = _cells.cell_id_expr(F.col("__d.x"), F.col("__d.y"), res, bounds)
+    o_cell = _cells.cell_id_expr("__o.x", "__o.y", res, bounds)
+    d_cell = _cells.cell_id_expr("__d.x", "__d.y", res, bounds)
     return (
         per_trip.select(o_cell.alias("origin_cell"), d_cell.alias("dest_cell"))
         .groupBy("origin_cell", "dest_cell")

@@ -8,7 +8,10 @@ bits. Properties used by the join layer:
 
 - pure arithmetic -> computable as a Spark SQL column expression
   (JVM-side, codegen, pushdown-friendly) AND as ANSI SQL for the
-  DuckDB oracle AND in numpy for driver-side polygon covers;
+  DuckDB oracle AND in numpy for driver-side polygon covers. The Spark
+  builders take SQL operand text ("x", "__o.x", "shiftright(code, 8)"),
+  compose the whole expression as text and parse it with one F.expr,
+  so a cell id costs one Py4J call to build, not one per operation;
 - Z-order keys cluster spatially close cells -> range partitioning on
   cell id gives spatial locality (tile rollups, Iceberg sort orders);
 - parent cell = child id with the low 2 bits of the interleave dropped
@@ -19,6 +22,8 @@ This replaces the reference's R-tree candidate filter
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import Column
@@ -47,32 +52,57 @@ def cell_id_np(x: np.ndarray, y: np.ndarray, res: int, bounds=WORLD) -> np.ndarr
     return _interleave_bits_np(ix, iy, res)
 
 
-def cell_ixiy_expr(x: Column, y: Column, res: int, bounds=WORLD):
+def sql_double(v) -> str:
+    """Exact Spark SQL text of a float64 literal: the shortest repr that
+    round-trips, as a DOUBLE literal (parenthesised when negative so it
+    can follow a binary minus); NaN and +-Inf through a string cast."""
+    v = float(v)
+    if math.isfinite(v):
+        s = repr(v) + "D"
+        return f"({s})" if s.startswith("-") else s
+    name = "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def sql_string(s) -> str:
+    """Spark SQL string literal of `s` (backslash and quote escaped)."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ixiy_text(x: str, y: str, res: int, bounds=WORLD) -> tuple[str, str]:
     minx, miny, maxx, maxy = bounds
     n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((x - F.lit(float(minx))) / F.lit(maxx - minx) * n), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((y - F.lit(float(miny))) / F.lit(maxy - miny) * n), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return ix.cast("long"), iy.cast("long")
+
+    def axis(v, lo, span):
+        grid = f"floor(((({v}) - {sql_double(lo)}) / {sql_double(span)}) * {n})"
+        return f"CAST(least(greatest({grid}, 0), {n - 1}) AS BIGINT)"
+
+    return axis(x, minx, maxx - minx), axis(y, miny, maxy - miny)
 
 
-def interleave_expr(ix: Column, iy: Column, res: int) -> Column:
-    """Morton interleave of integer grid coords as a Spark expression
-    (bit k of ix -> 2k+1, of iy -> 2k; lock-step with
-    _interleave_bits_np and interleave_sql)."""
-    out = F.lit(0).cast("long")
+def _interleave_text(ix: str, iy: str, res: int) -> str:
+    out = "CAST(0 AS BIGINT)"
     for k in range(res):
         out = (
-            out
-            + F.shiftleft(F.shiftright(ix, k) % 2, 2 * k + 1)
-            + F.shiftleft(F.shiftright(iy, k) % 2, 2 * k)
+            f"(({out} + shiftleft((shiftright(({ix}), {k}) % 2), {2 * k + 1}))"
+            f" + shiftleft((shiftright(({iy}), {k}) % 2), {2 * k}))"
         )
     return out
+
+
+def cell_ixiy_expr(x: str, y: str, res: int, bounds=WORLD) -> tuple[Column, Column]:
+    """Clamped integer grid coords (ix, iy) of SQL operands `x`, `y`
+    (column names or any Spark SQL expression text, e.g. "__o.x"), each
+    one Column parsed from one SQL text."""
+    ix, iy = _ixiy_text(x, y, res, bounds)
+    return F.expr(ix), F.expr(iy)
+
+
+def interleave_expr(ix: str, iy: str, res: int) -> Column:
+    """Morton interleave of integer grid-coord SQL operands as one
+    Column parsed from one SQL text (bit k of ix -> 2k+1, of iy -> 2k;
+    lock-step with _interleave_bits_np and interleave_sql)."""
+    return F.expr(_interleave_text(ix, iy, res))
 
 
 def interleave_sql(ix: str, iy: str, res: int) -> str:
@@ -95,8 +125,11 @@ def cell_ixiy_sql(x: str, y: str, res: int, bounds=WORLD) -> tuple[str, str]:
     return ix, iy
 
 
-def cell_id_expr(x: Column, y: Column, res: int, bounds=WORLD) -> Column:
-    """Z-order cell id as a pure Spark SQL expression (no UDF).
+def cell_id_expr(x: str, y: str, res: int, bounds=WORLD) -> Column:
+    """Z-order cell id of SQL operands `x`, `y` as a pure Spark SQL
+    expression (no UDF): the whole interleave is composed as text and
+    parsed by one F.expr, so building it costs one Py4J call rather than
+    one per Column operation.
 
     The result is wrapped in coalesce(..., -1) to make the column
     NON-NULLABLE. This is load-bearing for performance, not cosmetics:
@@ -109,8 +142,8 @@ def cell_id_expr(x: Column, y: Column, res: int, bounds=WORLD) -> Column:
     only null when x or y is null, which the -1 sentinel maps outside
     every valid cover cell (cover ids are >= 0), so joins/rollups treat
     malformed rows as no-match either way."""
-    ix, iy = cell_ixiy_expr(x, y, res, bounds)
-    return F.coalesce(interleave_expr(ix, iy, res), F.lit(-1).cast("long"))
+    ix, iy = _ixiy_text(x, y, res, bounds)
+    return F.expr(f"coalesce({_interleave_text(ix, iy, res)}, CAST(-1 AS BIGINT))")
 
 
 def cell_id_sql(x: str, y: str, res: int, bounds=WORLD) -> str:

@@ -64,7 +64,7 @@ def together_epochs(
     if ep_us <= 0:
         raise ValueError("epoch_s must be positive")
 
-    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
+    ix, iy = cells.cell_ixiy_expr("x", "y", res, bounds)
     base = df.select(
         F.col("traj_id").alias("__traj"),
         F.floor(F.unix_micros(F.col("t")) / F.lit(ep_us)).alias("__e"),

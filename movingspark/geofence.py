@@ -36,7 +36,7 @@ def geofence_events(df: DataFrame, polygon, holes=None) -> DataFrame:
     (traj_id, t, x, y, event, t_prev) where `event` is 'enter'|'exit',
     `t` the first observation on the new side and `t_prev` the last
     observation on the old side (the crossing happened in between)."""
-    inside = pip_expr(F.col("x"), F.col("y"), polygon, holes)
+    inside = pip_expr("x", "y", polygon, holes)
     w = Window.partitionBy("traj_id").orderBy("t")
     flagged = (
         df.withColumn("__in", inside)

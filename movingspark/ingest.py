@@ -376,6 +376,6 @@ def geotag_media_spans(docs: DataFrame, res: int, bounds=None) -> DataFrame:
     )
     cell = F.when(
         F.col("x").isNotNull(),
-        _cells.cell_id_expr(F.col("x"), F.col("y"), res, bounds),
+        _cells.cell_id_expr("x", "y", res, bounds),
     )
     return filled.select("doc_id", "offset", "media_ref", "t", "x", "y", cell.alias("cell"))

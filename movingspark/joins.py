@@ -7,10 +7,21 @@ Design for 100 TB / 10^12 docs:
   rows and broadcast; the point table is NEVER shuffled — each point
   computes its cell (pure SQL expression) and probes the broadcast map.
   Cells fully inside a polygon skip refinement; boundary cells refine
-  with a vectorized numpy ray-casting pandas UDF. Hot cells therefore
-  cannot skew a shuffle (there is none); downstream rollups by cell
-  combine map-side (count/sum/count-distinct), so a hot cell reaches the
-  reducer as at most one partial row per map task.
+  with an unrolled ray-cast SQL predicate (or, past
+  _PIP_EXPR_MAX_VERTS vertices, a vectorized numpy pandas UDF). Hot
+  cells therefore cannot skew a shuffle (there is none); downstream
+  rollups by cell combine map-side (count/sum/count-distinct), so a hot
+  cell reaches the reducer as at most one partial row per map task.
+
+- **Plan building stays off the Py4J path.** Every generated
+  expression (cell id, ray cast, segment test, the join's whole refine
+  filter) is composed as one SQL text over SQL operand text ("x",
+  "__px") with exact double literals (cells.sql_double) and parsed by
+  one F.expr: one Py4J call per expression (a Column tree built one
+  operation at a time costs a round trip per node, about 10 000 for a
+  four-hexagon join). The cover frame is handed to Spark as an Arrow
+  table, so it is a LocalRelation: reading it runs no job and no
+  Python worker.
 
 - **kNN** against a small centroid/cluster table is a broadcast
   cross-join + per-point top-k (min_by for k=1).
@@ -20,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,7 +42,7 @@ from movingspark.derive import dist_expr
 
 def with_cell(df: DataFrame, res: int, bounds=cells.WORLD, name: str = "cell") -> DataFrame:
     """Stamp the Z-order cell id (pure SQL, codegen'd)."""
-    return df.withColumn(name, cells.cell_id_expr(F.col("x"), F.col("y"), res, bounds))
+    return df.withColumn(name, cells.cell_id_expr("x", "y", res, bounds))
 
 
 def _norm_poly(verts):
@@ -48,9 +60,10 @@ def _norm_poly(verts):
 
 def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> DataFrame:
     """polygons: iterable of (poly_id, vertices ndarray | (outer, holes)).
-    Driver-side cover -> small DataFrame (cell, poly_id, full) to
-    broadcast. With holes, cells whose bbox touches a hole's bbox are
-    conservatively demoted from full to boundary (they refine exactly)."""
+    Driver-side cover -> small LocalRelation frame (cell, poly_id, full)
+    to broadcast, built from one Arrow table. With holes, cells whose
+    bbox touches a hole's bbox are conservatively demoted from full to
+    boundary (they refine exactly)."""
     ids, covers, fulls = [], [np.empty(0, np.int64)], [np.empty(0, bool)]
     for poly_id, verts in polygons:
         outer, holes = _norm_poly(verts)
@@ -68,8 +81,8 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
         ids += [str(poly_id)] * len(cell_ids)
         covers.append(cell_ids)
         fulls.append(full)
-    rows = zip(np.concatenate(covers).tolist(), ids, np.concatenate(fulls).tolist())
-    return spark.createDataFrame(list(rows), "cell long, poly_id string, full boolean")
+    table = pa.table({"cell": np.concatenate(covers), "poly_id": ids, "full": np.concatenate(fulls)})
+    return spark.createDataFrame(table, "cell long, poly_id string, full boolean")
 
 
 # polygons with at most this many total vertices refine via a generated
@@ -78,49 +91,56 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
 _PIP_EXPR_MAX_VERTS = 256
 
 
-def _pip_ring_expr(px, py, ring) -> tuple:
-    """One ring's even-odd ray cast as (inside, on_edge) codegen'd
-    column expressions — exact arithmetic of kernels._ray_cast_ring."""
+def _pip_ring_text(px: str, py: str, ring) -> tuple[str, str]:
+    """One ring's even-odd ray cast as (inside, on_edge) SQL texts —
+    exact arithmetic of kernels._ray_cast_ring."""
     ring = np.asarray(ring, dtype=np.float64)
     if np.array_equal(ring[0], ring[-1]):
         ring = ring[:-1]
-    inside = F.lit(False)
-    on_edge = F.lit(False)
+    d = cells.sql_double
+    inside = on_edge = "false"
     k = len(ring)
     for i in range(k):
         xa, ya = float(ring[i, 0]), float(ring[i, 1])
         xb, yb = float(ring[(i + 1) % k, 0]), float(ring[(i + 1) % k, 1])
-        cond = (F.lit(ya) > py) != (F.lit(yb) > py)
+        cond = f"(({d(ya)} > {py}) != ({d(yb)} > {py}))"
         denom = (yb - ya) if yb != ya else 1.0
-        xint = F.lit(xa) + ((py - F.lit(ya)) * F.lit(xb - xa)) / F.lit(denom)
-        inside = inside != (cond & (px < xint))  # boolean != == XOR
-        cross = F.lit(xb - xa) * (py - F.lit(ya)) - F.lit(yb - ya) * (px - F.lit(xa))
+        xint = f"({d(xa)} + ((({py} - {d(ya)}) * {d(xb - xa)}) / {d(denom)}))"
+        inside = f"({inside} != ({cond} AND ({px} < {xint})))"  # boolean != is XOR
+        cross = f"(({d(xb - xa)} * ({py} - {d(ya)})) - ({d(yb - ya)} * ({px} - {d(xa)})))"
         within = (
-            (F.abs(cross) < F.lit(1e-12))
-            & (px >= F.lit(min(xa, xb) - 1e-12))
-            & (px <= F.lit(max(xa, xb) + 1e-12))
-            & (py >= F.lit(min(ya, yb) - 1e-12))
-            & (py <= F.lit(max(ya, yb) + 1e-12))
+            f"(((((abs({cross}) < {d(1e-12)})"
+            f" AND ({px} >= {d(min(xa, xb) - 1e-12)}))"
+            f" AND ({px} <= {d(max(xa, xb) + 1e-12)}))"
+            f" AND ({py} >= {d(min(ya, yb) - 1e-12)}))"
+            f" AND ({py} <= {d(max(ya, yb) + 1e-12)}))"
         )
-        on_edge = on_edge | within
+        on_edge = f"({on_edge} OR {within})"
     return inside, on_edge
 
 
-def pip_expr(px, py, poly, holes=None) -> F.Column:
-    """Generated-SQL ray-cast point-in-polygon predicate — the exact
-    arithmetic of kernels.point_in_polygon (even-odd rule + on-edge
-    tolerance, boundary counts as inside) unrolled over the driver-known
-    vertex list into a codegen'd column expression. IEEE float64 ops in
-    the same order as the numpy kernel => bit-identical verdicts.
+def _pip_text(px: str, py: str, poly, holes=None) -> str:
+    px, py = f"({px})", f"({py})"
+    inside, on_edge = _pip_ring_text(px, py, poly)
+    for hole in holes or []:
+        h_in, h_edge = _pip_ring_text(px, py, hole)
+        inside = f"({inside} != {h_in})"
+        on_edge = f"({on_edge} OR {h_edge})"
+    return f"({inside} OR {on_edge})"
+
+
+def pip_expr(px: str, py: str, poly, holes=None) -> F.Column:
+    """Generated-SQL ray-cast point-in-polygon predicate over SQL
+    operands `px`, `py` — the exact arithmetic of
+    kernels.point_in_polygon (even-odd rule + on-edge tolerance,
+    boundary counts as inside) unrolled over the driver-known vertex
+    list into one SQL text and parsed by one F.expr. IEEE float64 ops in
+    the same order as the numpy kernel, with every vertex written as its
+    exact double literal => bit-identical verdicts.
 
     holes: optional interior rings (shapely interiors) — crossing parity
     XORs over every ring, hole boundaries still count as inside."""
-    inside, on_edge = _pip_ring_expr(px, py, poly)
-    for hole in holes or []:
-        h_in, h_edge = _pip_ring_expr(px, py, hole)
-        inside = inside != h_in
-        on_edge = on_edge | h_edge
-    return inside | on_edge
+    return F.expr(_pip_text(px, py, poly, holes))
 
 
 def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:
@@ -145,13 +165,14 @@ def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WO
 
     n_verts = sum(len(outer) + sum(len(h) for h in holes) for outer, holes in poly_map.values())
     if n_verts <= _PIP_EXPR_MAX_VERTS:
-        # single-pass JVM refine: CASE over poly_id -> unrolled ray-cast
+        # single-pass JVM refine: OR over poly_id -> unrolled ray-cast,
+        # left-deep by explicit parentheses (the parser balances a bare
+        # OR chain, which would change the plan)
         pred = None
         for pid, (outer, holes) in poly_map.items():
-            hit = pip_expr(F.col("x"), F.col("y"), outer, holes)
-            branch = (F.col("poly_id") == F.lit(pid)) & hit
-            pred = branch if pred is None else (pred | branch)
-        return joined.filter(F.col("full") | pred).drop("full", "__cell")
+            branch = f"((`poly_id` = {cells.sql_string(pid)}) AND {_pip_text('x', 'y', outer, holes)})"
+            pred = branch if pred is None else f"({pred} OR {branch})"
+        return joined.filter(F.expr(f"(`full` OR {pred})")).drop("full", "__cell")
 
     @F.pandas_udf(T.BooleanType())
     def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
@@ -184,34 +205,37 @@ def intersecting_traj_ids(df: DataFrame, polygon, res: int = 8, bounds=cells.WOR
     return hits.select("traj_id").distinct()
 
 
-def seg_intersects_expr(ax, ay, bx, by, poly) -> F.Column:
-    """Codegen'd predicate: segment (ax,ay)->(bx,by) intersects the
-    driver-known polygon (interior or boundary — shapely `intersects`
-    semantics). Endpoint-inside via the unrolled ray-cast (pip_expr) OR
-    a crossing/touch of any polygon edge (orientation tests + per-pair
+def seg_intersects_expr(ax: str, ay: str, bx: str, by: str, poly) -> F.Column:
+    """Codegen'd predicate over SQL operands: segment (ax,ay)->(bx,by)
+    intersects the driver-known polygon (interior or boundary — shapely
+    `intersects` semantics), as one SQL text parsed by one F.expr.
+    Endpoint-inside via the unrolled ray-cast (pip_expr) OR a
+    crossing/touch of any polygon edge (orientation tests + per-pair
     bbox overlap, which rejects collinear-but-disjoint pairs). Same
     IEEE arithmetic order as kernels.segments_intersect_polygon so the
     Arrow fallback and the SQL oracle agree bit-for-bit."""
     poly = np.asarray(poly, dtype=np.float64)
     if np.array_equal(poly[0], poly[-1]):
         poly = poly[:-1]
-    hit = pip_expr(ax, ay, poly) | pip_expr(bx, by, poly)
+    ax, ay, bx, by = (f"({v})" for v in (ax, ay, bx, by))
+    d = cells.sql_double
+    hit = f"({_pip_text(ax, ay, poly)} OR {_pip_text(bx, by, poly)})"
     k = len(poly)
     for i in range(k):
         px, py = float(poly[i, 0]), float(poly[i, 1])
         qx, qy = float(poly[(i + 1) % k, 0]), float(poly[(i + 1) % k, 1])
-        d1 = (bx - ax) * (F.lit(py) - ay) - (by - ay) * (F.lit(px) - ax)
-        d2 = (bx - ax) * (F.lit(qy) - ay) - (by - ay) * (F.lit(qx) - ax)
-        d3 = F.lit(qx - px) * (ay - F.lit(py)) - F.lit(qy - py) * (ax - F.lit(px))
-        d4 = F.lit(qx - px) * (by - F.lit(py)) - F.lit(qy - py) * (bx - F.lit(px))
+        d1 = f"((({bx} - {ax}) * ({d(py)} - {ay})) - (({by} - {ay}) * ({d(px)} - {ax})))"
+        d2 = f"((({bx} - {ax}) * ({d(qy)} - {ay})) - (({by} - {ay}) * ({d(qx)} - {ax})))"
+        d3 = f"(({d(qx - px)} * ({ay} - {d(py)})) - ({d(qy - py)} * ({ax} - {d(px)})))"
+        d4 = f"(({d(qx - px)} * ({by} - {d(py)})) - ({d(qy - py)} * ({bx} - {d(px)})))"
         bbox = (
-            (F.least(ax, bx) <= F.lit(max(px, qx)))
-            & (F.greatest(ax, bx) >= F.lit(min(px, qx)))
-            & (F.least(ay, by) <= F.lit(max(py, qy)))
-            & (F.greatest(ay, by) >= F.lit(min(py, qy)))
+            f"((((least({ax}, {bx}) <= {d(max(px, qx))})"
+            f" AND (greatest({ax}, {bx}) >= {d(min(px, qx))}))"
+            f" AND (least({ay}, {by}) <= {d(max(py, qy))}))"
+            f" AND (greatest({ay}, {by}) >= {d(min(py, qy))}))"
         )
-        hit = hit | (bbox & (d1 * d2 <= 0) & (d3 * d4 <= 0))
-    return hit
+        hit = f"({hit} OR (({bbox} AND (({d1} * {d2}) <= 0)) AND (({d3} * {d4}) <= 0)))"
+    return F.expr(hit)
 
 
 def _traj_segments(df: DataFrame) -> DataFrame:
@@ -239,16 +263,16 @@ def intersecting_traj_ids_line(df: DataFrame, polygon) -> DataFrame:
     seg = _traj_segments(df)
     minx, miny = float(poly[:, 0].min()), float(poly[:, 1].min())
     maxx, maxy = float(poly[:, 0].max()), float(poly[:, 1].max())
-    x, y, px, py = F.col("x"), F.col("y"), F.col("__px"), F.col("__py")
+    d = cells.sql_double
     cand = seg.filter(
-        (F.least(px, x) <= F.lit(maxx))
-        & (F.greatest(px, x) >= F.lit(minx))
-        & (F.least(py, y) <= F.lit(maxy))
-        & (F.greatest(py, y) >= F.lit(miny))
+        F.expr(
+            f"((((least(__px, x) <= {d(maxx)}) AND (greatest(__px, x) >= {d(minx)}))"
+            f" AND (least(__py, y) <= {d(maxy)})) AND (greatest(__py, y) >= {d(miny)}))"
+        )
     )
     n_verts = len(poly)
     if 2 * n_verts <= _PIP_EXPR_MAX_VERTS:
-        hits = cand.filter(seg_intersects_expr(px, py, x, y, poly))
+        hits = cand.filter(seg_intersects_expr("__px", "__py", "x", "y", poly))
     else:
         @F.pandas_udf(T.BooleanType())
         def refine(pxs: pd.Series, pys: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
@@ -259,7 +283,7 @@ def intersecting_traj_ids_line(df: DataFrame, polygon) -> DataFrame:
                 )
             )
 
-        hits = cand.filter(refine(px, py, x, y))
+        hits = cand.filter(refine(F.col("__px"), F.col("__py"), F.col("x"), F.col("y")))
     return hits.select("traj_id").distinct()
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from movingspark import kernels, pyworker
+from movingspark.schema import local_frame
 
 
 def _traj_coords(df: DataFrame, key: str) -> DataFrame:
@@ -52,9 +53,7 @@ def trajectory_pair_metrics(df: DataFrame, pairs) -> DataFrame:
     list of id tuples. Output: (traj_a, traj_b, min_distance, hausdorff)."""
     spark = df.sparkSession
     if not isinstance(pairs, DataFrame):
-        pairs = spark.createDataFrame(
-            [(str(a), str(b)) for a, b in pairs], "traj_a string, traj_b string"
-        )
+        pairs = local_frame(spark, [(str(a), str(b)) for a, b in pairs], "traj_a string, traj_b string")
     a = _traj_coords(df, "traj_a")
     b = _traj_coords(df, "traj_b")
     j = a.join(F.broadcast(pairs), "traj_a").join(b, "traj_b")

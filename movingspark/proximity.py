@@ -61,7 +61,7 @@ def proximity_pairs(
     if tol_us <= 0:
         raise ValueError("max_dt_s must be positive")
 
-    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
+    ix, iy = cells.cell_ixiy_expr("x", "y", res, bounds)
     base = df.select(
         F.col("traj_id").alias("__traj"),
         F.unix_micros(F.col("t")).alias("__tu"),

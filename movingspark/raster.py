@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from movingspark import cells
 from movingspark.components import connected_components
+from movingspark.schema import local_frame
 
 __all__ = ["rasterize", "vectorize_tiles", "raster_regions", "corridor_cells", "hotspot_gi"]
 
@@ -50,7 +51,7 @@ def rasterize(
     n_points, n_trajs[, sum_value]). Same single map-side-combinable
     aggregation as `joins.tile_rollup`, but keeps (ix, iy) alongside the
     Morton cell id so downstream adjacency needs no bit de-interleave."""
-    ix, iy = cells.cell_ixiy_expr(F.col("x"), F.col("y"), res, bounds)
+    ix, iy = cells.cell_ixiy_expr("x", "y", res, bounds)
     aggs = [
         F.count("*").alias("n_points"),
         F.count_distinct("traj_id").alias("n_trajs"),
@@ -60,7 +61,7 @@ def rasterize(
     return (
         df.withColumn("ix", ix)
         .withColumn("iy", iy)
-        .withColumn("cell", cells.interleave_expr(F.col("ix"), F.col("iy"), res))
+        .withColumn("cell", cells.interleave_expr("ix", "iy", res))
         .groupBy("ix", "iy", "cell")
         .agg(*aggs)
     )
@@ -137,7 +138,8 @@ def _regions_local(spark, ras: DataFrame, res: int, bounds) -> DataFrame:
         )
         for a in agg.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "region_id long, n_cells long, n_points long, "
         "x_min double, y_min double, x_max double, y_max double",
@@ -261,8 +263,8 @@ def corridor_cells(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
         )
         .filter(F.col("x0").isNotNull())
     )
-    ix0, iy0 = cells.cell_ixiy_expr(F.col("x0"), F.col("y0"), res, bounds)
-    ix1, iy1 = cells.cell_ixiy_expr(F.col("x1"), F.col("y1"), res, bounds)
+    ix0, iy0 = cells.cell_ixiy_expr("x0", "y0", res, bounds)
+    ix1, iy1 = cells.cell_ixiy_expr("x1", "y1", res, bounds)
     dx, dy = F.col("x1") - F.col("x0"), F.col("y1") - F.col("y0")
     coef = seg.select(
         "traj_id",
@@ -312,9 +314,10 @@ def corridor_cells(df: DataFrame, res: int, bounds=cells.WORLD) -> DataFrame:
 
     codes = F.transform(F.sequence(F.lit(1), k - F.lit(1)), packed_cell)
     exploded = withts.select("traj_id", F.explode(codes).alias("code"))
-    gx = F.shiftright(F.col("code"), res)
-    gy = F.col("code").bitwiseAND(F.lit(n - 1))
-    cell = F.coalesce(cells.interleave_expr(gx, gy, res), F.lit(-1).cast("long"))
+    cell = F.coalesce(
+        cells.interleave_expr(f"shiftright(code, {res})", f"(code & {n - 1})", res),
+        F.lit(-1).cast("long"),
+    )
     return exploded.select("traj_id", cell.alias("cell")).distinct()
 
 

@@ -10,6 +10,8 @@ caller's names to them once, as the reference's Trajectory
 constructor does.
 """
 
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # Derived-column names (reference trajectory.py:43-49)
@@ -57,3 +59,15 @@ DOC_SCHEMA = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN_SCHEMA), False),
     ]
 )
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-built frame of row tuples with the DDL schema
+    `ddl`, passed to Spark as an Arrow table. Spark plans it as a
+    LocalRelation, so reading it runs no job and no Python worker; a
+    tuple list would become a parallelized RDD that every execution
+    re-reads through the Python workers."""
+    schema = T.StructType.fromDDL(ddl)
+    rows = list(rows)
+    table = pa.table({name: [r[i] for r in rows] for i, name in enumerate(schema.names)})
+    return spark.createDataFrame(table, schema)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movingspark import pyworker
+from movingspark.schema import local_frame
 
 
 def _as_matrix(series: pd.Series) -> np.ndarray:
@@ -125,7 +126,8 @@ def write_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
         "bucket"
     ).parquet(f"{path}/corpus")
     spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(i, [float(v) for v in C[i]]) for i in range(len(C))],
         "bucket int, centroid array<double>",
     )
@@ -154,7 +156,7 @@ def ivf_topk_indexed(spark, path: str, queries: dict[int, np.ndarray], k: int = 
             probe_rows.append((int(qid), int(b)))
     buckets = sorted({b for _, b in probe_rows})
     corpus = spark.read.parquet(f"{path}/corpus").filter(F.col("bucket").isin(buckets))
-    probes = spark.createDataFrame(probe_rows, "query_id int, bucket int")
+    probes = local_frame(spark, probe_rows, "query_id int, bucket int")
     cand = corpus.join(F.broadcast(probes), "bucket")
     # cosine against each candidate's probing query, then two-phase top-k
     qids, sims = cosine_udf(queries)

@@ -234,7 +234,7 @@ def streaming_tile_rollup(
            .writeStream.outputMode("update").format("memory")...)
     """
     tagged = stream.withWatermark("t", watermark).withColumn(
-        "cell", cell_id_expr(F.col("x"), F.col("y"), res, bounds)
+        "cell", cell_id_expr("x", "y", res, bounds)
     )
     return tagged.groupBy("cell", F.window("t", window).alias("w")).agg(
         F.count("*").alias("n_points")

@@ -17,7 +17,7 @@ def test_cell_id_expr_matches_numpy(spark):
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(xs, ys)], "x double, y double"
     )
-    got = [r["c"] for r in df.select(cells.cell_id_expr(F.col("x"), F.col("y"), res).alias("c")).collect()]
+    got = [r["c"] for r in df.select(cells.cell_id_expr("x", "y", res).alias("c")).collect()]
     assert got == expected
 
 
@@ -157,7 +157,7 @@ def test_segments_intersect_polygon_kernel_matches_expr(spark):
     got = [
         r["h"]
         for r in df.select(
-            joins.seg_intersects_expr(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), poly).alias("h")
+            joins.seg_intersects_expr("ax", "ay", "bx", "by", poly).alias("h")
         ).collect()
     ]
     assert got == want
@@ -392,13 +392,13 @@ def test_synth_skewed_points_hot_cell(spark):
 
     sk = ingest.synth_skewed_points(spark, 20_000, hot_frac=0.3)
     top = (
-        sk.select(cells.cell_id_expr(F.col("x"), F.col("y"), 6).alias("cell"))
+        sk.select(cells.cell_id_expr("x", "y", 6).alias("cell"))
         .groupBy("cell").count().orderBy(F.desc("count")).first()
     )
     assert top["count"] >= 0.29 * 20_000
     un = ingest.synth_skewed_points(spark, 20_000, hot_frac=0.0)
     top_u = (
-        un.select(cells.cell_id_expr(F.col("x"), F.col("y"), 6).alias("cell"))
+        un.select(cells.cell_id_expr("x", "y", 6).alias("cell"))
         .groupBy("cell").count().orderBy(F.desc("count")).first()
     )
     assert top_u["count"] < 0.01 * 20_000
