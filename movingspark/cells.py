@@ -44,12 +44,17 @@ def _interleave_bits_np(ix: np.ndarray, iy: np.ndarray, res: int) -> np.ndarray:
 
 
 def cell_id_np(x: np.ndarray, y: np.ndarray, res: int, bounds=WORLD) -> np.ndarray:
-    """Z-order cell id in numpy (for covers & kernels)."""
+    """Z-order cell id in numpy (for covers & kernels); same clamping as
+    cell_id_expr: NaN lands in row/column 0, +-Inf and out-of-bounds
+    values in the nearest border cell."""
     minx, miny, maxx, maxy = bounds
     n = 1 << res
-    ix = np.clip(((np.asarray(x, float) - minx) / (maxx - minx) * n).astype(np.int64), 0, n - 1)
-    iy = np.clip(((np.asarray(y, float) - miny) / (maxy - miny) * n).astype(np.int64), 0, n - 1)
-    return _interleave_bits_np(ix, iy, res)
+
+    def axis(v, lo, span):
+        g = np.floor((np.asarray(v, float) - lo) / span * n)
+        return np.clip(np.nan_to_num(g, nan=0.0), 0, n - 1).astype(np.int64)
+
+    return _interleave_bits_np(axis(x, minx, maxx - minx), axis(y, miny, maxy - miny), res)
 
 
 def sql_double(v) -> str:
@@ -81,12 +86,13 @@ def _ixiy_text(x: str, y: str, res: int, bounds=WORLD) -> tuple[str, str]:
 
 
 def _interleave_text(ix: str, iy: str, res: int) -> str:
+    # bitwise ops only: ANSI `+` and `% 2` generate an addExact call and a
+    # remainder-by-zero check per bit
     out = "CAST(0 AS BIGINT)"
     for k in range(res):
-        out = (
-            f"(({out} + shiftleft((shiftright(({ix}), {k}) % 2), {2 * k + 1}))"
-            f" + shiftleft((shiftright(({iy}), {k}) % 2), {2 * k}))"
-        )
+        x_bit = f"shiftleft((shiftright(({ix}), {k}) & 1), {2 * k + 1})"
+        y_bit = f"shiftleft((shiftright(({iy}), {k}) & 1), {2 * k})"
+        out = f"({x_bit} | {y_bit})" if k == 0 else f"(({out} | {x_bit}) | {y_bit})"
     return out
 
 
@@ -160,16 +166,22 @@ def parent_cell_expr(cell: Column, levels: int = 1) -> Column:
     return F.shiftright(cell, 2 * levels)
 
 
-def cell_bounds_np(cell_ids: np.ndarray, res: int, bounds=WORLD) -> np.ndarray:
-    """(minx, miny, maxx, maxy) per cell id — numpy, for covers/tests."""
-    minx, miny, maxx, maxy = bounds
-    n = 1 << res
+def cell_ixiy_np(cell_ids: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Integer grid coords (ix, iy) of cell ids (inverse interleave)."""
     cell_ids = np.asarray(cell_ids, dtype=np.int64)
     ix = np.zeros_like(cell_ids)
     iy = np.zeros_like(cell_ids)
     for k in range(res):
         ix |= ((cell_ids >> (2 * k + 1)) & 1) << k
         iy |= ((cell_ids >> (2 * k)) & 1) << k
+    return ix, iy
+
+
+def cell_bounds_np(cell_ids: np.ndarray, res: int, bounds=WORLD) -> np.ndarray:
+    """(minx, miny, maxx, maxy) per cell id — numpy, for covers/tests."""
+    minx, miny, maxx, maxy = bounds
+    n = 1 << res
+    ix, iy = cell_ixiy_np(cell_ids, res)
     w = (maxx - minx) / n
     h = (maxy - miny) / n
     x0 = minx + ix * w

@@ -13,7 +13,10 @@ the event-stream form is the operational query ("alert when a vessel
 enters the zone") and needs no clipping machinery.
 
 Plan: the contains flag is the codegen'd even-odd ray cast
-(joins.pip_expr — a boolean column, no join, no Python), the
+(joins.pip_expr — a boolean column, no join, no Python; fences with more
+than joins._PIP_EXPR_JIT_VERTS vertices, whose unrolled predicate would
+be too big to JIT-compile, compute it with kernels.point_in_polygon in
+an Arrow-batched UDF instead), the
 transition is one lag() over the canonical per-trajectory window, and
 the filter keeps flag-changes only. A single exchange shared with the
 whole trajectory pipeline; output is transition-sized (<< input), so
@@ -23,12 +26,31 @@ streaming.py's session machinery."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from movingspark.joins import pip_expr
+from movingspark import joins, kernels, pyworker
 
 __all__ = ["geofence_events"]
+
+
+def _inside(polygon, holes) -> Column:
+    """The fence's contains flag of (x, y)."""
+    outer = np.asarray(polygon, dtype=np.float64)
+    rings = [np.asarray(h, dtype=np.float64) for h in holes or []]
+    if len(outer) + sum(len(h) for h in rings) <= joins._PIP_EXPR_JIT_VERTS:
+        return joins.pip_expr("x", "y", outer, rings)
+
+    @F.pandas_udf(T.BooleanType())
+    def inside(px: pd.Series, py: pd.Series) -> pd.Series:
+        pyworker.prepare()
+        return pd.Series(kernels.point_in_polygon(px.to_numpy(float), py.to_numpy(float), outer, rings))
+
+    # the batch holds a null coordinate as NaN, whose flag is false
+    return F.when(F.col("x").isNotNull() & F.col("y").isNotNull(), inside(F.col("x"), F.col("y")))
 
 
 def geofence_events(df: DataFrame, polygon, holes=None) -> DataFrame:
@@ -36,7 +58,7 @@ def geofence_events(df: DataFrame, polygon, holes=None) -> DataFrame:
     (traj_id, t, x, y, event, t_prev) where `event` is 'enter'|'exit',
     `t` the first observation on the new side and `t_prev` the last
     observation on the old side (the crossing happened in between)."""
-    inside = pip_expr("x", "y", polygon, holes)
+    inside = _inside(polygon, holes)
     w = Window.partitionBy("traj_id").orderBy("t")
     flagged = (
         df.withColumn("__in", inside)

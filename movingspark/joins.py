@@ -6,12 +6,27 @@ Design for 100 TB / 10^12 docs:
   the polygon set is covered driver-side into (cell, poly_id, full)
   rows and broadcast; the point table is NEVER shuffled — each point
   computes its cell (pure SQL expression) and probes the broadcast map.
-  Cells fully inside a polygon skip refinement; boundary cells refine
-  with an unrolled ray-cast SQL predicate (or, past
-  _PIP_EXPR_MAX_VERTS vertices, a vectorized numpy pandas UDF). Hot
-  cells therefore cannot skew a shuffle (there is none); downstream
-  rollups by cell combine map-side (count/sum/count-distinct), so a hot
-  cell reaches the reducer as at most one partial row per map task.
+  Cells fully inside a polygon skip refinement. Hot cells therefore
+  cannot skew a shuffle (there is none); downstream rollups by cell
+  combine map-side (count/sum/count-distinct), so a hot cell reaches
+  the reducer as at most one partial row per map task.
+
+- **The refine is clipped to each cell** (after S2's ShapeIndex). A
+  boundary cover row carries only the edges that can change a verdict
+  for a point assigned to its cell, as up to _PIP_SLOT_CAP slots of
+  precomputed doubles, plus a `base` bit: the parity of the edges whose
+  ray crossing is 1 for every such point. Edges whose crossing is 0
+  everywhere in the cell drop out. Rows of the clamped border cells,
+  which also take out-of-bounds and non-finite coordinates, keep every
+  edge. The join refines with one generated text over the slots, the
+  exact arithmetic of kernels._ray_cast_ring, so its size depends on
+  the slot count, not on the number of polygons or vertices. That keeps
+  the join stage's generated consume method under HotSpot's 8 000-byte
+  HugeMethodLimit; a bigger method is never JIT-compiled and runs in
+  the bytecode interpreter (one OR over four hexagons' unrolled ray
+  casts made it 23 948 bytes, about half of the doc pass's join CPU).
+  Past the cap, boundary rows refine through the Arrow-batched numpy
+  kernel instead.
 
 - **Plan building stays off the Py4J path.** Every generated
   expression (cell id, ray cast, segment test, the join's whole refine
@@ -58,13 +73,107 @@ def _norm_poly(verts):
     return np.asarray(verts, float), []
 
 
-def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> DataFrame:
-    """polygons: iterable of (poly_id, vertices ndarray | (outer, holes)).
-    Driver-side cover -> small LocalRelation frame (cell, poly_id, full)
-    to broadcast, built from one Arrow table. With holes, cells whose
-    bbox touches a hole's bbox are conservatively demoted from full to
-    boundary (they refine exactly)."""
-    ids, covers, fulls = [], [np.empty(0, np.int64)], [np.empty(0, bool)]
+# boundary rows carry at most this many edge slots (_SLOT constants
+# each) into the generated refine; past it they refine through the
+# Arrow-batched numpy kernel. Each slot adds about 930 bytes of bytecode
+# to the join stage's consume method; the doc join's stage (parquet
+# scan, explode, parse, cell id, probe) measured 5 233 bytes at 4
+# slots, 6 216 at 5, 7 111 at 6 and 8 006 at 7. Five leaves room for
+# heavier upstream projections under HotSpot's 8 000-byte
+# HugeMethodLimit (tests/test_plans.py pins the size).
+_PIP_SLOT_CAP = 5
+
+# one edge slot: the constants of kernels._ray_cast_ring's arithmetic
+# for edge (xa, ya) -> (xb, yb): xb - xa, yb - ya, the crossing's
+# denominator and the on-edge tolerance box
+_SLOT = ("xa", "ya", "yb", "dx", "dy", "den", "x0", "x1", "y0", "y1")
+
+
+def _edge_consts(rings) -> np.ndarray:
+    """(edges, len(_SLOT)) slot constants of every edge of every ring."""
+    out = [np.empty((0, len(_SLOT)))]
+    for ring in rings:
+        ring = np.asarray(ring, dtype=np.float64)
+        if np.array_equal(ring[0], ring[-1]):
+            ring = ring[:-1]
+        xa, ya = ring[:, 0], ring[:, 1]
+        xb, yb = np.roll(xa, -1), np.roll(ya, -1)
+        dy = yb - ya
+        out.append(np.column_stack([
+            xa, ya, yb, xb - xa, dy, np.where(yb != ya, dy, 1.0),
+            np.minimum(xa, xb) - 1e-12, np.maximum(xa, xb) + 1e-12,
+            np.minimum(ya, yb) - 1e-12, np.maximum(ya, yb) + 1e-12,
+        ]))
+    return np.concatenate(out)
+
+
+def _clip_edges(e: np.ndarray, box: np.ndarray, margin: float):
+    """(active, flip) per (cell, edge) for cells whose points all lie in
+    `box` (rows of minx, miny, maxx, maxy). An edge is active when its
+    on-edge tolerance box meets the cell's box or its crossing bit is
+    not constant over it; a constant-1 crossing (the edge spans the
+    box's y-range wholly to its right) flips the cell's base parity, a
+    constant-0 one drops out. `margin` bounds the rounding of the
+    crossing's x-intercept for coordinates of the bounds' magnitude."""
+    xa, ya, yb, dx, _, _, x0, x1, y0, y1 = e.T
+    xb = xa + dx  # within an ulp of xb, far inside err below
+    bx0, by0, bx1, by1 = (box[:, i, None] for i in range(4))
+    touch = (x0 <= bx1) & (x1 >= bx0) & (y0 <= by1) & (y1 >= by0)
+    lo, hi = np.minimum(ya, yb), np.maximum(ya, yb)
+    spans = (lo <= by0) & (hi > by1)  # (ya > y) != (yb > y) for every y in the box
+    never = (lo > by1) | (hi <= by0)
+    err = margin + 1e-12 * np.maximum(np.abs(xa), np.abs(xb))
+    right = np.minimum(xa, xb) - err > bx1
+    left = np.maximum(xa, xb) + err < bx0
+    wild = ~np.isfinite(e).all(axis=1)
+    active = touch | ~(never | (spans & (right | left))) | wild
+    return active, spans & right & ~active
+
+
+# cap on the (cells x edges) arrays the clip builds per chunk of rows
+_CLIP_CHUNK_ELEMS = 1 << 20
+
+
+def _clip_cover(rings, cell_ids, boundary, res: int, bounds):
+    """(base, slots) per cover row: a boundary row keeps the constants of
+    its active edges (NaN-padded to the row maximum) and the parity of
+    its constant-1 crossings; a full row keeps none. Rows on the clamped
+    border (which also take out-of-bounds, +-Inf and NaN coordinates)
+    keep every edge with base 0."""
+    e = _edge_consts(rings)
+    minx, miny, maxx, maxy = bounds
+    n = 1 << res
+    w, h = (maxx - minx) / n, (maxy - miny) / n
+    # the widening must exceed the rounding of the point's grid
+    # coordinate and of the cell bounds (a few ulps of the bounds)
+    margin = max(1e-6 * max(w, h), 1e-12 * max(abs(float(b)) for b in bounds))
+    ix, iy = cells.cell_ixiy_np(cell_ids, res)
+    border = (ix == 0) | (iy == 0) | (ix == n - 1) | (iy == n - 1)
+    box = cells.cell_bounds_np(cell_ids, res, bounds) + np.array([-margin, -margin, margin, margin])
+    active = np.zeros((len(cell_ids), len(e)), dtype=bool)
+    flip = np.zeros_like(active)
+    clip = boundary & ~border
+    active[boundary & border] = True
+    rows = np.flatnonzero(clip)
+    chunk = max(1, _CLIP_CHUNK_ELEMS // max(len(e), 1))
+    for s in range(0, len(rows), chunk):
+        r = rows[s : s + chunk]
+        active[r], flip[r] = _clip_edges(e, box[r], margin)
+    k = int(active.sum(axis=1).max(initial=0))
+    # active edges first, in ring order
+    order = np.argsort(~active, axis=1, kind="stable")[:, :k]
+    slots = e[order]
+    slots[~np.take_along_axis(active, order, axis=1)] = np.nan
+    return np.bitwise_xor.reduce(flip, axis=1), slots
+
+
+def _cover_table(polygons, res: int, bounds) -> tuple[pa.Table, int | None]:
+    """The cover as one Arrow table and its slot count k: (cell, poly_id,
+    full) plus, when no boundary row has more than _PIP_SLOT_CAP active
+    edges, `base` and k edge slots of _SLOT columns `e{i}_{name}`.
+    k is None past the cap (the table then has the first three
+    columns only)."""
+    ids, covers, fulls, bases, slots = [], [np.empty(0, np.int64)], [np.empty(0, bool)], [], []
     for poly_id, verts in polygons:
         outer, holes = _norm_poly(verts)
         cell_ids, full = cells.polygon_cover(outer, res, bounds)
@@ -78,43 +187,81 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
                     & (cb[:, 1] <= hmaxy) & (cb[:, 3] >= hminy)
                 )
                 full = full & ~touches
+        base, slot = _clip_cover([outer, *holes], cell_ids, ~full, res, bounds)
         ids += [str(poly_id)] * len(cell_ids)
         covers.append(cell_ids)
         fulls.append(full)
-    table = pa.table({"cell": np.concatenate(covers), "poly_id": ids, "full": np.concatenate(fulls)})
-    return spark.createDataFrame(table, "cell long, poly_id string, full boolean")
+        bases.append(base)
+        slots.append(slot)
+    cols = {"cell": np.concatenate(covers), "poly_id": ids, "full": np.concatenate(fulls)}
+    k = max((s.shape[1] for s in slots), default=0)
+    if k > _PIP_SLOT_CAP:
+        return pa.table(cols), None
+    cols["base"] = np.concatenate([np.empty(0, bool), *bases])
+    pad = [np.pad(s, ((0, 0), (0, k - s.shape[1]), (0, 0)), constant_values=np.nan) for s in slots]
+    edges = np.concatenate([np.empty((0, k, len(_SLOT))), *pad])
+    for i in range(k):
+        for j, name in enumerate(_SLOT):
+            cols[f"e{i}_{name}"] = edges[:, i, j]
+    return pa.table(cols), k
 
 
-# polygons with at most this many total vertices refine via a generated
-# SQL expression (whole-stage codegen, no Python); bigger ones fall back
-# to the Arrow-batched numpy kernel
+def _cover_ddl(k: int | None) -> str:
+    ddl = "cell long, poly_id string, full boolean"
+    if k is None:
+        return ddl
+    slots = "".join(f", e{i}_{name} double NOT NULL" for i in range(k) for name in _SLOT)
+    return ddl + ", base boolean NOT NULL" + slots
+
+
+def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> DataFrame:
+    """polygons: iterable of (poly_id, vertices ndarray | (outer, holes)).
+    Driver-side cover -> small LocalRelation frame to broadcast, built
+    from one Arrow table: one row per (cell, poly_id) with its `full`
+    flag and, for the clipped refine, the row's `base` parity and edge
+    slots (see _cover_table). With holes, cells whose bbox touches a
+    hole's bbox are conservatively demoted from full to boundary (they
+    refine exactly)."""
+    table, k = _cover_table(polygons, res, bounds)
+    return spark.createDataFrame(table, _cover_ddl(k))
+
+
+# generated ray-cast predicates over driver-known vertex literals
+# (pip_expr, seg_intersects_expr) unroll at most this many vertices;
+# bigger polygons refine through the Arrow-batched numpy kernels
 _PIP_EXPR_MAX_VERTS = 256
+
+# a projection of pip_expr costs about 760 bytes of bytecode per vertex
+# (a one-projection stage: 6 168 bytes at 8 vertices, 9 200 at 12), so
+# above this many vertices it is past HotSpot's 8 000-byte
+# HugeMethodLimit and never JIT-compiled
+_PIP_EXPR_JIT_VERTS = 8
+
+
+def _edge_text(px: str, py: str, xa, ya, yb, dx, dy, den, x0, x1, y0, y1) -> tuple[str, str]:
+    """One edge's (crossing bit, on-edge) SQL texts over operand texts
+    (literals or columns) — the exact arithmetic of
+    kernels._ray_cast_ring."""
+    cond = f"(({ya} > {py}) != ({yb} > {py}))"
+    xint = f"({xa} + ((({py} - {ya}) * {dx}) / {den}))"
+    cross = f"(({dx} * ({py} - {ya})) - ({dy} * ({px} - {xa})))"
+    within = (
+        f"(((((abs({cross}) < {cells.sql_double(1e-12)})"
+        f" AND ({px} >= {x0}))"
+        f" AND ({px} <= {x1}))"
+        f" AND ({py} >= {y0}))"
+        f" AND ({py} <= {y1}))"
+    )
+    return f"({cond} AND ({px} < {xint}))", within
 
 
 def _pip_ring_text(px: str, py: str, ring) -> tuple[str, str]:
-    """One ring's even-odd ray cast as (inside, on_edge) SQL texts —
-    exact arithmetic of kernels._ray_cast_ring."""
-    ring = np.asarray(ring, dtype=np.float64)
-    if np.array_equal(ring[0], ring[-1]):
-        ring = ring[:-1]
-    d = cells.sql_double
+    """One ring's even-odd ray cast as (inside, on_edge) SQL texts over
+    exact double literals."""
     inside = on_edge = "false"
-    k = len(ring)
-    for i in range(k):
-        xa, ya = float(ring[i, 0]), float(ring[i, 1])
-        xb, yb = float(ring[(i + 1) % k, 0]), float(ring[(i + 1) % k, 1])
-        cond = f"(({d(ya)} > {py}) != ({d(yb)} > {py}))"
-        denom = (yb - ya) if yb != ya else 1.0
-        xint = f"({d(xa)} + ((({py} - {d(ya)}) * {d(xb - xa)}) / {d(denom)}))"
-        inside = f"({inside} != ({cond} AND ({px} < {xint})))"  # boolean != is XOR
-        cross = f"(({d(xb - xa)} * ({py} - {d(ya)})) - ({d(yb - ya)} * ({px} - {d(xa)})))"
-        within = (
-            f"(((((abs({cross}) < {d(1e-12)})"
-            f" AND ({px} >= {d(min(xa, xb) - 1e-12)}))"
-            f" AND ({px} <= {d(max(xa, xb) + 1e-12)}))"
-            f" AND ({py} >= {d(min(ya, yb) - 1e-12)}))"
-            f" AND ({py} <= {d(max(ya, yb) + 1e-12)}))"
-        )
+    for consts in _edge_consts([ring]):
+        crossing, within = _edge_text(px, py, *(cells.sql_double(v) for v in consts))
+        inside = f"({inside} != {crossing})"  # boolean != is XOR
         on_edge = f"({on_edge} OR {within})"
     return inside, on_edge
 
@@ -136,11 +283,25 @@ def pip_expr(px: str, py: str, poly, holes=None) -> F.Column:
     boundary counts as inside) unrolled over the driver-known vertex
     list into one SQL text and parsed by one F.expr. IEEE float64 ops in
     the same order as the numpy kernel, with every vertex written as its
-    exact double literal => bit-identical verdicts.
+    exact double literal => bit-identical verdicts. Unroll at most
+    _PIP_EXPR_MAX_VERTS vertices (a few hundred exhaust the driver heap
+    in code generation).
 
     holes: optional interior rings (shapely interiors) — crossing parity
     XORs over every ring, hole boundaries still count as inside."""
     return F.expr(_pip_text(px, py, poly, holes))
+
+
+def _slot_refine_text(k: int) -> str:
+    """The clipped refine over a cover row's columns: base parity XOR
+    every slot's crossing bit, OR every slot's on-edge test."""
+    terms = [_edge_text("`__x`", "`__y`", *(f"`e{i}_{name}`" for name in _SLOT)) for i in range(k)]
+    pred = "`base`"
+    for crossing, _ in terms:
+        pred = f"({pred} != {crossing})"
+    for _, within in terms:
+        pred = f"({pred} OR {within})"
+    return f"(`full` OR {pred})"
 
 
 def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:
@@ -149,30 +310,30 @@ def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WO
     list of (poly_id, vertices). Returns input columns + poly_id.
 
     Plan shape: scan -> project(cell) -> BroadcastHashJoin(cover) ->
-    filter(full-cell OR generated ray-cast expr). One scan, one
-    broadcast join, zero Python for polygons up to _PIP_EXPR_MAX_VERTS
-    total vertices; beyond that, boundary-cell rows refine through an
-    Arrow-batched numpy kernel (interior cells still skip it).
+    filter(full OR clipped ray cast over the cover row's edge slots).
+    One scan, one broadcast join and no Python while every boundary row
+    has at most _PIP_SLOT_CAP active edges; beyond that, boundary-cell
+    rows refine through an Arrow-batched numpy kernel (interior cells
+    still skip it).
     """
     spark = df.sparkSession
-    poly_map = {str(pid): _norm_poly(v) for pid, v in polygons}
-    cover = cover_to_df(spark, polygons, res, bounds)
+    table, k = _cover_table(polygons, res, bounds)
+    cover = spark.createDataFrame(table, _cover_ddl(k))
 
     pts = with_cell(df, res, bounds, "__cell")
+    if k is not None:
+        # the refine reads non-null copies of x, y (a null coordinate's
+        # cell id is -1, which no cover row matches): without null
+        # checks each slot generates about a third less bytecode
+        nan = cells.sql_double(float("nan"))
+        pts = pts.withColumns({c: F.expr(f"coalesce({v}, {nan})") for c, v in (("__x", "x"), ("__y", "y"))})
     joined = pts.join(
         F.broadcast(cover), on=F.col("__cell") == cover["cell"], how="inner"
     ).drop("cell")
+    if k is not None:
+        return joined.filter(F.expr(_slot_refine_text(k))).drop("__cell", "__x", "__y", *table.column_names[2:])
 
-    n_verts = sum(len(outer) + sum(len(h) for h in holes) for outer, holes in poly_map.values())
-    if n_verts <= _PIP_EXPR_MAX_VERTS:
-        # single-pass JVM refine: OR over poly_id -> unrolled ray-cast,
-        # left-deep by explicit parentheses (the parser balances a bare
-        # OR chain, which would change the plan)
-        pred = None
-        for pid, (outer, holes) in poly_map.items():
-            branch = f"((`poly_id` = {cells.sql_string(pid)}) AND {_pip_text('x', 'y', outer, holes)})"
-            pred = branch if pred is None else f"({pred} OR {branch})"
-        return joined.filter(F.expr(f"(`full` OR {pred})")).drop("full", "__cell")
+    poly_map = {str(pid): _norm_poly(v) for pid, v in polygons}
 
     @F.pandas_udf(T.BooleanType())
     def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:

@@ -539,12 +539,13 @@ def _ray_cast_ring(px: np.ndarray, py: np.ndarray, poly: np.ndarray):
         xa, ya, xb, yb = x0[i], y0[i], x1[i], y1[i]
         cond = (ya > py) != (yb > py)
         # a near-horizontal edge can overflow xint to +-inf for rows
-        # outside its y-span; cond masks those rows out
+        # outside its y-span; cond masks those rows out. An infinite
+        # point makes cross inf or NaN, which is never within tolerance.
         with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
             xint = xa + (py - ya) * (xb - xa) / np.where(yb == ya, 1.0, (yb - ya))
+            # on-segment check (shapely intersects counts boundary)
+            cross = (xb - xa) * (py - ya) - (yb - ya) * (px - xa)
         inside ^= cond & (px < xint)
-        # on-segment check (shapely intersects counts boundary)
-        cross = (xb - xa) * (py - ya) - (yb - ya) * (px - xa)
         within = (
             (np.abs(cross) < 1e-12)
             & (px >= np.minimum(xa, xb) - 1e-12)

@@ -12,6 +12,8 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - simhash_expr     ~ text.add_simhash      (per-row HOF expression, md5 per bit)
 - band_keys_loop   ~ similarity._band_keys (per row, per band, per bit)
 - polygon_cover_loop ~ cells.polygon_cover (one bbox cell at a time)
+- pip_join_or_chain ~ joins.point_in_polygon_join (one generated refine:
+  an OR over every polygon of its whole unrolled ray cast)
 - chained_kinematics ~ derive._kinematics (one window per D1-D6 helper,
   first rows patched by a further row_number/lead window each)
 - seg_dist_lag     ~ derive._kinematics "distance" (the lag-only segment
@@ -24,7 +26,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from movingspark import kernels, schema
+from movingspark import cells, joins, kernels, schema
 from movingspark.cells import WORLD, _interleave_bits_np
 from movingspark.derive import angular_difference_expr, bearing_expr, dist_expr, traj_window
 from movingspark.overlay import SNAP_S
@@ -334,6 +336,22 @@ def _seg_intersect(a, b, c, d) -> bool:
     if o1 != o2 and o3 != o4:
         return True
     return False
+
+
+def pip_join_or_chain(df: DataFrame, polygons, res: int = 8, bounds=WORLD) -> DataFrame:
+    """Point-in-polygon join whose boundary rows refine through one
+    predicate: an OR over every polygon (matched by poly_id) of its
+    whole unrolled ray cast over exact vertex literals."""
+    cover = joins.cover_to_df(df.sparkSession, polygons, res, bounds).select("cell", "poly_id", "full")
+    joined = joins.with_cell(df, res, bounds, "__cell").join(
+        F.broadcast(cover), on=F.col("__cell") == cover["cell"], how="inner"
+    ).drop("cell")
+    pred = None
+    for pid, verts in polygons:
+        outer, holes = joins._norm_poly(verts)
+        branch = f"((`poly_id` = {cells.sql_string(pid)}) AND {joins._pip_text('x', 'y', outer, holes)})"
+        pred = branch if pred is None else f"({pred} OR {branch})"
+    return joined.filter(F.expr(f"(`full` OR {pred})")).drop("full", "__cell")
 
 
 def _lag_dist(latlon: bool) -> Column:

@@ -61,6 +61,41 @@ def test_geofence_no_python_in_plan(spark):
     assert "Python" not in plan and "Join" not in plan
 
 
+def test_geofence_300_vertex_fence_matches_kernel_flags(spark):
+    """A fence too big to unroll into a JIT-compilable predicate takes
+    its contains flag from kernels.point_in_polygon in an Arrow UDF (a
+    256-vertex unrolled fence exhausted the driver heap in codegen): the
+    events are the flag changes of the numpy kernel, boundary points and
+    a null coordinate included."""
+    import numpy as np
+
+    from movingspark import joins, kernels
+
+    rng = np.random.default_rng(30)
+    ang = np.linspace(0.0, 2 * np.pi, 300, endpoint=False)
+    rad = 10.0 * (1 + 0.2 * np.sin(9 * ang)) * rng.uniform(0.95, 1.05, 300)
+    fence = np.column_stack([rad * np.cos(ang), rad * np.sin(ang)])
+    assert len(fence) > joins._PIP_EXPR_JIT_VERTS
+    walks = np.cumsum(rng.normal(0.0, 3.0, (40, 30, 2)), axis=1)
+    xy = walks.reshape(-1, 2)
+    xy[::7] = fence[rng.integers(0, 300, len(xy[::7]))]  # vertices: on the boundary
+    rows = [(f"w{i // 30}", _ts(i % 30), float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    rows.append(("w0", _ts(30), None, 1.0))  # flag unknown: no event, none after
+    rows.append(("w0", _ts(31), 0.0, 0.0))
+    ev = geofence_events(_pts(spark, rows), fence)
+    assert "ArrowEvalPython" in ev._jdf.queryExecution().executedPlan().toString()
+    got = sorted((r["traj_id"], (r["t"] - E).total_seconds(), r["event"]) for r in ev.collect())
+
+    flags = kernels.point_in_polygon(xy[:, 0], xy[:, 1], fence).reshape(40, 30)
+    want = []
+    for w in range(40):
+        for j in range(1, 30):
+            if flags[w, j] != flags[w, j - 1]:
+                want.append((f"w{w}", float(j), "enter" if flags[w, j] else "exit"))
+    assert got == sorted(want)
+    assert {e for *_, e in want} == {"enter", "exit"}
+
+
 def test_streaming_geofence_crossing_spans_micro_batches(spark, tmp_path):
     """The enter transition's two observations land in DIFFERENT
     micro-batches; the carried (t, inside) state must still emit it

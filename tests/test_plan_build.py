@@ -104,6 +104,8 @@ def _is_local_relation(df) -> bool:
 
 
 def test_cover_frame_is_a_local_relation(spark, hexagons):
+    """The cover frame's first three columns hold the polygon cover; the
+    rest are the clipped refine's NOT NULL `base` bit and edge slots."""
     cover = joins.cover_to_df(spark, hexagons, 8)
     rows = [
         (int(c), pid, bool(f))
@@ -111,11 +113,17 @@ def test_cover_frame_is_a_local_relation(spark, hexagons):
         for c, f in zip(*cells.polygon_cover(v, 8))
     ]
     want = spark.createDataFrame(rows, "cell long, poly_id string, full boolean")
-    assert _is_local_relation(cover)
-    assert cover.schema == want.schema
-    assert cover.collect() == want.collect()
+    k = joins._cover_table(hexagons, 8, cells.WORLD)[1]
+    slots = [f"e{i}_{name}" for i in range(k) for name in joins._SLOT]
+    assert _is_local_relation(cover) and k >= 1
+    assert cover.columns == [*want.columns, "base", *slots]
+    assert cover.schema.fields[:3] == want.schema.fields
+    assert [f.dataType.simpleString() for f in cover.schema.fields[3:]] == ["boolean"] + ["double"] * len(slots)
+    assert not any(f.nullable for f in cover.schema.fields[3:])
+    assert cover.select(*want.columns).collect() == want.collect()
     empty = joins.cover_to_df(spark, [], 8)
-    assert _is_local_relation(empty) and empty.schema == want.schema and empty.collect() == []
+    assert _is_local_relation(empty) and empty.columns == [*want.columns, "base"] and empty.collect() == []
+    assert empty.schema.fields[:3] == want.schema.fields
 
 
 def test_driver_built_frames_are_local_relations(spark, tmp_path, monkeypatch):

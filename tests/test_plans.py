@@ -3,13 +3,15 @@ guarantees are asserted on the EXPLAIN output so a refactor cannot
 silently reintroduce a shuffle, a Python stage, or a sort-exchange.
 """
 
+import contextlib
 import io
 import re
-import contextlib
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from movingspark import derive, joins
+from movingspark import cells, derive, joins
 from tests.conftest import rows_to_points
 
 
@@ -46,6 +48,65 @@ def test_pip_join_no_point_shuffle_no_python(spark):
     # the only exchange allowed is the broadcast itself
     assert n_exchanges(plan) == 0
     assert _no_python_exec(plan)
+
+
+# HotSpot's fixed HugeMethodLimit: a method with more bytecode than this
+# is never JIT-compiled and runs in the bytecode interpreter
+HUGE_METHOD_BYTES = 8000
+
+
+def max_method_bytecode(df) -> int:
+    """Bytecode size of the largest generated method over every
+    whole-stage-codegen subtree of `df`'s executed plan, planned with AQE
+    off (an adaptive plan shows its stages only once they run)."""
+    spark = df.sparkSession
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    stages = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    return max(stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size()))
+
+
+@pytest.fixture(scope="module")
+def doc_points(spark, tmp_path_factory):
+    """Exploded points of a small perfbench doc table read from parquet
+    (the doc pass's join stage: scan, explode, parse, cell id, probe)
+    and its four hexagons."""
+    from movingspark import catalog, ingest
+    from perfbench import gen
+
+    table, polygons = gen.gen_docs(gen.DocParams(n_docs=200), 1)
+    path = str(tmp_path_factory.mktemp("docs"))
+    gen.write_parts(table, path, n_files=2)
+    return ingest.explode_doc_points(catalog.read_table(spark, path)), polygons
+
+
+def _hexagons(n, seed):
+    from perfbench.gen import make_polygons
+
+    rng = np.random.default_rng(seed)
+    return make_polygons(rng, np.column_stack([rng.uniform(-150, 150, n), rng.uniform(-60, 60, n)]))
+
+
+def test_pip_join_stage_is_jit_compilable(doc_points):
+    """The doc join stage's consume method stays under the JIT's method
+    limit: four bench hexagons at res 8 (23 948 bytes as one OR over
+    every polygon's unrolled ray cast), 40 hexagons, and a polygon set
+    whose boundary rows need exactly joins._PIP_SLOT_CAP edge slots."""
+    pts, hexagons = doc_points
+    cap = joins._PIP_SLOT_CAP
+    ang = np.linspace(0.0, 2 * np.pi, cap, endpoint=False)
+    # a cap-gon in the clamped border column keeps all its edges there
+    border = ("border", np.column_stack([-177.5 + 3.0 * np.cos(ang), 3.0 * np.sin(ang)]))
+    cases = {"bench": hexagons, "40 hexagons": _hexagons(40, 2), "at the cap": [*hexagons, border]}
+    assert joins._cover_table(cases["at the cap"], 8, cells.WORLD)[1] == cap
+    for name, polygons in cases.items():
+        joined = joins.point_in_polygon_join(pts, polygons, res=8)
+        assert _no_python_exec(plan_of(joined)), name
+        assert max_method_bytecode(joined) <= HUGE_METHOD_BYTES, name
 
 
 def test_knn_join_partial_min_by_no_sort_exchange(spark):

@@ -21,6 +21,24 @@ def test_cell_id_expr_matches_numpy(spark):
     assert got == expected
 
 
+@pytest.mark.parametrize("bounds", [cells.WORLD, (1e6, 1e6, 1e6 + 64, 1e6 + 8)])
+def test_cell_id_expr_matches_numpy_at_every_res_and_non_finite_input(spark, bounds):
+    """The bitwise Morton interleave gives cell_id_np's ids at res 1-16,
+    including out-of-bounds, +-Inf and NaN coordinates (NaN lands in
+    row/column 0, the rest in the nearest border cell)."""
+    rng = np.random.default_rng(16)
+    minx, miny, maxx, maxy = bounds
+    span = np.array([maxx - minx, maxy - miny])
+    xy = np.array([minx, miny]) + rng.uniform(-0.1, 1.1, (400, 2)) * span
+    odd = [np.nan, np.inf, -np.inf, 1e300, -1e300, minx, maxx, miny, maxy]
+    ox, oy = (g.ravel() for g in np.meshgrid(odd, odd))
+    xs, ys = np.concatenate([xy[:, 0], ox]), np.concatenate([xy[:, 1], oy])
+    df = spark.createDataFrame([(float(a), float(b)) for a, b in zip(xs, ys)], "x double, y double")
+    got = df.select(*[cells.cell_id_expr("x", "y", res, bounds).alias(f"c{res}") for res in range(1, 17)]).collect()
+    for res in range(1, 17):
+        assert [r[f"c{res}"] for r in got] == cells.cell_id_np(xs, ys, res, bounds).tolist(), res
+
+
 def test_cell_id_sql_matches_expr(spark):
     import duckdb
 
@@ -175,21 +193,24 @@ def _boundary_points(ring):
 
 
 def test_large_polygon_refines_through_the_numpy_kernels(spark):
-    """Above joins._PIP_EXPR_MAX_VERTS the point join refines boundary
-    cells through an Arrow UDF, and above half of it the line test does:
-    both must agree with the numpy kernels, holes and boundary points
-    included."""
+    """When a boundary cover row has more than joins._PIP_SLOT_CAP active
+    edges the point join refines boundary cells through an Arrow UDF,
+    and above half of joins._PIP_EXPR_MAX_VERTS vertices the line test
+    does: both must agree with the numpy kernels, holes and boundary
+    points included."""
     from movingspark import kernels
 
     rng = np.random.default_rng(3)
     outer = _wiggly_ring(20.0, 10.0, 8.0, 300, rng)
     hole = _wiggly_ring(20.5, 9.5, 3.0, 24, rng)
-    assert len(outer) + len(hole) > joins._PIP_EXPR_MAX_VERTS and 2 * len(outer) > joins._PIP_EXPR_MAX_VERTS
+    assert joins._cover_table([("ring", (outer, [hole]))], 8, cells.WORLD)[1] is None
+    assert 2 * len(outer) > joins._PIP_EXPR_MAX_VERTS
     xy = np.concatenate(
         [rng.uniform([10, 0], [30, 20], (400, 2)), _boundary_points(outer), _boundary_points(hole)]
     )
     df = rows_to_points(spark, [(i, "2020-01-01T00:00:00", x, y) for i, (x, y) in enumerate(xy)])
     hits = joins.point_in_polygon_join(df, [("ring", (outer, [hole]))], res=8)
+    assert "ArrowEvalPython" in hits._jdf.queryExecution().executedPlan().toString()
     got = sorted((int(r["traj_id"]), r["poly_id"]) for r in hits.collect())
     pts = sorted((int(r["traj_id"]), r["x"], r["y"]) for r in df.collect())
     ids, px, py = (np.array(c) for c in zip(*pts))
