@@ -10,7 +10,9 @@ text+media documents (doc_id, spans array<struct<kind,text,media_ref,
 offset>>) are synthesized deterministically JVM-side, exploded into
 trajectory points (text spans carry "t_unix;lon;lat" payloads), and
 reassembled with exact span-sequence equality (kind, text, media_ref,
-order) as the per-row invariant.
+order) as the per-row invariant, checked by positional span digests of
+both orders taken around the reassembly's one aggregate (one scan, one
+exchange).
 """
 
 from __future__ import annotations
@@ -223,22 +225,27 @@ def explode_doc_points(docs: DataFrame) -> DataFrame:
     return pts
 
 
+def _reassembled(sp: DataFrame, *aggs) -> DataFrame:
+    """The reassembly: the exploded spans `s` of `sp` regrouped per doc_id,
+    next to `aggs` over sp's other columns, as `spans_sorted`
+    array<struct<offset, kind, text, media_ref>> in offset order. The span
+    struct is built in the projection below the aggregate, which is
+    generated code; collect_list's update is interpreted and only copies
+    it. sort_array, not array_sort: array_sort is a higher-order function
+    (interpreted fallback), and the two give the same order for the
+    non-null structs collect_list returns."""
+    s = F.col("s")
+    span = F.struct(s["offset"].alias("offset"), s["kind"].alias("kind"), s["text"].alias("text"),
+                    s["media_ref"].alias("media_ref"))
+    sp = sp.select(*[c for c in sp.columns if c != "s"], span.alias("span"))
+    return sp.groupBy("doc_id").agg(*aggs, F.sort_array(F.collect_list("span")).alias("spans_sorted"))
+
+
 def reassemble_docs(docs: DataFrame) -> DataFrame:
     """Round-trip: explode all spans and reassemble per doc ordered by
     offset — the north-rule span-sequence invariant (BASELINE.json:15)."""
-    sp = docs.select("doc_id", F.explode("spans").alias("span"))
-    return sp.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("span.offset").alias("offset"),
-                    F.col("span.kind").alias("kind"),
-                    F.col("span.text").alias("text"),
-                    F.col("span.media_ref").alias("media_ref"),
-                )
-            )
-        ).alias("spans_sorted")
-    ).select(
+    sp = docs.select("doc_id", F.explode("spans").alias("s"))
+    return _reassembled(sp).select(
         "doc_id",
         F.transform(
             "spans_sorted",
@@ -252,48 +259,41 @@ def reassemble_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _span_seq_digest(docs: DataFrame, name: str) -> DataFrame:
-    """Per-doc sequence digest: xxhash64 of (doc_id, array position,
-    kind, text, media_ref) per span, XOR-folded per doc, plus the span
-    count. Including the array POSITION in each hash makes the digest
-    order-sensitive: a reassembly that returns the right spans in the
-    wrong order produces different (pos, span) hashes. Null text /
+def _span_hash(pos: str, s: str):
+    """xxhash64 of (doc_id, array position, kind, text, media_ref) of one
+    span; the position makes their XOR-fold order-sensitive. Null text /
     media_ref map to distinct sentinels so column identity survives
-    xxhash64's null-skipping. bit_xor needs no collect_list and no JSON
-    serialization — it aggregates map-side partially, so the shuffle
-    carries one 8-byte digest per (doc, partition)."""
+    xxhash64's null-skipping."""
+    return F.xxhash64("doc_id", pos, F.col(f"{s}.kind"), F.coalesce(F.col(f"{s}.text"), F.lit(" <null-text>")),
+                      F.coalesce(F.col(f"{s}.media_ref"), F.lit("<null-ref>")))
+
+
+def _span_digests(docs: DataFrame) -> DataFrame:
+    """(doc_id, h, h_n, h_rt, h_rt_n) per doc with spans: XOR-folded span
+    hashes and count in the original order and in the reassembly's. One
+    scan, one posexplode, one exchange on doc_id: the original digest is
+    folded in the reassembly's own aggregate, and the rebuilt one groups on
+    (doc_id, h, h_n), which that partitioning already satisfies.
+    posexplode_outer keeps a doc whose reassembly came back empty, and
+    count(p) then differs from h_n."""
     sp = docs.select("doc_id", F.posexplode("spans").alias("pos", "s"))
-    h = F.xxhash64(
-        "doc_id",
-        "pos",
-        F.col("s.kind"),
-        F.coalesce(F.col("s.text"), F.lit(" <null-text>")),
-        F.coalesce(F.col("s.media_ref"), F.lit("<null-ref>")),
-    )
-    return sp.groupBy("doc_id").agg(
-        F.bit_xor(h).alias(name), F.count("*").alias(f"{name}_n")
-    )
+    sp = sp.select("doc_id", "s", _span_hash("pos", "s").alias("hs"))
+    orig = _reassembled(sp, F.bit_xor("hs").alias("h"), F.count("*").alias("h_n"))
+    rt = orig.select("doc_id", "h", "h_n", F.posexplode_outer("spans_sorted").alias("p", "r"))
+    return rt.groupBy("doc_id", "h", "h_n").agg(F.bit_xor(_span_hash("p", "r")).alias("h_rt"),
+                                                F.count("p").alias("h_rt_n"))
 
 
 def span_invariant_violations(docs: DataFrame) -> DataFrame:
     """Rows = docs whose explode->reassemble round trip does NOT preserve
-    the exact span sequence (kind, text, media_ref, order). Empty result
-    == invariant holds. Both sides reduce to an 8-byte positional digest
-    (_span_seq_digest) before the join — the only payload-sized shuffle
-    left is the reassembly itself, which is the operator under test.
-    (64-bit XOR-fold digest equality is probabilistic in the
-    cryptographic sense — the standard large-scale verification
-    trade-off; the pinned tests assert exact array equality on small
-    inputs.)"""
-    orig = _span_seq_digest(docs, "h")
-    rebuilt = _span_seq_digest(reassemble_docs(docs), "h_rt")
-    joined = orig.join(rebuilt, "doc_id", "full_outer")
-    return joined.filter(
-        F.col("h").isNull()
-        | F.col("h_rt").isNull()
-        | (F.col("h") != F.col("h_rt"))
-        | (F.col("h_n") != F.col("h_rt_n"))
-    ).select("doc_id")
+    the exact span sequence (kind, text, media_ref, order); docs with
+    empty or null spans never appear. Both orders reduce to 8-byte
+    digests (_span_digests), so the only payload-sized shuffle is the
+    reassembly itself, the operator under test. (64-bit digest equality
+    is probabilistic in the cryptographic sense; the pinned tests assert
+    exact array equality on small inputs.)"""
+    d = _span_digests(docs)
+    return d.filter((F.col("h") != F.col("h_rt")) | (F.col("h_n") != F.col("h_rt_n"))).select("doc_id")
 
 
 def synth_skewed_points(

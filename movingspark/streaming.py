@@ -272,9 +272,7 @@ def streaming_geofence(stream: DataFrame, polygon, holes=None) -> DataFrame:
         xs = pdf["x"].to_numpy(float)
         ys = pdf["y"].to_numpy(float)
         t_us = pdf["t"].astype("int64").to_numpy() // 1000
-        inside = kernels.point_in_polygon(xs, ys, poly)
-        for h in hs:
-            inside &= ~kernels.point_in_polygon(xs, ys, h)
+        inside = kernels.point_in_polygon(xs, ys, poly, hs)
         if state.exists:
             p_tus, p_in = state.get
             prev_in = np.concatenate([[p_in], inside[:-1]]).astype(bool)

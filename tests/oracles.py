@@ -18,6 +18,11 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
   first rows patched by a further row_number/lead window each)
 - seg_dist_lag     ~ derive._kinematics "distance" (the lag-only segment
   distance queries and ingest used to inline)
+- reassemble_docs_array_sort ~ ingest.reassemble_docs (array_sort, a
+  higher-order function, over the collected spans)
+- span_digests_two_pass ~ ingest._span_digests (one digest per side,
+  each its own scan and exchange, joined full-outer on doc_id)
+- span_invariant_violations_two_pass ~ ingest.span_invariant_violations
 """
 
 from __future__ import annotations
@@ -431,3 +436,75 @@ def chained_kinematics(df, latlon):
     df = chained_direction(df, schema.DIRECTION, latlon)
     df = chained_angular_difference(df, schema.ANGULAR_DIFFERENCE, latlon)
     return chained_acceleration(df, schema.ACCELERATION, None, latlon, None)
+
+
+def reassemble_docs_array_sort(docs: DataFrame) -> DataFrame:
+    """Round-trip: explode all spans and reassemble per doc ordered by
+    offset — the north-rule span-sequence invariant (BASELINE.json:15)."""
+    sp = docs.select("doc_id", F.explode("spans").alias("span"))
+    return sp.groupBy("doc_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("span.offset").alias("offset"),
+                    F.col("span.kind").alias("kind"),
+                    F.col("span.text").alias("text"),
+                    F.col("span.media_ref").alias("media_ref"),
+                )
+            )
+        ).alias("spans_sorted")
+    ).select(
+        "doc_id",
+        F.transform(
+            "spans_sorted",
+            lambda s: F.struct(
+                s["kind"].alias("kind"),
+                s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+                s["offset"].alias("offset"),
+            ),
+        ).alias("spans"),
+    )
+
+
+def _span_seq_digest(docs: DataFrame, name: str) -> DataFrame:
+    """Per-doc sequence digest: xxhash64 of (doc_id, array position,
+    kind, text, media_ref) per span, XOR-folded per doc, plus the span
+    count. Including the array POSITION in each hash makes the digest
+    order-sensitive: a reassembly that returns the right spans in the
+    wrong order produces different (pos, span) hashes. Null text /
+    media_ref map to distinct sentinels so column identity survives
+    xxhash64's null-skipping. bit_xor needs no collect_list and no JSON
+    serialization — it aggregates map-side partially, so the shuffle
+    carries one 8-byte digest per (doc, partition)."""
+    sp = docs.select("doc_id", F.posexplode("spans").alias("pos", "s"))
+    h = F.xxhash64(
+        "doc_id",
+        "pos",
+        F.col("s.kind"),
+        F.coalesce(F.col("s.text"), F.lit(" <null-text>")),
+        F.coalesce(F.col("s.media_ref"), F.lit("<null-ref>")),
+    )
+    return sp.groupBy("doc_id").agg(
+        F.bit_xor(h).alias(name), F.count("*").alias(f"{name}_n")
+    )
+
+
+def span_digests_two_pass(docs: DataFrame) -> DataFrame:
+    """(doc_id, h, h_n, h_rt, h_rt_n): the original digest and the
+    reassembly's, each from its own scan and exchange, joined full-outer."""
+    orig = _span_seq_digest(docs, "h")
+    rebuilt = _span_seq_digest(reassemble_docs_array_sort(docs), "h_rt")
+    return orig.join(rebuilt, "doc_id", "full_outer")
+
+
+def span_invariant_violations_two_pass(docs: DataFrame) -> DataFrame:
+    """Rows = docs whose explode->reassemble round trip does NOT preserve
+    the exact span sequence (kind, text, media_ref, order)."""
+    joined = span_digests_two_pass(docs)
+    return joined.filter(
+        F.col("h").isNull()
+        | F.col("h_rt").isNull()
+        | (F.col("h") != F.col("h_rt"))
+        | (F.col("h_n") != F.col("h_rt_n"))
+    ).select("doc_id")

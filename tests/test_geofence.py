@@ -96,16 +96,42 @@ def test_geofence_300_vertex_fence_matches_kernel_flags(spark):
     assert {e for *_, e in want} == {"enter", "exit"}
 
 
-def test_streaming_geofence_crossing_spans_micro_batches(spark, tmp_path):
-    """The enter transition's two observations land in DIFFERENT
-    micro-batches; the carried (t, inside) state must still emit it
-    exactly once, with t_prev from batch 1. Also: batch twin agreement
-    on the full input."""
+def _stream_events(spark, tmp_path, batches, polygon, holes=None):
+    """streaming_geofence over `batches`, one parquet file per micro-batch,
+    run to completion into a memory sink; rows sorted by (traj_id, t)."""
     import glob
     import shutil
 
     from movingspark import streaming
 
+    src = str(tmp_path / "gf_src")
+    for i, b in enumerate(batches):
+        b.coalesce(1).write.parquet(f"{src}/b{i}")
+    for i, f in enumerate(sorted(glob.glob(src + "/b*/part-*.parquet"))):
+        shutil.copy(f, f"{src}/{i:03d}.parquet")
+    stream = (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*.parquet")
+    )
+    name = f"gf_{tmp_path.name}".replace("-", "_")
+    q = (
+        streaming.streaming_geofence(stream, polygon, holes)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return sorted(spark.sql(f"SELECT * FROM {name}").collect(), key=lambda r: (r["traj_id"], r["t"]))
+
+
+def test_streaming_geofence_crossing_spans_micro_batches(spark, tmp_path):
+    """The enter transition's two observations land in DIFFERENT
+    micro-batches; the carried (t, inside) state must still emit it
+    exactly once, with t_prev from batch 1. Also: batch twin agreement
+    on the full input."""
     b1 = _pts(
         spark,
         [
@@ -121,28 +147,7 @@ def test_streaming_geofence_crossing_spans_micro_batches(spark, tmp_path):
             ("z", _ts(0), 5.0, 5.0),    # first obs ever: no event
         ],
     )
-    src = str(tmp_path / "gf_src")
-    b1.coalesce(1).write.parquet(src + "/b1")
-    b2.coalesce(1).write.parquet(src + "/b2")
-    for i, f in enumerate(sorted(glob.glob(src + "/b*/part-*.parquet"))):
-        shutil.copy(f, f"{src}/{i:03d}.parquet")
-    stream = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*.parquet")
-    )
-    q = (
-        streaming.streaming_geofence(stream, SQUARE)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("gf_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        spark.sql("SELECT * FROM gf_test").collect(), key=lambda r: r["t"]
-    )
+    got = _stream_events(spark, tmp_path, [b1, b2], SQUARE)
     assert [(r["traj_id"], r["event"], (r["t"] - E).total_seconds(),
              (r["t_prev"] - E).total_seconds()) for r in got] == [
         ("a", "enter", 20.0, 10.0),
@@ -155,6 +160,40 @@ def test_streaming_geofence_crossing_spans_micro_batches(spark, tmp_path):
     assert [(r["traj_id"], r["event"]) for r in batch] == [
         (r["traj_id"], r["event"]) for r in got
     ]
+
+
+def test_streaming_geofence_hole_boundary_counts_inside(spark, tmp_path):
+    """A point on a hole's edge is inside the fence, in the streaming
+    operator as in the batch one: the streaming events equal the batch
+    events when observations sit on the hole's boundary."""
+    hole = [(4.0, 4.0), (6.0, 4.0), (6.0, 6.0), (4.0, 6.0)]
+    b1 = _pts(
+        spark,
+        [
+            ("h", _ts(0), 5.0, 5.0),  # in the hole: outside
+            ("h", _ts(10), 4.0, 5.0),  # on the hole's edge: enter
+            ("h", _ts(20), 5.0, 5.0),  # exit
+        ],
+    )
+    b2 = _pts(
+        spark,
+        [
+            ("h", _ts(30), 5.0, 4.0),  # on the hole's edge: enter
+            ("h", _ts(40), 2.0, 2.0),  # still inside
+            ("h", _ts(50), 6.0, 6.0),  # hole corner: still inside
+            ("h", _ts(60), 5.0, 5.5),  # exit
+        ],
+    )
+    key = [(10.0, "enter"), (20.0, "exit"), (30.0, "enter"), (60.0, "exit")]
+
+    def events(rows):
+        return [(r["traj_id"], (r["t"] - E).total_seconds(), r["event"], (r["t_prev"] - E).total_seconds())
+                for r in rows]
+
+    got = events(_stream_events(spark, tmp_path, [b1, b2], SQUARE, [hole]))
+    batch = events(sorted(geofence_events(b1.unionByName(b2), SQUARE, [hole]).collect(), key=lambda r: r["t"]))
+    assert [(t, e) for _, t, e, _ in got] == key
+    assert got == batch
 
 
 def test_streaming_cell_visits_spans_batches(spark, tmp_path):

@@ -81,29 +81,74 @@ def test_span_sequence_invariant_roundtrip(spark):
     assert bad.count() == 0
 
 
+SPANS_DDL = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
+# planted docs: (doc_id, spans as (kind, text, media_ref, offset)); the
+# round trip sorts by offset, then kind, text, media_ref (nulls first)
+PLANTED = [
+    ("in_order", [("text", "a", None, 0), ("media", None, "m1", 1), ("text", "b", None, 2)]),
+    ("swap", [("text", "a", None, 1), ("text", "b", None, 0)]),
+    ("dup_sorted", [("media", None, "m", 0), ("text", "a", None, 0)]),
+    ("dup_unsorted", [("text", "a", None, 0), ("media", None, "m", 0)]),
+    ("dup_nulls", [("text", "a", None, 0), (None, None, None, 0)]),
+    ("dup_nulls_sorted", [(None, None, None, 0), ("text", "a", None, 0)]),
+    # same content at swapped offsets: the offset is not in the hash
+    ("same_content", [("text", "a", None, 1), ("text", "a", None, 0)]),
+    ("one_span", [("media", None, "m", 7)]),
+    # a null span hashes and sorts as an all-null one, ahead of offset 0
+    ("null_span", [None, ("text", "a", None, 0)]),
+    ("empty", []),
+    ("null", None),
+]
+
+
+def planted_docs(spark):
+    return spark.createDataFrame(PLANTED, SPANS_DDL)
+
+
 def test_span_invariant_detects_violation(spark):
-    docs = ingest.synth_interleaved_docs(spark, 5)
-    # corrupt one doc: reverse its span array (breaks offset order handling
-    # is fine — reassembly sorts — so instead mutate a text payload)
-    corrupted = docs.withColumn(
-        "spans",
-        F.when(
-            F.col("doc_id") == "doc000000002",
-            F.transform(
-                "spans",
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    F.lit("tampered").alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ),
-        ).otherwise(F.col("spans")),
-    )
-    orig_rebuilt = ingest.reassemble_docs(docs).withColumnRenamed("spans", "spans_rt")
-    joined = corrupted.join(orig_rebuilt, "doc_id")
-    bad = joined.filter(F.to_json(F.col("spans")) != F.to_json(F.col("spans_rt")))
-    assert bad.count() == 1
+    """Exactly the planted docs whose array order differs from the
+    reassembly's (offset, kind, text, media_ref) order violate; empty and
+    null spans are absent."""
+    bad = ingest.span_invariant_violations(planted_docs(spark))
+    assert sorted(r["doc_id"] for r in bad.collect()) == ["dup_nulls", "dup_unsorted", "swap"]
+
+
+def test_span_digests_match_two_pass_oracle(spark, tmp_path):
+    """Per-doc (h, h_n, h_rt, h_rt_n) of the one-pass aggregate equal the
+    two-digest full-outer join, on planted, synthetic (in order and
+    reversed) and perfbench docs read from parquet."""
+    from movingspark import catalog
+    from perfbench import gen
+    from tests.oracles import span_digests_two_pass, span_invariant_violations_two_pass
+
+    table, _ = gen.gen_docs(gen.DocParams(n_docs=2000), 3)
+    gen.write_parts(table, str(tmp_path / "docs"), n_files=3)
+    synth = ingest.synth_interleaved_docs(spark, 5000)
+    cases = {
+        "planted": planted_docs(spark),
+        "synth": synth,
+        "synth reversed": synth.limit(500).withColumn("spans", F.reverse("spans")),
+        "perfbench": catalog.read_table(spark, str(tmp_path / "docs")),
+    }
+    cols = ["doc_id", "h", "h_n", "h_rt", "h_rt_n"]
+    for name, docs in cases.items():
+        got = ingest._span_digests(docs).select(*cols)
+        want = span_digests_two_pass(docs).select(*cols)
+        assert got.count() == want.count() > 0, name
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, name
+        bad = ingest.span_invariant_violations(docs)
+        assert sorted(bad.collect()) == sorted(span_invariant_violations_two_pass(docs).collect()), name
+    assert ingest.span_invariant_violations(cases["synth reversed"]).count() == 500
+
+
+def test_reassemble_docs_matches_array_sort_oracle(spark):
+    from tests.oracles import reassemble_docs_array_sort
+
+    docs = planted_docs(spark).unionByName(ingest.synth_interleaved_docs(spark, 300))
+    got, want = ingest.reassemble_docs(docs), reassemble_docs_array_sort(docs)
+    assert got.schema == want.schema
+    assert got.count() == want.count() and got.exceptAll(want).count() == 0
 
 
 def test_events_as_traj_points(spark):

@@ -71,17 +71,26 @@ def max_method_bytecode(df) -> int:
 
 
 @pytest.fixture(scope="module")
-def doc_points(spark, tmp_path_factory):
-    """Exploded points of a small perfbench doc table read from parquet
-    (the doc pass's join stage: scan, explode, parse, cell id, probe)
-    and its four hexagons."""
-    from movingspark import catalog, ingest
+def doc_table(spark, tmp_path_factory):
+    """A small perfbench doc table read from parquet, and its four
+    hexagons."""
+    from movingspark import catalog
     from perfbench import gen
 
     table, polygons = gen.gen_docs(gen.DocParams(n_docs=200), 1)
     path = str(tmp_path_factory.mktemp("docs"))
     gen.write_parts(table, path, n_files=2)
-    return ingest.explode_doc_points(catalog.read_table(spark, path)), polygons
+    return catalog.read_table(spark, path), polygons
+
+
+@pytest.fixture(scope="module")
+def doc_points(doc_table):
+    """Exploded points of the doc table (the doc pass's join stage:
+    scan, explode, parse, cell id, probe) and its four hexagons."""
+    from movingspark import ingest
+
+    docs, polygons = doc_table
+    return ingest.explode_doc_points(docs), polygons
 
 
 def _hexagons(n, seed):
@@ -107,6 +116,21 @@ def test_pip_join_stage_is_jit_compilable(doc_points):
         joined = joins.point_in_polygon_join(pts, polygons, res=8)
         assert _no_python_exec(plan_of(joined)), name
         assert max_method_bytecode(joined) <= HUGE_METHOD_BYTES, name
+
+
+def test_span_invariant_one_scan_one_exchange(doc_table):
+    """The span invariant reads the docs once and shuffles once, on
+    doc_id: both digests come out of the reassembly's own aggregate,
+    with no join between them."""
+    from movingspark import ingest
+
+    bad = ingest.span_invariant_violations(doc_table[0])
+    plan = plan_of(bad)
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
+    assert n_exchanges(plan) == 1
+    assert "SortMergeJoin" not in plan
+    assert _no_python_exec(plan)
+    assert max_method_bytecode(bad) <= HUGE_METHOD_BYTES
 
 
 def test_knn_join_partial_min_by_no_sort_exchange(spark):

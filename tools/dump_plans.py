@@ -1,6 +1,7 @@
 """Write the optimized logical plan of every `queries()` registry entry,
-one file per query, with expression ids (`#12`, `#12L`) stripped so two
-checkouts' plans compare as text.
+one file per query, with expression ids (`#12`, `#12L`) and the
+process-wide counter pyspark appends to lambda variables (`x_24`)
+stripped so two checkouts' plans compare as text.
 
 Usage: python tools/dump_plans.py OUT_DIR SF_DIR [query ...]
 
@@ -23,7 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-EXPR_ID = re.compile(r"#\d+L?")
+EXPR_ID = re.compile(r"#\d+L?|(?<=lambda )(\w+?)_\d+\b")
 HUGE_METHOD_BYTES = 8000
 
 
@@ -40,7 +41,7 @@ def stage_bytecode(spark, df) -> list[tuple[int, str]]:
     out = []
     for i in range(stages.size()):
         stage = stages.apply(i)
-        root = EXPR_ID.sub("", stage._1().strip().splitlines()[0])
+        root = EXPR_ID.sub(r"\1", stage._1().strip().splitlines()[0])
         out.append((stage._3().maxMethodCodeSize(), root))
     return out
 
@@ -71,7 +72,7 @@ def main():
         sizes = []
         try:
             df = fn(spark, sf_dir)
-            text = EXPR_ID.sub("", df._jdf.queryExecution().optimizedPlan().toString())
+            text = EXPR_ID.sub(r"\1", df._jdf.queryExecution().optimizedPlan().toString())
             sizes = stage_bytecode(spark, df)
             code = "".join(f"{n} {root}\n" for n, root in sizes)
         except Exception as e:  # the file records the failure; the run goes on
