@@ -3,8 +3,8 @@
 Re-implements the query & data-processing capabilities of MovingPandas
 (movingpandas v0.22.4) as stateless DataFrame -> DataFrame transforms:
 window algebra for derived columns, `gmap.grouped_apply_sorted` (one
-mapInPandas pass over traj_id-partitioned, time-sorted rows) with
-vectorized numpy kernels for inherently sequential per-trajectory
+mapInArrow pass over traj_id-partitioned, time-sorted rows) with numpy
+kernels on array slices for inherently sequential per-trajectory
 algorithms, and a native quadtree cell index for distributed spatial
 joins (point-in-polygon, kNN, tiling).
 

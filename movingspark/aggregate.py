@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels, pyworker
+from movingspark import gmap, kernels, pyworker
 from movingspark.schema import C_EARTH, local_frame
 
 
@@ -103,32 +103,21 @@ def extract_significant_points(
     reference's emission order within each trajectory (start, end, scan
     finds) so downstream clustering is order-reproducible."""
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_traj(g):
         pts = _sig_points_np(
-            pdf["x"].to_numpy(float),
-            pdf["y"].to_numpy(float),
-            pdf["t"].astype("int64").to_numpy() / 1e9,
+            np.asarray(g["x"], float),
+            np.asarray(g["y"], float),
+            gmap.seconds(g["t"]),
             max_distance,
             min_distance,
             min_stop_duration_s,
             min_angle,
             latlon,
         )
-        tid = pdf["traj_id"].iloc[0]
-        return pd.DataFrame(
-            {
-                "traj_id": pd.Series([tid] * len(pts), dtype=str),
-                "seq": pd.Series(range(len(pts)), dtype="int64"),
-                "x": pd.Series([p[0] for p in pts], dtype=float),
-                "y": pd.Series([p[1] for p in pts], dtype=float),
-            }
-        )
+        xy = np.reshape(pts, (-1, 2))
+        return np.zeros(len(xy), np.int64), {"seq": np.arange(len(xy)), "x": xy[:, 0], "y": xy[:, 1]}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(
-        df, per_traj, "traj_id string, seq long, x double, y double"
-    )
+    return gmap.grouped_apply_sorted(df, per_traj, "traj_id string, seq long, x double, y double")
 
 
 # ---------------------------------------------------------------------------

@@ -2,17 +2,16 @@
 
 IqrCleaner is pure window algebra (per-trajectory percentiles + filter).
 OutlierCleaner carries the last-kept-point state and runs as a
-grouped-map pandas UDF.
+grouped map (gmap).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels, schema
+from movingspark import gmap, kernels, schema
 from movingspark.units import get_conversion
 
 
@@ -47,20 +46,17 @@ def outlier_clean(
     point. Default v_max = q95(speed)*alpha per trajectory. If < 2 rows
     survive (invalid), the original trajectory is returned unchanged."""
     conv = get_conversion(units)
-    out_schema = df.schema
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_traj(g):
         keep = outlier_keep_mask(
-            pdf["x"].to_numpy(float),
-            pdf["y"].to_numpy(float),
-            pdf["t"].astype("int64").to_numpy() / 1e9,
+            np.asarray(g["x"], float),
+            np.asarray(g["y"], float),
+            gmap.seconds(g["t"]),
             v_max, alpha, conv, latlon,
         )
-        return pdf[keep]
+        return np.flatnonzero(keep), {}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(df, per_traj, out_schema)
+    return gmap.grouped_apply_sorted(df, per_traj, df.schema)
 
 
 def outlier_keep_mask(x, y, t, v_max, alpha, conv, latlon) -> np.ndarray:

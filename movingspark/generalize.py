@@ -2,7 +2,7 @@
 
 All five are per-trajectory row-selection algorithms whose keep-set
 depends on carried state (last kept point / recursive split points), so
-each runs as a grouped-map pandas UDF with a numpy kernel; the output
+each runs as a grouped map (gmap) with a numpy kernel; the output
 is the input rows minus dropped ones (schema-preserving), letting Spark
 parallelize across trajectories.
 """
@@ -10,10 +10,9 @@ parallelize across trajectories.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from movingspark import kernels
+from movingspark import gmap, kernels
 
 
 def _point_seg_dist(px, py, ax, ay, bx, by):
@@ -31,19 +30,12 @@ def _point_seg_dist(px, py, ax, ay, bx, by):
 
 def _grouped_filter(df: DataFrame, mask_fn) -> DataFrame:
     """Run mask_fn(x, y, t_sec) -> bool mask per trajectory, keep rows."""
-    out_schema = df.schema
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        mask = mask_fn(
-            pdf["x"].to_numpy(float),
-            pdf["y"].to_numpy(float),
-            pdf["t"].astype("int64").to_numpy() / 1e9,
-        )
-        return pdf[mask]
+    def per_traj(g):
+        mask = mask_fn(np.asarray(g["x"], float), np.asarray(g["y"], float), gmap.seconds(g["t"]))
+        return np.flatnonzero(mask), {}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(df, per_traj, out_schema)
+    return gmap.grouped_apply_sorted(df, per_traj, df.schema)
 
 
 def min_distance_mask(x, y, tolerance: float, latlon: bool = False) -> np.ndarray:

@@ -1,41 +1,43 @@
-"""Grouped-map execution without per-group dispatch overhead.
+"""Grouped-map execution on Arrow arrays, one pass per batch.
 
 The sequential per-trajectory kernels (stop detector, generalizers,
-Kalman, angle split, overlay clip, hulls...) are all "one pandas
-function per traj_id group". Spark's groupBy().applyInPandas pays
-per-GROUP machinery (plan node per group invocation, Arrow slice,
-schema coercion) that dominates wall time when groups are small
-(~70-row groups at sf0.1: ~2/3 of the overlay clip's time was
-dispatch, not kernel).
+Kalman, angle split, overlay clip, hulls, significant points) are "one
+function per traj_id group". groupBy().applyInPandas pays per-GROUP
+dispatch, which dominates when groups are small (~70-row groups at
+sf0.1: ~2/3 of the overlay clip's time). `grouped_apply_sorted` runs
+the function in ONE mapInArrow pass over partitions hash-partitioned
+and sorted by (traj_id, t). Per Arrow batch it:
 
-`grouped_apply_sorted` runs the same per-group function as ONE
-mapInPandas pass over partitions hash-partitioned and sorted by
-(traj_id, t): group boundaries are found with a numpy scan, the last
-(possibly incomplete) group of each Arrow batch is carried into the
-next batch, and each batch yields a single concatenated frame. The
-shuffle cost is identical to applyInPandas (same hash exchange); only
-the Python-side dispatch changes. At 100 TB this matters more, not
-less: group count grows with data while per-group size stays bounded,
-so per-group overhead scales with the dominant term.
+- finds the trajectory boundaries with `pyarrow.compute.not_equal` on
+  `traj_id` (null next to null is one group, null next to a value a
+  boundary) and holds the last group back: it may go on in the next batch;
+- converts a column to numpy when a kernel first reads it, once per
+  batch (`t` as datetime64[ns]; `seconds` makes float seconds of it);
+- calls ``fn(g)`` once per trajectory: ``g[name]`` is the numpy slice of
+  column ``name``, ``len(g)`` the row count. It returns ``(take,
+  overrides)``: row indices into the group (``np.zeros(k)`` makes k rows
+  that carry the group's columns) and a dict of arrays of len(take) that
+  replace a column or add one;
+- builds one RecordBatch: a column no call overrides is taken with
+  `RecordBatch.take` and never leaves Arrow. An output column named like
+  an input column keeps its Arrow type; a new timestamp column takes the
+  input `t`'s (unit and zone).
 
-One level up sit two fixed costs per TASK, one on each side of it.
-Before every task pyspark's worker calls importlib.invalidate_caches(),
-which on Python 3.11/3.12 re-reads the directory of every zip on the
-worker path (16 zipimporters over the pyspark and py4j zips): 0.24 s of
-CPU per call, more than a bench-scale task's kernel work. After every
-task the daemon runs gc.collect() in the reused worker, which walks the
-~73 000 objects that importing pyspark, pandas, pyarrow and movingspark
-left tracked: 30-45 ms of CPU, after the task has reported done, so no
-Spark task metric shows it. `per_batch` therefore calls
-`pyworker.prepare()` first. Once per worker it makes the re-read
-stat-checked (0.1 ms per call) and freezes the import-time heap, so the
-collect walks only the objects created since (under 1 000, ~1 ms).
-Measured on a 4-vCPU VM at local[4]: the stat check took an identity
-grouped map over 15k points (4 tasks, median of 5) from 1.24 to 0.24 s
-of Python-worker CPU; the freeze then took the bench's traj_analytics
-queries (Python-worker CPU per query, median of 7) from stops 0.72 to
-0.59 s, overlay clip 0.48 to 0.39 s, Douglas-Peucker 0.44 to 0.35 s and
-Kalman 0.34 to 0.26 s.
+Kernels read columns through ``np.asarray`` (``t`` through `seconds`), so
+the same function also runs on a pandas frame of one trajectory
+(perfbench's local kernel timing calls it that way).
+
+This replaced a pass that turned each batch into a pandas frame and
+sliced one per trajectory. On the bench's traj_analytics points (seed 3, local[4],
+median of 7, Python-worker CPU per process) its four grouped-map queries
+used 1.45 s per unit (stops 0.58, clip 0.38, Douglas-Peucker 0.27, Kalman
+0.22) around 0.41 s of numpy kernel time; the rest was pandas glue per
+trajectory (iloc/reset_index slices, the DataFrame, Series and Timestamp
+objects each kernel built, pd.concat, Arrow-pandas conversion). The
+clip's wrapper alone took 0.265 s around a 0.039 s core.
+
+`per_batch` calls `pyworker.prepare()` first, which removes two fixed
+costs of every task in a reused worker (its docstring has the numbers).
 """
 
 from __future__ import annotations
@@ -43,56 +45,131 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from movingspark import pyworker
 
 
-def grouped_apply_sorted(df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], schema) -> DataFrame:
-    """Semantically equivalent to
-    ``df.groupBy("traj_id").applyInPandas(fn, schema)`` for a per-group
-    pure function, executed as mapInPandas over (traj_id, t)-sorted hash
-    partitions with a batch-boundary carry. Contract: `fn` receives one
-    whole trajectory per call, its rows in ascending `t` order, with a
-    fresh RangeIndex (0..n-1), so `fn` needs no sort of its own
-    (pinned in tests/test_gmap.py).
+def seconds(t) -> np.ndarray:
+    """Float seconds since the epoch: int64 ns -> float64 -> / 1e9.
+    Not us / 1e6: ns counts exceed 2^53, so the float64 rounds before the
+    division, and the two can differ in the last bit."""
+    return np.asarray(t, "datetime64[ns]").view(np.int64) / 1e9
 
-    Known trade-offs vs applyInPandas (both acceptable here): the
-    explicit repartition is not elided when the input is already
-    hash-partitioned on traj_id (FlatMapGroupsInPandas declares a
-    ClusteredDistribution that Catalyst can satisfy without a shuffle;
-    RepartitionByExpression is unconditional) — none of this engine's
-    pipelines chain two grouped-map kernels without an intervening
-    exchange, so nothing regresses; and one pathological giant group
-    still lands on a single task, exactly as it does with
-    applyInPandas (inherent to per-group sequential semantics)."""
+
+def timestamps(s) -> np.ndarray:
+    """datetime64[ns] of float seconds rounded to the microsecond."""
+    return (np.rint(np.asarray(s, float) * 1e6).astype(np.int64) * 1000).view("datetime64[ns]")
+
+
+class _Columns(dict):
+    """numpy arrays of one batch's columns, each made on its first read."""
+
+    def __init__(self, batch: pa.RecordBatch):
+        super().__init__()
+        self.batch = batch
+
+    def __missing__(self, name):
+        col = self.batch.column(name)
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.timestamp("ns", col.type.tz))
+        self[name] = arr = col.to_numpy(zero_copy_only=False)
+        return arr
+
+
+class _Rows:
+    """One trajectory's rows of a batch: ``g[name]`` is a numpy slice."""
+
+    __slots__ = ("cols", "start", "stop")
+
+    def __init__(self, cols: _Columns, start: int, stop: int):
+        self.cols, self.start, self.stop = cols, start, stop
+
+    def __getitem__(self, name):
+        return self.cols[name][self.start : self.stop]
+
+    def __len__(self):
+        return self.stop - self.start
+
+
+def _group_starts(keys: pa.Array) -> np.ndarray:
+    import pyarrow.compute as pc
+
+    a, b = keys.slice(1), keys.slice(0, len(keys) - 1)
+    # not_equal is null where either side is: then a boundary iff one side is
+    differ = pc.coalesce(pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b)))
+    return np.concatenate([[0], np.flatnonzero(differ.to_numpy(zero_copy_only=False)) + 1])
+
+
+def _concat(batches: list) -> pa.RecordBatch:
+    return batches[0] if len(batches) == 1 else pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def grouped_apply_sorted(df: DataFrame, fn: Callable, schema) -> DataFrame:
+    """``df.groupBy("traj_id")`` with a pure ``fn(g) -> (take, overrides)``
+    applied per group (module docstring). `fn` sees one whole trajectory
+    per call, its rows in ascending `t` order, so it needs no sort of its
+    own (pinned in tests/test_gmap.py, as is row equality with
+    applyInPandas of each kernel's former pandas form).
+
+    Known trade-offs vs applyInPandas: the repartition is not elided when
+    the input is already hash-partitioned on traj_id (no pipeline here
+    chains two grouped maps without an exchange between), and one giant
+    group still lands on a single task, as it does there."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    spark_fields = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+
+    def out_schema(inp: pa.Schema) -> pa.Schema:
+        def arrow_type(name, typ):
+            if name in inp.names:
+                return inp.field(name).type
+            return inp.field("t").type if pa.types.is_timestamp(typ) else typ
+
+        return pa.schema([(name, arrow_type(name, typ)) for name, typ in spark_fields])
+
+    def apply(batch, starts, stops, target):
+        cols = _Columns(batch)
+        takes, overrides = [], []
+        for start, stop in zip(starts, stops):
+            take, over = fn(_Rows(cols, start, stop))
+            if len(take):
+                takes.append(np.asarray(take, np.int64) + start)
+                overrides.append(over)
+        if not takes:
+            return
+        index = pa.array(np.concatenate(takes))
+        arrays = []
+        for field in target:
+            if any(field.name in o for o in overrides):
+                parts = [o[field.name] if field.name in o else cols[field.name][t] for t, o in zip(takes, overrides)]
+                arrays.append(pa.array(np.concatenate(parts)).cast(field.type))
+            else:
+                arrays.append(batch.column(field.name).take(index))
+        yield pa.RecordBatch.from_arrays(arrays, schema=target)
 
     def per_batch(batches):
         pyworker.prepare()
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
+        held, target = [], None  # held: the rows of the last group seen so far
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            keys = pdf["traj_id"].to_numpy()
-            boundary = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            starts = np.concatenate([[0], boundary])
-            # hold back the final group — it may continue in the next batch
-            carry = pdf.iloc[starts[-1]:]
-            outs = [
-                fn(pdf.iloc[s:e].reset_index(drop=True))
-                for s, e in zip(starts[:-1], starts[1:])
-            ]
-            outs = [o for o in outs if len(o)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if carry is not None and len(carry):
-            out = fn(carry.reset_index(drop=True))
-            if len(out):
-                yield out
+            target = target or out_schema(batch.schema)
+            keys = batch.column("traj_id")
+            # rows are sorted by traj_id: equal ends mean one group throughout
+            if held and held[0].column("traj_id")[0].as_py() == keys[-1].as_py():
+                held.append(batch)
+                continue
+            batch = _concat(held + [batch])
+            starts = _group_starts(batch.column("traj_id"))
+            held = [batch.slice(starts[-1])]
+            yield from apply(batch, starts[:-1], starts[1:], target)
+        if held:
+            batch = _concat(held)
+            yield from apply(batch, [0], [batch.num_rows], target)
 
     # Explicit partition count: repartition(traj_id) alone lets AQE coalesce
     # by SHUFFLE BYTES, which is miscalibrated for a CPU-bound Python
@@ -109,5 +186,5 @@ def grouped_apply_sorted(df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFram
     return (
         df.repartition(n_parts, "traj_id")
         .sortWithinPartitions("traj_id", "t")
-        .mapInPandas(per_batch, schema=schema)
+        .mapInArrow(per_batch, schema=schema)
     )

@@ -12,22 +12,21 @@ reference overlay.py:12-229 with its exact tolerances:
 
 Execution: candidate pre-filter on the segment bbox (the reference's
 R-tree query, overlay.py:171-188, done vectorized in numpy inside the
-kernel). The clip runs as mapInPandas over partitions hash-partitioned
-and sorted by (traj_id, t) — one pandas pass per Arrow batch with a
-carry buffer for the trajectory spanning a batch boundary — instead of
-per-group applyInPandas dispatch, whose per-group overhead dominated
-wall time at ~70-row groups. The polygon is a plan constant shipped in
-the UDF closure.
+kernel). The clip runs through gmap.grouped_apply_sorted — one
+mapInArrow pass per Arrow batch over partitions hash-partitioned and
+sorted by (traj_id, t), the kernel on numpy slices of each trajectory —
+instead of per-group applyInPandas dispatch, whose per-group overhead
+dominated wall time at ~70-row groups. The polygon is a plan constant
+shipped in the UDF closure.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from movingspark import kernels
+from movingspark import gmap, kernels
 
 SNAP_S = 0.010  # 10 ms tolerance (overlay.py:75-83)
 
@@ -198,22 +197,20 @@ def clip(df: DataFrame, polygon, point_based: bool = False) -> DataFrame:
     poly = np.asarray(polygon, float)
     out_schema = T.StructType(df.schema.fields + [T.StructField("parent", T.StringType())])
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf["x"].to_numpy(float)
-        y = pdf["y"].to_numpy(float)
-        t_ns = pdf["t"].astype("int64").to_numpy()
-        tsec = t_ns / 1e9
-        tid = pdf["traj_id"].iloc[0]
+    def per_traj(g):
+        x = np.asarray(g["x"], float)
+        y = np.asarray(g["y"], float)
+        t_ns = np.asarray(g["t"], "datetime64[ns]").view(np.int64)
+        tsec = gmap.seconds(g["t"])
+        tid = np.asarray(g["traj_id"])[0]
 
         if point_based:
             ranges = _clip_ranges_pointbased(x, y, tsec, poly)
         else:
             ranges = _clip_ranges_linebased(x, y, tsec, poly)
 
-        empty = pdf.iloc[0:0].copy()
-        empty["parent"] = pd.Series(dtype=object)
         if not ranges:
-            return empty
+            return (), {}
 
         # Vectorized piece synthesis (float/row-exact twin of the scalar
         # loop in _ref history: membership by searchsorted on the sorted
@@ -243,12 +240,13 @@ def clip(df: DataFrame, polygon, point_based: bool = False) -> DataFrame:
             needn = ~nearn
             pad0 = np.maximum(np.searchsorted(tsec, t0s, "right") - 1, 0)
             padn = np.maximum(np.searchsorted(tsec, tns, "right") - 1, 0)
-            ent_ns = np.rint(t0s * 1e6).astype("int64") * 1000
-            ext_ns = np.rint(tns * 1e6).astype("int64") * 1000
+            ent_ns = gmap.timestamps(t0s).view(np.int64)
+            ext_ns = gmap.timestamps(tns).view(np.int64)
         else:
             need0 = needn = np.zeros(len(ranges), dtype=bool)
             pad0 = padn = np.zeros(len(ranges), dtype=np.int64)
             ent_ns = ext_ns = np.zeros(len(ranges), dtype=np.int64)
+            p0x = p0y = pnx = pny = np.zeros(len(ranges))
 
         nmem = hi - lo
         total = nmem + need0 + needn
@@ -260,49 +258,30 @@ def clip(df: DataFrame, polygon, point_based: bool = False) -> DataFrame:
         )
         keep = (total >= 2) & (first_ns != last_ns)
         if not keep.any():
-            return empty
+            return (), {}
 
-        take, out_ns, sx, sy, labels = [], [], [], [], []
-        counter = 0
-        for i in np.nonzero(keep)[0]:
-            if need0[i]:
-                take.append(np.array([pad0[i]]))
-                out_ns.append(np.array([ent_ns[i]]))
-                sx.append(np.array([p0x[i]]))
-                sy.append(np.array([p0y[i]]))
+        parts = []  # per kept range: rows taken, t ns, x, y
+        for i in np.flatnonzero(keep):
             mem = np.arange(lo[i], hi[i])
-            take.append(mem)
-            out_ns.append(t_ns[mem])
-            sx.append(np.full(len(mem), np.nan))
-            sy.append(np.full(len(mem), np.nan))
-            if needn[i]:
-                take.append(np.array([padn[i]]))
-                out_ns.append(np.array([ext_ns[i]]))
-                sx.append(np.array([pnx[i]]))
-                sy.append(np.array([pny[i]]))
-            labels.extend([f"{tid}_{counter}"] * int(total[i]))
-            counter += 1
+            e, f = int(need0[i]), int(needn[i])  # synthesized entry / exit row
+            parts.append([
+                np.concatenate([np.full(e, first), members, np.full(f, last)])
+                for first, members, last in (
+                    (pad0[i], mem, padn[i]), (ent_ns[i], t_ns[mem], ext_ns[i]),
+                    (p0x[i], x[mem], pnx[i]), (p0y[i], y[mem], pny[i]),
+                )
+            ])
+        take, out_ns, ox, oy = map(np.concatenate, zip(*parts))
+        labels = [np.full(len(p[0]), f"{tid}_{k}", object) for k, p in enumerate(parts)]
+        return take, {
+            "t": out_ns.view("datetime64[ns]"),
+            "x": ox,
+            "y": oy,
+            "parent": np.full(len(take), tid, object),
+            "traj_id": np.concatenate(labels),
+        }
 
-        take = np.concatenate(take)
-        out_ns = np.concatenate(out_ns)
-        sx = np.concatenate(sx)
-        sy = np.concatenate(sy)
-        out = pdf.iloc[take].copy().reset_index(drop=True)
-        out["t"] = pd.to_datetime(out_ns)
-        ox = out["x"].to_numpy(float)
-        oy = out["y"].to_numpy(float)
-        syn = ~np.isnan(sx)
-        ox[syn] = sx[syn]
-        oy[syn] = sy[syn]
-        out["x"] = ox
-        out["y"] = oy
-        out["parent"] = tid
-        out["traj_id"] = labels
-        return out[[*pdf.columns, "parent"]]
-
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(df, per_traj, out_schema)
+    return gmap.grouped_apply_sorted(df, per_traj, out_schema)
 
 
 def intersection_with_feature(

@@ -8,11 +8,11 @@ window patterns rather than per-trajectory Python.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels
+from movingspark import gmap, kernels
 from movingspark.derive import _kinematics, bearing_expr, traj_window
 from movingspark.units import get_conversion
 
@@ -147,23 +147,13 @@ def to_traj_gdf(
 def get_mcp(df: DataFrame) -> DataFrame:
     """A9 (trajectory.py:1731-1744): convex hull vertices per trajectory,
     CCW order, as an array of (x, y) structs. Monotone-chain numpy kernel
-    in a grouped-map UDF."""
-    def hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = kernels.convex_hull(pdf[["x", "y"]].to_numpy(float))
-        return pd.DataFrame(
-            {
-                "traj_id": pdf["traj_id"].iloc[0],
-                "vertex": range(len(h)),
-                "x": h[:, 0],
-                "y": h[:, 1],
-            }
-        )
+    in a grouped map (gmap)."""
 
-    from movingspark.gmap import grouped_apply_sorted
+    def hull(g):
+        h = kernels.convex_hull(np.column_stack([np.asarray(g["x"], float), np.asarray(g["y"], float)]))
+        return np.zeros(len(h), np.int64), {"vertex": np.arange(len(h)), "x": h[:, 0], "y": h[:, 1]}
 
-    return grouped_apply_sorted(
-        df, hull, "traj_id string, vertex int, x double, y double"
-    )
+    return gmap.grouped_apply_sorted(df, hull, "traj_id string, vertex int, x double, y double")
 
 
 # ---------------------------------------------------------------------------

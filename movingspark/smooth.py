@@ -5,7 +5,7 @@ each trajectory, re-implemented in numpy (the reference delegates to
 Stone Soup, an optional dependency): state [x, vx, y, vy], transition
 F_dt = [[1, dt], [0, 1]] per axis, process noise = white-acceleration
 model q * [[dt^3/3, dt^2/2], [dt^2/2, dt]], measurement = position
-with variance r. Runs per trajectory as a grouped-map pandas UDF.
+with variance r. Runs per trajectory as a grouped map (gmap).
 
 Lat/lon trajectories are smoothed in the EPSG:3395 World Mercator
 metric frame — the same projection the reference passes latlon
@@ -19,10 +19,9 @@ equirectangular approximation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from movingspark import kernels
+from movingspark import gmap, kernels
 
 
 def _kf_rts(zx: np.ndarray, zy: np.ndarray, dts: np.ndarray, q: float, r: float):
@@ -116,22 +115,20 @@ def kalman_smooth(
     r = float(measurement_noise_std) ** 2
     if not r > 0.0:
         raise ValueError(f"measurement_noise_std must be positive, got {measurement_noise_std!r}")
-    out_schema = df.schema
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pdf
-        t = pdf["t"].astype("int64").to_numpy() / 1e9
+    def per_traj(g):
+        rows = np.arange(len(g))
+        if len(g) < 2:
+            return rows, {}
+        t = gmap.seconds(g["t"])
         dts = np.diff(t, prepend=t[0])
-        x = pdf["x"].to_numpy(float)
-        y = pdf["y"].to_numpy(float)
+        x = np.asarray(g["x"], float)
+        y = np.asarray(g["y"], float)
         if latlon:
             sx, sy = _kf_rts(*kernels.mercator_forward(x, y), dts, q, r)
-            pdf["x"], pdf["y"] = kernels.mercator_inverse(sx, sy)
+            sx, sy = kernels.mercator_inverse(sx, sy)
         else:
-            pdf["x"], pdf["y"] = _kf_rts(x, y, dts, q, r)
-        return pdf
+            sx, sy = _kf_rts(x, y, dts, q, r)
+        return rows, {"x": sx, "y": sy}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(df, per_traj, out_schema)
+    return gmap.grouped_apply_sorted(df, per_traj, df.schema)

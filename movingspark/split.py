@@ -4,7 +4,7 @@ Window-algebra splitters (gap/value-change/speed/temporal) never leave
 the JVM: a boolean change flag + running sum produces the piece id
 (D8 cumsum segmentation), boundary-row duplication is a filtered union.
 Only AngleChangeSplitter carries loop state (the comparison direction
-only updates on split) and runs as a grouped-map pandas UDF.
+only updates on split) and runs as a grouped map (gmap).
 
 Naming parity: piece traj_id = "{parent_id}_{i}" with the reference's
 enumeration rules (which differ subtly per splitter — see each fn).
@@ -16,11 +16,10 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from movingspark import kernels, schema
+from movingspark import gmap, kernels, schema
 from movingspark.derive import _kinematics, traj_window
 from movingspark.ingest import filter_min_length
 
@@ -185,39 +184,34 @@ def split_by_angle_change(
     """X6 (trajectory_splitter.py:273-343): carried comparison direction
     comp_dir updates only when a split fires (speed >= min_speed AND
     angular_difference(comp_dir, direction) >= min_angle) — inherently
-    sequential, so a grouped-map pandas UDF with the loop in numpy.
+    sequential, so a grouped map (gmap) with the loop in numpy.
     Each piece with >1 rows gets the previous piece's LAST row prepended
     (i > 0); 1-row pieces are dropped before prepending."""
     df, (dircol, spcol) = _own_columns(df, [schema.DIRECTION, schema.SPEED], latlon)
     out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
     out_schema = ", ".join(out_fields + ["parent string"])
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_traj(g):
         groups = angle_change_groups(
-            pdf[dircol].to_numpy(float), pdf[spcol].to_numpy(float), min_angle, min_speed
+            np.asarray(g[dircol], float), np.asarray(g[spcol], float), min_angle, min_speed
         )
-        tid = pdf["traj_id"].iloc[0]
-        pieces = []
+        tid = np.asarray(g["traj_id"])[0]
         bounds = np.flatnonzero(np.diff(groups)) + 1
         starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(pdf)]])
+        ends = np.concatenate([bounds, [len(groups)]])
+        take, labels = [], []
         for i, (s, e) in enumerate(zip(starts, ends)):
             if e - s <= 1:
                 continue
-            piece = pdf.iloc[s:e]
-            if i > 0:
-                piece = pd.concat([pdf.iloc[starts[i - 1] + (ends[i - 1] - starts[i - 1]) - 1 : ends[i - 1]], piece])
-            piece = piece.copy()
-            piece["parent"] = tid
-            piece["traj_id"] = f"{tid}_{i}"
-            pieces.append(piece)
-        if not pieces:
-            return pdf.iloc[0:0].assign(parent=pd.Series(dtype=str))
-        return pd.concat(pieces, ignore_index=True)
+            rows = np.arange(s - (i > 0), e)  # piece i > 0 starts with piece i-1's last row
+            take.append(rows)
+            labels += [f"{tid}_{i}"] * len(rows)
+        if not take:
+            return (), {}
+        take = np.concatenate(take)
+        return take, {"parent": np.full(len(take), tid, object), "traj_id": np.array(labels, object)}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    out = grouped_apply_sorted(df, per_traj, out_schema).drop("__direction", "__speed")
+    out = gmap.grouped_apply_sorted(df, per_traj, out_schema).drop("__direction", "__speed")
     if min_length > 0:
         out = filter_min_length(out, min_length, latlon=latlon)
     return out

@@ -1,7 +1,7 @@
 """TrajectoryStopDetector (X1) + stop-point summary (A11).
 
 The detection loop is inherently sequential per trajectory (carried
-buffer state), so it runs as one pandas call per trajectory through
+buffer state), so it runs as one numpy-kernel call per trajectory through
 gmap.grouped_apply_sorted — Spark parallelizes across trajectories;
 loop semantics ported exactly from the reference
 (trajectory_stop_detector.py:122-187):
@@ -17,11 +17,10 @@ loop semantics ported exactly from the reference
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from movingspark import kernels
+from movingspark import gmap, kernels
 
 RANGE_SCHEMA = "traj_id string, start_t timestamp, end_t timestamp"
 
@@ -136,29 +135,19 @@ def get_stop_time_ranges(
 ) -> DataFrame:
     """Detected stops as (traj_id, start_t, end_t)."""
 
-    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf["t"].astype("int64").to_numpy() / 1e9
+    def per_traj(g):
         stops = _detect_stops_np(
-            pdf["x"].to_numpy(float),
-            pdf["y"].to_numpy(float),
-            ts,
+            np.asarray(g["x"], float),
+            np.asarray(g["y"], float),
+            gmap.seconds(g["t"]),
             max_diameter,
             min_duration_s,
             latlon,
         )
-        tid = pdf["traj_id"].iloc[0]
-        out = pd.DataFrame(
-            {
-                "traj_id": pd.Series([tid] * len(stops), dtype=str),
-                "start_t": pd.Series([pd.Timestamp(round(s * 1e6) * 1000) for s, _ in stops], dtype="datetime64[ns]"),
-                "end_t": pd.Series([pd.Timestamp(round(e * 1e6) * 1000) for _, e in stops], dtype="datetime64[ns]"),
-            }
-        )
-        return out
+        ends = gmap.timestamps(np.reshape(stops, (-1, 2)))
+        return np.zeros(len(stops), np.int64), {"start_t": ends[:, 0], "end_t": ends[:, 1]}
 
-    from movingspark.gmap import grouped_apply_sorted
-
-    return grouped_apply_sorted(df, per_traj, RANGE_SCHEMA)
+    return gmap.grouped_apply_sorted(df, per_traj, RANGE_SCHEMA)
 
 
 def attach_ranges(df: DataFrame, ranges: DataFrame) -> DataFrame:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from movingspark import pyworker
+from movingspark import gmap, pyworker
 from movingspark.cells import WORLD, cell_id_expr
 
 
@@ -151,7 +151,7 @@ def streaming_stops(
         pdf = pdf.sort_values("t", kind="mergesort")
         xs = pdf["x"].to_numpy(float)
         ys = pdf["y"].to_numpy(float)
-        ts = pdf["t"].astype("int64").to_numpy() / 1e9
+        ts = gmap.seconds(pdf["t"])
         if state.exists:
             sxs, sys_, sts = state.get
             xs = np.concatenate([np.asarray(sxs, float), xs])
@@ -161,13 +161,8 @@ def streaming_stops(
             xs, ys, ts, max_diameter, min_duration_s, latlon, flush=False, return_lo=True
         )
         state.update((xs[lo:].tolist(), ys[lo:].tolist(), ts[lo:].tolist()))
-        yield pd.DataFrame(
-            {
-                "traj_id": [key[0]] * len(stops_found),
-                "start_t": [pd.Timestamp(round(s * 1e6) * 1000) for s, _ in stops_found],
-                "end_t": [pd.Timestamp(round(e * 1e6) * 1000) for _, e in stops_found],
-            }
-        )
+        ends = gmap.timestamps(np.reshape(stops_found, (-1, 2)))
+        yield pd.DataFrame({"traj_id": [key[0]] * len(ends), "start_t": ends[:, 0], "end_t": ends[:, 1]})
 
     return stream.groupBy("traj_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout

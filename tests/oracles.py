@@ -23,11 +23,17 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - span_digests_two_pass ~ ingest._span_digests (one digest per side,
   each its own scan and exchange, joined full-outer on doc_id)
 - span_invariant_violations_two_pass ~ ingest.span_invariant_violations
+- stops_pandas, clip_pandas, grouped_filter_pandas, kalman_pandas,
+  outlier_clean_pandas, angle_split_pandas, hull_pandas,
+  significant_points_pandas ~ the per-trajectory functions the
+  grouped-map operators hand gmap.grouped_apply_sorted (pandas frames
+  in and out, as under its former mapInPandas contract)
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -508,3 +514,274 @@ def span_invariant_violations_two_pass(docs: DataFrame) -> DataFrame:
         | (F.col("h") != F.col("h_rt"))
         | (F.col("h_n") != F.col("h_rt_n"))
     ).select("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Pandas per-trajectory wrappers of the grouped-map kernels, as they ran
+# under the former mapInPandas contract of gmap.grouped_apply_sorted (one
+# pandas frame per trajectory, rows in t order, index 0..n-1). Run through
+# groupBy("traj_id").applyInPandas(by_time(fn), schema) they are the
+# reference each ported operator must equal row for row.
+# ---------------------------------------------------------------------------
+
+
+def by_time(fn):
+    """fn on the group's rows in t order with a fresh index, as the
+    mapInPandas contract handed them over; applyInPandas does not sort."""
+    return lambda pdf: fn(pdf.sort_values("t", kind="stable").reset_index(drop=True))
+
+
+def stops_pandas(max_diameter, min_duration_s, latlon=False):
+    from movingspark.stops import _detect_stops_np
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        ts = pdf["t"].astype("int64").to_numpy() / 1e9
+        stops = _detect_stops_np(
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            ts,
+            max_diameter,
+            min_duration_s,
+            latlon,
+        )
+        tid = pdf["traj_id"].iloc[0]
+        out = pd.DataFrame(
+            {
+                "traj_id": pd.Series([tid] * len(stops), dtype=str),
+                "start_t": pd.Series([pd.Timestamp(round(s * 1e6) * 1000) for s, _ in stops], dtype="datetime64[ns]"),
+                "end_t": pd.Series([pd.Timestamp(round(e * 1e6) * 1000) for _, e in stops], dtype="datetime64[ns]"),
+            }
+        )
+        return out
+
+    return per_traj
+
+
+def clip_pandas(polygon, point_based=False):
+    from movingspark import overlay
+
+    poly = np.asarray(polygon, float)
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = pdf["x"].to_numpy(float)
+        y = pdf["y"].to_numpy(float)
+        t_ns = pdf["t"].astype("int64").to_numpy()
+        tsec = t_ns / 1e9
+        tid = pdf["traj_id"].iloc[0]
+
+        if point_based:
+            ranges = overlay._clip_ranges_pointbased(x, y, tsec, poly)
+        else:
+            ranges = overlay._clip_ranges_linebased(x, y, tsec, poly)
+
+        empty = pdf.iloc[0:0].copy()
+        empty["parent"] = pd.Series(dtype=object)
+        if not ranges:
+            return empty
+
+        # Vectorized piece synthesis (float/row-exact twin of the scalar
+        # loop in _ref history: membership by searchsorted on the sorted
+        # time axis, entry/exit rows padded from the last row at-or-before
+        # the boundary, piece order = [entry, members..., exit] — entry
+        # time is < the first member by construction of the 5e-7 s guard).
+        t0s = np.array([r[0] for r in ranges], float)
+        tns = np.array([r[1] for r in ranges], float)
+        synth = ranges[0][2] is not None  # line-based ranges carry points
+        lo = np.searchsorted(tsec, t0s, "left")
+        hi = np.searchsorted(tsec, tns, "right")
+        if synth:
+            p0x = np.array([r[2][0] for r in ranges], float)
+            p0y = np.array([r[2][1] for r in ranges], float)
+            pnx = np.array([r[3][0] for r in ranges], float)
+            pny = np.array([r[3][1] for r in ranges], float)
+            atol = 5e-7
+            near0 = (
+                np.searchsorted(tsec, t0s + atol, "right")
+                - np.searchsorted(tsec, t0s - atol, "left")
+            ) > 0
+            nearn = (
+                np.searchsorted(tsec, tns + atol, "right")
+                - np.searchsorted(tsec, tns - atol, "left")
+            ) > 0
+            need0 = ~near0
+            needn = ~nearn
+            pad0 = np.maximum(np.searchsorted(tsec, t0s, "right") - 1, 0)
+            padn = np.maximum(np.searchsorted(tsec, tns, "right") - 1, 0)
+            ent_ns = np.rint(t0s * 1e6).astype("int64") * 1000
+            ext_ns = np.rint(tns * 1e6).astype("int64") * 1000
+        else:
+            need0 = needn = np.zeros(len(ranges), dtype=bool)
+            pad0 = padn = np.zeros(len(ranges), dtype=np.int64)
+            ent_ns = ext_ns = np.zeros(len(ranges), dtype=np.int64)
+
+        nmem = hi - lo
+        total = nmem + need0 + needn
+        first_ns = np.where(
+            need0, ent_ns, np.where(nmem > 0, t_ns[np.minimum(lo, len(t_ns) - 1)], ext_ns)
+        )
+        last_ns = np.where(
+            needn, ext_ns, np.where(nmem > 0, t_ns[np.maximum(hi - 1, 0)], ent_ns)
+        )
+        keep = (total >= 2) & (first_ns != last_ns)
+        if not keep.any():
+            return empty
+
+        take, out_ns, sx, sy, labels = [], [], [], [], []
+        counter = 0
+        for i in np.nonzero(keep)[0]:
+            if need0[i]:
+                take.append(np.array([pad0[i]]))
+                out_ns.append(np.array([ent_ns[i]]))
+                sx.append(np.array([p0x[i]]))
+                sy.append(np.array([p0y[i]]))
+            mem = np.arange(lo[i], hi[i])
+            take.append(mem)
+            out_ns.append(t_ns[mem])
+            sx.append(np.full(len(mem), np.nan))
+            sy.append(np.full(len(mem), np.nan))
+            if needn[i]:
+                take.append(np.array([padn[i]]))
+                out_ns.append(np.array([ext_ns[i]]))
+                sx.append(np.array([pnx[i]]))
+                sy.append(np.array([pny[i]]))
+            labels.extend([f"{tid}_{counter}"] * int(total[i]))
+            counter += 1
+
+        take = np.concatenate(take)
+        out_ns = np.concatenate(out_ns)
+        sx = np.concatenate(sx)
+        sy = np.concatenate(sy)
+        out = pdf.iloc[take].copy().reset_index(drop=True)
+        out["t"] = pd.to_datetime(out_ns)
+        ox = out["x"].to_numpy(float)
+        oy = out["y"].to_numpy(float)
+        syn = ~np.isnan(sx)
+        ox[syn] = sx[syn]
+        oy[syn] = sy[syn]
+        out["x"] = ox
+        out["y"] = oy
+        out["parent"] = tid
+        out["traj_id"] = labels
+        return out[[*pdf.columns, "parent"]]
+
+    return per_traj
+
+
+def grouped_filter_pandas(mask_fn):
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        mask = mask_fn(
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
+        )
+        return pdf[mask]
+
+    return per_traj
+
+
+def kalman_pandas(process_noise_std=0.5, measurement_noise_std=1.0, latlon=False):
+    from movingspark.smooth import _kf_rts
+
+    q = float(process_noise_std) ** 2
+    r = float(measurement_noise_std) ** 2
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) < 2:
+            return pdf
+        t = pdf["t"].astype("int64").to_numpy() / 1e9
+        dts = np.diff(t, prepend=t[0])
+        x = pdf["x"].to_numpy(float)
+        y = pdf["y"].to_numpy(float)
+        if latlon:
+            sx, sy = _kf_rts(*kernels.mercator_forward(x, y), dts, q, r)
+            pdf["x"], pdf["y"] = kernels.mercator_inverse(sx, sy)
+        else:
+            pdf["x"], pdf["y"] = _kf_rts(x, y, dts, q, r)
+        return pdf
+
+    return per_traj
+
+
+def outlier_clean_pandas(v_max=None, units=None, alpha=3.0, latlon=False):
+    from movingspark.clean import outlier_keep_mask
+
+    conv = get_conversion(units)
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        keep = outlier_keep_mask(
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
+            v_max, alpha, conv, latlon,
+        )
+        return pdf[keep]
+
+    return per_traj
+
+
+def angle_split_pandas(dircol, spcol, min_angle=45, min_speed=0):
+    from movingspark.split import angle_change_groups
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        groups = angle_change_groups(
+            pdf[dircol].to_numpy(float), pdf[spcol].to_numpy(float), min_angle, min_speed
+        )
+        tid = pdf["traj_id"].iloc[0]
+        pieces = []
+        bounds = np.flatnonzero(np.diff(groups)) + 1
+        starts = np.concatenate([[0], bounds])
+        ends = np.concatenate([bounds, [len(pdf)]])
+        for i, (s, e) in enumerate(zip(starts, ends)):
+            if e - s <= 1:
+                continue
+            piece = pdf.iloc[s:e]
+            if i > 0:
+                piece = pd.concat([pdf.iloc[starts[i - 1] + (ends[i - 1] - starts[i - 1]) - 1 : ends[i - 1]], piece])
+            piece = piece.copy()
+            piece["parent"] = tid
+            piece["traj_id"] = f"{tid}_{i}"
+            pieces.append(piece)
+        if not pieces:
+            return pdf.iloc[0:0].assign(parent=pd.Series(dtype=str))
+        return pd.concat(pieces, ignore_index=True)
+
+    return per_traj
+
+
+def hull_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
+    h = kernels.convex_hull(pdf[["x", "y"]].to_numpy(float))
+    return pd.DataFrame(
+        {
+            "traj_id": pdf["traj_id"].iloc[0],
+            "vertex": range(len(h)),
+            "x": h[:, 0],
+            "y": h[:, 1],
+        }
+    )
+
+
+def significant_points_pandas(max_distance, min_distance, min_stop_duration_s, min_angle=45, latlon=False):
+    from movingspark.aggregate import _sig_points_np
+
+    def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
+        pts = _sig_points_np(
+            pdf["x"].to_numpy(float),
+            pdf["y"].to_numpy(float),
+            pdf["t"].astype("int64").to_numpy() / 1e9,
+            max_distance,
+            min_distance,
+            min_stop_duration_s,
+            min_angle,
+            latlon,
+        )
+        tid = pdf["traj_id"].iloc[0]
+        return pd.DataFrame(
+            {
+                "traj_id": pd.Series([tid] * len(pts), dtype=str),
+                "seq": pd.Series(range(len(pts)), dtype="int64"),
+                "x": pd.Series([p[0] for p in pts], dtype=float),
+                "y": pd.Series([p[1] for p in pts], dtype=float),
+            }
+        )
+
+    return per_traj

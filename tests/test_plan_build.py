@@ -3,6 +3,7 @@ literals are exact, and driver-built frames are LocalRelations."""
 
 import math
 import struct
+import threading
 from unittest import mock
 
 import numpy as np
@@ -61,15 +62,18 @@ def test_poly_id_with_quote_and_backslash_comes_back_unchanged(spark):
 
 
 def _py4j_calls(build) -> int:
-    """Py4J commands sent while `build()` runs (after one warm-up build,
-    so one-time JVM class lookups do not count)."""
+    """Py4J commands the calling thread sends while `build()` runs (after
+    one warm-up build, so one-time JVM class lookups do not count). py4j's
+    FinalizerWorker thread sends the deletes of Java proxies freed earlier,
+    by any test, on its own 1 s schedule; they are not the build's."""
     build()
     n = 0
     send = jg.GatewayClient.send_command
+    caller = threading.current_thread()
 
     def counting(self, *args, **kwargs):
         nonlocal n
-        n += 1
+        n += threading.current_thread() is caller
         return send(self, *args, **kwargs)
 
     with mock.patch.object(jg.GatewayClient, "send_command", counting):

@@ -263,8 +263,8 @@ def test_reused_worker_keeps_its_heap_frozen():
 # coverage guard: every function the engine hands to a Python worker
 # ---------------------------------------------------------------------------
 
-_RUNNERS = {"mapInPandas", "applyInPandasWithState"}
-_SITE_RE = re.compile(r"@\w+\.pandas_udf\(|@pandas_udf\(|\.(?:mapInPandas|applyInPandasWithState)\(")
+_RUNNERS = {"mapInPandas", "mapInArrow", "applyInPandasWithState"}
+_SITE_RE = re.compile(r"@\w+\.pandas_udf\(|@pandas_udf\(|\.(?:mapInPandas|mapInArrow|applyInPandasWithState)\(")
 
 
 def _named(func, name):
@@ -291,7 +291,7 @@ def _calls_prepare_first(fn):
 
 def _worker_functions(tree):
     """(name, lineno, FunctionDef or None) per pandas_udf-decorated
-    function and per function passed to mapInPandas /
+    function and per function passed to mapInPandas / mapInArrow /
     applyInPandasWithState; None when the argument is not a function
     defined in the enclosing scope (a lambda, say)."""
     scope_of = {}
