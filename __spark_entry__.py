@@ -1491,10 +1491,11 @@ def q_intersecting_trajs_line(spark, sf_dir):
 
 
 def _seg_intersects_sql(poly) -> str:
-    """DuckDB mirror of joins.seg_intersects_expr over segment columns
-    (px,py)->(x,y): endpoint-inside (convex rect comparisons) OR an
-    orientation-test crossing of any edge, with the SAME Python-computed
-    edge-delta literals so JVM and DuckDB run identical IEEE arithmetic."""
+    """DuckDB mirror of joins.intersecting_traj_ids_line's per-segment
+    test over segment columns (px,py)->(x,y): endpoint-inside (convex
+    rect comparisons) OR an orientation-test crossing of any edge, with
+    the edge deltas computed in Python as the engine's edge rows hold
+    them, so JVM and DuckDB run identical IEEE arithmetic."""
     import numpy as _np
 
     p = _np.asarray(poly, dtype=_np.float64)

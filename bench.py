@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
-from movingspark.session import tune_builder
+from movingspark.session import local_session
 from perfbench.harness import cpu_fractions, cpu_jiffies, force
 
 
@@ -33,17 +33,7 @@ def _noisy(before, after) -> bool:
 
 
 def build_spark(cpus: int) -> SparkSession:
-    return (
-        tune_builder(
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("movingspark-bench")
-            .config("spark.sql.shuffle.partitions", str(cpus))
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g")),
-            tmpfs_scratch=True,
-        )
-        .getOrCreate()
-    )
+    return local_session(cpus, "movingspark-bench", os.environ.get("SPARK_GRAFT_MEM", "48g"))
 
 
 N_BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))

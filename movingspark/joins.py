@@ -26,13 +26,21 @@ Design for 100 TB / 10^12 docs:
   the bytecode interpreter (one OR over four hexagons' unrolled ray
   casts made it 23 948 bytes, about half of the doc pass's join CPU).
   Past the cap, boundary rows refine through the Arrow-batched numpy
-  kernel instead.
+  kernel instead. This is the engine's one ray cast: geofence flags
+  (a left join onto the fence's cover) and the line test's vertex
+  test use it too, on a grid over their one polygon (_poly_bounds).
+
+- **Line intersection** is that vertex test plus a broadcast
+  semi-join of the trajectory segments near the polygon against one
+  row per polygon edge, whose columns hold the orientation test's
+  constants: the generated condition's size does not grow with the
+  vertex count.
 
 - **Plan building stays off the Py4J path.** Every generated
-  expression (cell id, ray cast, segment test, the join's whole refine
-  filter) is composed as one SQL text over SQL operand text ("x",
-  "__px") with exact double literals (cells.sql_double) and parsed by
-  one F.expr: one Py4J call per expression (a Column tree built one
+  expression (cell id, the join's refine, the segment test) is
+  composed as one SQL text over SQL operand text ("x", "__px") with
+  exact double literals (cells.sql_double) and parsed by one F.expr:
+  one Py4J call per expression (a Column tree built one
   operation at a time costs a round trip per node, about 10 000 for a
   four-hexagon join). The cover frame is handed to Spark as an Arrow
   table, so it is a LocalRelation: reading it runs no job and no
@@ -134,6 +142,16 @@ def _clip_edges(e: np.ndarray, box: np.ndarray, margin: float):
 _CLIP_CHUNK_ELEMS = 1 << 20
 
 
+def _clip_margin(res: int, bounds) -> float:
+    """How far a cell's box is widened for the clip: more than the
+    rounding of a point's grid coordinate and of the cell bounds (a few
+    ulps of the bounds)."""
+    minx, miny, maxx, maxy = bounds
+    n = 1 << res
+    w, h = (maxx - minx) / n, (maxy - miny) / n
+    return max(1e-6 * max(w, h), 1e-12 * max(abs(float(b)) for b in bounds))
+
+
 def _clip_cover(rings, cell_ids, boundary, res: int, bounds):
     """(base, slots) per cover row: a boundary row keeps the constants of
     its active edges (NaN-padded to the row maximum) and the parity of
@@ -141,12 +159,8 @@ def _clip_cover(rings, cell_ids, boundary, res: int, bounds):
     border (which also take out-of-bounds, +-Inf and NaN coordinates)
     keep every edge with base 0."""
     e = _edge_consts(rings)
-    minx, miny, maxx, maxy = bounds
     n = 1 << res
-    w, h = (maxx - minx) / n, (maxy - miny) / n
-    # the widening must exceed the rounding of the point's grid
-    # coordinate and of the cell bounds (a few ulps of the bounds)
-    margin = max(1e-6 * max(w, h), 1e-12 * max(abs(float(b)) for b in bounds))
+    margin = _clip_margin(res, bounds)
     ix, iy = cells.cell_ixiy_np(cell_ids, res)
     border = (ix == 0) | (iy == 0) | (ix == n - 1) | (iy == n - 1)
     box = cells.cell_bounds_np(cell_ids, res, bounds) + np.array([-margin, -margin, margin, margin])
@@ -167,15 +181,58 @@ def _clip_cover(rings, cell_ids, boundary, res: int, bounds):
     return np.bitwise_xor.reduce(flip, axis=1), slots
 
 
+def _edge_neighbours(rings, cell_ids, res: int, bounds) -> np.ndarray:
+    """The cells next to the cover (8-neighbourhood) that are not in it
+    and where a point on an edge can be placed. polygon_cover keeps the
+    cells whose box [x0, x0 + w] meets the polygon, while a point is
+    placed by floor((x - minx) / span * n): when an edge lies on a grid
+    line the two round apart by an ulp. A neighbour is kept when its
+    box, widened by the clip's margin, meets an edge whose endpoints'
+    placements (monotone in x and in y) bracket the neighbour's column
+    and row. Rows for these cells refine such points exactly."""
+    ix, iy = cells.cell_ixiy_np(cell_ids, res)
+    off_x, off_y = (o.ravel() for o in np.meshgrid([-1, 0, 1], [-1, 0, 1]))
+    nx, ny = (ix[:, None] + off_x).ravel(), (iy[:, None] + off_y).ravel()
+    n = 1 << res
+    on_grid = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
+    cand = np.unique(cells._interleave_bits_np(nx[on_grid], ny[on_grid], res))
+    cand = cand[~np.isin(cand, cell_ids)]
+    ends = [r[:-1] if np.array_equal(r[0], r[-1]) else r for r in map(np.asarray, rings)]
+    a = np.concatenate([np.empty((0, 2)), *ends])
+    b = np.concatenate([np.empty((0, 2)), *(np.roll(r, -1, axis=0) for r in ends)])
+    if not len(cand) or not len(a):
+        return cand[:0]
+    lo, hi = np.minimum(a, b), np.maximum(a, b)
+    lo_x, lo_y = cells.cell_ixiy_np(cells.cell_id_np(lo[:, 0], lo[:, 1], res, bounds), res)
+    hi_x, hi_y = cells.cell_ixiy_np(cells.cell_id_np(hi[:, 0], hi[:, 1], res, bounds), res)
+    margin = _clip_margin(res, bounds)
+    box = cells.cell_bounds_np(cand, res, bounds) + np.array([-margin, -margin, margin, margin])
+    cx, cy = cells.cell_ixiy_np(cand, res)
+    dx, dy = (b - a).T
+    meets = np.zeros(len(cand), dtype=bool)
+    chunk = max(1, _CLIP_CHUNK_ELEMS // len(a))
+    for s in range(0, len(cand), chunk):
+        bx0, by0, bx1, by1 = (box[s : s + chunk, i, None] for i in range(4))
+        gx, gy = cx[s : s + chunk, None], cy[s : s + chunk, None]
+        placed = (lo_x <= gx) & (gx <= hi_x) & (lo_y <= gy) & (gy <= hi_y)
+        overlap = (lo[:, 0] <= bx1) & (hi[:, 0] >= bx0) & (lo[:, 1] <= by1) & (hi[:, 1] >= by0)
+        # the box's corners on both sides of (or on) the edge's line
+        side = np.stack([dx * (y - a[:, 1]) - dy * (x - a[:, 0]) for x, y in ((bx0, by0), (bx1, by0), (bx1, by1), (bx0, by1))])
+        meets[s : s + chunk] = (placed & overlap & ~(side > 0).all(axis=0) & ~(side < 0).all(axis=0)).any(axis=1)
+    return cand[meets]
+
+
 def _cover_table(polygons, res: int, bounds) -> tuple[pa.Table, int | None]:
     """The cover as one Arrow table and its slot count k: (cell, poly_id,
     full) plus, when no boundary row has more than _PIP_SLOT_CAP active
     edges, `base` and k edge slots of _SLOT columns `e{i}_{name}`.
     k is None past the cap (the table then has the first three
-    columns only)."""
+    columns only). After each polygon's cover come its edge neighbours
+    (_edge_neighbours) as boundary rows."""
     ids, covers, fulls, bases, slots = [], [np.empty(0, np.int64)], [np.empty(0, bool)], [], []
     for poly_id, verts in polygons:
         outer, holes = _norm_poly(verts)
+        rings = [outer, *holes]
         cell_ids, full = cells.polygon_cover(outer, res, bounds)
         if holes:
             cb = cells.cell_bounds_np(cell_ids, res, bounds)
@@ -187,7 +244,10 @@ def _cover_table(polygons, res: int, bounds) -> tuple[pa.Table, int | None]:
                     & (cb[:, 1] <= hmaxy) & (cb[:, 3] >= hminy)
                 )
                 full = full & ~touches
-        base, slot = _clip_cover([outer, *holes], cell_ids, ~full, res, bounds)
+        near = _edge_neighbours(rings, cell_ids, res, bounds)
+        cell_ids = np.concatenate([cell_ids, near])
+        full = np.concatenate([full, np.zeros(len(near), dtype=bool)])
+        base, slot = _clip_cover(rings, cell_ids, ~full, res, bounds)
         ids += [str(poly_id)] * len(cell_ids)
         covers.append(cell_ids)
         fulls.append(full)
@@ -226,18 +286,6 @@ def cover_to_df(spark: SparkSession, polygons, res: int, bounds=cells.WORLD) -> 
     return spark.createDataFrame(table, _cover_ddl(k))
 
 
-# generated ray-cast predicates over driver-known vertex literals
-# (pip_expr, seg_intersects_expr) unroll at most this many vertices;
-# bigger polygons refine through the Arrow-batched numpy kernels
-_PIP_EXPR_MAX_VERTS = 256
-
-# a projection of pip_expr costs about 760 bytes of bytecode per vertex
-# (a one-projection stage: 6 168 bytes at 8 vertices, 9 200 at 12), so
-# above this many vertices it is past HotSpot's 8 000-byte
-# HugeMethodLimit and never JIT-compiled
-_PIP_EXPR_JIT_VERTS = 8
-
-
 def _edge_text(px: str, py: str, xa, ya, yb, dx, dy, den, x0, x1, y0, y1) -> tuple[str, str]:
     """One edge's (crossing bit, on-edge) SQL texts over operand texts
     (literals or columns) — the exact arithmetic of
@@ -255,43 +303,6 @@ def _edge_text(px: str, py: str, xa, ya, yb, dx, dy, den, x0, x1, y0, y1) -> tup
     return f"({cond} AND ({px} < {xint}))", within
 
 
-def _pip_ring_text(px: str, py: str, ring) -> tuple[str, str]:
-    """One ring's even-odd ray cast as (inside, on_edge) SQL texts over
-    exact double literals."""
-    inside = on_edge = "false"
-    for consts in _edge_consts([ring]):
-        crossing, within = _edge_text(px, py, *(cells.sql_double(v) for v in consts))
-        inside = f"({inside} != {crossing})"  # boolean != is XOR
-        on_edge = f"({on_edge} OR {within})"
-    return inside, on_edge
-
-
-def _pip_text(px: str, py: str, poly, holes=None) -> str:
-    px, py = f"({px})", f"({py})"
-    inside, on_edge = _pip_ring_text(px, py, poly)
-    for hole in holes or []:
-        h_in, h_edge = _pip_ring_text(px, py, hole)
-        inside = f"({inside} != {h_in})"
-        on_edge = f"({on_edge} OR {h_edge})"
-    return f"({inside} OR {on_edge})"
-
-
-def pip_expr(px: str, py: str, poly, holes=None) -> F.Column:
-    """Generated-SQL ray-cast point-in-polygon predicate over SQL
-    operands `px`, `py` — the exact arithmetic of
-    kernels.point_in_polygon (even-odd rule + on-edge tolerance,
-    boundary counts as inside) unrolled over the driver-known vertex
-    list into one SQL text and parsed by one F.expr. IEEE float64 ops in
-    the same order as the numpy kernel, with every vertex written as its
-    exact double literal => bit-identical verdicts. Unroll at most
-    _PIP_EXPR_MAX_VERTS vertices (a few hundred exhaust the driver heap
-    in code generation).
-
-    holes: optional interior rings (shapely interiors) — crossing parity
-    XORs over every ring, hole boundaries still count as inside."""
-    return F.expr(_pip_text(px, py, poly, holes))
-
-
 def _slot_refine_text(k: int) -> str:
     """The clipped refine over a cover row's columns: base parity XOR
     every slot's crossing bit, OR every slot's on-edge test."""
@@ -304,21 +315,20 @@ def _slot_refine_text(k: int) -> str:
     return f"(`full` OR {pred})"
 
 
-def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:
-    """J4+J5: inner join points -> polygons they fall in (boundary
-    counts as inside, matching shapely `intersects`). `polygons` is a
-    list of (poly_id, vertices). Returns input columns + poly_id.
+def _refined_join(df: DataFrame, polygons, res: int, bounds, how: str = "inner") -> tuple[DataFrame, str, list[str]]:
+    """(joined, verdict, internal): df joined onto the polygons' cover
+    (`how` = "inner", or "left" to keep the points of no cover cell),
+    the SQL text of the exact verdict over its columns (true inside;
+    null where a left join found no cover row) and the columns the
+    refine added, which callers drop.
 
     Plan shape: scan -> project(cell) -> BroadcastHashJoin(cover) ->
-    filter(full OR clipped ray cast over the cover row's edge slots).
-    One scan, one broadcast join and no Python while every boundary row
-    has at most _PIP_SLOT_CAP active edges; beyond that, boundary-cell
-    rows refine through an Arrow-batched numpy kernel (interior cells
-    still skip it).
-    """
-    spark = df.sparkSession
+    full OR clipped ray cast over the cover row's edge slots. No Python
+    while every boundary row has at most _PIP_SLOT_CAP active edges;
+    beyond that, boundary-cell rows refine through an Arrow-batched
+    numpy kernel (interior cells still skip it)."""
     table, k = _cover_table(polygons, res, bounds)
-    cover = spark.createDataFrame(table, _cover_ddl(k))
+    cover = df.sparkSession.createDataFrame(table, _cover_ddl(k))
 
     pts = with_cell(df, res, bounds, "__cell")
     if k is not None:
@@ -327,11 +337,10 @@ def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WO
         # checks each slot generates about a third less bytecode
         nan = cells.sql_double(float("nan"))
         pts = pts.withColumns({c: F.expr(f"coalesce({v}, {nan})") for c, v in (("__x", "x"), ("__y", "y"))})
-    joined = pts.join(
-        F.broadcast(cover), on=F.col("__cell") == cover["cell"], how="inner"
-    ).drop("cell")
+    joined = pts.join(F.broadcast(cover), on=F.col("__cell") == cover["cell"], how=how).drop("cell")
+    internal = ["__cell", "__x", "__y", "__in", *table.column_names[2:]]
     if k is not None:
-        return joined.filter(F.expr(_slot_refine_text(k))).drop("__cell", "__x", "__y", *table.column_names[2:])
+        return joined, _slot_refine_text(k), internal
 
     poly_map = {str(pid): _norm_poly(v) for pid, v in polygons}
 
@@ -347,16 +356,23 @@ def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WO
             )
         return pd.Series(out)
 
-    # interior cells never touch Python: only boundary-cell rows pay the
-    # Arrow round-trip (when() would still evaluate the UDF on all rows)
-    interior = joined.filter(F.col("full")).drop("full", "__cell")
-    boundary = (
-        joined.filter(~F.col("full"))
-        .withColumn("__ok", refine(F.col("x"), F.col("y"), F.col("poly_id")))
-        .filter(F.col("__ok"))
-        .drop("__ok", "full", "__cell")
-    )
-    return interior.unionByName(boundary)
+    # interior cells and misses never touch Python: only boundary-cell
+    # rows pay the Arrow round-trip (when() would still evaluate the UDF
+    # on all rows)
+    rest = joined.filter("`full` IS NOT FALSE").withColumn("__in", F.col("full"))
+    boundary = joined.filter("NOT `full`").withColumn("__in", refine(F.col("x"), F.col("y"), F.col("poly_id")))
+    return rest.unionByName(boundary), "`__in`", internal
+
+
+def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:
+    """J4+J5: inner join points -> polygons they fall in (boundary
+    counts as inside, matching shapely `intersects`). `polygons` is a
+    list of (poly_id, vertices). Returns input columns + poly_id.
+
+    One scan, one broadcast join and a filter on the clipped refine
+    (_refined_join)."""
+    joined, verdict, internal = _refined_join(df, polygons, res, bounds)
+    return joined.filter(verdict).drop(*internal)
 
 
 def intersecting_traj_ids(df: DataFrame, polygon, res: int = 8, bounds=cells.WORLD) -> DataFrame:
@@ -366,47 +382,59 @@ def intersecting_traj_ids(df: DataFrame, polygon, res: int = 8, bounds=cells.WOR
     return hits.select("traj_id").distinct()
 
 
-def seg_intersects_expr(ax: str, ay: str, bx: str, by: str, poly) -> F.Column:
-    """Codegen'd predicate over SQL operands: segment (ax,ay)->(bx,by)
-    intersects the driver-known polygon (interior or boundary — shapely
-    `intersects` semantics), as one SQL text parsed by one F.expr.
-    Endpoint-inside via the unrolled ray-cast (pip_expr) OR a
-    crossing/touch of any polygon edge (orientation tests + per-pair
-    bbox overlap, which rejects collinear-but-disjoint pairs). Same
-    IEEE arithmetic order as kernels.segments_intersect_polygon so the
-    Arrow fallback and the SQL oracle agree bit-for-bit."""
-    poly = np.asarray(poly, dtype=np.float64)
-    if np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    ax, ay, bx, by = (f"({v})" for v in (ax, ay, bx, by))
-    d = cells.sql_double
-    hit = f"({_pip_text(ax, ay, poly)} OR {_pip_text(bx, by, poly)})"
-    k = len(poly)
-    for i in range(k):
-        px, py = float(poly[i, 0]), float(poly[i, 1])
-        qx, qy = float(poly[(i + 1) % k, 0]), float(poly[(i + 1) % k, 1])
-        d1 = f"((({bx} - {ax}) * ({d(py)} - {ay})) - (({by} - {ay}) * ({d(px)} - {ax})))"
-        d2 = f"((({bx} - {ax}) * ({d(qy)} - {ay})) - (({by} - {ay}) * ({d(qx)} - {ax})))"
-        d3 = f"(({d(qx - px)} * ({ay} - {d(py)})) - ({d(qy - py)} * ({ax} - {d(px)})))"
-        d4 = f"(({d(qx - px)} * ({by} - {d(py)})) - ({d(qy - py)} * ({bx} - {d(px)})))"
-        bbox = (
-            f"((((least({ax}, {bx}) <= {d(max(px, qx))})"
-            f" AND (greatest({ax}, {bx}) >= {d(min(px, qx))}))"
-            f" AND (least({ay}, {by}) <= {d(max(py, qy))}))"
-            f" AND (greatest({ay}, {by}) >= {d(min(py, qy))}))"
-        )
-        hit = f"({hit} OR (({bbox} AND (({d1} * {d2}) <= 0)) AND (({d3} * {d4}) <= 0)))"
-    return F.expr(hit)
+# operators over one driver-known polygon (geofence, the line test)
+# cover it on a grid of 2^_POLY_RES cells a side: its bbox padded by
+# two cells, so a point past the bbox never reaches a cover row and no
+# cover row lies on the clamped border
+_POLY_RES = 6
+
+
+def _poly_bounds(ring) -> tuple[float, float, float, float]:
+    """Grid bounds of one polygon's cover at _POLY_RES: its bbox padded
+    by two cells on every side. A side of zero extent is padded by two
+    of the other side's cells (by 2.0 when both are zero)."""
+    ring = np.asarray(ring, dtype=np.float64)
+    lo, hi = ring.min(axis=0), ring.max(axis=0)
+    span = hi - lo
+    cell = np.where(span > 0, span, span.max() or 1.0) / ((1 << _POLY_RES) - 4)
+    return tuple(float(v) for v in (*(lo - 2 * cell), *(hi + 2 * cell)))
 
 
 def _traj_segments(df: DataFrame) -> DataFrame:
     """Consecutive-point segments per trajectory (__px,__py)->(x,y); the
     first point of each trajectory becomes a degenerate point-segment so
     single-point trajectories are still testable."""
-    w = Window.partitionBy("traj_id").orderBy("t")
-    return df.withColumn("__px", F.coalesce(F.lag("x").over(w), F.col("x"))).withColumn(
-        "__py", F.coalesce(F.lag("y").over(w), F.col("y"))
+    w = "OVER (PARTITION BY traj_id ORDER BY t)"
+    return df.selectExpr("*", f"coalesce(lag(x) {w}, x) AS __px", f"coalesce(lag(y) {w}, y) AS __py")
+
+
+# one row per polygon edge p -> q: the constants of the segment test
+# (its endpoints, q - p and the edge's bbox), columns `__e{name}`
+_EDGE = ("px", "py", "qx", "qy", "dx", "dy", "x0", "x1", "y0", "y1")
+
+
+def _edge_table(poly: np.ndarray) -> pa.Table:
+    px, py = poly[:, 0], poly[:, 1]
+    qx, qy = np.roll(px, -1), np.roll(py, -1)
+    consts = (px, py, qx, qy, qx - px, qy - py, np.minimum(px, qx), np.maximum(px, qx), np.minimum(py, qy), np.maximum(py, qy))
+    return pa.table({f"__e{name}": v for name, v in zip(_EDGE, consts)})
+
+
+def _seg_cross_text(ax: str, ay: str, bx: str, by: str) -> str:
+    """Segment a -> b crosses or touches the edge row's edge p -> q:
+    orientation tests (d1*d2 <= 0 and d3*d4 <= 0 admit touching) and a
+    bbox overlap that rejects collinear-but-disjoint pairs, in the IEEE
+    order of tests/oracles.py segments_intersect_polygon."""
+    px, py, qx, qy, dx, dy, x0, x1, y0, y1 = (f"`__e{name}`" for name in _EDGE)
+    d1 = f"((({bx} - {ax}) * ({py} - {ay})) - (({by} - {ay}) * ({px} - {ax})))"
+    d2 = f"((({bx} - {ax}) * ({qy} - {ay})) - (({by} - {ay}) * ({qx} - {ax})))"
+    d3 = f"(({dx} * ({ay} - {py})) - ({dy} * ({ax} - {px})))"
+    d4 = f"(({dx} * ({by} - {py})) - ({dy} * ({bx} - {px})))"
+    bbox = (
+        f"((((least({ax}, {bx}) <= {x1}) AND (greatest({ax}, {bx}) >= {x0}))"
+        f" AND (least({ay}, {by}) <= {y1})) AND (greatest({ay}, {by}) >= {y0}))"
     )
+    return f"(({bbox} AND (({d1} * {d2}) <= 0)) AND (({d3} * {d4}) <= 0))"
 
 
 def intersecting_traj_ids_line(df: DataFrame, polygon) -> DataFrame:
@@ -415,37 +443,25 @@ def intersecting_traj_ids_line(df: DataFrame, polygon) -> DataFrame:
     polygon — a trajectory that crosses a small polygon between two
     outside observations still matches, unlike the point-based variant.
 
-    Plan shape: one window (lag over the trajectory's own sort order —
-    the partitioning every per-traj op shares) -> codegen'd bbox
-    prefilter (prunes nearly all segments against the polygon's bbox,
-    driver-known literals) -> codegen'd exact segment test -> distinct
-    traj_ids. No Python, no extra shuffle beyond the per-traj window."""
+    A line meets the polygon when one of its vertices is inside
+    (point_in_polygon_join on the polygon's own grid, _poly_bounds) or
+    one of its segments crosses or touches an edge: one window (lag over
+    the trajectory's own sort order) -> codegen'd bbox prefilter against
+    the polygon's bbox -> broadcast semi-join with one row per polygon
+    edge. The union's distinct traj_ids are the result."""
     poly = np.asarray(polygon, dtype=np.float64)
-    seg = _traj_segments(df)
-    minx, miny = float(poly[:, 0].min()), float(poly[:, 1].min())
-    maxx, maxy = float(poly[:, 0].max()), float(poly[:, 1].max())
+    if np.array_equal(poly[0], poly[-1]):
+        poly = poly[:-1]
+    inside = point_in_polygon_join(df, [("p", poly)], _POLY_RES, _poly_bounds(poly))
+    (minx, miny), (maxx, maxy) = poly.min(axis=0), poly.max(axis=0)
     d = cells.sql_double
-    cand = seg.filter(
-        F.expr(
-            f"((((least(__px, x) <= {d(maxx)}) AND (greatest(__px, x) >= {d(minx)}))"
-            f" AND (least(__py, y) <= {d(maxy)})) AND (greatest(__py, y) >= {d(miny)}))"
-        )
+    cand = _traj_segments(df).filter(
+        f"((((least(__px, x) <= {d(maxx)}) AND (greatest(__px, x) >= {d(minx)}))"
+        f" AND (least(__py, y) <= {d(maxy)})) AND (greatest(__py, y) >= {d(miny)}))"
     )
-    n_verts = len(poly)
-    if 2 * n_verts <= _PIP_EXPR_MAX_VERTS:
-        hits = cand.filter(seg_intersects_expr("__px", "__py", "x", "y", poly))
-    else:
-        @F.pandas_udf(T.BooleanType())
-        def refine(pxs: pd.Series, pys: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-            pyworker.prepare()
-            return pd.Series(
-                kernels.segments_intersect_polygon(
-                    pxs.to_numpy(float), pys.to_numpy(float), xs.to_numpy(float), ys.to_numpy(float), poly
-                )
-            )
-
-        hits = cand.filter(refine(F.col("__px"), F.col("__py"), F.col("x"), F.col("y")))
-    return hits.select("traj_id").distinct()
+    edges = df.sparkSession.createDataFrame(_edge_table(poly), ", ".join(f"__e{name} double" for name in _EDGE))
+    crossing = cand.join(F.broadcast(edges), F.expr(_seg_cross_text("__px", "__py", "x", "y")), "left_semi")
+    return inside.select("traj_id").union(crossing.select("traj_id")).distinct()
 
 
 def get_intersecting(df: DataFrame, polygon) -> DataFrame:

@@ -8,7 +8,6 @@ Arrow transfer anyway).
 Parity targets (reference files):
 - geodesic distance  ~ geopy WGS84 Karney   (geometry_utils.py:59-85)
 - spherical distance = haversine R=6371000  (geometry_utils.py:29-47)
-- compass bearing                            (geometry_utils.py:126-155)
 - azimuth                                    (geometry_utils.py:158-168)
 - angular difference                         (geometry_utils.py:171-178)
 - mrr_diagonal                               (geometry_utils.py:181-196)
@@ -270,16 +269,6 @@ def _geodesic_antipodal(lon1, lat1, lon2, lat2):
         if best is None:
             best = near  # landing miss err rad ~ err * R meters of s error
     return best
-
-
-def compass_bearing(lon1, lat1, lon2, lat2):
-    """Initial great-circle bearing, degrees [0, 360) (geometry_utils.py:126-155)."""
-    lat1r = np.radians(np.asarray(lat1, dtype=np.float64))
-    lat2r = np.radians(np.asarray(lat2, dtype=np.float64))
-    dlon = np.radians(np.asarray(lon2, dtype=np.float64) - np.asarray(lon1, dtype=np.float64))
-    xx = np.sin(dlon) * np.cos(lat2r)
-    yy = np.cos(lat1r) * np.sin(lat2r) - np.sin(lat1r) * np.cos(lat2r) * np.cos(dlon)
-    return (np.degrees(np.arctan2(xx, yy)) + 360.0) % 360.0
 
 
 def azimuth(x1, y1, x2, y2):
@@ -658,37 +647,3 @@ def discrete_hausdorff_line(a: np.ndarray, b: np.ndarray) -> float:
     d1 = point_polyline_dist(a[:, 0], a[:, 1], b).max()
     d2 = point_polyline_dist(b[:, 0], b[:, 1], a).max()
     return float(max(d1, d2))
-
-
-def segments_intersect_polygon(ax, ay, bx, by, poly: np.ndarray) -> np.ndarray:
-    """Vectorized: does segment (ax,ay)->(bx,by) intersect the polygon
-    (interior or boundary — shapely `intersects` semantics)? True iff an
-    endpoint is inside (boundary counts) or the segment crosses/touches
-    any polygon edge. Backs the line-based Trajectory.intersects
-    (reference trajectory.py:1533-1546 via overlay.py:86-91)."""
-    ax = np.asarray(ax, dtype=np.float64)
-    ay = np.asarray(ay, dtype=np.float64)
-    bx = np.asarray(bx, dtype=np.float64)
-    by = np.asarray(by, dtype=np.float64)
-    poly = np.asarray(poly, dtype=np.float64)
-    if np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    hit = point_in_polygon(ax, ay, poly) | point_in_polygon(bx, by, poly)
-    k = len(poly)
-    for i in range(k):
-        px, py = poly[i]
-        qx, qy = poly[(i + 1) % k]
-        # orientation tests; d1*d2<=0 & d3*d4<=0 admits touching; the
-        # per-pair bbox overlap test rejects collinear-but-disjoint pairs
-        d1 = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        d2 = (bx - ax) * (qy - ay) - (by - ay) * (qx - ax)
-        d3 = (qx - px) * (ay - py) - (qy - py) * (ax - px)
-        d4 = (qx - px) * (by - py) - (qy - py) * (bx - px)
-        bbox = (
-            (np.minimum(ax, bx) <= max(px, qx))
-            & (np.maximum(ax, bx) >= min(px, qx))
-            & (np.minimum(ay, by) <= max(py, qy))
-            & (np.maximum(ay, by) >= min(py, qy))
-        )
-        hit |= bbox & (d1 * d2 <= 0) & (d3 * d4 <= 0)
-    return hit

@@ -43,9 +43,9 @@ def _scratch_dir() -> str | None:
     (loadavg >> busy CPUs with ~97% idle); shuffle scratch on tmpfs takes
     the disk out of the measurement. This is wrong for production:
     shuffle spill exists precisely when memory is short, and tmpfs caps
-    at ~50% of RAM — so `tune_builder` only applies it when the caller
-    opts in (bench.py, tests, tools), never in the cluster CLI, and an
-    explicitly configured SPARK_LOCAL_DIRS always wins."""
+    at ~50% of RAM — so only `local_session` (bench, tests, tools)
+    applies it, never the cluster CLI, and an explicitly configured
+    SPARK_LOCAL_DIRS always wins."""
     if os.environ.get("SPARK_LOCAL_DIRS"):
         return None
     if os.path.isdir("/dev/shm"):
@@ -55,17 +55,15 @@ def _scratch_dir() -> str | None:
     return None
 
 
-def tune_builder(builder: SparkSession.Builder, tmpfs_scratch: bool = False) -> SparkSession.Builder:
+def tune_builder(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine-wide physical-execution settings to a builder.
 
     - big JIT code cache (see module docstring) on driver AND executor
     - AQE on (runtime coalesce, broadcast conversion, skew-join split)
     - Arrow transfer for the pandas-UDF kernels
     - UTC session timezone (timestamp determinism across engines)
-    - tmpfs_scratch=True (bench/tests only): spill to /dev/shm; the
-      production CLI leaves spark.local.dir to the cluster manager.
     """
-    b = (
+    return (
         builder.config("spark.driver.extraJavaOptions", JVM_CODEGEN_OPTS)
         .config("spark.executor.extraJavaOptions", JVM_CODEGEN_OPTS)
         .config("spark.sql.adaptive.enabled", "true")
@@ -83,8 +81,22 @@ def tune_builder(builder: SparkSession.Builder, tmpfs_scratch: bool = False) -> 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
-    if tmpfs_scratch:
-        scratch = _scratch_dir()
-        if scratch:
-            b = b.config("spark.local.dir", scratch)
-    return b
+
+
+def local_session(cores: int, app: str, memory: str | None = None) -> SparkSession:
+    """A tuned local[cores] session for bench, tests and tools: one
+    shuffle partition per core, no UI, shuffle scratch on tmpfs
+    (_scratch_dir), log level ERROR; `memory` sets the driver heap."""
+    b = (
+        tune_builder(SparkSession.builder.master(f"local[{cores}]").appName(app))
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.ui.enabled", "false")
+    )
+    if memory:
+        b = b.config("spark.driver.memory", memory)
+    scratch = _scratch_dir()
+    if scratch:
+        b = b.config("spark.local.dir", scratch)
+    spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -19,6 +19,28 @@ from movingspark import gmap, pyworker
 from movingspark.cells import WORLD, cell_id_expr
 
 
+def _per_trajectory(stream: DataFrame, step, out_schema: str, state_schema: str) -> DataFrame:
+    """stream.groupBy("traj_id").applyInPandasWithState in append mode
+    with no timeout. `step(key, pdf, xs, ys, t_us, state)` gets one
+    trajectory's rows of a micro-batch as one frame sorted by t
+    (stable), its x and y as float arrays and t as integer
+    microseconds, and returns the output frame."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def fn(key, pdfs, state):
+        pyworker.prepare()
+        parts = list(pdfs)
+        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
+        t_us = pdf["t"].astype("int64").to_numpy() // 1000
+        yield step(key, pdf, pdf["x"].to_numpy(float), pdf["y"].to_numpy(float), t_us, state)
+
+    return stream.groupBy("traj_id").applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
 def gap_sessions(df: DataFrame, gap: str = "1 hour") -> DataFrame:
     """Per-trajectory observation sessions with the given gap timeout —
     the session-window rendition of X2 (one row per contiguous burst of
@@ -59,25 +81,15 @@ def streaming_kinematics(stream: DataFrame) -> DataFrame:
     Works only on streaming DataFrames (Spark requires a streaming
     source for stateful processing); the batch twin is
     derive.add_all_kinematics."""
+    import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = (
         "traj_id string, t timestamp, x double, y double, "
         "timedelta_s double, distance double, speed double"
     )
-    state_schema = "t_us long, x double, y double"
 
-    def fn(key, pdfs, state):
-        pyworker.prepare()
-        import numpy as np
-
-        parts = [p for p in pdfs]
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
-        t_us = pdf["t"].astype("int64").to_numpy() // 1000  # ns -> µs
-        xs = pdf["x"].to_numpy(float)
-        ys = pdf["y"].to_numpy(float)
+    def step(key, pdf, xs, ys, t_us, state):
         if state.exists:
             p_tus, p_x, p_y = state.get
             prev_tus = np.concatenate([[p_tus], t_us[:-1]])
@@ -106,11 +118,9 @@ def streaming_kinematics(stream: DataFrame) -> DataFrame:
             }
         )
         state.update((int(t_us[-1]), float(xs[-1]), float(ys[-1])))
-        yield out
+        return out
 
-    return stream.groupBy("traj_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _per_trajectory(stream, step, out_schema, "t_us long, x double, y double")
 
 
 def streaming_stops(
@@ -137,20 +147,10 @@ def streaming_stops(
     The batch twin is stops.get_stop_time_ranges."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from movingspark.stops import _detect_stops_np
 
-    out_schema = "traj_id string, start_t timestamp, end_t timestamp"
-    state_schema = "xs array<double>, ys array<double>, ts array<double>"
-
-    def fn(key, pdfs, state):
-        pyworker.prepare()
-        parts = [p for p in pdfs]
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values("t", kind="mergesort")
-        xs = pdf["x"].to_numpy(float)
-        ys = pdf["y"].to_numpy(float)
+    def step(key, pdf, xs, ys, t_us, state):
         ts = gmap.seconds(pdf["t"])
         if state.exists:
             sxs, sys_, sts = state.get
@@ -162,10 +162,13 @@ def streaming_stops(
         )
         state.update((xs[lo:].tolist(), ys[lo:].tolist(), ts[lo:].tolist()))
         ends = gmap.timestamps(np.reshape(stops_found, (-1, 2)))
-        yield pd.DataFrame({"traj_id": [key[0]] * len(ends), "start_t": ends[:, 0], "end_t": ends[:, 1]})
+        return pd.DataFrame({"traj_id": [key[0]] * len(ends), "start_t": ends[:, 0], "end_t": ends[:, 1]})
 
-    return stream.groupBy("traj_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _per_trajectory(
+        stream,
+        step,
+        "traj_id string, start_t timestamp, end_t timestamp",
+        "xs array<double>, ys array<double>, ts array<double>",
     )
 
 
@@ -243,30 +246,21 @@ def streaming_geofence(stream: DataFrame, polygon, holes=None) -> DataFrame:
     group state so a crossing whose two observations land in different
     micro-batches is still emitted exactly once. Same contains
     semantics as the batch operator (even-odd ray cast, on-edge counts
-    inside — kernels.point_in_polygon, the numpy twin of
-    joins.pip_expr); same first-observation rule (no event — there is
-    no prior side to transition from). Points are assumed to arrive
+    inside — kernels.point_in_polygon, the numpy twin of the point
+    join's clipped refine); same first-observation rule (no event —
+    there is no prior side to transition from). Points are assumed to arrive
     per-trajectory in event-time order across batches (sorted within a
     batch here), the same contract as streaming_kinematics."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from movingspark import kernels
 
     poly = np.asarray(polygon, float)
     hs = [np.asarray(h, float) for h in (holes or [])]
     out_schema = "traj_id string, t timestamp, x double, y double, event string, t_prev timestamp"
-    state_schema = "t_us long, inside boolean"
 
-    def fn(key, pdfs, state):
-        pyworker.prepare()
-        parts = [p for p in pdfs]
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
-        xs = pdf["x"].to_numpy(float)
-        ys = pdf["y"].to_numpy(float)
-        t_us = pdf["t"].astype("int64").to_numpy() // 1000
+    def step(key, pdf, xs, ys, t_us, state):
         inside = kernels.point_in_polygon(xs, ys, poly, hs)
         if state.exists:
             p_tus, p_in = state.get
@@ -289,11 +283,9 @@ def streaming_geofence(stream: DataFrame, polygon, holes=None) -> DataFrame:
                 "t_prev": pd.to_datetime(prev_t[chg], unit="us"),
             }
         )
-        yield out
+        return out
 
-    return stream.groupBy("traj_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _per_trajectory(stream, step, out_schema, "t_us long, inside boolean")
 
 
 def streaming_cell_visits(stream: DataFrame, res: int, bounds=None) -> DataFrame:
@@ -306,9 +298,7 @@ def streaming_cell_visits(stream: DataFrame, res: int, bounds=None) -> DataFrame
     open visit of a trajectory never emits (a stream cannot know the
     trajectory ended) — the documented batch/stream boundary, same as
     streaming_kinematics' missing first-row backpatch."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from movingspark import cells as _cells
 
@@ -317,16 +307,8 @@ def streaming_cell_visits(stream: DataFrame, res: int, bounds=None) -> DataFrame
         "traj_id string, cell long, enter_t timestamp, leave_t timestamp, "
         "duration_s double, n_points long"
     )
-    state_schema = "cell long, enter_us long, leave_us long, n long"
 
-    def fn(key, pdfs, state):
-        pyworker.prepare()
-        parts = [p for p in pdfs]
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values("t", kind="mergesort").reset_index(drop=True)
-        xs = pdf["x"].to_numpy(float)
-        ys = pdf["y"].to_numpy(float)
-        t_us = pdf["t"].astype("int64").to_numpy() // 1000
+    def step(key, pdf, xs, ys, t_us, state):
         cell = _cells.cell_id_np(xs, ys, res, bounds)
 
         runs = []  # (cell, enter_us, leave_us, n)
@@ -356,8 +338,6 @@ def streaming_cell_visits(stream: DataFrame, res: int, bounds=None) -> DataFrame
                 "n_points": [n for *_, n in closed],
             }
         )
-        yield out
+        return out
 
-    return stream.groupBy("traj_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _per_trajectory(stream, step, out_schema, "cell long, enter_us long, leave_us long, n long")

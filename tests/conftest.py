@@ -1,23 +1,11 @@
 import pytest
-from pyspark.sql import SparkSession
 
-from movingspark.session import tune_builder
+from movingspark.session import local_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        tune_builder(
-            SparkSession.builder.master("local[4]")
-            .appName("movingspark-tests")
-            .config("spark.sql.shuffle.partitions", "4")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "8g"),
-            tmpfs_scratch=True,
-        )
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
+    s = local_session(4, "movingspark-tests", "8g")
     yield s
     s.stop()
 

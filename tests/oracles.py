@@ -13,7 +13,10 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - band_keys_loop   ~ similarity._band_keys (per row, per band, per bit)
 - polygon_cover_loop ~ cells.polygon_cover (one bbox cell at a time)
 - pip_join_or_chain ~ joins.point_in_polygon_join (one generated refine:
-  an OR over every polygon of its whole unrolled ray cast)
+  an OR over every polygon of its whole unrolled ray cast, pip_text)
+- segments_intersect_polygon ~ joins.intersecting_traj_ids_line's
+  per-segment test (numpy, endpoint ray casts and every edge unrolled)
+- compass_bearing  ~ derive.bearing_expr(latlon=True) (numpy)
 - chained_kinematics ~ derive._kinematics (one window per D1-D6 helper,
   first rows patched by a further row_number/lead window each)
 - seg_dist_lag     ~ derive._kinematics "distance" (the lag-only segment
@@ -349,6 +352,29 @@ def _seg_intersect(a, b, c, d) -> bool:
     return False
 
 
+def _pip_ring_text(px: str, py: str, ring) -> tuple[str, str]:
+    """One ring's even-odd ray cast as (inside, on_edge) SQL texts over
+    exact double literals."""
+    inside = on_edge = "false"
+    for consts in joins._edge_consts([ring]):
+        crossing, within = joins._edge_text(px, py, *(cells.sql_double(v) for v in consts))
+        inside = f"({inside} != {crossing})"  # boolean != is XOR
+        on_edge = f"({on_edge} OR {within})"
+    return inside, on_edge
+
+
+def pip_text(px: str, py: str, poly, holes=None) -> str:
+    """kernels.point_in_polygon as one SQL text over operand texts, every
+    vertex of every ring unrolled as its exact double literal."""
+    px, py = f"({px})", f"({py})"
+    inside, on_edge = _pip_ring_text(px, py, poly)
+    for hole in holes or []:
+        h_in, h_edge = _pip_ring_text(px, py, hole)
+        inside = f"({inside} != {h_in})"
+        on_edge = f"({on_edge} OR {h_edge})"
+    return f"({inside} OR {on_edge})"
+
+
 def pip_join_or_chain(df: DataFrame, polygons, res: int = 8, bounds=WORLD) -> DataFrame:
     """Point-in-polygon join whose boundary rows refine through one
     predicate: an OR over every polygon (matched by poly_id) of its
@@ -360,9 +386,53 @@ def pip_join_or_chain(df: DataFrame, polygons, res: int = 8, bounds=WORLD) -> Da
     pred = None
     for pid, verts in polygons:
         outer, holes = joins._norm_poly(verts)
-        branch = f"((`poly_id` = {cells.sql_string(pid)}) AND {joins._pip_text('x', 'y', outer, holes)})"
+        branch = f"((`poly_id` = {cells.sql_string(pid)}) AND {pip_text('x', 'y', outer, holes)})"
         pred = branch if pred is None else f"({pred} OR {branch})"
     return joined.filter(F.expr(f"(`full` OR {pred})")).drop("full", "__cell")
+
+
+def segments_intersect_polygon(ax, ay, bx, by, poly: np.ndarray) -> np.ndarray:
+    """Vectorized: does segment (ax,ay)->(bx,by) intersect the polygon
+    (interior or boundary — shapely `intersects` semantics)? True iff an
+    endpoint is inside (boundary counts) or the segment crosses/touches
+    any polygon edge (reference trajectory.py:1533-1546 via
+    overlay.py:86-91)."""
+    ax = np.asarray(ax, dtype=np.float64)
+    ay = np.asarray(ay, dtype=np.float64)
+    bx = np.asarray(bx, dtype=np.float64)
+    by = np.asarray(by, dtype=np.float64)
+    poly = np.asarray(poly, dtype=np.float64)
+    if np.array_equal(poly[0], poly[-1]):
+        poly = poly[:-1]
+    hit = kernels.point_in_polygon(ax, ay, poly) | kernels.point_in_polygon(bx, by, poly)
+    k = len(poly)
+    for i in range(k):
+        px, py = poly[i]
+        qx, qy = poly[(i + 1) % k]
+        # orientation tests; d1*d2<=0 & d3*d4<=0 admits touching; the
+        # per-pair bbox overlap test rejects collinear-but-disjoint pairs
+        d1 = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
+        d2 = (bx - ax) * (qy - ay) - (by - ay) * (qx - ax)
+        d3 = (qx - px) * (ay - py) - (qy - py) * (ax - px)
+        d4 = (qx - px) * (by - py) - (qy - py) * (bx - px)
+        bbox = (
+            (np.minimum(ax, bx) <= max(px, qx))
+            & (np.maximum(ax, bx) >= min(px, qx))
+            & (np.minimum(ay, by) <= max(py, qy))
+            & (np.maximum(ay, by) >= min(py, qy))
+        )
+        hit |= bbox & (d1 * d2 <= 0) & (d3 * d4 <= 0)
+    return hit
+
+
+def compass_bearing(lon1, lat1, lon2, lat2):
+    """Initial great-circle bearing, degrees [0, 360) (geometry_utils.py:126-155)."""
+    lat1r = np.radians(np.asarray(lat1, dtype=np.float64))
+    lat2r = np.radians(np.asarray(lat2, dtype=np.float64))
+    dlon = np.radians(np.asarray(lon2, dtype=np.float64) - np.asarray(lon1, dtype=np.float64))
+    xx = np.sin(dlon) * np.cos(lat2r)
+    yy = np.cos(lat1r) * np.sin(lat2r) - np.sin(lat1r) * np.cos(lat2r) * np.cos(dlon)
+    return (np.degrees(np.arctan2(xx, yy)) + 360.0) % 360.0
 
 
 def _lag_dist(latlon: bool) -> Column:

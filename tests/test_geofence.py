@@ -1,5 +1,7 @@
 import datetime as dt
 
+import numpy as np
+
 from movingspark.geofence import geofence_events
 
 E = dt.datetime(2024, 1, 1)
@@ -56,26 +58,38 @@ def test_geofence_start_inside_no_event_and_boundary_is_inside(spark):
 
 
 def test_geofence_no_python_in_plan(spark):
+    """The flag is a left broadcast join onto the fence's cover with the
+    clipped refine in generated code: no Python and no shuffle join."""
     df = _pts(spark, [("a", _ts(0), 1.0, 1.0), ("a", _ts(1), 2.0, 2.0)])
     plan = geofence_events(df, SQUARE)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "Join" not in plan
+    assert "Python" not in plan
+    assert "BroadcastHashJoin" in plan and "LeftOuter" in plan and "SortMergeJoin" not in plan
+
+
+def _flag_events(flags):
+    """(walk, step, event) of every flag change of a (walks, steps) flag
+    array; a null flag (None) changes nothing, and neither does the
+    flag after it."""
+    want = []
+    for w, row in enumerate(flags):
+        for j in range(1, len(row)):
+            if row[j] is not None and row[j - 1] is not None and row[j] != row[j - 1]:
+                want.append((f"w{w}", float(j), "enter" if row[j] else "exit"))
+    return sorted(want)
 
 
 def test_geofence_300_vertex_fence_matches_kernel_flags(spark):
-    """A fence too big to unroll into a JIT-compilable predicate takes
-    its contains flag from kernels.point_in_polygon in an Arrow UDF (a
-    256-vertex unrolled fence exhausted the driver heap in codegen): the
-    events are the flag changes of the numpy kernel, boundary points and
-    a null coordinate included."""
-    import numpy as np
-
+    """A fence whose cover rows need more than joins._PIP_SLOT_CAP edges
+    refines its boundary cells through the point join's numpy fallback:
+    the events are the flag changes of kernels.point_in_polygon,
+    boundary points and a null coordinate included."""
     from movingspark import joins, kernels
 
     rng = np.random.default_rng(30)
     ang = np.linspace(0.0, 2 * np.pi, 300, endpoint=False)
     rad = 10.0 * (1 + 0.2 * np.sin(9 * ang)) * rng.uniform(0.95, 1.05, 300)
     fence = np.column_stack([rad * np.cos(ang), rad * np.sin(ang)])
-    assert len(fence) > joins._PIP_EXPR_JIT_VERTS
+    assert joins._cover_table([("f", fence)], joins._POLY_RES, joins._poly_bounds(fence))[1] is None
     walks = np.cumsum(rng.normal(0.0, 3.0, (40, 30, 2)), axis=1)
     xy = walks.reshape(-1, 2)
     xy[::7] = fence[rng.integers(0, 300, len(xy[::7]))]  # vertices: on the boundary
@@ -87,13 +101,49 @@ def test_geofence_300_vertex_fence_matches_kernel_flags(spark):
     got = sorted((r["traj_id"], (r["t"] - E).total_seconds(), r["event"]) for r in ev.collect())
 
     flags = kernels.point_in_polygon(xy[:, 0], xy[:, 1], fence).reshape(40, 30)
-    want = []
-    for w in range(40):
-        for j in range(1, 30):
-            if flags[w, j] != flags[w, j - 1]:
-                want.append((f"w{w}", float(j), "enter" if flags[w, j] else "exit"))
-    assert got == sorted(want)
+    want = _flag_events(flags.tolist())
+    assert got == want
     assert {e for *_, e in want} == {"enter", "exit"}
+
+
+def test_geofence_flags_match_kernel_with_hole_boundary_null_and_nan(spark):
+    """Flags of a fence with a hole, on the generated refine: walks
+    through fence and hole, points on both rings' vertices and edges,
+    null coordinates (no flag) and NaN coordinates (outside). The
+    events are the flag changes of kernels.point_in_polygon."""
+    from movingspark import joins, kernels
+
+    rng = np.random.default_rng(12)
+    fence = np.array([(0.0, 0.0), (10.0, 0.0), (12.0, 6.0), (10.0, 10.0), (0.0, 10.0), (-2.0, 5.0)])
+    hole = np.array([(3.0, 3.0), (7.0, 3.5), (6.0, 7.0), (3.5, 6.5)])
+    assert joins._cover_table([("f", (fence, [hole]))], joins._POLY_RES, joins._poly_bounds(fence))[1] is not None
+    xy = 5.0 + np.cumsum(rng.normal(0.0, 1.5, (30, 40, 2)), axis=1)
+    flat = xy.reshape(-1, 2)
+    edge_pts = np.concatenate([r + t * (np.roll(r, -1, axis=0) - r) for r in (fence, hole) for t in (0.0, 0.25, 0.5)])
+    flat[::5] = edge_pts[rng.integers(0, len(edge_pts), len(flat[::5]))]
+    flat[3::97] = np.nan  # odd rows: null x; even rows: NaN x
+    x, y = flat[:, 0], flat[:, 1]
+    rows = [(f"w{i // 40}", _ts(i % 40), None if np.isnan(px) and i % 2 else float(px), float(py)) for i, (px, py) in enumerate(flat)]
+    ev = geofence_events(_pts(spark, rows), fence, [hole])
+    assert "Python" not in ev._jdf.queryExecution().executedPlan().toString()
+    got = sorted((r["traj_id"], (r["t"] - E).total_seconds(), r["event"]) for r in ev.collect())
+
+    inside = kernels.point_in_polygon(x, y, fence, [hole])
+    null = np.isnan(x) & (np.arange(len(x)) % 2 == 1)
+    flags = [[None if n else bool(f) for f, n in zip(fr, nr)] for fr, nr in zip(inside.reshape(30, 40), null.reshape(30, 40))]
+    want = _flag_events(flags)
+    assert got == want
+    assert null.any() and (np.isnan(x) & ~null).any()
+    assert {e for *_, e in want} == {"enter", "exit"}
+
+
+def test_geofence_zero_width_fence(spark):
+    """A fence whose bbox has zero width (a vertical segment, all
+    boundary) still gets a valid grid: points on it are inside."""
+    fence = [(2.0, 0.0), (2.0, 4.0), (2.0, 8.0)]
+    df = _pts(spark, [("a", _ts(0), 1.0, 3.0), ("a", _ts(1), 2.0, 3.0), ("a", _ts(2), 2.0, 9.0)])
+    ev = sorted(geofence_events(df, fence).collect(), key=lambda r: r["t"])
+    assert [(r["event"], (r["t"] - E).total_seconds()) for r in ev] == [("enter", 1.0), ("exit", 2.0)]
 
 
 def _stream_events(spark, tmp_path, batches, polygon, holes=None):

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from movingspark import kernels as K
 from tests import oracles
@@ -30,13 +31,23 @@ def test_haversine_matches_reference_radius():
     assert d == pytest.approx(6371000 * np.pi / 180, rel=1e-9)
 
 
-def test_compass_bearing():
-    # test_trajectory.py:375-381: (0,0)->(10,10) latlon
-    assert float(K.compass_bearing(0.0, 0.0, 10.0, 10.0)) == pytest.approx(
-        44.561451413257714, abs=1e-5
-    )
-    assert float(K.compass_bearing(0.0, 0.0, 0.0, 1.0)) == 0.0
-    assert float(K.compass_bearing(0.0, 0.0, 1.0, 0.0)) == 90.0
+def test_compass_bearing(spark):
+    """Reference values for the numpy twin (tests/oracles.py) and for
+    the engine's latlon bearing expression."""
+    from movingspark.derive import bearing_expr
+
+    cases = [
+        # test_trajectory.py:375-381: (0,0)->(10,10) latlon
+        ((0.0, 0.0, 10.0, 10.0), 44.561451413257714, 1e-5),
+        ((0.0, 0.0, 0.0, 1.0), 0.0, 0.0),
+        ((0.0, 0.0, 1.0, 0.0), 90.0, 0.0),
+    ]
+    df = spark.createDataFrame([c for c, _, _ in cases], "x1 double, y1 double, x2 double, y2 double")
+    cols = [F.col(c) for c in ("x1", "y1", "x2", "y2")]
+    got = [r["b"] for r in df.select(bearing_expr(*cols, latlon=True).alias("b")).collect()]
+    for (args, want, tol), engine in zip(cases, got):
+        assert float(oracles.compass_bearing(*args)) == pytest.approx(want, abs=tol)
+        assert engine == pytest.approx(want, abs=tol)
 
 
 def test_azimuth_cardinals():

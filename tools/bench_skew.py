@@ -72,25 +72,13 @@ def main():
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from movingspark import derive, ingest, joins
     from movingspark.checkpoint import Checkpointer
-    from movingspark.session import tune_builder
+    from movingspark.session import local_session
 
-    spark = (
-        tune_builder(
-            SparkSession.builder.master(f"local[{args.cpus}]")
-            .appName("movingspark-skew")
-            .config("spark.sql.shuffle.partitions", str(args.cpus))
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g")),
-            tmpfs_scratch=True,
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(args.cpus, "movingspark-skew", os.environ.get("SPARK_GRAFT_MEM", "48g"))
 
     n = args.points
     skewed = ingest.synth_skewed_points(spark, n, hot_frac=0.30).persist()

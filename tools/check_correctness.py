@@ -76,22 +76,9 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    from movingspark.session import local_session
 
-    from movingspark.session import tune_builder
-
-    spark = (
-        tune_builder(
-            SparkSession.builder.master("local[8]")
-            .appName("check-correctness")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "16g"),
-            tmpfs_scratch=True,
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(8, "check-correctness", "16g")
 
     con = duckdb.connect()
     for t in TABLES:

@@ -13,7 +13,7 @@ subtree of the executed plan (AQE off) as `<bytes> <subtree root>`: the
 bytecode size of the subtree's largest generated method. HotSpot never
 JIT-compiles a method above 8 000 bytes (HugeMethodLimit), so such a
 stage runs interpreted; the run ends by printing the queries that have
-one.
+one, and exits 1 when there is any.
 """
 
 from __future__ import annotations
@@ -51,18 +51,9 @@ def main():
     only = set(sys.argv[3:])
 
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    from movingspark.session import local_session
 
-    from movingspark.session import tune_builder
-
-    spark = tune_builder(
-        SparkSession.builder.master("local[2]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false"),
-        tmpfs_scratch=True,
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(2, "dump-plans")
 
     os.makedirs(out_dir, exist_ok=True)
     huge = {}
@@ -88,7 +79,8 @@ def main():
     print(f"queries with a generated method above {HUGE_METHOD_BYTES} bytes:")
     for name, n in sorted(huge.items(), key=lambda kv: -kv[1]):
         print(f"  {name} {n}")
+    return 1 if huge else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
