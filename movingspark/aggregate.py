@@ -16,7 +16,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -125,20 +125,21 @@ def extract_significant_points(
 # ---------------------------------------------------------------------------
 
 
-def cluster_significant_points(
-    sig: DataFrame, max_distance: float, latlon: bool = False,
-    max_points: int = 5_000_000,
-) -> DataFrame:
+# above this many significant points the clustering runs per partition
+_DRIVER_MAX_POINTS = 5_000_000
+
+
+def cluster_significant_points(sig: DataFrame, max_distance: float, latlon: bool = False) -> DataFrame:
     """X17: insertion-order-dependent grid clustering. The reference
     processes points in collection order; we fix that order to
     (traj_id, seq) and run the (small) clustering driver-side, returning
     a broadcastable centroid table (cluster_id, cx, cy, n).
 
-    max_points guards the driver: significant points are normally a tiny
-    fraction of the input, but a pathological input (dense turns) can
-    make them ~= all points and OOM the driver on collect(). The count
-    check costs one cheap aggregate (~48 bytes/point driver memory when
-    under it).
+    _DRIVER_MAX_POINTS guards the driver: significant points are
+    normally a tiny fraction of the input, but a pathological input
+    (dense turns) can make them ~= all points and OOM the driver on
+    collect(). The count check costs one cheap aggregate (~48
+    bytes/point driver memory when under it).
 
     Above the cap the clustering switches to a two-level scheme —
     per-partition grid clustering (insertion order preserved WITHIN each
@@ -150,7 +151,7 @@ def cluster_significant_points(
     summaries (bounded by corpus_area/cell^2 per partition), never the
     points."""
     n = sig.count()
-    if n <= max_points:
+    if n <= _DRIVER_MAX_POINTS:
         pts = [
             (r["x"], r["y"])
             for r in sig.orderBy("traj_id", "seq").select("x", "y").collect()
@@ -159,18 +160,20 @@ def cluster_significant_points(
     else:
         def per_part(batches):
             pyworker.prepare()
-            chunks = [pdf for pdf in batches]
-            if not chunks:
+            batches = list(batches)
+            if not batches:
                 return
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["traj_id", "seq"])
-            part = grid_cluster(list(zip(pdf["x"], pdf["y"])), max_distance, latlon)
+            t = pa.Table.from_batches(batches).sort_by([("traj_id", "ascending"), ("seq", "ascending")])
+            x, y = (t.column(c).to_numpy() for c in ("x", "y"))
+            part = grid_cluster(list(zip(x, y)), max_distance, latlon)
             if part:
-                yield pd.DataFrame(
-                    {"cx": [c[0] for c in part], "cy": [c[1] for c in part],
-                     "n": [c[2] for c in part]}
+                cx, cy, cn = zip(*part)
+                yield pa.RecordBatch.from_pydict(
+                    {"cx": cx, "cy": cy, "n": cn},
+                    schema=pa.schema([("cx", pa.float64()), ("cy", pa.float64()), ("n", pa.int64())]),
                 )
 
-        partial = sig.select("traj_id", "seq", "x", "y").mapInPandas(
+        partial = sig.select("traj_id", "seq", "x", "y").mapInArrow(
             per_part, schema="cx double, cy double, n long"
         ).collect()
         clusters = grid_cluster_weighted(

@@ -30,7 +30,8 @@ First-row rules (reference trajectory.py) and where each lives:
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,13 +65,12 @@ def haversine_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Co
     return F.lit(2.0 * schema.R_EARTH) * F.asin(F.sqrt(F.least(h, F.lit(1.0))))
 
 
-@F.pandas_udf(T.DoubleType())
-def _geodesic_udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def _geodesic_udf(lon1: pa.Array, lat1: pa.Array, lon2: pa.Array, lat2: pa.Array) -> pa.Array:
     pyworker.prepare()
-    out = kernels.geodesic(
-        lon1.to_numpy(float), lat1.to_numpy(float), lon2.to_numpy(float), lat2.to_numpy(float)
-    )
-    return pd.Series(out)
+    cols = (c.to_numpy(zero_copy_only=False).astype(np.float64) for c in (lon1, lat1, lon2, lat2))
+    out = kernels.geodesic(*cols)
+    return pa.array(out, from_pandas=True)  # NaN -> null, as in gmap.map_batches
 
 
 def geodesic_expr(lon1, lat1, lon2, lat2) -> Column:

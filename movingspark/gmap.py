@@ -36,7 +36,14 @@ trajectory (iloc/reset_index slices, the DataFrame, Series and Timestamp
 objects each kernel built, pd.concat, Arrow-pandas conversion). The
 clip's wrapper alone took 0.265 s around a 0.039 s core.
 
-`per_batch` calls `pyworker.prepare()` first, which removes two fixed
+`map_batches` is the same contract for the row-wise operators (vector
+math, pair metrics, media, fingerprints, the join's refine past its slot
+cap): ``fn(batch)`` per Arrow batch returns the output columns, carried
+columns pass through as Arrow arrays, and no pandas object is built.
+`list_matrix` reads a list column of one length per row as a numpy
+matrix with no per-row Python.
+
+Both passes call `pyworker.prepare()` first, which removes two fixed
 costs of every task in a reused worker (its docstring has the numbers).
 """
 
@@ -46,6 +53,7 @@ from typing import Callable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
@@ -96,8 +104,6 @@ class _Rows:
 
 
 def _group_starts(keys: pa.Array) -> np.ndarray:
-    import pyarrow.compute as pc
-
     a, b = keys.slice(1), keys.slice(0, len(keys) - 1)
     # not_equal is null where either side is: then a boundary iff one side is
     differ = pc.coalesce(pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b)))
@@ -106,6 +112,41 @@ def _group_starts(keys: pa.Array) -> np.ndarray:
 
 def _concat(batches: list) -> pa.RecordBatch:
     return batches[0] if len(batches) == 1 else pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def list_matrix(arr: pa.Array) -> np.ndarray:
+    """(n, d) float64 matrix of a list array whose n rows all hold d
+    values. Raises ValueError on a null or ragged row."""
+    if arr.null_count:
+        raise ValueError("null row in a list column")
+    lengths = pc.list_value_length(arr).to_numpy()
+    d = int(lengths[0]) if len(arr) else 0
+    if (lengths != d).any():
+        raise ValueError("list rows of different lengths")
+    return arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(arr), d)
+
+
+def map_batches(df: DataFrame, fn: Callable, schema) -> DataFrame:
+    """One mapInArrow pass: ``fn(batch)`` per non-empty Arrow batch of
+    `df` returns the columns of `schema` in order, of any one length.
+    An Arrow array is kept as it is (a carried input column keeps its
+    type); anything else becomes the field's Arrow type with NaN read
+    as null, as the pandas conversion it replaced did."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    fields = [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+
+    def per_batch(batches):
+        pyworker.prepare()
+        for batch in batches:
+            if batch.num_rows:
+                cols = [
+                    c if isinstance(c, pa.Array) else pa.array(c, typ, from_pandas=True)
+                    for c, (_, typ) in zip(fn(batch), fields)
+                ]
+                yield pa.RecordBatch.from_arrays(cols, names=[name for name, _ in fields])
+
+    return df.mapInArrow(per_batch, schema=schema)
 
 
 def grouped_apply_sorted(df: DataFrame, fn: Callable, schema) -> DataFrame:

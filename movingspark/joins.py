@@ -17,18 +17,20 @@ Design for 100 TB / 10^12 docs:
   precomputed doubles, plus a `base` bit: the parity of the edges whose
   ray crossing is 1 for every such point. Edges whose crossing is 0
   everywhere in the cell drop out. Rows of the clamped border cells,
-  which also take out-of-bounds and non-finite coordinates, keep every
-  edge. The join refines with one generated text over the slots, the
-  exact arithmetic of kernels._ray_cast_ring, so its size depends on
-  the slot count, not on the number of polygons or vertices. That keeps
+  which also take out-of-bounds and non-finite coordinates, are never
+  full and keep every edge. The join refines with one generated text
+  over the slots, the exact arithmetic of kernels._ray_cast_ring, so
+  its size depends on the slot count, not on the number of polygons or
+  vertices. That keeps
   the join stage's generated consume method under HotSpot's 8 000-byte
   HugeMethodLimit; a bigger method is never JIT-compiled and runs in
   the bytecode interpreter (one OR over four hexagons' unrolled ray
   casts made it 23 948 bytes, about half of the doc pass's join CPU).
-  Past the cap, boundary rows refine through the Arrow-batched numpy
-  kernel instead. This is the engine's one ray cast: geofence flags
-  (a left join onto the fence's cover) and the line test's vertex
-  test use it too, on a grid over their one polygon (_poly_bounds).
+  Past the cap, boundary rows refine through the numpy kernel in one
+  Arrow-batched pass (gmap.map_batches) instead. This is the engine's
+  one ray cast: geofence flags (a left join onto the fence's cover)
+  and the line test's vertex test use it too, on a grid over their one
+  polygon (_poly_bounds).
 
 - **Line intersection** is that vertex test plus a broadcast
   semi-join of the trajectory segments near the polygon against one
@@ -53,13 +55,12 @@ Design for 100 TB / 10^12 docs:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movingspark import cells, kernels, pyworker
+from movingspark import cells, gmap, kernels
 from movingspark.derive import dist_expr
 
 
@@ -234,6 +235,10 @@ def _cover_table(polygons, res: int, bounds) -> tuple[pa.Table, int | None]:
         outer, holes = _norm_poly(verts)
         rings = [outer, *holes]
         cell_ids, full = cells.polygon_cover(outer, res, bounds)
+        # a border cell also takes the out-of-bounds and NaN points clamped
+        # into it: it is full only for points in bounds, so it refines
+        ix, iy = cells.cell_ixiy_np(cell_ids, res)
+        full = full & (ix > 0) & (iy > 0) & (ix < (1 << res) - 1) & (iy < (1 << res) - 1)
         if holes:
             cb = cells.cell_bounds_np(cell_ids, res, bounds)
             for hole in holes:
@@ -344,24 +349,21 @@ def _refined_join(df: DataFrame, polygons, res: int, bounds, how: str = "inner")
 
     poly_map = {str(pid): _norm_poly(v) for pid, v in polygons}
 
-    @F.pandas_udf(T.BooleanType())
-    def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        out = np.zeros(len(px), dtype=bool)
-        for p in pid.unique():
-            m = (pid == p).to_numpy()
-            outer, holes = poly_map[p]
-            out[m] = kernels.point_in_polygon(
-                px.to_numpy(float)[m], py.to_numpy(float)[m], outer, holes
-            )
-        return pd.Series(out)
+    def refine(batch):
+        x, y = (batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64) for c in ("x", "y"))
+        pid = batch.column("poly_id").to_numpy(zero_copy_only=False)
+        out = np.zeros(batch.num_rows, dtype=bool)
+        for p in np.unique(pid):
+            m = pid == p
+            out[m] = kernels.point_in_polygon(x[m], y[m], *poly_map[p])
+        return [*batch.columns, out]
 
     # interior cells and misses never touch Python: only boundary-cell
-    # rows pay the Arrow round-trip (when() would still evaluate the UDF
-    # on all rows)
+    # rows pay the Arrow round-trip
     rest = joined.filter("`full` IS NOT FALSE").withColumn("__in", F.col("full"))
-    boundary = joined.filter("NOT `full`").withColumn("__in", refine(F.col("x"), F.col("y"), F.col("poly_id")))
-    return rest.unionByName(boundary), "`__in`", internal
+    boundary = joined.filter("NOT `full`")
+    schema = T.StructType([*boundary.schema.fields, T.StructField("__in", T.BooleanType())])
+    return rest.unionByName(gmap.map_batches(boundary, refine, schema)), "`__in`", internal
 
 
 def point_in_polygon_join(df: DataFrame, polygons, res: int = 8, bounds=cells.WORLD) -> DataFrame:

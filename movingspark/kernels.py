@@ -1,9 +1,9 @@
 """Vectorized numpy kernels.
 
 Everything the reference delegates to shapely/geopy, re-derived as pure
-numpy so it can run inside Arrow-batched pandas UDFs (no shapely/geopy
-in the cluster environment, and object-dtype geometries would defeat
-Arrow transfer anyway).
+numpy so it can run on the numpy arrays of Arrow batches (no
+shapely/geopy in the cluster environment, and object-dtype geometries
+would defeat Arrow transfer anyway).
 
 Parity targets (reference files):
 - geodesic distance  ~ geopy WGS84 Karney   (geometry_utils.py:59-85)

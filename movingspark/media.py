@@ -15,21 +15,11 @@ import hashlib
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movingspark import pyworker
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("content_hash", T.StringType(), False),
-    ]
-)
+from movingspark import gmap
 
 
 def media_refs_from_docs(docs: DataFrame) -> DataFrame:
@@ -51,16 +41,18 @@ def synth_media_bytes(media: DataFrame, n_bytes: int = 64) -> DataFrame:
     DuckDB oracle can then reproduce the downstream content_hash with
     md5(VARCHAR) — crypto functions there accept only strings."""
 
-    @F.pandas_udf(T.BinaryType())
-    def fetch(ref: pd.Series) -> pd.Series:
-        pyworker.prepare()
+    def fetch(batch):
         out = []
-        for r in ref:
+        for r in batch.column("media_ref").to_pylist():
             h = hashlib.sha256(r.encode()).hexdigest().encode()
             out.append((h * (n_bytes // len(h) + 1))[:n_bytes])
-        return pd.Series(out)
+        return [*batch.columns, out]
 
-    return media.withColumn("payload", fetch(F.col("media_ref")))
+    return gmap.map_batches(media, fetch, _with_payload(media))
+
+
+def _with_payload(media: DataFrame) -> T.StructType:
+    return T.StructType([*media.schema.fields, T.StructField("payload", T.BinaryType())])
 
 
 def decode_ppm(buf: bytes) -> np.ndarray:
@@ -171,17 +163,16 @@ def synth_ppm_bytes(media: DataFrame, seed_col: str, w: int = 8, h: int = 8) -> 
     actual header parsing, not a fake."""
     header = f"P6\n{w} {h}\n255\n".encode()
     npx = w * h * 3
+    cols = media.columns
 
-    @F.pandas_udf(T.BinaryType())
-    def render(seed: pd.Series) -> pd.Series:
-        pyworker.prepare()
+    def render(batch):
         j = np.arange(npx, dtype=np.int64)
-        out = []
-        for s in seed:
-            out.append(header + ((int(s) + 7 * j) % 256).astype(np.uint8).tobytes())
-        return pd.Series(out)
+        seeds = batch.column("__ppm_seed").to_pylist()
+        payload = [header + ((s + 7 * j) % 256).astype(np.uint8).tobytes() for s in seeds]
+        return [*(batch.column(c) for c in cols), payload]
 
-    return media.withColumn("payload", render(F.col(seed_col).cast("long")))
+    seeded = media.withColumn("__ppm_seed", F.col(seed_col).cast("long"))
+    return gmap.map_batches(seeded, render, _with_payload(media))
 
 
 def extract_image_features(media_with_payload: DataFrame) -> DataFrame:
@@ -204,37 +195,27 @@ def extract_image_features(media_with_payload: DataFrame) -> DataFrame:
         + [T.StructField(f"f{i}", T.DoubleType()) for i in range(8)]
     )
 
-    def batches(it):
-        pyworker.prepare()
-        for pdf in it:
-            nb, ch, ws, hs = [], [], [], []
-            fcols: list[list] = [[] for _ in range(8)]
-            for buf in pdf["payload"]:
-                b = bytes(buf)
-                nb.append(len(b))
-                ch.append(hashlib.md5(b).hexdigest())
-                try:
-                    px = decode_image(b)
-                    feats = image_features(px)
-                    ws.append(px.shape[1])
-                    hs.append(px.shape[0])
-                    for i in range(8):
-                        fcols[i].append(feats[i])
-                except (ValueError, IndexError):
-                    ws.append(None)
-                    hs.append(None)
-                    for i in range(8):
-                        fcols[i].append(None)
-            out = pdf[in_cols].copy()
-            out["n_bytes"] = pd.Series(nb, index=pdf.index, dtype="int64")
-            out["content_hash"] = pd.Series(ch, index=pdf.index)
-            out["img_w"] = pd.Series(ws, index=pdf.index, dtype="Int32")
-            out["img_h"] = pd.Series(hs, index=pdf.index, dtype="Int32")
-            for i in range(8):
-                out[f"f{i}"] = pd.Series(fcols[i], index=pdf.index, dtype="float64")
-            yield out
+    def features(batch):
+        nb, ch, ws, hs = [], [], [], []
+        fcols: list[list] = [[] for _ in range(8)]
+        for buf in batch.column("payload").to_pylist():
+            nb.append(len(buf))
+            ch.append(hashlib.md5(buf).hexdigest())
+            try:
+                px = decode_image(buf)
+                feats = image_features(px)
+                ws.append(px.shape[1])
+                hs.append(px.shape[0])
+                for i in range(8):
+                    fcols[i].append(feats[i])
+            except (ValueError, IndexError):
+                ws.append(None)
+                hs.append(None)
+                for i in range(8):
+                    fcols[i].append(None)
+        return [*(batch.column(c) for c in in_cols), nb, ch, ws, hs, *fcols]
 
-    return media_with_payload.mapInPandas(batches, schema=out_schema)
+    return gmap.map_batches(media_with_payload, features, out_schema)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:

@@ -9,8 +9,9 @@ vertex-to-line). Tests: test_trajectory.py:1130-1176.
 Scale shape: each trajectory is folded to one row of coordinate arrays
 with a map-side-combinable collect_list (trajectories are bounded-size
 groups by construction); the broadcast pair table joins against that
-folded table twice, and a struct-returning Arrow-batched pandas UDF
-computes both metrics per pair. The point-table never ships twice and
+folded table twice, and one Arrow-batched pass (gmap.map_batches)
+computes both metrics per pair; the line metrics run the same kernel
+against one constant line. The point-table never ships twice and
 nothing is quadratic in points.
 
 `distance_to_point` needs no Python at all: consecutive-point segments
@@ -21,11 +22,11 @@ expression, then a map-side-combinable min per trajectory.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from movingspark import kernels, pyworker
+from movingspark import gmap, kernels
 from movingspark.schema import local_frame
 
 
@@ -47,6 +48,33 @@ def _traj_coords(df: DataFrame, key: str) -> DataFrame:
     )
 
 
+def _polylines(batch, key: str) -> list:
+    """Per row of `batch`, the (n, 2) polyline of its `__{key}_xs` and
+    `__{key}_ys` lists, sliced from the flat values by the offsets."""
+    xs, ys = batch.column(f"__{key}_xs"), batch.column(f"__{key}_ys")
+    ox, oy = xs.offsets.to_numpy(), ys.offsets.to_numpy()
+    vx, vy = (c.values.to_numpy(zero_copy_only=False).astype(np.float64) for c in (xs, ys))
+    return [np.column_stack([vx[ox[i] : ox[i + 1]], vy[oy[i] : oy[i + 1]]]) for i in range(len(xs))]
+
+
+def _line_metrics(rows: DataFrame, keys: list[str], b) -> DataFrame:
+    """`keys` + (min_distance, hausdorff) per row of `rows`: the line of
+    its `keys[0]` coordinate lists against `b`, the key of a second pair
+    of lists or one constant (n, 2) line."""
+
+    def metrics(batch):
+        la = _polylines(batch, keys[0])
+        lb = _polylines(batch, b) if isinstance(b, str) else [b] * len(la)
+        m = np.array([(kernels.polyline_min_distance(p, q), kernels.discrete_hausdorff_line(p, q)) for p, q in zip(la, lb)])
+        return [*(batch.column(k) for k in keys), m[:, 0], m[:, 1]]
+
+    schema = T.StructType(
+        [rows.schema[k] for k in keys]
+        + [T.StructField("min_distance", T.DoubleType()), T.StructField("hausdorff", T.DoubleType())]
+    )
+    return gmap.map_batches(rows, metrics, schema)
+
+
 def trajectory_pair_metrics(df: DataFrame, pairs) -> DataFrame:
     """min line-line distance + discrete Hausdorff for every (traj_a,
     traj_b) pair. `pairs`: DataFrame with columns (traj_a, traj_b) or a
@@ -57,30 +85,7 @@ def trajectory_pair_metrics(df: DataFrame, pairs) -> DataFrame:
     a = _traj_coords(df, "traj_a")
     b = _traj_coords(df, "traj_b")
     j = a.join(F.broadcast(pairs), "traj_a").join(b, "traj_b")
-
-    @F.pandas_udf("min_distance double, hausdorff double")
-    def metrics(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series) -> pd.DataFrame:
-        pyworker.prepare()
-        mins, hds = [], []
-        for i in range(len(xa)):
-            la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])
-            lb = np.column_stack([np.asarray(xb[i], float), np.asarray(yb[i], float)])
-            mins.append(kernels.polyline_min_distance(la, lb))
-            hds.append(kernels.discrete_hausdorff_line(la, lb))
-        return pd.DataFrame({"min_distance": mins, "hausdorff": hds})
-
-    return j.select(
-        "traj_a",
-        "traj_b",
-        metrics(
-            F.col("__traj_a_xs"), F.col("__traj_a_ys"), F.col("__traj_b_xs"), F.col("__traj_b_ys")
-        ).alias("__m"),
-    ).select(
-        "traj_a",
-        "traj_b",
-        F.col("__m.min_distance").alias("min_distance"),
-        F.col("__m.hausdorff").alias("hausdorff"),
-    )
+    return _line_metrics(j, ["traj_a", "traj_b"], "traj_b")
 
 
 def trajectory_to_line_metrics(df: DataFrame, line) -> DataFrame:
@@ -88,28 +93,8 @@ def trajectory_to_line_metrics(df: DataFrame, line) -> DataFrame:
     driver-known polyline/point (reference: traj.distance(geometry),
     traj.hausdorff_distance(geometry)). Output: (traj_id, min_distance,
     hausdorff)."""
-    line_np = np.asarray(line, dtype=np.float64)
-    if line_np.ndim == 1:
-        line_np = line_np.reshape(1, 2)
-    a = _traj_coords(df, "traj_id")
-
-    @F.pandas_udf("min_distance double, hausdorff double")
-    def metrics(xa: pd.Series, ya: pd.Series) -> pd.DataFrame:
-        pyworker.prepare()
-        mins, hds = [], []
-        for i in range(len(xa)):
-            la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])
-            mins.append(kernels.polyline_min_distance(la, line_np))
-            hds.append(kernels.discrete_hausdorff_line(la, line_np))
-        return pd.DataFrame({"min_distance": mins, "hausdorff": hds})
-
-    return a.select(
-        "traj_id", metrics(F.col("__traj_id_xs"), F.col("__traj_id_ys")).alias("__m")
-    ).select(
-        "traj_id",
-        F.col("__m.min_distance").alias("min_distance"),
-        F.col("__m.hausdorff").alias("hausdorff"),
-    )
+    line_np = np.asarray(line, dtype=np.float64).reshape(-1, 2)
+    return _line_metrics(_traj_coords(df, "traj_id"), ["traj_id"], line_np)
 
 
 def point_segment_dist_expr(qx: float, qy: float, ax, ay, bx, by) -> F.Column:
@@ -189,7 +174,7 @@ def frechet_to_polyline(df: DataFrame, polyline: list[tuple[float, float]]) -> D
     unrolled over the route's m vertices. Unrolling duplicates the
     new[j-1] subtree, so expression size is O(2^m): fine for the short
     query routes this op is for (m <= ~10); longer routes belong in the
-    pandas-UDF pair kernel above. Per trajectory the fold is linear and
+    Arrow-batched pair kernel above. Per trajectory the fold is linear and
     the whole op is scan -> partial agg -> fold: no join, nothing
     quadratic in points, skew bounded by trajectory length."""
     m = len(polyline)

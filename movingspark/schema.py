@@ -21,8 +21,6 @@ DIRECTION = "direction"
 DISTANCE = "distance"
 SPEED = "speed"
 TIMEDELTA = "timedelta_s"  # seconds as double (reference uses timedelta64)
-TRAJ_ID = "traj_id"
-OBJ_ID = "obj_id"
 
 # Earth constants (reference geometry_utils.py:18-19)
 R_EARTH = 6371000.0  # spherical radius, meters

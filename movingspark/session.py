@@ -60,7 +60,7 @@ def tune_builder(builder: SparkSession.Builder) -> SparkSession.Builder:
 
     - big JIT code cache (see module docstring) on driver AND executor
     - AQE on (runtime coalesce, broadcast conversion, skew-join split)
-    - Arrow transfer for the pandas-UDF kernels
+    - Arrow transfer for the Python kernels
     - UTC session timezone (timestamp determinism across engines)
     """
     return (

@@ -11,47 +11,44 @@
 - quantize_int8 (int8_scale / int8_code): symmetric int8 scalar
   quantization as Catalyst array expressions.
 
-Vector math uses a vectorized Arrow pandas UDF (numpy matmul over the
+Vector math runs in numpy over each Arrow batch (gmap.map_batches: the
+list column read as one matrix by gmap.list_matrix, one matmul per
 batch), ~50x faster per batch than a built-in aggregate/zip_with dot
-product.
+product. Each pass emits its output rows directly.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movingspark import pyworker
+from movingspark import gmap
 from movingspark.schema import local_frame
 
 
-def _as_matrix(series: pd.Series) -> np.ndarray:
-    return np.vstack(series.apply(np.asarray).to_numpy()).astype(np.float64)
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
 
 
-def cosine_udf(queries: dict[int, np.ndarray]):
-    """pandas UDF: embedding -> array of cosine sims against each query
-    (queries shipped in closure, normalized once)."""
+def _query_matrix(queries: dict[int, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted query ids, their unit-length vectors as rows)."""
     qids = sorted(queries)
-    Q = np.vstack([queries[i] for i in qids]).astype(np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
+    return np.array(qids, dtype=np.int64), _unit_rows(np.vstack([queries[i] for i in qids]).astype(np.float64))
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def sims(v: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        M = _as_matrix(v)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-        S = M @ Q.T
-        return pd.Series(list(S))
 
-    return qids, sims
+def _scored_schema(query_type, vec_type) -> T.StructType:
+    return T.StructType([
+        T.StructField("query_id", query_type),
+        T.StructField("vec_id", vec_type),
+        T.StructField("sim", T.DoubleType()),
+    ])
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Distributed final top-k over (query_id, vec_id, sim) rows.
+    """Distributed final top-k over (query_id, vec_id, sim) rows, sim
+    rounded to 6 places in Spark and self-matches dropped first.
 
     Written as the declarative row_number-window + filter so Catalyst
     rewrites it into a TWO-PHASE top-k: the physical plan contains
@@ -61,9 +58,10 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     never the full scored corpus (the naive interpretation — every
     scored row of a query on one reducer — would be a straggler by
     construction at scale). This JVM-side rewrite beats a hand-rolled
-    mapInPandas local-heap reduction, which pays a second Arrow
-    round-trip through Python for the same pruning.
+    local-heap reduction in Python, which pays a second Arrow
+    round-trip for the same pruning.
     tests/test_plans.py pins the WindowGroupLimit-before-Exchange shape."""
+    scored = scored.withColumn("sim", F.round("sim", 6)).filter(F.col("query_id") != F.col("vec_id"))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
@@ -71,19 +69,23 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
 def brute_force_topk(corpus: DataFrame, queries: dict[int, np.ndarray], k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact cosine top-k per query over the whole corpus. One scan, one
-    vectorized matmul per Arrow batch, two-phase distributed top-k."""
-    qids, sims = cosine_udf(queries)
-    scored = corpus.select(
-        F.col(id_col), sims(F.col(vec_col)).alias("sims")
-    ).select(
-        id_col,
-        F.posexplode("sims").alias("qi", "sim"),
-    ).select(
-        F.element_at(F.array(*[F.lit(q) for q in qids]), F.col("qi") + 1).alias("query_id"),
-        F.col(id_col).alias("vec_id"),
-        F.round("sim", 6).alias("sim"),
-    ).filter(F.col("query_id") != F.col("vec_id"))
-    return _topk_per_query(scored.select("query_id", "vec_id", "sim"), k)
+    matmul per Arrow batch emitting a (query_id, vec_id, sim) row per
+    vector and query, two-phase distributed top-k."""
+    qids, Q = _query_matrix(queries)
+
+    def score(batch):
+        S = _unit_rows(gmap.list_matrix(batch.column(vec_col))) @ Q.T
+        # S is row-major: each vector's sims against every query in turn
+        return [
+            np.tile(qids, batch.num_rows),
+            batch.column(id_col).take(np.repeat(np.arange(batch.num_rows), len(qids))),
+            S.ravel(),
+        ]
+
+    # the type a literal of each id takes in Spark
+    qtype = T.IntegerType() if all(-(2**31) <= q < 2**31 for q in qids) else T.LongType()
+    schema = _scored_schema(qtype, corpus.schema[id_col].dataType)
+    return _topk_per_query(gmap.map_batches(corpus.select(id_col, vec_col), score, schema), k)
 
 
 def train_centroids(corpus: DataFrame, n_centroids: int, iters: int = 5,
@@ -115,16 +117,13 @@ def write_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16,
     physically reads only nprobe/n_centroids of the corpus files."""
     C = train_centroids(corpus, n_centroids, vec_col=vec_col)
 
-    @F.pandas_udf(T.IntegerType())
-    def bucket(v: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        M = _as_matrix(v)
+    def bucket(batch):
+        M = gmap.list_matrix(batch.column(vec_col))
         d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        return [*batch.columns, d.argmin(axis=1)]
 
-    corpus.withColumn("bucket", bucket(F.col(vec_col))).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(f"{path}/corpus")
+    schema = T.StructType([*corpus.schema.fields, T.StructField("bucket", T.IntegerType())])
+    gmap.map_batches(corpus, bucket, schema).write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/corpus")
     spark = corpus.sparkSession
     cdf = local_frame(
         spark,
@@ -158,19 +157,16 @@ def ivf_topk_indexed(spark, path: str, queries: dict[int, np.ndarray], k: int = 
     corpus = spark.read.parquet(f"{path}/corpus").filter(F.col("bucket").isin(buckets))
     probes = local_frame(spark, probe_rows, "query_id int, bucket int")
     cand = corpus.join(F.broadcast(probes), "bucket")
-    # cosine against each candidate's probing query, then two-phase top-k
-    qids, sims = cosine_udf(queries)
-    qpos = {q: i for i, q in enumerate(qids)}
-    pos_expr = F.element_at(
-        F.create_map(*[x for q, i in qpos.items() for x in (F.lit(q), F.lit(i))]),
-        F.col("query_id"),
-    )
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(F.element_at(sims(F.col(vec_col)), pos_expr + 1), 6).alias("sim"),
-    ).filter(F.col("query_id") != F.col("vec_id"))
-    return _topk_per_query(scored, k)
+    qids, Q = _query_matrix(queries)
+
+    def score(batch):
+        # one dot product per candidate, against its own probing query
+        M = _unit_rows(gmap.list_matrix(batch.column(vec_col)))
+        q = Q[np.searchsorted(qids, batch.column("query_id").to_numpy())]
+        return [batch.column("query_id"), batch.column(id_col), (M * q).sum(axis=1)]
+
+    schema = _scored_schema(cand.schema["query_id"].dataType, cand.schema[id_col].dataType)
+    return _topk_per_query(gmap.map_batches(cand.select("query_id", id_col, vec_col), score, schema), k)
 
 
 def _band_keys(signs: np.ndarray, n_bands: int, n_planes: int) -> np.ndarray:
@@ -209,17 +205,13 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.95, n_planes: in
         (np.arange(n_bands * n_planes)[:, None]) * 7919 + np.arange(d)[None, :] * 104729
     ).astype(np.float64)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_buckets(v: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        signs = (_as_matrix(v) @ P.T) > 0  # (n, n_bands*n_planes)
-        return pd.Series(list(_band_keys(signs, n_bands, n_planes)))
+    def band_buckets(batch):
+        signs = (gmap.list_matrix(batch.column("v")) @ P.T) > 0  # (n, n_bands*n_planes)
+        rows = np.repeat(np.arange(batch.num_rows), n_bands)
+        return [batch.column("doc").take(rows), batch.column("v").take(rows), _band_keys(signs, n_bands, n_planes).ravel()]
 
-    keyed = corpus.select(
-        F.col(id_col).alias("doc"),
-        F.col(vec_col).alias("v"),
-        F.explode(band_buckets(F.col(vec_col))).alias("bucket"),
-    )
+    docs = corpus.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("v"))
+    keyed = gmap.map_batches(docs, band_buckets, T.StructType([*docs.schema.fields, T.StructField("bucket", T.LongType())]))
     a = keyed.alias("a")
     c = keyed.alias("c")
     pairs = (
@@ -234,19 +226,18 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.95, n_planes: in
         .agg(F.first("va").alias("va"), F.first("vb").alias("vb"))
     )
 
-    @F.pandas_udf(T.DoubleType())
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        A = _as_matrix(va)
-        B = _as_matrix(vb)
+    def cosine(batch):
+        A = gmap.list_matrix(batch.column("va"))
+        B = gmap.list_matrix(batch.column("vb"))
         num = (A * B).sum(axis=1)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(num / np.maximum(den, 1e-30))
+        return [batch.column("doc_a"), batch.column("doc_b"), num / np.maximum(den, 1e-30)]
 
+    schema = T.StructType([pairs.schema["doc_a"], pairs.schema["doc_b"], T.StructField("cosine", T.DoubleType())])
     return (
-        pairs.withColumn("cosine", F.round(cos("va", "vb"), 6))
+        gmap.map_batches(pairs, cosine, schema)
+        .withColumn("cosine", F.round("cosine", 6))
         .filter(F.col("cosine") >= threshold)
-        .select("doc_a", "doc_b", "cosine")
     )
 
 

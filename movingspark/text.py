@@ -7,10 +7,12 @@ function returns Column expressions usable in any select.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from movingspark import pyworker
+from movingspark import gmap
 
 _UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _LOWER = "abcdefghijklmnopqrstuvwxyz"
@@ -248,11 +250,12 @@ def winnow_fingerprints(
     positions are reported). Documents shorter than w grams emit their
     global minimum. Output: (doc_col, fp long), distinct.
 
-    Execution: ONE Arrow-batched mapInPandas pass over whole documents —
-    per doc, codepoints come from a numpy view of the UTF-32 encoding,
-    the k-term polynomial is k vectorized Horner passes (int64: residue
-    * 257 + cp stays far below 2^63), and the window minimum is pandas'
-    Cython rolling-min (monotonic deque, O(n)). No gram rows ever
+    Execution: ONE Arrow-batched pass (gmap.map_batches) over whole
+    documents — per doc, codepoints come from a numpy view of the UTF-32
+    encoding, the k-term polynomial is k vectorized Horner passes (int64:
+    residue * 257 + cp stays far below 2^63), and the window minimum is
+    one numpy min over a sliding-window view (exact: int64 values below
+    2^31). No gram rows ever
     materialize as Spark rows: the previous formulation (explode to
     O(chars) rows + per-doc sort + window MIN + distinct exchange) spent
     ~85% of its time sorting and shuffling 1.45M gram rows at sf0.1 —
@@ -266,63 +269,32 @@ def winnow_fingerprints(
     The up-front repartition spreads docs across cores when a small
     input arrives as one split and bounds any text-length skew; it is
     the plan's only exchange, on O(docs) rows."""
-    import numpy as np
-    import pandas as pd
-
-    base, mod = 257, 2147483647
     import re
 
+    base, mod = 257, 2147483647
     ws_re = re.compile(r"\s+", re.ASCII)  # Java \s is ASCII-only too
     table = str.maketrans(_UPPER, _LOWER)
 
-    def kernel(batches):
-        pyworker.prepare()
-        for pdf in batches:
-            out_doc: list = []
-            out_fp: list = []
-            for doc, txt in zip(pdf[doc_col], pdf[text_col]):
-                if txt is None:
-                    continue
-                t = ws_re.sub(" ", txt).translate(table)
-                n = len(t) - k + 1
-                if n < 1:
-                    continue
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                    np.int64
-                )
-                h = np.zeros(n, dtype=np.int64)
-                for j in range(k):
-                    h = (h * base + cp[j : j + n]) % mod
-                if n < w:
-                    fps = h.min(keepdims=True)
-                else:
-                    # rolling-min output is float64; values < 2^31 are
-                    # exactly representable, so the cast back is lossless
-                    fps = (
-                        pd.Series(h)
-                        .rolling(w)
-                        .min()
-                        .to_numpy()[w - 1 :]
-                        .astype(np.int64)
-                    )
-                fps = np.unique(fps)
-                out_doc.extend([doc] * len(fps))
-                out_fp.append(fps)
-            yield pd.DataFrame(
-                {
-                    doc_col: out_doc,
-                    "fp": np.concatenate(out_fp)
-                    if out_fp
-                    else np.array([], dtype=np.int64),
-                }
-            )
+    def kernel(batch):
+        rows, out_fp = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for i, txt in enumerate(batch.column(text_col).to_pylist()):
+            if txt is None:
+                continue
+            t = ws_re.sub(" ", txt).translate(table)
+            n = len(t) - k + 1
+            if n < 1:
+                continue
+            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+            h = np.zeros(n, dtype=np.int64)
+            for j in range(k):
+                h = (h * base + cp[j : j + n]) % mod
+            fps = np.unique(np.lib.stride_tricks.sliding_window_view(h, min(w, n)).min(axis=1))
+            rows.append(np.full(len(fps), i))
+            out_fp.append(fps)
+        return [batch.column(doc_col).take(np.concatenate(rows)), np.concatenate(out_fp)]
 
-    doc_type = docs.schema[doc_col].dataType.simpleString()
-    return (
-        docs.repartition(F.col(doc_col))
-        .select(F.col(doc_col), F.col(text_col))
-        .mapInPandas(kernel, schema=f"{doc_col} {doc_type}, fp long")
-    )
+    docs = docs.repartition(F.col(doc_col)).select(F.col(doc_col), F.col(text_col))
+    return gmap.map_batches(docs, kernel, T.StructType([docs.schema[doc_col], T.StructField("fp", T.LongType())]))
 
 
 def winnow_near_dup_pairs(

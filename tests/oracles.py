@@ -26,6 +26,14 @@ replaced; the tests assert the engine kernel reproduces it bit for bit
 - span_digests_two_pass ~ ingest._span_digests (one digest per side,
   each its own scan and exchange, joined full-outer on doc_id)
 - span_invariant_violations_two_pass ~ ingest.span_invariant_violations
+- pair_metrics_pandas, line_metrics_pandas ~ pairs.trajectory_pair_metrics
+  / trajectory_to_line_metrics (a struct pandas UDF each, a per-row loop)
+- ivf_buckets_pandas ~ similarity.write_ivf_index's bucket column
+  (pandas UDF, matrix built by Series.apply(np.asarray))
+- pip_join_pandas_refine ~ joins.point_in_polygon_join past the slot cap
+  (boundary rows refined by a pandas UDF)
+- cluster_partial_pandas ~ aggregate.cluster_significant_points above its
+  driver cap (per-partition mapInPandas, pd.concat + sort_values)
 - stops_pandas, clip_pandas, grouped_filter_pandas, kalman_pandas,
   outlier_clean_pandas, angle_split_pandas, hull_pandas,
   significant_points_pandas ~ the per-trajectory functions the
@@ -39,6 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from movingspark import cells, joins, kernels, schema
 from movingspark.cells import WORLD, _interleave_bits_np
@@ -855,3 +864,107 @@ def significant_points_pandas(max_distance, min_distance, min_stop_duration_s, m
         )
 
     return per_traj
+
+
+# ---------------------------------------------------------------------------
+# The pandas forms of the batch engine's Python sites, as they ran before
+# every such site became an Arrow pass (gmap.map_batches)
+# ---------------------------------------------------------------------------
+
+
+def _pair_metrics_udf(line=None):
+    if line is None:
+        @F.pandas_udf("min_distance double, hausdorff double")
+        def metrics(xa: pd.Series, ya: pd.Series, xb: pd.Series, yb: pd.Series) -> pd.DataFrame:
+            mins, hds = [], []
+            for i in range(len(xa)):
+                la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])
+                lb = np.column_stack([np.asarray(xb[i], float), np.asarray(yb[i], float)])
+                mins.append(kernels.polyline_min_distance(la, lb))
+                hds.append(kernels.discrete_hausdorff_line(la, lb))
+            return pd.DataFrame({"min_distance": mins, "hausdorff": hds})
+    else:
+        @F.pandas_udf("min_distance double, hausdorff double")
+        def metrics(xa: pd.Series, ya: pd.Series) -> pd.DataFrame:
+            mins, hds = [], []
+            for i in range(len(xa)):
+                la = np.column_stack([np.asarray(xa[i], float), np.asarray(ya[i], float)])
+                mins.append(kernels.polyline_min_distance(la, line))
+                hds.append(kernels.discrete_hausdorff_line(la, line))
+            return pd.DataFrame({"min_distance": mins, "hausdorff": hds})
+
+    return metrics
+
+
+def pair_metrics_pandas(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    from movingspark.pairs import _traj_coords
+
+    j = _traj_coords(df, "traj_a").join(F.broadcast(pairs), "traj_a").join(_traj_coords(df, "traj_b"), "traj_b")
+    m = _pair_metrics_udf()(*(F.col(f"__traj_{s}_{c}s") for s in "ab" for c in "xy")).alias("__m")
+    return j.select("traj_a", "traj_b", m).select("traj_a", "traj_b", "__m.min_distance", "__m.hausdorff")
+
+
+def line_metrics_pandas(df: DataFrame, line) -> DataFrame:
+    from movingspark.pairs import _traj_coords
+
+    line_np = np.asarray(line, dtype=np.float64)
+    if line_np.ndim == 1:
+        line_np = line_np.reshape(1, 2)
+    m = _pair_metrics_udf(line_np)(F.col("__traj_id_xs"), F.col("__traj_id_ys")).alias("__m")
+    return _traj_coords(df, "traj_id").select("traj_id", m).select("traj_id", "__m.min_distance", "__m.hausdorff")
+
+
+def ivf_buckets_pandas(corpus: DataFrame, C: np.ndarray, vec_col: str = "embedding") -> DataFrame:
+    @F.pandas_udf(T.IntegerType())
+    def bucket(v: pd.Series) -> pd.Series:
+        M = np.vstack(v.apply(np.asarray).to_numpy()).astype(np.float64)
+        d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        return pd.Series(d.argmin(axis=1).astype(np.int32))
+
+    return corpus.withColumn("bucket", bucket(F.col(vec_col)))
+
+
+def pip_join_pandas_refine(df: DataFrame, polygons, res: int = 8, bounds=WORLD) -> DataFrame:
+    """The point join whose cover rows are past joins._PIP_SLOT_CAP."""
+    table, k = joins._cover_table(polygons, res, bounds)
+    assert k is None
+    cover = df.sparkSession.createDataFrame(table, joins._cover_ddl(k))
+    joined = joins.with_cell(df, res, bounds, "__cell").join(
+        F.broadcast(cover), on=F.col("__cell") == cover["cell"]
+    ).drop("cell")
+    poly_map = {str(pid): joins._norm_poly(v) for pid, v in polygons}
+
+    @F.pandas_udf(T.BooleanType())
+    def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
+        out = np.zeros(len(px), dtype=bool)
+        for p in pid.unique():
+            m = (pid == p).to_numpy()
+            outer, holes = poly_map[p]
+            out[m] = kernels.point_in_polygon(px.to_numpy(float)[m], py.to_numpy(float)[m], outer, holes)
+        return pd.Series(out)
+
+    rest = joined.filter("full").withColumn("__in", F.lit(True))
+    boundary = joined.filter("NOT full").withColumn("__in", refine(F.col("x"), F.col("y"), F.col("poly_id")))
+    return rest.unionByName(boundary).filter("__in").drop("__cell", "full", "__in")
+
+
+def cluster_partial_pandas(sig: DataFrame, max_distance: float, latlon: bool = False) -> list:
+    """[(cx, cy, n)] of the two-level clustering: grid clusters per
+    partition in (traj_id, seq) order, merged weighted on the driver."""
+    from movingspark.aggregate import grid_cluster, grid_cluster_weighted
+
+    def per_part(batches):
+        chunks = [pdf for pdf in batches]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True).sort_values(["traj_id", "seq"])
+        part = grid_cluster(list(zip(pdf["x"], pdf["y"])), max_distance, latlon)
+        if part:
+            yield pd.DataFrame(
+                {"cx": [c[0] for c in part], "cy": [c[1] for c in part], "n": [c[2] for c in part]}
+            )
+
+    partial = sig.select("traj_id", "seq", "x", "y").mapInPandas(per_part, schema="cx double, cy double, n long").collect()
+    return grid_cluster_weighted(
+        [(r["cx"], r["cy"]) for r in partial], [int(r["n"]) for r in partial], max_distance, latlon
+    )

@@ -1,8 +1,10 @@
 """Aggregator parity with reference test_trajectory_aggregator.py."""
 
+import numpy as np
 import pytest
 
 from movingspark import aggregate
+from tests import oracles
 from tests.conftest import rows_to_points
 
 
@@ -99,8 +101,8 @@ def test_grid_cluster_degenerate_lines():
     assert len(out) == 1 and out[0][2] == 3
 
 
-def test_cluster_scale_fallback_two_level(spark):
-    """Above max_points the clustering switches to per-partition
+def test_cluster_scale_fallback_two_level(spark, monkeypatch):
+    """Above _DRIVER_MAX_POINTS the clustering switches to per-partition
     pre-cluster + weighted driver merge instead of a hard error. Two
     well-separated blobs must come out as two clusters with the exact
     total membership; below the cap semantics are unchanged."""
@@ -115,8 +117,9 @@ def test_cluster_scale_fallback_two_level(spark):
     sig = spark.createDataFrame(rows, "traj_id string, seq long, x double, y double")
 
     # force the fallback with a tiny cap
-    out = aggregate.cluster_significant_points(sig, max_distance=10.0, max_points=10)
-    got = out.collect()
+    monkeypatch.setattr(aggregate, "_DRIVER_MAX_POINTS", 10)
+    got = aggregate.cluster_significant_points(sig, max_distance=10.0).collect()
+    monkeypatch.undo()
     assert len(got) == 2
     assert sorted(int(r["n"]) for r in got) == [100, 100]
     cents = sorted((r["cx"], r["cy"]) for r in got)
@@ -128,6 +131,26 @@ def test_cluster_scale_fallback_two_level(spark):
     want = aggregate.grid_cluster(pts, 10.0)
     got_small = [(r["cx"], r["cy"], r["n"]) for r in small.orderBy("cluster_id").collect()]
     assert [(c[0], c[1], c[2]) for c in want] == got_small
+
+
+def test_cluster_above_the_cap_equals_the_mapinpandas_form(spark, monkeypatch):
+    """Above the cap, the per-partition pass (Arrow tables sorted by
+    traj_id, seq) gives the centroids of the mapInPandas form it
+    replaced (pd.concat + sort_values), over several partitions whose
+    rows arrive out of order."""
+    rng = np.random.default_rng(5)
+    rows = [
+        (str(t), int(s), float(x), float(y))
+        for t in range(12)
+        for s, (x, y) in enumerate(rng.normal(0.0, 40.0, (60, 2)) + rng.integers(0, 3, 2) * 500)
+    ]
+    rng.shuffle(rows)
+    sig = spark.createDataFrame(rows, "traj_id string, seq long, x double, y double").repartition(3)
+    monkeypatch.setattr(aggregate, "_DRIVER_MAX_POINTS", 10)
+    out = aggregate.cluster_significant_points(sig, 25.0).collect()
+    got = [(r["cx"], r["cy"], r["n"]) for r in sorted(out, key=lambda r: int(r["cluster_id"][1:]))]
+    want = oracles.cluster_partial_pandas(sig, 25.0)
+    assert len(got) > 3 and [tuple(c) for c in want] == got
 
 
 def test_grid_cluster_span_exact_multiple_of_cell():

@@ -127,6 +127,20 @@ def test_ivf_topk_recall(spark, tmp_path):
     assert recall >= 0.6  # approximate path finds most true neighbors
 
 
+def test_ivf_buckets_equal_the_pandas_udf(spark, tmp_path):
+    """write_ivf_index's bucket per vector equals the pandas UDF's that
+    built each batch's matrix row by row."""
+    rng = np.random.RandomState(11)
+    X = rng.randn(300, 6).astype(np.float32)
+    corpus = spark.createDataFrame([(i, X[i].tolist()) for i in range(300)], "vec_id long, embedding array<float>")
+    path = str(tmp_path / "ivf")
+    C = similarity.write_ivf_index(corpus, path, n_centroids=8)
+    got = sorted((r["vec_id"], r["bucket"]) for r in spark.read.parquet(f"{path}/corpus").collect())
+    want = sorted((r["vec_id"], r["bucket"]) for r in oracles.ivf_buckets_pandas(corpus, C).collect())
+    assert got == want
+    assert len({b for _, b in got}) > 1
+
+
 def test_embedding_near_dups(spark):
     base = np.array([1.0, 2.0, 3.0, 4.0])
     rows = [

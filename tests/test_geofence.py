@@ -97,7 +97,7 @@ def test_geofence_300_vertex_fence_matches_kernel_flags(spark):
     rows.append(("w0", _ts(30), None, 1.0))  # flag unknown: no event, none after
     rows.append(("w0", _ts(31), 0.0, 0.0))
     ev = geofence_events(_pts(spark, rows), fence)
-    assert "ArrowEvalPython" in ev._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in ev._jdf.queryExecution().executedPlan().toString()
     got = sorted((r["traj_id"], (r["t"] - E).total_seconds(), r["event"]) for r in ev.collect())
 
     flags = kernels.point_in_polygon(xy[:, 0], xy[:, 1], fence).reshape(40, 30)

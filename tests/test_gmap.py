@@ -174,6 +174,23 @@ def test_null_traj_id_is_one_group_bounded_by_values(spark):
             assert _rows(grouped_apply_sorted(df, summarize, SCHEMA)) == expected
 
 
+def test_list_matrix_reads_a_sliced_array():
+    import pyarrow as pa
+
+    arr = pa.array([[9.0, 9.0], [1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float32())).slice(1, 2)
+    got = gmap.list_matrix(arr)
+    assert got.dtype == np.float64 and np.array_equal(got, [[1.0, 2.0], [3.0, 4.0]])
+    assert gmap.list_matrix(arr.slice(0, 0)).shape[0] == 0
+
+
+@pytest.mark.parametrize("rows", [[[1.0, 2.0], [3.0]], [[1.0, 2.0], None]], ids=["ragged", "null"])
+def test_list_matrix_rejects_ragged_and_null_rows(rows):
+    import pyarrow as pa
+
+    with pytest.raises(ValueError):
+        gmap.list_matrix(pa.array(rows))
+
+
 def test_seconds_is_ns_over_1e9_not_us_over_1e6():
     """ns counts exceed 2^53, so int64 ns -> float64 rounds before the
     division; the engine has always divided the rounded ns by 1e9, and

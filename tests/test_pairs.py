@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from movingspark import kernels, pairs
+from tests import oracles
 from tests.conftest import rows_to_points
 
 
@@ -63,6 +64,28 @@ def test_trajectory_to_line_metrics(spark):
     out3 = {r["traj_id"]: r for r in pairs.trajectory_to_line_metrics(df, (0.0, 0.0)).collect()}
     assert out3["1"]["min_distance"] == 0.0
     assert out3["3"]["hausdorff"] == pytest.approx(math.sqrt(8), abs=1e-12)
+
+
+def test_pair_and_line_metrics_equal_their_pandas_udfs(spark):
+    """Both metric operators run one Arrow kernel; its rows equal the
+    two struct pandas UDFs they replaced, one-point tracks, a null
+    coordinate and a point line included."""
+    rng = np.random.default_rng(17)
+    rows = []
+    for tid, n in enumerate([1, 2, 7, 30, 12]):
+        xy = np.cumsum(rng.normal(0.0, 3.0, (n, 2)), axis=0)
+        rows += [(tid, f"2020-01-01T00:{i:02d}:00", x, y) for i, (x, y) in enumerate(xy)]
+    rows.append((2, "2020-01-01T00:59:00", float("nan"), 1.0))
+    df = rows_to_points(spark, rows)
+    ids = [str(i) for i in range(5)]
+    pair_ids = spark.createDataFrame([(a, b) for a in ids for b in ids], "traj_a string, traj_b string")
+
+    def rows_of(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    assert rows_of(pairs.trajectory_pair_metrics(df, pair_ids)) == rows_of(oracles.pair_metrics_pandas(df, pair_ids))
+    for line in ([(0.0, 0.0), (5.0, 5.0), (9.0, -2.0)], (1.0, 2.0)):
+        assert rows_of(pairs.trajectory_to_line_metrics(df, line)) == rows_of(oracles.line_metrics_pandas(df, line))
 
 
 def test_distance_to_point_sql_path(spark):

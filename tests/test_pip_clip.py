@@ -157,6 +157,23 @@ def test_border_cells_keep_every_edge():
         assert np.isfinite(table.column(f"e{i}_xa").to_numpy()[border]).all()
 
 
+def test_clamped_border_cells_are_never_full(spark):
+    """A square past the bounds covers the corner cell (0, 0) whole, but
+    that cell also takes every point clamped into it, out of bounds and
+    NaN included: only the kernel's inside point may join."""
+    square = np.array([(-5.0, -5.0), (10.0, -5.0), (10.0, 10.0), (-5.0, 10.0)])
+    bounds = (0.0, 0.0, 16.0, 16.0)
+    table, _ = joins._cover_table([("sq", square)], 4, bounds)
+    ix, iy = cells.cell_ixiy_np(table.column("cell").to_numpy(), 4)
+    full = table.column("full").to_numpy(zero_copy_only=False)
+    assert full.any() and not full[(ix == 0) | (iy == 0)].any()
+    probes = [(float("nan"), 0.5), (-100.0, 0.5), (0.5, float("nan")), (0.5, 0.5), (20.0, 0.5)]
+    df = spark.createDataFrame([(str(i), 0, x, y) for i, (x, y) in enumerate(probes)], "traj_id string, t long, x double, y double")
+    px, py = np.array(probes).T
+    assert np.flatnonzero(kernels.point_in_polygon(px, py, square)).tolist() == [3]
+    assert _pairs(joins.point_in_polygon_join(df, [("sq", square)], 4, bounds)) == [(3, "sq")]
+
+
 def _pairs(df):
     return sorted((int(r["traj_id"]), r["poly_id"]) for r in df.collect())
 

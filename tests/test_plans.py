@@ -18,7 +18,7 @@ from tests.conftest import rows_to_points
 def _no_python_exec(plan: str) -> bool:
     """True when no PYTHON WORKER executes in the plan (a local
     createDataFrame scan mentions Python harmlessly)."""
-    return not re.search(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
+    return not re.search(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
 
 
 def plan_of(df) -> str:
@@ -260,7 +260,7 @@ def test_ann_topk_partial_window_group_limit_before_exchange(spark):
 
 def test_winnow_fingerprints_single_exchange_arrow_kernel(spark):
     """Winnowing plans as ONE exchange (the doc repartition for
-    parallelism/skew) feeding a single Arrow-batched mapInPandas kernel:
+    parallelism/skew) feeding a single Arrow-batched mapInArrow kernel:
     gram rows never materialize as Spark rows, so there is no Sort, no
     Window, and no distinct aggregate in the plan at all. (The previous
     all-JVM explode+window formulation spent ~85% of its time sorting
@@ -273,7 +273,7 @@ def test_winnow_fingerprints_single_exchange_arrow_kernel(spark):
         "doc_id string, text string",
     )
     plan = plan_of(text.winnow_fingerprints(docs, k=8, w=16))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Window" not in plan and "Sort" not in plan
     assert "HashAggregate" not in plan  # per-doc unique, no distinct agg
     assert n_exchanges(plan) == 1

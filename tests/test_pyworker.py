@@ -206,13 +206,15 @@ def test_prepare_freezes_the_import_heap_once(zipimport_part):
     assert (frozen2, tracked2) == (frozen1, tracked1)
 
 
-# One worker on local[1]: the probe runs in the worker the Kalman
-# grouped map already prepared, and does not call prepare() itself.
+# One worker on local[1]: each probe runs in the worker the job before
+# it prepared, and does not call prepare() itself. The geodesic
+# arrow_udf runs first, in a fresh worker: PySpark imports pandas there
+# after the UDF's first batch, so after prepare() has frozen the heap.
 WORKER_HEAP_JOB = """
 import json
 import pandas as pd
 from pyspark.sql import SparkSession
-from movingspark import ingest, smooth
+from movingspark import derive, ingest, smooth
 
 spark = (
     SparkSession.builder.master("local[1]")
@@ -223,7 +225,6 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 pts = ingest.synth_skewed_points(spark, 400, n_trajs=8).drop("value")
-n = smooth.kalman_smooth(pts).count()
 
 
 def probe(it):
@@ -236,15 +237,23 @@ def probe(it):
     )
 
 
-got = [r.asDict() for r in pts.coalesce(1).mapInPandas(probe, "pid long, frozen long, tracked long").collect()]
-print("PYWORKER_HEAP " + json.dumps({"rows": n, "probes": got}))
+def probes():
+    return [r.asDict() for r in pts.coalesce(1).mapInPandas(probe, "pid long, frozen long, tracked long").collect()]
+
+
+rows = [len(derive.add_all_kinematics(pts, latlon=True).select("distance").collect())]
+got = probes()
+rows.append(smooth.kalman_smooth(pts).count())
+got += probes()
+print("PYWORKER_HEAP " + json.dumps({"rows": rows, "probes": got}))
 spark.stop()
 """
 
 
 def test_reused_worker_keeps_its_heap_frozen():
-    """After a grouped map, the worker's per-task gc.collect() has only
-    the objects created since the freeze to walk (about 73 000 without it)."""
+    """After the geodesic arrow_udf and after a grouped map, the worker's
+    per-task gc.collect() has only the objects created since the freeze
+    to walk (about 73 000 without it)."""
     r = subprocess.run(
         [sys.executable, "-c", WORKER_HEAP_JOB],
         capture_output=True, text=True, cwd=ROOT, timeout=420,
@@ -253,10 +262,11 @@ def test_reused_worker_keeps_its_heap_frozen():
     line = [l for l in r.stdout.splitlines() if l.startswith("PYWORKER_HEAP ")]
     assert line, (r.stdout[-1000:], r.stderr[-1000:])
     got = json.loads(line[0].split(" ", 1)[1])
-    assert got["rows"] == 400
-    (probe,) = got["probes"]
-    assert probe["frozen"] > 0
-    assert probe["tracked"] < 10_000, probe
+    assert got["rows"] == [400, 400]
+    assert len(got["probes"]) == 2
+    for probe in got["probes"]:
+        assert probe["frozen"] > 0
+        assert probe["tracked"] < 10_000, probe
 
 
 # ---------------------------------------------------------------------------
@@ -264,7 +274,7 @@ def test_reused_worker_keeps_its_heap_frozen():
 # ---------------------------------------------------------------------------
 
 _RUNNERS = {"mapInPandas", "mapInArrow", "applyInPandasWithState"}
-_SITE_RE = re.compile(r"@\w+\.pandas_udf\(|@pandas_udf\(|\.(?:mapInPandas|mapInArrow|applyInPandasWithState)\(")
+_SITE_RE = re.compile(r"@(?:\w+\.)?(?:pandas|arrow)_udf\(|\.(?:mapInPandas|mapInArrow|applyInPandasWithState)\(")
 
 
 def _named(func, name):
@@ -273,8 +283,9 @@ def _named(func, name):
     )
 
 
-def _is_pandas_udf(deco):
-    return _named(deco.func if isinstance(deco, ast.Call) else deco, "pandas_udf")
+def _is_vector_udf(deco):
+    func = deco.func if isinstance(deco, ast.Call) else deco
+    return _named(func, "pandas_udf") or _named(func, "arrow_udf")
 
 
 def _calls_prepare_first(fn):
@@ -290,10 +301,10 @@ def _calls_prepare_first(fn):
 
 
 def _worker_functions(tree):
-    """(name, lineno, FunctionDef or None) per pandas_udf-decorated
-    function and per function passed to mapInPandas / mapInArrow /
-    applyInPandasWithState; None when the argument is not a function
-    defined in the enclosing scope (a lambda, say)."""
+    """(name, lineno, FunctionDef or None) per pandas_udf- or
+    arrow_udf-decorated function and per function passed to mapInPandas
+    / mapInArrow / applyInPandasWithState; None when the argument is not
+    a function defined in the enclosing scope (a lambda, say)."""
     scope_of = {}
     for scope in ast.walk(tree):
         if isinstance(scope, (ast.Module, ast.FunctionDef)):
@@ -302,7 +313,7 @@ def _worker_functions(tree):
                     scope_of[node] = scope  # innermost scope wins: walked last
     out = []
     for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and any(map(_is_pandas_udf, node.decorator_list)):
+        if isinstance(node, ast.FunctionDef) and any(map(_is_vector_udf, node.decorator_list)):
             out.append((node.name, node.lineno, node))
         elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and (
             node.func.attr in _RUNNERS
@@ -333,4 +344,19 @@ def test_every_engine_udf_calls_prepare_first():
             if fn is None or not _calls_prepare_first(fn):
                 missing.append(f"{os.path.basename(path)}:{lineno} {name}")
     assert not missing, "UDFs that do not call pyworker.prepare() first: " + ", ".join(missing)
-    assert ("gmap.py", "per_batch") in found
+    assert {("gmap.py", "per_batch"), ("derive.py", "_geodesic_udf")} <= found
+
+
+def test_pandas_stays_out_of_the_batch_engine():
+    """Outside streaming (applyInPandasWithState), the engine hands data
+    to Python workers as Arrow arrays only: no pandas UDF, no
+    mapInPandas and no pandas import but the one pyworker freezes."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "movingspark", "*.py"))):
+        name = os.path.basename(path)
+        if name == "streaming.py":
+            continue
+        for line in open(path):
+            if re.search(r"pandas_udf|mapInPandas|^\s*(?:import|from) pandas\b", line):
+                found.append((name, line.strip()))
+    assert found == [("pyworker.py", "import pandas  # noqa: F401")]

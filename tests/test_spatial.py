@@ -236,7 +236,7 @@ def test_line_test_matches_numpy_twin(spark, n_verts):
 
 def test_large_polygon_refines_through_the_numpy_kernels(spark):
     """When a boundary cover row has more than joins._PIP_SLOT_CAP active
-    edges the point join refines boundary cells through an Arrow UDF;
+    edges the point join refines boundary cells in a mapInArrow pass;
     the line test's vertex test is that join. Both must agree with the
     numpy kernels, holes and boundary points included."""
     from movingspark import kernels
@@ -251,7 +251,7 @@ def test_large_polygon_refines_through_the_numpy_kernels(spark):
     )
     df = rows_to_points(spark, [(i, "2020-01-01T00:00:00", x, y) for i, (x, y) in enumerate(xy)])
     hits = joins.point_in_polygon_join(df, [("ring", (outer, [hole]))], res=8)
-    assert "ArrowEvalPython" in hits._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in hits._jdf.queryExecution().executedPlan().toString()
     got = sorted((int(r["traj_id"]), r["poly_id"]) for r in hits.collect())
     pts = sorted((int(r["traj_id"]), r["x"], r["y"]) for r in df.collect())
     ids, px, py = (np.array(c) for c in zip(*pts))
@@ -266,6 +266,28 @@ def test_large_polygon_refines_through_the_numpy_kernels(spark):
     line_ids, want = _line_hits(spark, tracks, outer)
     assert line_ids == want
     assert 0 < len(line_ids) < len(tracks)
+
+
+def test_refine_past_the_slot_cap_equals_the_pandas_udf(spark):
+    """Past joins._PIP_SLOT_CAP the boundary rows of a 300-vertex star
+    refine in a mapInArrow pass; its join equals the pandas UDF refine
+    it replaced, vertices, edge midpoints and null/NaN coordinates
+    included."""
+    rng = np.random.default_rng(300)
+    star = _star(20.0, 10.0, 8.0, 300, rng)
+    assert joins._cover_table([("s", star)], 8, cells.WORLD)[1] is None
+    xy = np.concatenate([rng.uniform([10, 0], [30, 20], (500, 2)), _boundary_points(star)])
+    rows = [(i, "2020-01-01T00:00:00", x, y) for i, (x, y) in enumerate(xy)]
+    df = rows_to_points(spark, rows).unionByName(
+        spark.createDataFrame([("n", None, None, 10.0), ("m", None, float("nan"), 10.0)], "traj_id string, t timestamp, x double, y double")
+    )
+
+    def rows_of(out):
+        return sorted((r["traj_id"], r["x"], r["y"], r["poly_id"]) for r in out.collect())
+
+    got = rows_of(joins.point_in_polygon_join(df, [("s", star)], res=8))
+    assert got == rows_of(oracles.pip_join_pandas_refine(df, [("s", star)], res=8))
+    assert 100 < len(got) < len(xy)
 
 
 def test_knn_join(spark):
