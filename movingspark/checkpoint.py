@@ -17,7 +17,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from movingspark.catalog import read_table
 
 
 class Checkpointer:
@@ -47,7 +48,7 @@ class Checkpointer:
         path = self._stage_path(name)
         if self.is_complete(name):
             self.log.append({"stage": name, "action": "resumed", "path": path})
-            return self.spark.read.parquet(path)
+            return read_table(self.spark, path)
 
         t0 = time.time()
         df = df_thunk()
@@ -62,7 +63,7 @@ class Checkpointer:
         # this never re-scans the checkpoint data pages. (The previous
         # read.parquet().groupBy(input_file_name()).count() re-read the
         # whole checkpoint — doubling every stage's I/O at scale.)
-        back = self.spark.read.parquet(path)
+        back = read_table(self.spark, path)
         files = _footer_row_counts(path)
         manifest = {
             "stage": name,

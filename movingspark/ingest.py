@@ -206,66 +206,71 @@ def explode_doc_points(docs: DataFrame) -> DataFrame:
     # 20-50x slower over 10^6 rows. A generator + simple filter keeps
     # the stage codegen'd; the extra media rows are discarded JVM-side
     # before anything expensive happens.
-    sp = docs.select("doc_id", F.explode("spans").alias("span")).filter(
-        F.col("span.kind") == "text"
-    )
     # Parse "t;x;y" with substring_index, NOT split(): split is a regex
     # match that materializes an array, and Catalyst's collapsed
     # projection re-evaluates it once per extracted field — measured
     # ~30x slower over 10.5M spans (29 s vs 0.9 s on 32 cores).
     # substring_index is a plain char scan with no allocation.
-    txt = F.col("span.text")
-    pts = sp.select(
-        F.col("doc_id").alias("traj_id"),
-        F.col("span.offset").alias("offset"),
-        F.timestamp_seconds(F.substring_index(txt, ";", 1).cast("long")).alias("t"),
-        F.substring_index(F.substring_index(txt, ";", 2), ";", -1).cast("double").alias("x"),
-        F.substring_index(txt, ";", -1).cast("double").alias("y"),
-    )
-    return pts
+    # The plan is SQL text applied in one step: a handful of Py4J calls,
+    # where one Column operation at a time sent 204, each a driver round
+    # trip while the JVM analyses the growing plan.
+    return docs.sparkSession.sql("""
+        SELECT doc_id AS traj_id,
+               span.offset AS offset,
+               timestamp_seconds(CAST(substring_index(span.text, ';', 1) AS BIGINT)) AS t,
+               CAST(substring_index(substring_index(span.text, ';', 2), ';', -1) AS DOUBLE) AS x,
+               CAST(substring_index(span.text, ';', -1) AS DOUBLE) AS y
+        FROM (SELECT doc_id, explode(spans) AS span FROM {docs})
+        WHERE span.kind = 'text'""", docs=docs)
 
 
-def _reassembled(sp: DataFrame, *aggs) -> DataFrame:
-    """The reassembly: the exploded spans `s` of `sp` regrouped per doc_id,
-    next to `aggs` over sp's other columns, as `spans_sorted`
-    array<struct<offset, kind, text, media_ref>> in offset order. The span
-    struct is built in the projection below the aggregate, which is
-    generated code; collect_list's update is interpreted and only copies
-    it. sort_array, not array_sort: array_sort is a higher-order function
-    (interpreted fallback), and the two give the same order for the
-    non-null structs collect_list returns."""
-    s = F.col("s")
-    span = F.struct(s["offset"].alias("offset"), s["kind"].alias("kind"), s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"))
-    sp = sp.select(*[c for c in sp.columns if c != "s"], span.alias("span"))
-    return sp.groupBy("doc_id").agg(*aggs, F.sort_array(F.collect_list("span")).alias("spans_sorted"))
+def _reassembled(spans: str, cols: tuple[str, ...] = (), aggs: tuple[str, ...] = ()) -> str:
+    """SQL text of the reassembly: the exploded spans `s` of the query
+    `spans` regrouped per doc_id as `spans_sorted`
+    array<struct<offset, kind, text, media_ref>> in offset order, next to
+    the aggregates `aggs` over the projections `cols` of the same rows.
+    The span struct is built in the projection below the aggregate, which
+    is generated code; collect_list's update is interpreted and only
+    copies it. sort_array, not array_sort: array_sort is a higher-order
+    function (interpreted fallback), and the two give the same order for
+    the non-null structs collect_list returns."""
+    return f"""
+        SELECT doc_id, {"".join(f"{a}, " for a in aggs)}sort_array(collect_list(span)) AS spans_sorted
+        FROM (SELECT doc_id, {"".join(f"{c}, " for c in cols)}
+                     struct(s.offset AS offset, s.kind AS kind, s.text AS text, s.media_ref AS media_ref) AS span
+              FROM ({spans}))
+        GROUP BY doc_id"""
 
 
 def reassemble_docs(docs: DataFrame) -> DataFrame:
     """Round-trip: explode all spans and reassemble per doc ordered by
     offset — the north-rule span-sequence invariant (BASELINE.json:15)."""
-    sp = docs.select("doc_id", F.explode("spans").alias("s"))
-    return _reassembled(sp).select(
-        "doc_id",
-        F.transform(
-            "spans_sorted",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    sp = "SELECT doc_id, explode(spans) AS s FROM {docs}"
+    return docs.sparkSession.sql(f"""
+        SELECT doc_id,
+               transform(spans_sorted, x -> struct(x.kind AS kind, x.text AS text, x.media_ref AS media_ref,
+                                                   x.offset AS offset)) AS spans
+        FROM ({_reassembled(sp)})""", docs=docs)
 
 
-def _span_hash(pos: str, s: str):
-    """xxhash64 of (doc_id, array position, kind, text, media_ref) of one
-    span; the position makes their XOR-fold order-sensitive. Null text /
-    media_ref map to distinct sentinels so column identity survives
-    xxhash64's null-skipping."""
-    return F.xxhash64("doc_id", pos, F.col(f"{s}.kind"), F.coalesce(F.col(f"{s}.text"), F.lit(" <null-text>")),
-                      F.coalesce(F.col(f"{s}.media_ref"), F.lit("<null-ref>")))
+def _span_hash(pos: str, s: str) -> str:
+    """SQL text of the xxhash64 of (doc_id, array position, kind, text,
+    media_ref) of one span; the position makes their XOR-fold
+    order-sensitive. Null text / media_ref map to distinct sentinels so
+    column identity survives xxhash64's null-skipping."""
+    return (f"xxhash64(doc_id, {pos}, {s}.kind, coalesce({s}.text, ' <null-text>'), "
+            f"coalesce({s}.media_ref, '<null-ref>'))")
+
+
+# (doc_id, h, h_n, h_rt, h_rt_n) per doc with spans (_span_digests), as
+# SQL text over `{docs}` applied in one step (explode_doc_points says why;
+# built one Column at a time, the span invariant sent 619 Py4J calls)
+_SPAN_DIGESTS = f"""
+    SELECT doc_id, h, h_n, bit_xor({_span_hash('p', 'r')}) AS h_rt, count(p) AS h_rt_n
+    FROM (SELECT doc_id, h, h_n, posexplode_outer(spans_sorted) AS (p, r)
+          FROM ({_reassembled("SELECT doc_id, posexplode(spans) AS (pos, s) FROM {docs}",
+                              (f"{_span_hash('pos', 's')} AS hs",), ("bit_xor(hs) AS h", "count(*) AS h_n"))}))
+    GROUP BY doc_id, h, h_n"""
 
 
 def _span_digests(docs: DataFrame) -> DataFrame:
@@ -276,12 +281,7 @@ def _span_digests(docs: DataFrame) -> DataFrame:
     (doc_id, h, h_n), which that partitioning already satisfies.
     posexplode_outer keeps a doc whose reassembly came back empty, and
     count(p) then differs from h_n."""
-    sp = docs.select("doc_id", F.posexplode("spans").alias("pos", "s"))
-    sp = sp.select("doc_id", "s", _span_hash("pos", "s").alias("hs"))
-    orig = _reassembled(sp, F.bit_xor("hs").alias("h"), F.count("*").alias("h_n"))
-    rt = orig.select("doc_id", "h", "h_n", F.posexplode_outer("spans_sorted").alias("p", "r"))
-    return rt.groupBy("doc_id", "h", "h_n").agg(F.bit_xor(_span_hash("p", "r")).alias("h_rt"),
-                                                F.count("p").alias("h_rt_n"))
+    return docs.sparkSession.sql(_SPAN_DIGESTS, docs=docs)
 
 
 def span_invariant_violations(docs: DataFrame) -> DataFrame:
@@ -292,8 +292,7 @@ def span_invariant_violations(docs: DataFrame) -> DataFrame:
     reassembly itself, the operator under test. (64-bit digest equality
     is probabilistic in the cryptographic sense; the pinned tests assert
     exact array equality on small inputs.)"""
-    d = _span_digests(docs)
-    return d.filter((F.col("h") != F.col("h_rt")) | (F.col("h_n") != F.col("h_rt_n"))).select("doc_id")
+    return docs.sparkSession.sql(f"SELECT doc_id FROM ({_SPAN_DIGESTS}) WHERE h != h_rt OR h_n != h_rt_n", docs=docs)
 
 
 def synth_skewed_points(

@@ -10,7 +10,7 @@ import numpy as np
 import py4j.java_gateway as jg
 import pytest
 
-from movingspark import aggregate, cells, geofence, joins, pairs, raster, schema, similarity
+from movingspark import aggregate, cells, geofence, ingest, joins, pairs, raster, schema, similarity
 from perfbench.gen import make_polygons
 
 
@@ -101,6 +101,15 @@ def test_py4j_calls_per_build_stay_within_budget(points, hexagons):
     assert _py4j_calls(lambda: joins.with_cell(points, 8)) <= 10
     assert _py4j_calls(lambda: geofence.geofence_events(points, hexagons[0][1])) <= 300
     assert _py4j_calls(lambda: joins.intersecting_traj_ids_line(points, hexagons[0][1])) <= 200
+
+
+def test_doc_builders_stay_within_py4j_budget(spark):
+    """The doc builders compose each plan level as SQL text: a few Py4J
+    calls per level (204 for the explode and 619 for the span invariant
+    when they were built one Column at a time)."""
+    docs = ingest.synth_interleaved_docs(spark, 10)
+    assert _py4j_calls(lambda: ingest.explode_doc_points(docs)) <= 20
+    assert _py4j_calls(lambda: ingest.span_invariant_violations(docs)) <= 60
 
 
 def _is_local_relation(df) -> bool:

@@ -14,6 +14,18 @@ bytecode size of the subtree's largest generated method. HotSpot never
 JIT-compiles a method above 8 000 bytes (HugeMethodLimit), so such a
 stage runs interpreted; the run ends by printing the queries that have
 one, and exits 1 when there is any.
+
+The `.bytecode` files are reproducible run to run because the tool's
+JVM gives every object the same identity hash code
+(`-XX:hashCode=2`, through `JDK_JAVA_OPTIONS`). Spark collects the
+parameters of the functions it splits out of generated code (aggregate
+functions, common subexpressions) in a hash set of (name, Java type
+`Class`) pairs, so their order, and with it the local-variable slots
+and instruction sizes of those methods, followed the `Class` objects'
+identity hashes, which differ from JVM to JVM: two runs of one commit
+gave a method 788 bytes in one and 797 in the other. With one hash for
+every object the order follows the names alone. The plans and the
+engine are not affected; only this tool's JVM runs with the flag.
 """
 
 from __future__ import annotations
@@ -53,6 +65,9 @@ def main():
     import __spark_entry__ as E
     from movingspark.session import local_session
 
+    os.environ["JDK_JAVA_OPTIONS"] = " ".join(
+        filter(None, [os.environ.get("JDK_JAVA_OPTIONS"), "-XX:+UnlockExperimentalVMOptions -XX:hashCode=2"])
+    )
     spark = local_session(2, "dump-plans")
 
     os.makedirs(out_dir, exist_ok=True)
